@@ -41,6 +41,19 @@ def lit_vector(vec: list[float]) -> Column:
     return F.array([F.lit(float(x)) for x in vec])
 
 
+def lit_norm(vec: list[float]) -> Column:
+    """`norm(lit_vector(vec))` as one double literal, folded on the
+    driver: the same left fold of IEEE double products and a correctly
+    rounded sqrt, so the bits are identical — without building the
+    fold's lambda expressions through py4j on every probe."""
+    import math
+
+    acc = 0.0
+    for x in vec:
+        acc = acc + float(x) * float(x)
+    return F.lit(math.sqrt(acc))
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -684,6 +697,64 @@ def _sidecar_rows(
     return dataset.to_table(columns=columns, filter=flt).to_pylist()
 
 
+def _parquet_schema(base: str, leaf: "str | None" = None):
+    """The schema `spark.read.parquet(base)` would infer, read on the
+    driver from ONE parquet footer (the first file under `leaf`, default
+    `base`) — the rule Spark's own inference follows with mergeSchema
+    off, minus the Spark job it launches for it.  Index tables are
+    Spark-written, so the footer's row metadata holds the Spark schema
+    itself (Spark reads it the same way, and makes every field nullable
+    on any file-source read, declared or inferred).  Every `k=v` dir
+    between `base` and that file becomes an int partition column (index
+    partition keys — `cell`, `grp` — are small ints)."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    found = None
+    for root, dirs, files in os.walk(leaf or base):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        names = sorted(
+            f for f in files if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        if names:
+            found = os.path.join(root, names[0])
+            break
+    if found is None:
+        raise FileNotFoundError(f"no parquet file under {leaf or base}")
+    data = StructType.fromJson(
+        json.loads(pq.read_schema(found).metadata[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    parts = [
+        seg.split("=", 1)[0]
+        for seg in os.path.relpath(os.path.dirname(found), base).split(os.sep)
+        if "=" in seg
+    ]
+    return StructType(data.fields + [StructField(p, IntegerType(), True) for p in parts])
+
+
+def _declared_parquet(spark, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` with the schema declared from one
+    footer (`_parquet_schema`) — same columns and types, no inference
+    job."""
+    return spark.read.schema(_parquet_schema(path)).parquet(path)
+
+
+def _tombstone_ids(path: str) -> "list[int]":
+    """The index's logically-deleted ids (streaming.ann.ann_delete),
+    read on the driver — sorted and distinct; [] without a tombstone
+    table.  Driver-sized by construction: every purge or recenter
+    physically drops them and clears the table."""
+    import os
+
+    tpath = os.path.join(path, "tombstones")
+    if not os.path.isdir(tpath):
+        return []
+    return sorted({r["id"] for r in _sidecar_rows(tpath, ["id"])})
+
+
 def _probe_centroids(
     spark,
     path: str,
@@ -867,14 +938,20 @@ def ivf_probe_index(
     """Probe an `ivf_build_index` index: rank the persisted centroids by
     rounded query-cosine (ties to the smaller cell id — the same fold
     expressions the oracle replays, over an n_cells-row table), collect
-    the n_probe winning cell ids (a handful of ints — the one driver
-    action, same stance as the SRP probe list), and scan ONLY those
-    cells' partitions for the exact rerank.
+    the n_probe winning cell ids (a handful of ints, same stance as the
+    SRP probe list), and scan ONLY those cells' partitions for the
+    exact rerank.
 
     Probe-path plan: one TakeOrdered over n_cells centroid rows + one
     TakeOrdered over the pruned cells scan — ≤2 exchanges, no joins, I/O
     = n_probe/n_cells of the corpus (PartitionFilters on the scan,
     asserted in tests/test_plans.py).
+
+    fast=True ranks the centroids on the driver instead (pyarrow read +
+    BLAS, `_rank_probe_cells_blas`, bit-identical), and the posting
+    schema and tombstone ids are always read on the driver
+    (`_read_cells`, `_apply_tombstones`) — so a fast probe's plan is
+    built without a single Spark job; its one job is the result's.
 
     Two-level indexes (built with n_groups) rank the level-1 group
     centers first and read only the `n_probe_groups` winning groups'
@@ -908,7 +985,7 @@ def ivf_probe_index(
         _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
     )
     sim = F.round(
-        dot(F.col("v"), qlit) / (F.col("norm") * F.sqrt(dot(qlit, qlit))), round_digits
+        dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
     )
     return (
         cells.select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
@@ -971,7 +1048,7 @@ def ivf_range_search(
         _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
     )
     sim = F.round(
-        dot(F.col("v"), qlit) / (F.col("norm") * F.sqrt(dot(qlit, qlit))), round_digits
+        dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
     )
     return (
         cells.select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
@@ -1038,6 +1115,12 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     purge, or never populated) are skipped — same semantics as pruning
     them.
 
+    The posting schema is DECLARED from one footer of a probed cell
+    plus the `cell` partition column (`_parquet_schema`), so building
+    the scan launches no schema-inference job; the ivfpq/ivfsq code
+    layouts and stream-inserted fragments keep their types, since Spark
+    infers from one footer too.
+
     SORTED layout (`cells_sorted/`, see _write_posting): one flat dir of
     range-partitioned files sorted by (cell, id) — the `cell IN (...)`
     predicate is PUSHED to the parquet reader and row-group min/max
@@ -1049,17 +1132,18 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     sdir = os.path.join(path, "cells_sorted")
     cells = [int(c) for c in cell_list]
     if os.path.isdir(sdir):
-        return spark.read.parquet(sdir).where(F.col("cell").isin(cells))
+        return _declared_parquet(spark, sdir).where(F.col("cell").isin(cells))
     cdir = os.path.join(path, "cells")
     dirs = [
         d for c in cells if os.path.isdir(d := os.path.join(cdir, f"cell={c}"))
     ]
     if not dirs:
-        # every probed cell is absent: preserve the empty-result schema
-        # via the full-table read (rare — only a fully-purged probe set)
-        return spark.read.parquet(cdir).where(F.col("cell").isin(cells))
+        # every probed cell is absent: the full-table read keeps the
+        # empty result's schema (rare — only a fully-purged probe set)
+        return _declared_parquet(spark, cdir).where(F.col("cell").isin(cells))
     return (
-        spark.read.option("basePath", cdir)
+        spark.read.schema(_parquet_schema(cdir, dirs[0]))
+        .option("basePath", cdir)
         .parquet(*dirs)
         .where(F.col("cell").isin(cells))
     )
@@ -1070,24 +1154,17 @@ def _apply_tombstones(spark, path: str, posting: DataFrame) -> DataFrame:
     (streaming.ann.ann_delete): logically-deleted ids must not surface
     from any probe.  A delete at 100 TB cannot rewrite posting lists —
     the id's cell is unknown without a full scan — so deletes are O(1)
-    appends to `tombstones/` and every probe anti-joins against it
-    (broadcast: the tombstone set is bounded by compaction's purge).
-    No tombstone table -> the scan is returned untouched, so the
-    zero-join plan shape of tombstone-free indexes (every contract
-    index) is preserved."""
-    import os
-
-    tpath = os.path.join(path, "tombstones")
-    if not os.path.isdir(tpath):
+    appends to `tombstones/`, and every probe reads the ids on the
+    driver (`_tombstone_ids`) and drops them with `NOT id IN (...)`
+    (Catalyst's InSet): no join and no Spark job, and the set is
+    bounded by compaction's purge.  Posting ids are never null (every
+    writer inner-joins on id), so the filter keeps exactly the rows an
+    anti-join would.  No tombstones -> the scan is returned untouched,
+    so tombstone-free indexes (every contract index) keep their plan."""
+    ids = _tombstone_ids(path)
+    if not ids:
         return posting
-    tomb = (
-        spark.read.parquet(tpath)
-        .select(F.col("id").alias("__tomb_id"))
-        .distinct()
-    )
-    return posting.join(
-        F.broadcast(tomb), posting["id"] == F.col("__tomb_id"), "left_anti"
-    )
+    return posting.where(~F.col("id").isin(ids))
 
 
 def build_filter_set(
@@ -1183,8 +1260,8 @@ def _apply_id_filter(posting: DataFrame, filter_ids) -> DataFrame:
     ranks within the match set).  Implementation is one left-semi join
     on id against the first column of `filter_ids`, deduplicated so a
     fan-out upstream join cannot multiply posting rows.  The join is
-    left to Catalyst/AQE on purpose (unlike the tombstone anti-join,
-    which is forced broadcast because purges bound it): a selective
+    left to Catalyst/AQE on purpose (unlike the tombstone ids, which
+    are read on the driver because purges bound them): a selective
     predicate yields a small set that auto-broadcasts; an unselective
     one yields a large set where a shuffled semi-join is the right
     plan.  Recall note (measured, 2M rehearsal filteredann row): with

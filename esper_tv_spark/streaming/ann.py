@@ -38,7 +38,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esper_tv_spark.operators.similarity import dot, lloyd_assign
+from esper_tv_spark.operators.similarity import (
+    _apply_tombstones,
+    _declared_parquet,
+    _tombstone_ids,
+    dot,
+    lloyd_assign,
+)
 
 
 def _require_dirs_layout(index_path: str, op: str) -> None:
@@ -60,7 +66,9 @@ def _require_dirs_layout(index_path: str, op: str) -> None:
 
 
 def _stored_centroids(spark: SparkSession, index_path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_path, "centroids")).select(
+    """The frozen centroids as (cluster, cvec); the schema is declared
+    from a footer, so a per-batch re-read runs no inference job."""
+    return _declared_parquet(spark, os.path.join(index_path, "centroids")).select(
         F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
     )
 
@@ -268,15 +276,16 @@ def ann_delete(spark: SparkSession, index_path: str, ids: "list[int]") -> int:
     the ids to a `tombstones/` table — O(ids), no posting-list I/O.  A
     physical delete at 100 TB is a full-corpus rewrite (an id's cell is
     unknown without scanning), so production ANN systems tombstone and
-    let maintenance reclaim: every probe anti-joins the (broadcast,
-    deduplicated) tombstone set (similarity._apply_tombstones), and
+    let maintenance reclaim: every probe reads the tombstone ids on the
+    driver and filters its posting scan with `NOT id IN (...)`
+    (similarity._apply_tombstones), and
     `compact_posting_lists(purge=True)` physically drops the rows and
     clears the table.
 
     Contract: vector ids are unique and never reused — re-inserting a
     tombstoned id would stay hidden until a purge (the same id-space
     assumption every builder makes).  Duplicate ids in `ids` or across
-    calls are harmless (the anti-join deduplicates)."""
+    calls are harmless (the id set is deduplicated on read)."""
     vals = []
     for i in ids:
         if isinstance(i, bool) or not isinstance(i, int):
@@ -419,8 +428,8 @@ def compact_posting_lists(
     logical in the first place), and the tombstone table is removed
     AFTER the swap.  Crash between swap and removal is safe: the
     tombstones re-apply to already-purged postings as a no-op
-    anti-join.  Probe results are bit-identical before/after a purge
-    (the anti-join was already hiding the rows — asserted in tests).
+    filter.  Probe results are bit-identical before/after a purge
+    (the probes' filter was already hiding the rows — asserted in tests).
 
     `retire_empty_cells=True` additionally runs `_retire_empty_cells`
     AFTER the swap: centroids of cells left with zero live rows are
@@ -438,12 +447,7 @@ def compact_posting_lists(
     _require_dirs_layout(index_path, "compact_posting_lists")
     cells_dir = os.path.join(index_path, "cells")
     tomb_dir = os.path.join(index_path, "tombstones")
-    tomb_ids: "list[int]" = []
-    if purge and os.path.isdir(tomb_dir):
-        tomb_ids = [
-            int(r["id"])
-            for r in spark.read.parquet(tomb_dir).select("id").distinct().collect()
-        ]
+    tomb_ids = _tombstone_ids(index_path) if purge else []
     # recovery preamble — identical contract to ivf_recenter's: only
     # clean __rc/__old when live exists; otherwise they ARE the index.
     if os.path.exists(cells_dir):
@@ -480,16 +484,9 @@ def compact_posting_lists(
         return stats
 
     tmp = cells_dir + "__rc"
-    rewrite = spark.read.parquet(cells_dir).where(F.col("cell").isin(hot))
+    rewrite = _declared_parquet(spark, cells_dir).where(F.col("cell").isin(hot))
     if tomb_ids:
-        tomb = (
-            spark.read.parquet(tomb_dir)
-            .select(F.col("id").alias("__tomb_id"))
-            .distinct()
-        )
-        rewrite = rewrite.join(
-            F.broadcast(tomb), rewrite["id"] == F.col("__tomb_id"), "left_anti"
-        )
+        rewrite = rewrite.where(~F.col("id").isin(tomb_ids))
     (
         rewrite
         .repartition(F.col("cell"))
@@ -520,7 +517,7 @@ def compact_posting_lists(
     shutil.rmtree(old)
     if tomb_ids:
         # AFTER the swap: a crash here leaves tombstones over purged
-        # postings — the anti-join re-applies as a no-op, never loses a
+        # postings — the filter re-applies as a no-op, never loses a
         # delete
         shutil.rmtree(tomb_dir, ignore_errors=True)
     if retire_empty_cells:
@@ -592,15 +589,7 @@ def ivf_recenter(
     # centroid means AND resurrect them in the rewritten posting lists
     tomb_dir = os.path.join(index_path, "tombstones")
     had_tombstones = os.path.isdir(tomb_dir)
-    if had_tombstones:
-        tomb = (
-            spark.read.parquet(tomb_dir)
-            .select(F.col("id").alias("__tomb_id"))
-            .distinct()
-        )
-        posting = posting.join(
-            F.broadcast(tomb), posting["id"] == F.col("__tomb_id"), "left_anti"
-        )
+    posting = _apply_tombstones(spark, index_path, posting)
 
     elem = posting.select(
         "cell", "id", F.posexplode(F.col("v")).alias("pos", "x")

@@ -162,8 +162,8 @@ def _group_by_qid(df):
 
 
 def test_filter_composes_with_tombstones(spark, emb, qv, allow, allow_ids, tmp_path):
-    """Tombstoned ids stay hidden inside the allowed set: the anti-join
-    and the semi-join stack on one scan."""
+    """Tombstoned ids stay hidden inside the allowed set: the tombstone
+    filter and the semi-join stack on one scan."""
     from esper_tv_spark.streaming.ann import ann_delete
 
     p = str(tmp_path / "ftomb")

@@ -108,7 +108,7 @@ def test_sorted_layout_composes_with_tombstones_and_filters(spark, emb, qv, both
     a = _rows(sim.ivf_probe_index(spark, d, qv, 10, n_probe=3, filter_ids=allow))
     b = _rows(sim.ivf_probe_index(spark, s, qv, 10, n_probe=3, filter_ids=allow))
     assert a == b and len(a) > 0
-    # tombstones are layout-independent (the anti-join runs on the scan)
+    # tombstones are layout-independent (the filter runs on the scan)
     victim = int(a[0][0])
     ann_delete(spark, s, [victim])
     after = _rows(sim.ivf_probe_index(spark, s, qv, 10, n_probe=3, filter_ids=allow))
