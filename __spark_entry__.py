@@ -1515,13 +1515,7 @@ def q51_near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.build_srp_index(
             emb, idx, n_planes=n_planes, seed=seed, n_bands=n_bands, dim=dim
         )
-    # fast=True: the r11 gather-scoring rung (vector matrix loaded once
-    # per worker from the source parquet; one einsum per Arrow batch of
-    # candidate pairs) — interleaved A/B at sf1: slow best 9.9s vs fast
-    # warm best 3.3s, rows identical; oracle-rehashed at every gate SF
-    # (the r10 twin policy).  Falls back to the expression path when the
-    # matrix exceeds the session budget or the table isn't file-backed.
-    return dedup.near_dup_pairs_from_index(emb, idx, threshold=0.4, fast=True)
+    return dedup.near_dup_pairs_from_index(emb, idx, threshold=0.4)
 
 
 def _q51_sql(n_planes: int | None = None, n_bands: int = 16, seed: int = 42) -> str:
@@ -2563,7 +2557,7 @@ def q80_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _ivf_index_dir(spark, sf_dir, n_cells=16)
-    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 def q87_ivf_cell_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2700,7 +2694,7 @@ def q100_hier_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 5).select("embedding").first()[0]]
     idx = _hier_ivf_index_dir(spark, sf_dir, n_cells=16, n_groups=4)
-    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, n_probe_groups=2, fast=True)
+    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, n_probe_groups=2)
 
 
 Q100_SQL = """
@@ -2796,7 +2790,7 @@ def _retired_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
             float(x)
             for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]
         ]
-        cents, _allowed = similarity._probe_centroids(spark, idx, [0], [qv], 1, 6)
+        cents = spark.read.parquet(os.path.join(idx, "centroids"))
         pairs, _cells, _cv = similarity._rank_probe_cells(cents, [0], [qv], 1, 6)
         victim = int(pairs[0][1])
         victim_ids = [
@@ -2831,7 +2825,7 @@ def q104_retired_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]]
     idx = _retired_ivf_index_dir(spark, sf_dir)
-    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 Q104_SQL = """
@@ -2908,7 +2902,7 @@ def q103_trained_groups_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 41).select("embedding").first()[0]]
     idx = _hier_ivf_index_dir(spark, sf_dir, n_cells=16, n_groups=4, train_iters=2)
-    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, n_probe_groups=2, fast=True)
+    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, n_probe_groups=2)
 
 
 Q103_SQL = """
@@ -3034,7 +3028,7 @@ def q101_hier_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     out = similarity.ivf_knn_join_index(
-        spark, idx, queries, 10, n_probe=3, n_probe_groups=2, fast=True
+        spark, idx, queries, 10, n_probe=3, n_probe_groups=2
     )
     return out.orderBy("qid", F.col("cosine_sim").desc(), "vec_id")
 
@@ -3158,7 +3152,7 @@ def q102_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _tomb_ivf_index_dir(spark, sf_dir)
-    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 Q102_SQL = """
@@ -3220,7 +3214,7 @@ def q106_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _ivf_index_dir(spark, sf_dir, n_cells=16)
     allow = emb.where(F.col("label") == 7).select("vec_id")
     return similarity.ivf_probe_index(
-        spark, idx, qv, 10, n_probe=3, filter_ids=allow, fast=True
+        spark, idx, qv, 10, n_probe=3, filter_ids=allow
     )
 
 
@@ -3253,7 +3247,7 @@ def q107_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _ivf_index_dir(spark, sf_dir, n_cells=16)
-    return similarity.ivf_range_search(spark, idx, qv, 0.15, n_probe=3, fast=True)
+    return similarity.ivf_range_search(spark, idx, qv, 0.15, n_probe=3)
 
 
 # q80's replay with the top-k tail swapped for the threshold filter —
@@ -3290,7 +3284,7 @@ def q108_filtered_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     allow = emb.where(F.col("label") == 7).select("vec_id")
     out = similarity.ivf_knn_join_index(
-        spark, idx, queries, 10, n_probe=3, filter_ids=allow, fast=True
+        spark, idx, queries, 10, n_probe=3, filter_ids=allow
     )
     return out.orderBy("qid", F.col("cosine_sim").desc(), "vec_id")
 
@@ -3325,7 +3319,7 @@ def q112_weighted_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(25)
     )
-    vec = ivf_probe_index(spark, idx, qv, 25, n_probe=3, fast=True)
+    vec = ivf_probe_index(spark, idx, qv, 25, n_probe=3)
     return rrf_fuse(
         [(lex, "doc_id", "score", True), (vec, "vec_id", "cosine_sim", True)],
         k=60,
@@ -3437,7 +3431,7 @@ def q114_interp_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(20)
     )
-    vec = ivf_probe_index(spark, idx, qv, 20, n_probe=3, fast=True)
+    vec = ivf_probe_index(spark, idx, qv, 20, n_probe=3)
     return interp_fuse(
         [(lex, "doc_id", "score", True), (vec, "vec_id", "cosine_sim", True)],
         weights=[0.7, 0.3],
@@ -3595,7 +3589,7 @@ def q109_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _ivf_index_dir(spark, sf_dir, n_cells=16)
     return hybrid_search(
-        docs, spark, idx, _Q75_TERMS, qv, 20, k_cand=25, n_probe=3, fast=True
+        docs, spark, idx, _Q75_TERMS, qv, 20, k_cand=25, n_probe=3
     )
 
 
@@ -3761,7 +3755,7 @@ def q88_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     store = _pq_store_dir(spark, sf_dir, m=8, k=16)
-    return similarity.pq_probe_store(spark, store, qv, 10, fast=True)
+    return similarity.pq_probe_store(spark, store, qv, 10)
 
 
 Q88_SQL = """
@@ -3857,7 +3851,7 @@ def q92_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _ivfpq_index_dir(spark, sf_dir)
-    return similarity.ivfpq_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivfpq_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 Q92_SQL = """
@@ -4000,7 +3994,7 @@ def q94_opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0][:64]
     ]
     idx = _q94_index_dir(spark, sf_dir)
-    return similarity.ivfpq_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivfpq_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 def _q94_sql() -> str:
@@ -4142,7 +4136,7 @@ def q95_ivfsq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     idx = _q95_index_dir(spark, sf_dir)
-    return similarity.ivfsq_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
+    return similarity.ivfsq_probe_index(spark, idx, qv, 10, n_probe=3)
 
 
 Q95_SQL = """
@@ -4219,7 +4213,7 @@ def q96_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id").isin([0, 7, 13])).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    out = similarity.ivf_knn_join_index(spark, idx, queries, 10, n_probe=3, fast=True)
+    out = similarity.ivf_knn_join_index(spark, idx, queries, 10, n_probe=3)
     return out.orderBy("qid", F.col("cosine_sim").desc(), "vec_id")
 
 
@@ -4295,7 +4289,7 @@ def q97_ivfpq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id").isin([0, 7, 13])).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    out = similarity.ivfpq_knn_join_index(spark, idx, queries, 10, n_probe=3, fast=True)
+    out = similarity.ivfpq_knn_join_index(spark, idx, queries, 10, n_probe=3)
     return out.orderBy("qid", F.col("adist").asc(), "vec_id")
 
 
@@ -4436,7 +4430,7 @@ def q98_ivfpq_residual_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     out = similarity.ivfpq_knn_join_index(
-        spark, idx, queries, 10, n_probe=3, fast=True, lut_literal_max_probe=2
+        spark, idx, queries, 10, n_probe=3, lut_literal_max_probe=2
     )
     return out.orderBy("qid", F.col("adist").asc(), "vec_id")
 
@@ -4568,7 +4562,7 @@ def q105_lut_table_adc_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     out = similarity.ivfpq_knn_join_index(
-        spark, idx, queries, 10, n_probe=10, lut_literal_max_probe=8, fast=True
+        spark, idx, queries, 10, n_probe=10, lut_literal_max_probe=8
     )
     return out.orderBy("qid", F.col("adist").asc(), "vec_id")
 
@@ -4603,7 +4597,7 @@ def q99_ivfsq_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id").isin([0, 7, 13])).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    out = similarity.ivfsq_knn_join_index(spark, idx, queries, 10, n_probe=3, fast=True)
+    out = similarity.ivfsq_knn_join_index(spark, idx, queries, 10, n_probe=3)
     return out.orderBy("qid", F.col("adist").asc(), "vec_id")
 
 

@@ -564,15 +564,11 @@ def run_query(
                     q = [float(x) for x in row[0]]
                 else:
                     raise DSLError("ann_probe needs 'query', 'query_id', or 'query_ids'")
-                # fast=True: driver-local BLAS centroid ranking (the
-                # contract probes' rung, pinned bit-identical to the
-                # expression path), so with the driver-read posting
-                # schema and tombstone ids the plan builds with no job
                 if thr is not None:
                     df = sim_ops.ivf_range_search(
                         spark, path, q, float(thr), n_probe=n_probe,
                         id_col=id_col, n_probe_groups=n_probe_groups,
-                        filter_ids=filter_ids, fast=True,
+                        filter_ids=filter_ids,
                     )
                 else:
                     probe_fn = {
@@ -583,7 +579,6 @@ def run_query(
                     df = probe_fn(
                         spark, path, q, k, n_probe=n_probe, id_col=id_col,
                         n_probe_groups=n_probe_groups, filter_ids=filter_ids,
-                        fast=True,
                     )
         else:
             raise DSLError(f"similarity op not allowed: {op!r}")

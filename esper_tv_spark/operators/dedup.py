@@ -636,144 +636,12 @@ def _estimated_vector_bytes(df: DataFrame, norms_path: str) -> int | None:
         return None
 
 
-_GATHER_CACHE: dict = {}
-
-
-def _load_gather_state(key: str, vec_files: tuple, norm_files: tuple,
-                       id_name: str, vec_name: str):
-    """Task-side loader for the q51 gather-scoring path: the (ids, matrix,
-    norms) arrays, read ONCE per reused Python worker from the parquet
-    files (guide §4.5 — module-level cache, PID-guarded so a fresh worker
-    reloads).  float32 source elements widen to float64 exactly, the same
-    per-element cast `dot()` applies."""
-    import os as _os
-
-    pid = _os.getpid()
-    got = _GATHER_CACHE.get(key)
-    if got is not None and got[0] == pid:
-        return got[1]
-    import numpy as np
-    # pyarrow.parquet, NOT pyarrow.dataset: the Arrow-serde worker
-    # already carries pyarrow core + pandas, and pq adds ~nothing on
-    # top, while importing pyarrow.dataset cold in 32 workers at once
-    # measured ~3s each (a 50s first-action wall at sf1)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    vt = pa.concat_tables(
-        pq.read_table(f, columns=[id_name, vec_name]) for f in vec_files
-    )
-    ids = vt[id_name].to_numpy()
-    la = vt[vec_name].combine_chunks()
-    dim = len(la[0])
-    vals = la.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    mat = vals.reshape(len(ids), dim)
-    order = np.argsort(ids, kind="stable")
-    ids_s, mat_s = ids[order], mat[order]
-    nt = pa.concat_tables(
-        pq.read_table(f, columns=["id", "norm"]) for f in norm_files
-    )
-    nids = nt["id"].to_numpy()
-    nvals = nt["norm"].to_numpy().astype(np.float64)
-    # align norms to the sorted vector ids; an id missing from norms
-    # drops (NaN) — the expression path's inner-join semantics
-    nsort = np.argsort(nids, kind="stable")
-    nids_s, nvals_s = nids[nsort], nvals[nsort]
-    pos = np.clip(np.searchsorted(nids_s, ids_s), 0, len(nids_s) - 1)
-    norm_s = np.where(nids_s[pos] == ids_s, nvals_s[pos], np.nan)
-    state = (ids_s, mat_s, norm_s)
-    _GATHER_CACHE[key] = (pid, state)
-    return state
-
-
-def _near_dup_pairs_gather(
-    df: DataFrame,
-    cand: DataFrame,
-    norms_path: str,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    round_digits: int = 6,
-) -> DataFrame:
-    """near_dup_pairs_from_index's production scoring path (fast=True,
-    guide §8 "decide with small rows, move big rows once" + §4): the
-    candidate stream stays 16-byte (id_a, id_b) rows end-to-end; the
-    vector matrix and norms are loaded ONCE per reused Python worker
-    from the SOURCE parquet files (never joined, never shuffled), and
-    each Arrow batch of pairs is scored with one vectorized gather +
-    einsum — replacing ~occupancy·bands/2 interpreted 256-element
-    `aggregate` folds per vector with float64 row-dots.
-
-    Values: round_half_away(dot/(na·nb), 6) — same arithmetic shape as
-    the expression path; einsum's summation order vs the left-to-right
-    fold is the standard BLAS-twin last-ulp stance (pytest parity +
-    oracle rehash at every gate SF).  A pair whose id is missing from
-    the live vectors or norms drops out exactly like the inner joins.
-
-    An earlier fast-path attempt (r11, kept as a negative result)
-    shipped vectors through a groupBy(band,bucket) + per-bucket GEMM —
-    measured 3-4x SLOWER than the expression path at sf1 (the n·bands
-    vector shuffle plus per-group applyInPandas overhead dwarfed the
-    fold savings).  This shape moves ZERO vector bytes."""
-    import pandas as pd
-
-    files = tuple(
-        f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-    )
-    import os as _os
-
-    norm_files = tuple(
-        _os.path.join(r, fn)
-        for r, _d, fs in _os.walk(norms_path)
-        for fn in fs
-        if fn.endswith(".parquet")
-    )
-    key = f"{files}|{norm_files}"
-
-    def score(batches):
-        import numpy as np
-
-        from esper_tv_spark.operators.similarity import _round_half_away
-
-        ids_s, mat_s, norm_s = _load_gather_state(
-            key, files, norm_files, id_col, vec_col
-        )
-        n = len(ids_s)
-        for pdf in batches:
-            a = pdf["id_a"].to_numpy()
-            b = pdf["id_b"].to_numpy()
-            ia = np.clip(np.searchsorted(ids_s, a), 0, n - 1)
-            ib = np.clip(np.searchsorted(ids_s, b), 0, n - 1)
-            ok = (ids_s[ia] == a) & (ids_s[ib] == b)
-            if not ok.any():
-                continue
-            ia, ib, a, b = ia[ok], ib[ok], a[ok], b[ok]
-            s = _round_half_away(
-                np.einsum("ij,ij->i", mat_s[ia], mat_s[ib])
-                / (norm_s[ia] * norm_s[ib]),
-                round_digits,
-            )
-            keep = s >= threshold  # NaN norms (missing id) compare False
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {"id_a": a[keep], "id_b": b[keep], "cosine_sim": s[keep]}
-            )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out = cand.mapInPandas(
-        score, schema=f"id_a {id_type}, id_b {id_type}, cosine_sim double"
-    )
-    return out.distinct()
-
-
 def near_dup_pairs_from_index(
     df: DataFrame,
     path: str,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fast: bool = False,
 ) -> DataFrame:
     """Probe a `build_srp_index` index: candidate pairs from a self-join of
     the persisted blocking rows (band,bucket equi-join — no re-projection),
@@ -781,14 +649,11 @@ def near_dup_pairs_from_index(
     and bit-identical values as `embedding_near_dup_pairs`; the projection
     cost is paid at index-build time instead of per query.
 
-    `fast=True` scores the pair stream with the gather kernel
-    (`_near_dup_pairs_gather`: vector matrix loaded once per worker
-    from the source parquet, one einsum per Arrow batch) instead of
-    interpreted per-pair folds — the production serving rung,
-    parity-pinned by pytest and oracle-rehashed at every gate SF (the
-    r10 twin policy).  It engages only when the matrix fits a worker
-    (same est_bytes cutoff as the broadcast attach below) and the table
-    is file-backed; otherwise the expression path stands."""
+    Scoring is one expression path: per-pair folds over a stats-sized
+    vector attach (below).  A per-worker gather kernel (vector matrix
+    loaded from the source parquet, one einsum per Arrow batch of pairs)
+    measured ~5x slower at sf0.1 and no faster at sf1; a faster scorer
+    needs an index-build vector sidecar and a measured win."""
     import os
 
     from esper_tv_spark.operators.similarity import dot
@@ -813,18 +678,6 @@ def near_dup_pairs_from_index(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    if fast:
-        est = _estimated_vector_bytes(df, os.path.join(path, "norms"))
-        files = df.inputFiles()
-        from esper_tv_spark.plans.partitions import broadcast_budget_bytes as _bb
-
-        if files and est is not None and est <= 6 * 1024**3 and est <= _bb(spark):
-            return _near_dup_pairs_gather(
-                df, cand, os.path.join(path, "norms"), threshold, id_col, vec_col
-            )
-        # matrix too big for one worker / not file-backed: the expression
-        # plan below is the honest fallback (and at that corpus size a
-        # deployment pre-buckets index + vectors by id)
     # vectors stay in their SOURCE element width (float32 halves the
     # broadcast relation vs an eager array<double> cast; dot() casts each
     # element inside the expression, so the scored doubles are identical)

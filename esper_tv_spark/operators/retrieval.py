@@ -176,7 +176,6 @@ def hybrid_search(
     rrf_k: int = 60,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fast: bool = False,
 ) -> DataFrame:
     """Lexical + vector hybrid search over one corpus: BM25 top-`k_cand`
     (operators/text.bm25_scores, scores rounded at source — the q75
@@ -194,9 +193,7 @@ def hybrid_search(
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k_cand)
     )
-    vec = ivf_probe_index(
-        spark, index_path, query_vec, k_cand, n_probe=n_probe, fast=fast
-    )
+    vec = ivf_probe_index(spark, index_path, query_vec, k_cand, n_probe=n_probe)
     return rrf_fuse(
         [(lex, id_col, "score", True), (vec, "vec_id", "cosine_sim", True)],
         k=rrf_k,

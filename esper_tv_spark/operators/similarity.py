@@ -673,21 +673,20 @@ def _sidecar_rows(
     filter_vals=None,
 ) -> "list[dict]":
     """Driver-LOCAL pyarrow read of a small index sidecar table
-    (centroids / groups / codebooks / rotation / sq bounds) — the
-    fast=True serving rung's metadata reader.
+    (centroids / groups / codebooks / rotation / sq bounds) — the one
+    reader every probe and kNN join uses for its index metadata.
 
-    Why (guide §1.2/§5): these tables are kBs-to-MBs and the fast path
-    COLLECTS them to the driver anyway (the BLAS twins run on driver
-    numpy), so routing the read through `spark.read.parquet(...).collect()`
-    pays a full distributed-job round trip (listing, task launch, Arrow
-    ship-back) per table per probe — 2-4 Spark actions per serving query
-    that touch a few hundred rows each.  A serving probe must not launch
-    a cluster job to read its own metadata.  Values are identical:
+    Why (guide §1.2/§5): these tables are kBs-to-MBs and the probes
+    rank and build LUTs from them on driver numpy anyway, so routing the
+    read through `spark.read.parquet(...).collect()` would pay a full
+    distributed-job round trip (listing, task launch, Arrow ship-back)
+    per table per probe — 2-4 Spark actions per serving query that
+    touch a few hundred rows each.  A serving probe must not launch a
+    cluster job to read its own metadata.  Values are identical:
     parquet doubles round-trip binary-exact through either reader, and
-    callers re-sort by key exactly as they did the collected rows.
-    Hive-partitioned sidecars (two-level centroids under grp=<g>/) prune
-    with a partition filter — the same dirs the Spark read would keep.
-    The expression (fast=False, oracle-replayable) paths are untouched."""
+    callers re-sort by key.  Hive-partitioned sidecars (two-level
+    centroids under grp=<g>/) prune with a partition filter — the same
+    dirs a Spark read would keep."""
     import pyarrow.dataset as ds
 
     dataset = ds.dataset(path, format="parquet", partitioning="hive")
@@ -745,78 +744,66 @@ def _declared_parquet(spark, path: str) -> DataFrame:
 def _tombstone_ids(path: str) -> "list[int]":
     """The index's logically-deleted ids (streaming.ann.ann_delete),
     read on the driver — sorted and distinct; [] without a tombstone
-    table.  Driver-sized by construction: every purge or recenter
-    physically drops them and clears the table."""
+    table.  Only committed files count: pyarrow's discovery skips
+    `_`/`.` paths, so an append still in its `_temporary/` dir (the
+    first `ann_delete` of an index, mid-write) reads as no tombstones,
+    as it does to Spark.  Driver-sized by construction: every purge or
+    recenter physically drops them and clears the table."""
     import os
+
+    import pyarrow.dataset as ds
 
     tpath = os.path.join(path, "tombstones")
     if not os.path.isdir(tpath):
         return []
-    return sorted({r["id"] for r in _sidecar_rows(tpath, ["id"])})
+    table = ds.dataset(tpath, format="parquet")
+    if not table.files:
+        return []
+    return sorted(set(table.to_table(columns=["id"]).column("id").to_pylist()))
 
 
 def _probe_centroids(
-    spark,
     path: str,
     qids: "list[int]",
     qvecs: "list[list[float]]",
     n_probe_groups: int,
     round_digits: int,
-    fast: bool = False,
-) -> "tuple[DataFrame, dict[int, set[int]] | None]":
-    """The centroid source every probe ranks cells over.  Flat index:
-    (full centroids table, None).  Two-level index (a `groups/` table is
-    present): rank the level-1 group centers for every query — the same
-    ranker the cell level uses (`_rank_probe_cells` / its BLAS twin), so
-    the two levels share one total order (sim desc, id asc, nulls last) —
-    then return the centroid scan PRUNED to the union of winning groups
-    (grp is the partition column: the predicate is partition-pruned I/O,
-    asserted in tests/test_plans.py) plus each query's own winning-group
-    set, so per-query cell ranking never considers another query's
-    groups (batch results stay bit-identical to single probes).
-
-    fast=True returns the rows THEMSELVES (driver-local pyarrow read,
-    see _sidecar_rows) instead of a DataFrame — every fast caller feeds
-    them straight into `_rank_probe_cells_blas`, which accepts both."""
+) -> "tuple[list[dict], dict[int, set[int]] | None]":
+    """The centroid rows every probe ranks cells over, read on the
+    driver (`_sidecar_rows`).  Flat index: (every centroid row, None).
+    Two-level index (a `groups/` table is present): rank the level-1
+    group centers for every query with the ranker the cell level uses
+    (`_rank_probe_cells_blas`), so the two levels share one total order
+    (sim desc, id asc, nulls last) — then return only the winning
+    groups' centroid rows (grp is the partition column: the read is
+    partition-pruned I/O) plus each query's own winning-group set, so
+    per-query cell ranking never considers another query's groups
+    (batch results stay bit-identical to single probes)."""
     import os
 
     cpath = os.path.join(path, "centroids")
     gpath = os.path.join(path, "groups")
     if not os.path.isdir(gpath):
-        if fast:
-            return _sidecar_rows(cpath, ["cell", "cv"]), None
-        return spark.read.parquet(cpath), None
+        return _sidecar_rows(cpath, ["cell", "cv"]), None
     if not os.path.exists(os.path.join(gpath, "_SUCCESS")):
         raise ValueError(
             f"two-level index at {path} has a groups/ table without _SUCCESS "
             "— a crashed build; rebuild the index (probing a partial group "
             "table would silently mis-prune)"
         )
-    if fast:
-        groups = [
-            {"cell": r["grp"], "cv": r["gv"]}
-            for r in _sidecar_rows(gpath, ["grp", "gv"])
-        ]
-        gpairs, glist, _gv = _rank_probe_cells_blas(
-            groups, qids, qvecs, n_probe_groups, round_digits
-        )
-        allowed = {}
-        for q, g in gpairs:
-            allowed.setdefault(q, set()).add(g)
-        cents_rows = _sidecar_rows(
-            cpath, ["cell", "cv", "grp"], filter_col="grp", filter_vals=glist
-        )
-        return cents_rows, allowed
-    groups = spark.read.parquet(gpath).select(
-        F.col("grp").alias("cell"), F.col("gv").alias("cv")
-    )
-    gpairs, glist, _gv = _rank_probe_cells(
+    groups = [
+        {"cell": r["grp"], "cv": r["gv"]}
+        for r in _sidecar_rows(gpath, ["grp", "gv"])
+    ]
+    gpairs, glist, _gv = _rank_probe_cells_blas(
         groups, qids, qvecs, n_probe_groups, round_digits
     )
     allowed: dict[int, set[int]] = {}
     for q, g in gpairs:
         allowed.setdefault(q, set()).add(g)
-    cents = spark.read.parquet(cpath).where(F.col("grp").isin(glist))
+    cents = _sidecar_rows(
+        cpath, ["cell", "cv", "grp"], filter_col="grp", filter_vals=glist
+    )
     return cents, allowed
 
 
@@ -923,6 +910,25 @@ def ivf_build_index(
     )
 
 
+def _probe_cells(
+    path: str,
+    query_vec: list[float],
+    n_probe: int,
+    n_probe_groups: int,
+    round_digits: int,
+) -> "tuple[list[int], dict[int, list[float]]]":
+    """One query's n_probe cells, best first, and the cell -> centroid
+    map (the residual probe's input): the centroid rows read on the
+    driver (`_probe_centroids`) ranked by `_rank_probe_cells_blas` —
+    no Spark job."""
+    q = [list(query_vec)]
+    cents, _allowed = _probe_centroids(path, [0], q, n_probe_groups, round_digits)
+    pairs, _cells, cv_by_cell = _rank_probe_cells_blas(
+        cents, [0], q, n_probe, round_digits
+    )
+    return [c for _q, c in pairs], cv_by_cell
+
+
 def ivf_probe_index(
     spark,
     path: str,
@@ -933,54 +939,27 @@ def ivf_probe_index(
     round_digits: int = 6,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
-    fast: bool = False,
 ) -> DataFrame:
     """Probe an `ivf_build_index` index: rank the persisted centroids by
-    rounded query-cosine (ties to the smaller cell id — the same fold
-    expressions the oracle replays, over an n_cells-row table), collect
-    the n_probe winning cell ids (a handful of ints, same stance as the
-    SRP probe list), and scan ONLY those cells' partitions for the
-    exact rerank.
+    rounded query-cosine on the driver (pyarrow read + one BLAS GEMV,
+    `_probe_cells`; ties to the smaller cell id, the total order the
+    oracle replays), and scan ONLY the n_probe winning cells' partitions
+    for the exact rerank.
 
-    Probe-path plan: one TakeOrdered over n_cells centroid rows + one
-    TakeOrdered over the pruned cells scan — ≤2 exchanges, no joins, I/O
-    = n_probe/n_cells of the corpus (PartitionFilters on the scan,
-    asserted in tests/test_plans.py).
-
-    fast=True ranks the centroids on the driver instead (pyarrow read +
-    BLAS, `_rank_probe_cells_blas`, bit-identical), and the posting
-    schema and tombstone ids are always read on the driver
-    (`_read_cells`, `_apply_tombstones`) — so a fast probe's plan is
-    built without a single Spark job; its one job is the result's.
+    Probe-path plan: one TakeOrdered over the pruned cells scan — no
+    joins, I/O = n_probe/n_cells of the corpus (PartitionFilters on the
+    scan, asserted in tests/test_plans.py).
+    The centroids, the posting schema and the tombstone ids are all
+    read on the driver (`_probe_centroids`, `_read_cells`,
+    `_apply_tombstones`), so the plan is built without a Spark job; its
+    one job is the result's.
 
     Two-level indexes (built with n_groups) rank the level-1 group
     centers first and read only the `n_probe_groups` winning groups'
-    centroid partitions — one extra O(sqrt(n_cells))-row driver action,
-    and the centroid read itself becomes partition-pruned I/O.  Flat
-    indexes ignore `n_probe_groups`."""
-    import os
-
-    cents, _allowed = _probe_centroids(
-        spark, path, [0], [list(query_vec)], n_probe_groups, round_digits, fast=fast
-    )
+    centroid partitions — the centroid read becomes partition-pruned
+    I/O.  Flat indexes ignore `n_probe_groups`."""
+    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
     qlit = lit_vector(query_vec)
-    if fast:
-        # BLAS cell ranking (one collect, same total order — the twin
-        # split pytest pins) instead of an engine TakeOrdered job
-        pairs, _cl, _cv = _rank_probe_cells_blas(
-            cents, [0], [list(query_vec)], n_probe, round_digits
-        )
-        probe = [c for _q, c in pairs]
-    else:
-        probe_rows = (
-            cents.select(
-                "cell", F.round(cosine(F.col("cv"), qlit), round_digits).alias("__sim")
-            )
-            .orderBy(F.col("__sim").desc(), F.col("cell").asc())
-            .limit(n_probe)
-            .collect()
-        )
-        probe = [int(r["cell"]) for r in probe_rows]
     cells = _apply_id_filter(
         _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
     )
@@ -1004,7 +983,6 @@ def ivf_range_search(
     round_digits: int = 6,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
-    fast: bool = False,
 ) -> DataFrame:
     """RANGE search over an `ivf_build_index` index: every vector in the
     probed cells with rounded cosine >= `threshold` — the radius-query
@@ -1013,8 +991,8 @@ def ivf_range_search(
     of the data, not a k the caller guessed ("everything at least this
     similar", e.g. near-dup sweeps at a fixed similarity bar).
 
-    Plan shape is the probe's: one TakeOrdered over the centroid table
-    picks the n_probe cells, one partition-pruned scan over those
+    Plan shape is the probe's: the n_probe cells are ranked on the
+    driver (`_probe_cells`), then one partition-pruned scan over those
     cells' posting lists, a rounded-cosine projection, a >= filter —
     no top-k window, no join; the only exchange past the scan is the
     output sort.  At 100 TB the result is bounded by the threshold
@@ -1025,25 +1003,8 @@ def ivf_range_search(
     same knob, same tradeoff, measured in the recall rehearsals.
     Composes with tombstones and `filter_ids` exactly as the top-k
     probe does (shared scan path)."""
-    cents, _allowed = _probe_centroids(
-        spark, path, [0], [list(query_vec)], n_probe_groups, round_digits, fast=fast
-    )
+    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
     qlit = lit_vector([float(x) for x in query_vec])
-    if fast:
-        pairs, _cl, _cv = _rank_probe_cells_blas(
-            cents, [0], [list(query_vec)], n_probe, round_digits
-        )
-        probe = [c for _q, c in pairs]
-    else:
-        probe = [
-            int(r["cell"])
-            for r in cents.select(
-                "cell", F.round(cosine(F.col("cv"), qlit), round_digits).alias("__sim")
-            )
-            .orderBy(F.col("__sim").desc(), F.col("cell").asc())
-            .limit(n_probe)
-            .collect()
-        ]
     cells = _apply_id_filter(
         _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
     )
@@ -1351,13 +1312,14 @@ def _rank_probe_cells(
     round_digits: int,
     allowed: "dict[int, set[int]] | None" = None,
 ) -> tuple[list[tuple[int, int]], list[int], dict[int, list[float]]]:
-    """Rank the stored coarse centroids for EVERY query of a collected
-    serving batch in ONE Spark action — one rounded-cosine column per
-    query over the n_cells-row table — and pick each query's n_probe
-    cells driver-side under the same (sim desc, cell asc) total order
-    the single probes use, so batch results stay bit-identical to them.
-    Returns (pairs [(qid, cell)], sorted distinct cell list for
-    partition pruning, cell -> centroid-vector map for residual LUTs).
+    """Expression reference for `_rank_probe_cells_blas` (which every
+    probe and kNN join ranks with): rank a centroid DataFrame for EVERY
+    query of a batch in ONE Spark action — one rounded-cosine column per
+    query, the fold expressions the SQL oracles replay — and pick each
+    query's n_probe cells driver-side under the (sim desc, cell asc)
+    total order.  Returns (pairs [(qid, cell)], sorted distinct cell
+    list for partition pruning, cell -> centroid-vector map for residual
+    LUTs).  Tests pin the BLAS ranker to it on the same rows.
 
     `allowed` (two-level indexes: qid -> winning group-id set from
     `_probe_centroids`) restricts each query's candidate centroids to
@@ -1401,40 +1363,30 @@ def _rank_probe_cells(
 
 
 def _rank_probe_cells_blas(
-    cents: DataFrame,
+    cents: "list[dict]",
     qids: list[int],
     qvecs: list[list[float]],
     n_probe: int,
     round_digits: int,
     allowed: "dict[int, set[int]] | None" = None,
 ) -> tuple[list[tuple[int, int]], list[int], dict[int, list[float]]]:
-    """BLAS twin of `_rank_probe_cells` — the fast=True serving rung,
-    same split as lloyd_assign vs lloyd_assign_blas: ONE collect of the
-    n_cells centroid table (cell, cv), then a single GEMM cosine over
-    the whole batch with `_round_half_away` (F.round's tie rule) and the
-    same (sim desc, cell asc) total order via a stable argsort over
-    id-sorted rows.  The expression path evaluates one interpreted
-    fold per (cell, query) — at production batches (n_q ~ 8-64,
-    n_cells ~ 4*sqrt(n)) that is the dominant serving cost; here it is
-    one O(n_cells * dim * n_q) GEMM.  Boundary caveat as all BLAS twins:
-    numpy's pairwise sums differ from the left-to-right fold in the
-    last ulp, so a rounded cosine within ~1e-10 of a rounding boundary
-    could tip in principle — since r10 the contract entries serve
-    fast=True and the DuckDB gate re-hashes them at every driver SF
-    (green), so a tip cannot ship silently; the expression path remains
-    the cross-engine reference and pytest asserts the two paths agree
-    exactly on the gate corpora."""
+    """The cell ranker every probe and kNN join uses: the centroid rows
+    (cell, cv[, grp]) read on the driver by `_probe_centroids`, then a
+    single GEMM cosine over the whole batch with `_round_half_away`
+    (F.round's tie rule) and the (sim desc, cell asc) total order via a
+    stable argsort over id-sorted rows.  Expression evaluation would be
+    one interpreted fold per (cell, query) — at production batches
+    (n_q ~ 8-64, n_cells ~ 4*sqrt(n)) the dominant serving cost; here it
+    is one O(n_cells * dim * n_q) GEMM.  Boundary caveat as all BLAS
+    twins: numpy's pairwise sums differ from the left-to-right fold in
+    the last ulp, so a rounded cosine within ~1e-10 of a rounding
+    boundary could tip in principle — the DuckDB gate re-hashes every
+    contract probe at every driver SF (green), so a tip cannot ship
+    silently, and pytest pins it to the expression reference
+    `_rank_probe_cells` on the same rows (flat, two-level, tied)."""
     import numpy as np
 
-    extra = ["grp"] if allowed is not None else []
-    # accepts either a DataFrame (legacy callers / tests) or the
-    # driver-local row list _probe_centroids(fast=True) now returns
-    rows = (
-        list(cents)
-        if isinstance(cents, list)
-        else cents.select("cell", "cv", *extra).collect()
-    )
-    rows.sort(key=lambda r: r["cell"])
+    rows = sorted(cents, key=lambda r: r["cell"])
     cells = np.array([int(r["cell"]) for r in rows], dtype=np.int64)
     grps = (
         np.array([int(r["grp"]) for r in rows], dtype=np.int64)
@@ -1461,7 +1413,7 @@ def _rank_probe_cells_blas(
             idx = np.arange(len(cells))
         # stable sort on -sim: ties keep ascending row index = ascending
         # cell id (rows sorted by cell above); NaN sorts last, matching
-        # the expression path's nulls-last stance
+        # the expression reference's nulls-last stance
         top = idx[np.argsort(-col[idx], kind="stable")[:n_probe]]
         pairs.extend((qid, int(cells[j])) for j in top)
     cell_list = sorted({c for _q, c in pairs})
@@ -1481,7 +1433,6 @@ def ivf_knn_join_index(
     qvec_col: str = "qvec",
     id_col: str = "vec_id",
     round_digits: int = 6,
-    fast: bool = False,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
 ) -> DataFrame:
@@ -1495,8 +1446,8 @@ def ivf_knn_join_index(
     Plan shape: the query batch is COLLECTED once (it is a serving
     batch — driver-sized by definition, and a single collect means a
     nondeterministic `queries` plan cannot diverge between cell ranking
-    and scoring); per-query cell ranking is ONE Spark action over the
-    n_cells-row centroid table with one rounded-cosine column per query;
+    and scoring); per-query cell ranking is one driver GEMM over the
+    centroid rows (`_rank_probe_cells_blas`, no Spark job);
     the posting-list scan reads ONLY the UNION of probed cells
     (partition pruning, the same stance as the single probe); each
     posting row meets the queries probing its cell via a BROADCAST join
@@ -1509,20 +1460,12 @@ def ivf_knn_join_index(
 
     Output: (qid, id_col, cosine_sim), top-k per qid, ties to the
     smaller id — per-query results bit-identical to `ivf_probe_index`
-    (asserted in tests).  `fast=True` ranks cells with the BLAS twin
-    (one GEMM; production serving), bit-identical on test corpora —
-    contract entries pass fast=True since r10 (oracle-rehashed at every
-    gate SF); the expression path is the cross-engine reference."""
-    import os
-
+    (asserted in tests)."""
     from pyspark.sql import Window
 
     qids, qvecs = _collect_query_batch(queries, qid_col, qvec_col)
-    cents, allowed = _probe_centroids(
-        spark, path, qids, qvecs, n_probe_groups, round_digits, fast=fast
-    )
-    rank_cells = _rank_probe_cells_blas if fast else _rank_probe_cells
-    pairs, cell_list, _cv = rank_cells(
+    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
+    pairs, cell_list, _cv = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
     qv_by_qid = dict(zip(qids, qvecs))
@@ -1794,13 +1737,13 @@ def pq_probe_store(
     k_top: int,
     id_col: str = "vec_id",
     round_digits: int = 6,
-    fast: bool = False,
 ) -> DataFrame:
     """Probe a `pq_build_store` store with asymmetric distance computation
     (ADC): build the m x k lookup table of rounded query-to-subcentroid
-    squared distances from the persisted codebooks (one tiny driver job
-    over m*k rows — the PQ analogue of the IVF probe's centroid ranking),
-    embed it as a LITERAL nested array, and score every stored code row
+    squared distances from the persisted codebooks (read on the driver,
+    one einsum over m*k rows — `_adc_lut_values_blas`, the PQ analogue
+    of the IVF probe's centroid ranking), embed it as a LITERAL nested
+    array, and score every stored code row
     with a pure expression — zero joins, zero wide shuffles: scan ->
     project -> TakeOrdered (asserted in tests/test_plans.py).
 
@@ -1812,13 +1755,9 @@ def pq_probe_store(
     import os
 
     scale = 10 ** round_digits
-    cb = (
-        _sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
-        if fast
-        else spark.read.parquet(os.path.join(path, "codebooks"))
+    lut_col = _lut_literal(
+        _adc_lut_values_blas(_codebook_rows(path), [list(query_vec)], round_digits)[0]
     )
-    lut_values = _adc_lut_values_blas if fast else _adc_lut_values
-    lut_col = _lut_literal(lut_values(cb, [list(query_vec)], round_digits)[0])
     codes = spark.read.parquet(os.path.join(path, "codes"))
     ssum = F.aggregate(
         F.zip_with(lut_col, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
@@ -2002,8 +1941,10 @@ def pq_encode_with_codebooks_blas(
 def _adc_lut_values(
     cb: DataFrame, query_vecs: list[list[float]], round_digits: int
 ) -> list[list[list[int]]]:
-    """Build the m x k ADC lookup tables for SEVERAL query vectors from a
-    persisted codebooks table (subspace, rk, sc) in ONE driver action —
+    """Expression reference for `_adc_lut_values_blas` (which every PQ
+    probe and join uses; tests pin the two on the same rows).  Build
+    the m x k ADC lookup tables for SEVERAL query vectors from a
+    codebooks DataFrame (subspace, rk, sc) in ONE driver action —
     one projection carrying one scaled-d2 column per query, one collect
     over m*k rows (the residual probe needs n_probe LUTs: per-query
     collects would re-scan the same tiny table n_probe times).  Geometry
@@ -2053,39 +1994,32 @@ def _lut_literal(vals: list[list[int]]):
     )
 
 
-def _adc_lut_literals(
-    cb: DataFrame, query_vecs: list[list[float]], round_digits: int
-) -> list:
-    """Literal-Column form of `_adc_lut_values` — one nested-array
-    Column per query, inlined into the plan (right shape for a handful
-    of LUTs; past ~16 probed cells per query the batch joins switch to
-    a broadcast LUT table carrying the SAME values)."""
-    return [
-        _lut_literal(v) for v in _adc_lut_values(cb, query_vecs, round_digits)
-    ]
+def _codebook_rows(path: str) -> "list[dict]":
+    """A PQ store's or IVF-PQ index's codebook rows (subspace, rk, sc),
+    read on the driver (`_sidecar_rows`)."""
+    import os
+
+    return _sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
 
 
 def _adc_lut_values_blas(
-    cb: DataFrame, query_vecs: list[list[float]], round_digits: int
+    rows: "list[dict]", query_vecs: list[list[float]], round_digits: int
 ) -> list[list[list[int]]]:
-    """BLAS twin of `_adc_lut_values` — the fast=True serving rung: ONE
-    collect of the m*k codebook rows, then the whole batch's LUTs as a
-    single einsum with the expression path's exact two-stage rounding
-    (F.round(d2, digits) then F.round(d2r * scale, 0), both as
-    `_round_half_away`).  The expression path builds one scaled-d2
+    """The ADC LUT builder every PQ probe and join uses: the m*k
+    codebook rows (`_codebook_rows`), then the whole batch's LUTs as a
+    single einsum with the expression reference's exact two-stage
+    rounding (F.round(d2, digits) then F.round(d2r * scale, 0), both as
+    `_round_half_away`).  Expression evaluation builds one scaled-d2
     column PER residual — a residual batch at n_probe=32 is n_q * 32
     interpreted fold columns over the codebook, the second-largest
     serving cost after plan compile (measured: most of a 63s wall at
     8 x 32 on the 2M index).  Same last-ulp boundary caveat as every
-    BLAS twin; since r10 the contract entries serve through this twin
-    (oracle-rehashed green at every gate SF) and pytest asserts exact
-    agreement with the expression reference on the test corpora."""
+    BLAS twin; the contract entries serve through it (oracle-rehashed
+    green at every gate SF) and pytest pins it to the expression
+    reference `_adc_lut_values` on the same rows."""
     import numpy as np
 
     scale = 10.0 ** round_digits
-    # accepts either the codebooks DataFrame or the driver-local row
-    # list the fast probes read via _sidecar_rows
-    rows = cb if isinstance(cb, list) else cb.select("subspace", "rk", "sc").collect()
     m = max(int(r["subspace"]) for r in rows) + 1
     ks = max(int(r["rk"]) for r in rows) + 1
     sub = max(len(r["sc"]) for r in rows)
@@ -2093,7 +2027,7 @@ def _adc_lut_values_blas(
     for r in rows:
         sc[int(r["subspace"]), int(r["rk"])] = [float(x) for x in r["sc"]]
     # geometry comes from the STORE (the q81/q88 cross-scale stance):
-    # slice the first m*sub query coords exactly as the expression path
+    # slice the first m*sub query coords exactly as the expression reference
     qmat = np.array(
         [[float(x) for x in q[: m * sub]] for q in query_vecs], dtype=np.float64
     ).reshape(len(query_vecs), m, sub)
@@ -2106,11 +2040,6 @@ def _adc_lut_values_blas(
         [[int(vals[q, j, r]) for r in range(ks)] for j in range(m)]
         for q in range(len(query_vecs))
     ]
-
-
-def _adc_lut_literal(cb: DataFrame, query_vec: list[float], round_digits: int):
-    """Single-query ADC LUT — see _adc_lut_literals."""
-    return _adc_lut_literals(cb, [query_vec], round_digits)[0]
 
 
 def _round_half_away(x, digits: int):
@@ -2530,19 +2459,15 @@ def _ivfpq_meta(path: str) -> dict:
     return meta
 
 
-def _ivfpq_rotation(spark, path: str, fast: bool = False) -> "list[list[float]]":
+def _ivfpq_rotation(path: str) -> "list[list[float]]":
     """Load an OPQ index's persisted rotation as a dense dim x dim list
-    (dim rows — one tiny driver action; fast=True reads it driver-local
-    via _sidecar_rows, same bytes, no Spark job)."""
+    (dim rows, read on the driver via _sidecar_rows — no Spark job)."""
     import os
 
-    rpath = os.path.join(path, "rotation")
-    rows = (
-        _sidecar_rows(rpath, ["pos", "row"])
-        if fast
-        else spark.read.parquet(rpath).collect()
+    rows = sorted(
+        _sidecar_rows(os.path.join(path, "rotation"), ["pos", "row"]),
+        key=lambda r: r["pos"],
     )
-    rows.sort(key=lambda r: r["pos"])
     return [[float(v) for v in r["row"]] for r in rows]
 
 
@@ -2556,34 +2481,31 @@ def ivfpq_probe_index(
     round_digits: int = 6,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
-    fast: bool = False,
 ) -> DataFrame:
     """Probe an `ivfpq_build_index` index: rank the persisted coarse
-    centroids by rounded query-cosine (ties to the smaller cell — one
-    driver action over n_cells rows), build the ADC LUT from the persisted
-    codebooks (one driver action over m*k rows), then scan ONLY the
-    n_probe winning cells' partitions scoring each code row with the
-    literal-LUT BIGINT sum — scan -> project -> TakeOrdered, zero joins,
-    I/O = n_probe/n_cells of the CODES (not vectors).  Output:
-    (id_col, adist), ascending approximate distance, ties to smaller id.
+    centroids by rounded query-cosine (ties to the smaller cell — a
+    driver GEMV over n_cells rows, `_probe_cells`), build the ADC LUT
+    from the persisted codebooks (a driver einsum over m*k rows,
+    `_adc_lut_values_blas`), then scan ONLY the n_probe winning cells'
+    partitions scoring each code row with the literal-LUT BIGINT sum —
+    scan -> project -> TakeOrdered, zero joins, I/O = n_probe/n_cells of
+    the CODES (not vectors).  Output: (id_col, adist), ascending
+    approximate distance, ties to smaller id.
 
     A `by_residual` index (see ivfpq_build_index) is detected from the
     stored meta.json: the probe then builds one LUT PER PROBED CELL from
     the query residual q - centroid[cell] and selects the row's LUT via
     a map literal keyed on `cell` — still zero joins, n_probe * m * k
     literal longs."""
-    import os
-
     scale = 10 ** round_digits
     meta = _ivfpq_meta(path)
-    by_residual = meta["by_residual"]
     if meta["opq"]:
         # the index lives in rotated space: rotate the query the same way
         # (driver-side — one dim x dim GEMV), then everything downstream
         # (cell ranking, LUTs, residuals) is unchanged
         import numpy as np
 
-        rot = np.asarray(_ivfpq_rotation(spark, path, fast=fast), dtype=np.float64)
+        rot = np.asarray(_ivfpq_rotation(path), dtype=np.float64)
         query_vec = [
             float(v)
             for v in _round_half_away(
@@ -2592,47 +2514,18 @@ def ivfpq_probe_index(
         ]
     # two-level indexes rank level-1 groups first (in rotated space —
     # the whole index lives there) and prune the centroid read
-    cents, _allowed = _probe_centroids(
-        spark, path, [0], [list(query_vec)], n_probe_groups, round_digits, fast=fast
+    probe, cv_by_cell = _probe_cells(
+        path, query_vec, n_probe, n_probe_groups, round_digits
     )
-    if fast:
-        # BLAS serving rung (same twin split as the batch joins): one
-        # collect of the pruned centroid table, ranking + residual
-        # centroid vectors from _rank_probe_cells_blas — pytest asserts
-        # the twins agree exactly on the test corpora
-        pairs, _cl, cv_by_cell = _rank_probe_cells_blas(
-            cents, [0], [list(query_vec)], n_probe, round_digits
-        )
-        probe = [c for _q, c in pairs]
-        probe_cvs = [cv_by_cell[c] for c in probe]
-    else:
-        qlit = lit_vector(query_vec)
-        probe_rows = (
-            cents.select(
-                "cell",
-                "cv",
-                F.round(cosine(F.col("cv"), qlit), round_digits).alias("__sim"),
-            )
-            .orderBy(F.col("__sim").desc(), F.col("cell").asc())
-            .limit(n_probe)
-            .collect()
-        )
-        probe = [int(r["cell"]) for r in probe_rows]
-        probe_cvs = [r["cv"] for r in probe_rows]
-    cb = (
-        _sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
-        if fast
-        else spark.read.parquet(os.path.join(path, "codebooks"))
-    )
-    lut_values = _adc_lut_values_blas if fast else _adc_lut_values
-    if by_residual:
+    cb = _codebook_rows(path)
+    if meta["by_residual"]:
         luts = [
             _lut_literal(v)
-            for v in lut_values(
+            for v in _adc_lut_values_blas(
                 cb,
                 [
-                    [float(q) - float(c) for q, c in zip(query_vec, cv)]
-                    for cv in probe_cvs
+                    [float(q) - float(c) for q, c in zip(query_vec, cv_by_cell[cell])]
+                    for cell in probe
                 ],
                 round_digits,
             )
@@ -2642,7 +2535,9 @@ def ivfpq_probe_index(
         )
         lut_col = F.element_at(cell_lut, F.col("cell").cast("long"))
     else:
-        lut_col = _lut_literal(lut_values(cb, [list(query_vec)], round_digits)[0])
+        lut_col = _lut_literal(
+            _adc_lut_values_blas(cb, [list(query_vec)], round_digits)[0]
+        )
     codes = _apply_id_filter(
         _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
     )
@@ -2670,7 +2565,6 @@ def ivfpq_knn_join_index(
     id_col: str = "vec_id",
     round_digits: int = 6,
     lut_literal_max_probe: int = 16,
-    fast: bool = False,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
 ) -> DataFrame:
@@ -2684,9 +2578,10 @@ def ivfpq_knn_join_index(
 
     The query batch is COLLECTED to the driver (a serving batch is
     small by definition — it has to fit in one RPC) to build the LUT
-    literals; cell ranking runs as ONE Spark action over the n_cells
-    centroid rows with one rounded-cosine column per query (the same
-    expressions the single probe and the oracle use).  All three index
+    literals; cell ranking and LUT values run on the driver over the
+    sidecar-read centroid and codebook rows (`_rank_probe_cells_blas`,
+    `_adc_lut_values_blas` — one GEMM and one einsum for the batch,
+    the rankers the single probe uses).  All three index
     flavors are supported: raw, OPQ (the collected queries are rotated
     driver-side), and `by_residual` — the residual query r = q -
     centroid[cell] differs PER PROBED CELL, so the LUT keys on the
@@ -2701,20 +2596,10 @@ def ivfpq_knn_join_index(
     says production serving needs, n_q * 32 * m * k inline longs cost
     ~24s/query of Catalyst plan COMPILE (r8 measurement) — so the LUTs
     ride as a COLUMN of the broadcast (qid, cell) pair rows instead:
-    same values from the same `_adc_lut_values` action, same single
+    same values from the same `_adc_lut_values_blas` call, same single
     broadcast hash join (the LUT column is just extra broadcast
     payload, n_q * n_probe * m * k longs — still KBs), bit-identical
-    output (asserted in tests/test_plans.py).
-
-    `fast=True` swaps the driver-action stages (cell ranking, LUT
-    values) for their BLAS twins — same split as the fast=True index
-    BUILDS: production serving uses it (one GEMM instead of
-    n_q * n_cells interpreted folds + n_q * n_probe LUT columns);
-    contract entries pass fast=True since r10 (oracle-rehashed at every
-    gate SF); pytest asserts the two paths are bit-identical on the
-    test corpora."""
-    import os
-
+    output (asserted in tests/test_plans.py)."""
     from pyspark.sql import Window
 
     meta = _ivfpq_meta(path)
@@ -2723,26 +2608,17 @@ def ivfpq_knn_join_index(
     if meta["opq"]:
         import numpy as np
 
-        rot = np.asarray(_ivfpq_rotation(spark, path, fast=fast), dtype=np.float64)
+        rot = np.asarray(_ivfpq_rotation(path), dtype=np.float64)
         qvecs = [
             [float(v) for v in _round_half_away(np.asarray(q) @ rot, round_digits)]
             for q in qvecs
         ]
 
-    cents, allowed = _probe_centroids(
-        spark, path, qids, qvecs, n_probe_groups, round_digits, fast=fast
-    )
-    rank_cells = _rank_probe_cells_blas if fast else _rank_probe_cells
-    lut_values = _adc_lut_values_blas if fast else _adc_lut_values
-    pairs, cell_list, cv_by_cell = rank_cells(
+    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
+    pairs, cell_list, cv_by_cell = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
-
-    cb = (
-        _sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
-        if fast
-        else spark.read.parquet(os.path.join(path, "codebooks"))
-    )
+    cb = _codebook_rows(path)
     codes = _apply_id_filter(
         _apply_tombstones(spark, path, _read_cells(spark, path, cell_list)), filter_ids
     )
@@ -2755,7 +2631,7 @@ def ivfpq_knn_join_index(
             [float(a) - float(b) for a, b in zip(qv_by_qid[q], cv_by_cell[c])]
             for q, c in pairs
         ]
-        lut_vals = lut_values(cb, residuals, round_digits)
+        lut_vals = _adc_lut_values_blas(cb, residuals, round_digits)
         if n_probe > lut_literal_max_probe:
             # broadcast LUT TABLE: the per-(qid, cell) tables ride the
             # pair rows the join already broadcasts — no plan literals,
@@ -2784,7 +2660,7 @@ def ivfpq_knn_join_index(
     else:
         pair_df = spark.createDataFrame(pairs, pair_schema)
         cand = codes.join(F.broadcast(pair_df), "cell")
-        luts = [_lut_literal(v) for v in lut_values(cb, qvecs, round_digits)]
+        luts = [_lut_literal(v) for v in _adc_lut_values_blas(cb, qvecs, round_digits)]
         qid_lut = F.map_from_arrays(
             F.array(*[F.lit(q).cast("long") for q in qids]), F.array(*luts)
         )
@@ -2941,16 +2817,13 @@ def ivfsq_build_index(
     )
 
 
-def _sq_bounds(
-    spark, path: str, fast: bool = False
-) -> tuple[list[float], list[float]]:
+def _sq_bounds(path: str) -> tuple[list[float], list[float]]:
+    """An SQ8 index's per-dimension (mn, mx) bounds, read on the driver
+    (`_sidecar_rows`)."""
     import os
 
-    spath = os.path.join(os.fspath(path), "sq")
     rows = sorted(
-        _sidecar_rows(spath, ["pos", "mn", "mx"])
-        if fast
-        else spark.read.parquet(spath).collect(),
+        _sidecar_rows(os.path.join(os.fspath(path), "sq"), ["pos", "mn", "mx"]),
         key=lambda r: r["pos"],
     )
     return [float(r["mn"]) for r in rows], [float(r["mx"]) for r in rows]
@@ -2966,10 +2839,10 @@ def ivfsq_probe_index(
     round_digits: int = 6,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
-    fast: bool = False,
 ) -> DataFrame:
     """Probe an `ivfsq_build_index` index: rank the stored coarse
-    centroids by rounded query-cosine (full-dim), then scan ONLY the
+    centroids by rounded query-cosine (full-dim, on the driver —
+    `_probe_cells`), then scan ONLY the
     n_probe winning cells' partitions scoring each code row with the
     asymmetric SQ distance sum_j (q_j - xhat_j)^2 where
     xhat_j = mn_j + (code_j + 0.5) * (mx_j - mn_j)/256 — decode + score
@@ -2984,26 +2857,8 @@ def ivfsq_probe_index(
     with open(os.path.join(path, "meta.json")) as f:
         dim = int(json.load(f)["dim"])
     scale = 10 ** round_digits
-    cents, _allowed = _probe_centroids(
-        spark, path, [0], [list(query_vec)], n_probe_groups, round_digits, fast=fast
-    )
-    if fast:
-        pairs, _cl, _cv = _rank_probe_cells_blas(
-            cents, [0], [list(query_vec)], n_probe, round_digits
-        )
-        probe = [c for _q, c in pairs]
-    else:
-        qlit = lit_vector([float(x) for x in query_vec])
-        probe = [
-            int(r["cell"])
-            for r in cents.select(
-                "cell", F.round(cosine(F.col("cv"), qlit), round_digits).alias("__sim")
-            )
-            .orderBy(F.col("__sim").desc(), F.col("cell").asc())
-            .limit(n_probe)
-            .collect()
-        ]
-    mn, mx = _sq_bounds(spark, path, fast=fast)
+    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
+    mn, mx = _sq_bounds(path)
     q64 = [float(x) for x in query_vec[:dim]]
     delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
     codes = _apply_id_filter(
@@ -3042,7 +2897,6 @@ def ivfsq_knn_join_index(
     qvec_col: str = "qvec",
     id_col: str = "vec_id",
     round_digits: int = 6,
-    fast: bool = False,
     n_probe_groups: int = 3,
     filter_ids: "DataFrame | str | None" = None,
 ) -> DataFrame:
@@ -3058,8 +2912,8 @@ def ivfsq_knn_join_index(
     results are bit-identical to `ivfsq_probe_index` per query
     (asserted in tests).
 
-    Plan: one driver action ranks the n_cells centroids for the whole
-    batch (full-dim cosine, same total order as the single probe); ONE
+    Plan: one driver GEMM ranks the centroid rows for the whole batch
+    (full-dim cosine, same total order as the single probe); ONE
     partition-pruned scan of the union of probed cells; one broadcast
     hash join on `cell`; one per-qid top-k window — the only wide
     exchange.  Output (qid, id_col, adist), ascending approximate
@@ -3073,18 +2927,13 @@ def ivfsq_knn_join_index(
         dim = int(json.load(f)["dim"])
     scale = 10 ** round_digits
     qids, qvecs = _collect_query_batch(queries, qid_col, qvec_col)
-    cents, allowed = _probe_centroids(
-        spark, path, qids, qvecs, n_probe_groups, round_digits, fast=fast
-    )
+    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
     # cell ranking uses the FULL query vector (the single probe's
-    # stance); scoring uses the first `dim` coordinates the codes cover.
-    # fast=True -> BLAS ranking twin (production serving; contract
-    # entries pass fast=True since r10, oracle-rehashed per gate SF)
-    rank_cells = _rank_probe_cells_blas if fast else _rank_probe_cells
-    pairs, cell_list, _cv = rank_cells(
+    # stance); scoring uses the first `dim` coordinates the codes cover
+    pairs, cell_list, _cv = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
-    mn, mx = _sq_bounds(spark, path, fast=fast)
+    mn, mx = _sq_bounds(path)
     delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
     q64_by_qid = {q: [float(x) for x in v[:dim]] for q, v in zip(qids, qvecs)}
     pair_df = spark.createDataFrame(

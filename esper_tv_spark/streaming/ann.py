@@ -172,7 +172,7 @@ def ivfpq_stream_insert(
             # inserts stay bit-identical to a batch rebuild
             batch_df = rotate_vectors(
                 batch_df,
-                _ivfpq_rotation(spark, index_path),
+                _ivfpq_rotation(index_path),
                 id_col,
                 vec_col,
                 round_digits,
@@ -246,7 +246,7 @@ def ivfsq_stream_insert(
         spark = batch_df.sparkSession
         with open(os.path.join(index_path, "meta.json")) as f:
             dim = int(json.load(f)["dim"])
-        mn, mx = _sq_bounds(spark, index_path)
+        mn, mx = _sq_bounds(index_path)
         cents = _stored_centroids(spark, index_path)
         assigned = lloyd_assign(
             batch_df, centroids=cents, id_col=id_col, vec_col=vec_col,

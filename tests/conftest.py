@@ -15,3 +15,17 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def rows_df(spark):
+    """Driver-read index rows (a list of dicts, as `_sidecar_rows`
+    returns them) as a DataFrame with the given DDL schema — the input
+    the expression references (`_rank_probe_cells`, `_adc_lut_values`)
+    take, so a test can hand both rankers the same rows."""
+
+    def make(rows, schema):
+        names = [f.split()[0] for f in schema.split(",")]
+        return spark.createDataFrame([tuple(r[n] for n in names) for r in rows], schema)
+
+    return make

@@ -88,8 +88,8 @@ def test_group_pruning_binds_and_matches_restricted_oracle(spark, emb, qv, tmp_p
 
     hier = str(tmp_path / "hier")
     sim.ivf_build_index(emb, hier, n_cells=16, n_groups=4)
-    cents, allowed = sim._probe_centroids(spark, hier, [0], [qv], 1, 6)
-    pairs, _cells, _cv = sim._rank_probe_cells(cents, [0], [qv], 3, 6, allowed=allowed)
+    cents, allowed = sim._probe_centroids(hier, [0], [qv], 1, 6)
+    pairs, _cells, _cv = sim._rank_probe_cells_blas(cents, [0], [qv], 3, 6, allowed=allowed)
     hier3 = [c for _q, c in pairs]
 
     all_rows = spark.read.parquet(os.path.join(hier, "centroids")).collect()
@@ -118,12 +118,13 @@ def test_group_pruning_binds_and_matches_restricted_oracle(spark, emb, qv, tmp_p
 
 
 @pytest.mark.slow
-def test_batch_joins_match_single_probes_on_pruned_hier(spark, emb, tmp_path):
+def test_batch_joins_match_single_probes_on_pruned_hier(spark, emb, rows_df, tmp_path):
     """Per-query group restriction: a 3-query batch over a two-level
     index must return, per query, exactly the single probe's rows — even
     though the batch's centroid scan is pruned to the UNION of all
     queries' groups (without the per-query mask a query could rank
-    another query's cells).  Both rankers (expression / BLAS)."""
+    another query's cells).  On those same pruned rows the BLAS ranker
+    the joins use equals the expression reference."""
     qrows = emb.where(F.col("vec_id").isin([0, 7, 13])).select(
         "vec_id", "embedding"
     ).collect()
@@ -135,11 +136,11 @@ def test_batch_joins_match_single_probes_on_pruned_hier(spark, emb, tmp_path):
         (
             "ivf",
             lambda p: sim.ivf_build_index(emb, p, n_cells=16, n_groups=4),
-            lambda p, v, **kw: sim.ivf_probe_index(
+            lambda p, v: sim.ivf_probe_index(
                 spark, p, v, 5, n_probe=3, n_probe_groups=2
             ),
-            lambda p, **kw: sim.ivf_knn_join_index(
-                spark, p, qdf, 5, n_probe=3, n_probe_groups=2, **kw
+            lambda p: sim.ivf_knn_join_index(
+                spark, p, qdf, 5, n_probe=3, n_probe_groups=2
             ),
         ),
         (
@@ -147,52 +148,56 @@ def test_batch_joins_match_single_probes_on_pruned_hier(spark, emb, tmp_path):
             lambda p: sim.ivfpq_build_index(
                 emb, p, n_cells=16, m=8, k=16, dim=64, by_residual=True, n_groups=4
             ),
-            lambda p, v, **kw: sim.ivfpq_probe_index(
+            lambda p, v: sim.ivfpq_probe_index(
                 spark, p, v, 5, n_probe=3, n_probe_groups=2
             ),
-            lambda p, **kw: sim.ivfpq_knn_join_index(
-                spark, p, qdf, 5, n_probe=3, n_probe_groups=2, **kw
+            lambda p: sim.ivfpq_knn_join_index(
+                spark, p, qdf, 5, n_probe=3, n_probe_groups=2
             ),
         ),
         (
             "ivfsq",
             lambda p: sim.ivfsq_build_index(emb, p, n_cells=16, dim=64, n_groups=4),
-            lambda p, v, **kw: sim.ivfsq_probe_index(
+            lambda p, v: sim.ivfsq_probe_index(
                 spark, p, v, 5, n_probe=3, n_probe_groups=2
             ),
-            lambda p, **kw: sim.ivfsq_knn_join_index(
-                spark, p, qdf, 5, n_probe=3, n_probe_groups=2, **kw
+            lambda p: sim.ivfsq_knn_join_index(
+                spark, p, qdf, 5, n_probe=3, n_probe_groups=2
             ),
         ),
     ]
     for name, build, probe, join in cases:
         idx = str(tmp_path / name)
         build(idx)
-        for fast in (False, True):
-            got = join(idx, fast=fast)
-            for qid, v in qmap.items():
-                batch_q = _rows(
-                    got.where(F.col("qid") == qid).drop("qid")
-                )
-                assert batch_q == _rows(probe(idx, v)), (name, fast, qid)
+        got = join(idx)
+        for qid, v in qmap.items():
+            batch_q = _rows(got.where(F.col("qid") == qid).drop("qid"))
+            assert batch_q == _rows(probe(idx, v)), (name, qid)
+        qids, qvecs = list(qmap), list(qmap.values())
+        cents, allowed = sim._probe_centroids(idx, qids, qvecs, 2, 6)
+        cents_df = rows_df(cents, "cell long, cv array<double>, grp long")
+        assert sim._rank_probe_cells_blas(
+            cents, qids, qvecs, 3, 6, allowed=allowed
+        ) == sim._rank_probe_cells(cents_df, qids, qvecs, 3, 6, allowed=allowed), name
 
 
 # ------------------------------------------------------------ plan shape
 
 
 def test_hier_centroid_read_is_partition_pruned(spark, emb, tmp_path):
-    """The winning-group centroid read must reach the scan as a
-    PartitionFilters clause on grp — that is the point of the layer: at
+    """The winning-group centroid read must keep ONLY the winning
+    groups' `grp=<g>` partitions — that is the point of the layer: at
     180k centroids the ranking reads sqrt-of-the-table, not the table."""
     hier = str(tmp_path / "hier")
     sim.ivf_build_index(emb, hier, n_cells=16, n_groups=4)
-    cents, allowed = sim._probe_centroids(spark, hier, [0], [
+    cents, allowed = sim._probe_centroids(hier, [0], [
         [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
     ], 2, 6)
     assert allowed is not None and len(allowed[0]) <= 2
-    plan = physical_plan(cents)
-    assert "PartitionFilters" in plan
-    assert "grp" in plan.split("PartitionFilters")[1][:200]
+    every = spark.read.parquet(os.path.join(hier, "centroids")).collect()
+    kept = sorted(r["cell"] for r in every if r["grp"] in allowed[0])
+    assert sorted(r["cell"] for r in cents) == kept
+    assert {r["grp"] for r in cents} == allowed[0] and len(kept) < len(every)
 
 
 def test_q100_plan_keeps_flat_probe_invariants(spark):
@@ -347,7 +352,7 @@ def test_pruned_assignment_exact_for_pq_and_sq_builders(spark, emb, tmp_path):
 
 def test_hier_tombstones_fast_batch_compose(spark, emb, tmp_path):
     """The round-9 features compose: a TWO-LEVEL index with LOGICAL
-    DELETES served by the fast=True batch join returns, per query,
+    DELETES served by the batch join returns, per query,
     exactly the hier single probe's rows — with every tombstoned id
     absent from both."""
     from esper_tv_spark.streaming.ann import ann_delete
@@ -365,9 +370,7 @@ def test_hier_tombstones_fast_batch_compose(spark, emb, tmp_path):
     }
     victims = sorted({int(rows[0][0]) for rows in before.values()})
     ann_delete(spark, idx, victims)
-    out = sim.ivf_knn_join_index(
-        spark, idx, qdf, 5, n_probe=3, n_probe_groups=2, fast=True
-    )
+    out = sim.ivf_knn_join_index(spark, idx, qdf, 5, n_probe=3, n_probe_groups=2)
     got_ids = {int(r["vec_id"]) for r in out.collect()}
     assert not (set(victims) & got_ids)
     for q, v in qmap.items():

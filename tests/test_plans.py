@@ -552,61 +552,81 @@ def test_batch_knn_join_rejects_bad_qids(spark, tmp_path):
         ivf_knn_join_index(spark, idx, big, 5)
 
 
-def test_batch_knn_join_fast_matches_slow(spark, tmp_path):
-    """fast=True serving (BLAS cell ranking + BLAS LUT values) is
-    bit-identical to the expression path across the whole join matrix:
-    ivf, ivfsq, and all four ivfpq flavors x both LUT carriers — the
-    same fast==slow contract the index BUILDS carry."""
-    from pyspark.sql import functions as F
+# The driver rankers every probe and kNN join uses, fed the SAME rows as
+# their expression references: a flat index, a two-level index (ranked
+# with the per-query `allowed` group sets) and hand-made tied centroids.
+_CENTS = "cell long, cv array<double>"
+_TIED = [  # equal rounded cosines: the smaller cell id must rank first
+    {"cell": 5, "cv": [1.0, 0.0, 0.0]},
+    {"cell": 2, "cv": [2.0, 0.0, 0.0]},
+    {"cell": 9, "cv": [0.0, 1.0, 0.0]},
+    {"cell": 0, "cv": [0.0, 3.0, 0.0]},
+    {"cell": 7, "cv": [0.6, 0.8, 0.0]},
+    {"cell": 3, "cv": [1.0, 0.0, 1e-9]},
+]
 
-    from esper_tv_spark.operators.similarity import (
-        ivf_build_index,
-        ivf_knn_join_index,
-        ivfpq_build_index,
-        ivfpq_knn_join_index,
-        ivfsq_build_index,
-        ivfsq_knn_join_index,
-        opq_train,
-    )
+
+@pytest.fixture(scope="module")
+def pq_indexes(spark, tmp_path_factory):
+    """A flat and a two-level ivfpq index over the sf0.001 embeddings."""
+    from esper_tv_spark.operators.similarity import ivfpq_build_index
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    queries = emb.where(F.col("vec_id").isin([0, 7, 13])).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    root = tmp_path_factory.mktemp("rankers")
+    out = {}
+    for layout, kw in (("flat", {}), ("two_level", {"n_groups": 4})):
+        out[layout] = str(root / layout)
+        ivfpq_build_index(emb, out[layout], n_cells=16, m=8, k=16, dim=64, **kw)
+    return emb, out
+
+
+def _assert_rankers_agree(rows_df, pq_indexes, qids):
+    """Cell ranking BLAS == expression on the same centroid rows (tied,
+    flat and two-level), and ADC LUTs BLAS == expression on the same
+    codebook rows, for the raw queries and every (query, probed cell)
+    residual."""
+    from esper_tv_spark.operators.similarity import (
+        _adc_lut_values,
+        _adc_lut_values_blas,
+        _codebook_rows,
+        _probe_centroids,
+        _rank_probe_cells,
+        _rank_probe_cells_blas,
     )
 
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+    emb, idx = pq_indexes
+    by_id = {
+        int(r["vec_id"]): [float(x) for x in r["embedding"]]
+        for r in emb.where(F.col("vec_id").isin(qids)).collect()
+    }
+    qvecs = [by_id[q] for q in qids]
+    tied_q = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.6, 0.8, 0.0]][: len(qids)]
+    got = _rank_probe_cells_blas(_TIED, qids, tied_q, 3, 6)
+    assert got == _rank_probe_cells(rows_df(_TIED, _CENTS), qids, tied_q, 3, 6), "tied"
+    assert [c for q, c in got[0] if q == qids[0]] == [2, 3, 5]
+    for layout in ("flat", "two_level"):
+        cents, allowed = _probe_centroids(idx[layout], qids, qvecs, 2, 6)
+        assert (allowed is not None) == (layout == "two_level")
+        schema = _CENTS + (", grp long" if allowed else "")
+        got = _rank_probe_cells_blas(cents, qids, qvecs, 3, 6, allowed=allowed)
+        want = _rank_probe_cells(rows_df(cents, schema), qids, qvecs, 3, 6, allowed=allowed)
+        assert got == want, layout
+        pairs, _cells, cv_by_cell = got
+        cb = _codebook_rows(idx[layout])
+        cb_df = rows_df(cb, "subspace int, rk int, sc array<double>")
+        residuals = [
+            [a - b for a, b in zip(qvecs[qids.index(q)], cv_by_cell[c])] for q, c in pairs
+        ]
+        for vecs in (qvecs, residuals):
+            assert _adc_lut_values_blas(cb, vecs, 6) == _adc_lut_values(cb_df, vecs, 6), layout
 
-    ivf = str(tmp_path / "ivf")
-    ivf_build_index(emb, ivf, n_cells=16)
-    assert rows(ivf_knn_join_index(spark, ivf, queries, 10, n_probe=3, fast=True)) == rows(
-        ivf_knn_join_index(spark, ivf, queries, 10, n_probe=3)
-    )
 
-    sq = str(tmp_path / "ivfsq")
-    ivfsq_build_index(emb, sq, n_cells=16, dim=64)
-    assert rows(ivfsq_knn_join_index(spark, sq, queries, 10, n_probe=3, fast=True)) == rows(
-        ivfsq_knn_join_index(spark, sq, queries, 10, n_probe=3)
-    )
-
-    rot = opq_train(emb, m=8, k=16, dim=64, iters=2, sample_rows=256)
-    for tag, kw in (
-        ("raw", {}),
-        ("opq", {"opq_rotation": rot}),
-        ("res", {"by_residual": True}),
-        ("opq_res", {"opq_rotation": rot, "by_residual": True}),
-    ):
-        idx = str(tmp_path / f"pq_{tag}")
-        ivfpq_build_index(emb, idx, n_cells=16, m=8, k=16, dim=64, **kw)
-        slow = rows(ivfpq_knn_join_index(spark, idx, queries, 10, n_probe=3))
-        for maxp in (16, 0):  # literal map AND broadcast-table carriers
-            got = rows(
-                ivfpq_knn_join_index(
-                    spark, idx, queries, 10, n_probe=3,
-                    lut_literal_max_probe=maxp, fast=True,
-                )
-            )
-            assert got == slow, (tag, maxp)
+def test_batch_knn_join_fast_matches_slow(spark, rows_df, pq_indexes):
+    """The kNN joins' driver rankers (`_rank_probe_cells_blas`,
+    `_adc_lut_values_blas`) equal their expression references on a
+    3-query batch: flat, two-level (per-query group sets) and tied
+    centroids, including every residual LUT."""
+    _assert_rankers_agree(rows_df, pq_indexes, [0, 7, 13])
 
 
 def test_batch_knn_join_null_cosine_ranks_last(spark):
@@ -628,58 +648,20 @@ def test_batch_knn_join_null_cosine_ranks_last(spark):
     assert cv[1] == [None, 1.0]  # corrupt component preserved, not a crash
 
 
-def test_single_probe_fast_matches_slow(spark, tmp_path):
-    """fast=True on the SINGLE-probe serving paths (the r10 contract
-    flip: ivf_probe_index, ivf_range_search, pq_probe_store,
-    ivfpq_probe_index, ivfsq_probe_index) and on
-    pq_assign_deterministic is bit-identical to the expression path —
-    the unit-level twin pin the batch joins already carry (r10 ADVICE:
-    the single-probe fast paths had only entry-level gate coverage)."""
-    from esper_tv_spark.operators.similarity import (
-        ivf_build_index,
-        ivf_probe_index,
-        ivf_range_search,
-        ivfpq_build_index,
-        ivfpq_probe_index,
-        ivfsq_build_index,
-        ivfsq_probe_index,
-        pq_assign_deterministic,
-        pq_build_store,
-        pq_probe_store,
-    )
+def test_single_probe_fast_matches_slow(spark, rows_df, pq_indexes):
+    """The single probes' driver rankers (`_rank_probe_cells_blas`,
+    `_adc_lut_values_blas`) equal their expression references for one
+    query on the same rows — flat, two-level and tied centroids — and
+    the builder-side `pq_assign_deterministic(fast=True)` equals its
+    expression twin."""
+    from esper_tv_spark.operators.similarity import pq_assign_deterministic
 
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    qvec = [float(x) for x in emb.where(F.col("vec_id") == 7).collect()[0]["embedding"]]
+    _assert_rankers_agree(rows_df, pq_indexes, [7])
+
+    emb = pq_indexes[0]
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
-
-    ivf = str(tmp_path / "sp_ivf")
-    ivf_build_index(emb, ivf, n_cells=16)
-    assert rows(ivf_probe_index(spark, ivf, qvec, 10, n_probe=3, fast=True)) == rows(
-        ivf_probe_index(spark, ivf, qvec, 10, n_probe=3)
-    )
-    assert rows(
-        ivf_range_search(spark, ivf, qvec, 0.1, n_probe=3, fast=True)
-    ) == rows(ivf_range_search(spark, ivf, qvec, 0.1, n_probe=3))
-
-    pq = str(tmp_path / "sp_pq")
-    pq_build_store(emb, pq, m=8, k=16, dim=64)
-    assert rows(pq_probe_store(spark, pq, qvec, 10, fast=True)) == rows(
-        pq_probe_store(spark, pq, qvec, 10)
-    )
-
-    pqi = str(tmp_path / "sp_ivfpq")
-    ivfpq_build_index(emb, pqi, n_cells=16, m=8, k=16, dim=64)
-    assert rows(ivfpq_probe_index(spark, pqi, qvec, 10, n_probe=3, fast=True)) == rows(
-        ivfpq_probe_index(spark, pqi, qvec, 10, n_probe=3)
-    )
-
-    sq = str(tmp_path / "sp_ivfsq")
-    ivfsq_build_index(emb, sq, n_cells=16, dim=64)
-    assert rows(ivfsq_probe_index(spark, sq, qvec, 10, n_probe=3, fast=True)) == rows(
-        ivfsq_probe_index(spark, sq, qvec, 10, n_probe=3)
-    )
 
     fast_codes = rows(pq_assign_deterministic(emb, m=8, k=16, dim=64, fast=True))
     slow_codes = rows(pq_assign_deterministic(emb, m=8, k=16, dim=64))

@@ -1,9 +1,11 @@
 """Planning an IVF probe reads the index's metadata on the driver: the
 centroids and tombstone ids with pyarrow, the posting schema from one
-parquet footer.  Building a DSL `ann_probe` plan therefore launches no
-Spark job, and its result launches exactly one — on an index carrying
-stream-inserted fragments and tombstones, with the same rows as the
-expression path and no tombstoned id ever returned."""
+parquet footer.  Building a DSL `ann_probe` or `hybrid` plan therefore
+launches no Spark job, and an `ann_probe` result launches exactly one —
+on an index carrying stream-inserted fragments and tombstones, with the
+library probe's rows and no tombstoned id ever returned.  A DSL
+`query_ids` batch launches only its two batch collects, and an
+uncommitted tombstone write is invisible to every read."""
 
 import itertools
 import os
@@ -17,9 +19,12 @@ from esper_tv_spark.frontend.result_json import to_result_json
 from esper_tv_spark.operators.similarity import (
     _read_cells,
     ivf_build_index,
+    ivf_knn_join_index,
     ivf_probe_index,
     ivfpq_build_index,
+    ivfpq_knn_join_index,
     ivfsq_build_index,
+    ivfsq_knn_join_index,
     lit_norm,
     lit_vector,
     norm,
@@ -27,6 +32,7 @@ from esper_tv_spark.operators.similarity import (
 from esper_tv_spark.streaming import file_stream
 from esper_tv_spark.streaming.ann import (
     ann_delete,
+    compact_posting_lists,
     ivf_stream_insert,
     ivfpq_stream_insert,
     ivfsq_stream_insert,
@@ -105,7 +111,7 @@ def test_dsl_ann_probe_plans_without_jobs(spark, live_index):
     assert built == 0
     res, ran = _jobs(spark, lambda: to_result_json(df))
     assert ran == 1
-    want = [tuple(r) for r in ivf_probe_index(spark, idx, q, 10, n_probe=3, fast=False).collect()]
+    want = [tuple(r) for r in ivf_probe_index(spark, idx, q, 10, n_probe=3).collect()]
     assert _dsl_rows(res) == want and len(want) == 10
 
 
@@ -118,8 +124,87 @@ def test_tombstoned_query_never_returns_its_id(spark, live_index):
         res = to_result_json(run_query(cat, _spec(vecs[v], 16), index_catalog={"live": idx}))
         got = [i for i, _ in _dsl_rows(res)]
         assert v not in got and len(got) == 10
-        slow = ivf_probe_index(spark, idx, vecs[v], 10, n_probe=16, fast=False).collect()
-        assert v not in [r[0] for r in slow]
+        lib = ivf_probe_index(spark, idx, vecs[v], 10, n_probe=16).collect()
+        assert v not in [r[0] for r in lib]
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq"])
+def test_dsl_query_ids_batch_plans_with_its_two_collects(spark, tmp_path, kind):
+    """A DSL `ann_probe` over `query_ids` builds with exactly two jobs:
+    the DSL's query-id check and the join's one query-batch collect —
+    cell ranking, LUTs and index metadata add none.  Its rows are the
+    library join's."""
+    emb = _vectors(spark).where(F.col("vec_id") < N_BASE)
+    idx = str(tmp_path / kind)
+    build, join = {
+        "ivf": (lambda: ivf_build_index(emb, idx, n_cells=16), ivf_knn_join_index),
+        "ivfpq": (
+            lambda: ivfpq_build_index(emb, idx, n_cells=16, m=8, k=16, dim=DIM, by_residual=True),
+            ivfpq_knn_join_index,
+        ),
+        "ivfsq": (lambda: ivfsq_build_index(emb, idx, n_cells=16, dim=DIM), ivfsq_knn_join_index),
+    }[kind]
+    build()
+    qids = [3, 42, 77]
+    spec = {
+        "table": "vectors",
+        "similarity": {"op": "ann_probe", "index": "live", "query_ids": qids, "k": 10, "n_probe": 3},
+    }
+    df, built = _jobs(spark, lambda: run_query({"vectors": emb}, spec, index_catalog={"live": idx}))
+    assert built == 2
+    queries = emb.where(F.col("vec_id").isin(qids)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    want = sorted(tuple(r) for r in join(spark, idx, queries, 10, n_probe=3).collect())
+    assert sorted(tuple(r) for r in df.collect()) == want and len(want) == 30
+
+
+def test_dsl_hybrid_plans_without_jobs(spark, live_index):
+    idx, _cat, vecs, _victims = live_index
+    words = ["face", "news", "anchor", "weather", "sports"]
+    docs = spark.createDataFrame(
+        [(i, f"{words[i % 5]} {words[(i * 3) % 5]} clip {i}") for i in range(N_BASE)],
+        "doc_id long, text string",
+    )
+    spec = {
+        "table": "docs",
+        "similarity": {"op": "hybrid", "index": "live", "terms": ["news", "anchor"], "query": vecs[42], "k": 5},
+    }
+    df, built = _jobs(spark, lambda: run_query({"docs": docs}, spec, index_catalog={"live": idx}))
+    assert built == 0
+    assert len(df.collect()) == 5
+
+
+def test_uncommitted_tombstone_write_is_invisible(spark, tmp_path):
+    """A first `ann_delete` caught mid-write leaves `tombstones/` holding
+    only its `_temporary/` attempt.  Every read ignores it — the DSL
+    probe, the batch join and a purge return unchanged rows — and the
+    purge leaves the in-flight write in place."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    emb = _vectors(spark).where(F.col("vec_id") < N_BASE)
+    idx = str(tmp_path / "idx")
+    ivf_build_index(emb, idx, n_cells=16)
+    cat, q = {"vectors": emb}, [float(x) for x in emb.where(F.col("vec_id") == 42).first()[1]]
+    queries = emb.where(F.col("vec_id").isin([42, 77])).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+    def reads():
+        probe = _dsl_rows(to_result_json(run_query(cat, _spec(q), index_catalog={"live": idx})))
+        join = sorted(tuple(r) for r in ivf_knn_join_index(spark, idx, queries, 10).collect())
+        return probe, join
+
+    before = reads()
+    assert before[0][0][0] == 42
+    attempt = os.path.join(idx, "tombstones", "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(attempt)
+    pq.write_table(pa.table({"id": pa.array([42], pa.int64())}), os.path.join(attempt, "part-0.parquet"))
+    assert reads() == before
+    compact_posting_lists(spark, idx, purge=True)
+    assert reads() == before
+    assert os.path.isdir(attempt)
 
 
 @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq", "sorted"])

@@ -627,7 +627,7 @@ def test_ivfsq_reconstruction_error_bounded(spark, tmp_path):
     )
     idx = str(tmp_path / "ivfsq_err")
     sim.ivfsq_build_index(emb, idx, n_cells=8, dim=64)
-    mn, mx = sim._sq_bounds(spark, idx)
+    mn, mx = sim._sq_bounds(idx)
     mn, mx = np.array(mn), np.array(mx)
     delta = (mx - mn) / 256.0
     vecs = {r["vec_id"]: np.array(r["embedding"], np.float64)[:64] for r in emb.collect()}

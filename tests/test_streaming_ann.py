@@ -354,7 +354,7 @@ def test_ivfsq_stream_insert_encodes_identically(spark, tmp_path):
     q = ivfsq_stream_insert(stream, idx, str(tmp_path / "ckpt")).start()
     q.awaitTermination(180)
 
-    mn, mx = _sq_bounds(spark, idx)
+    mn, mx = _sq_bounds(idx)
     v64 = PF.slice(PF.col("embedding").cast("array<double>"), 1, 64)
     want = {
         r["vec_id"]: tuple(r["codes"])
@@ -703,7 +703,7 @@ def test_ann_delete_validation(spark, tmp_path):
 def _victim_and_probe(spark, idx, qv):
     from esper_tv_spark.operators import similarity as sim
 
-    cents, _allowed = sim._probe_centroids(spark, idx, [0], [qv], 1, 6)
+    cents = spark.read.parquet(os.path.join(idx, "centroids"))
     pairs, _cells, _cv = sim._rank_probe_cells(cents, [0], [qv], 1, 6)
     return int(pairs[0][1])
 

@@ -605,38 +605,3 @@ def test_lsh_near_dup_cache_mode_parity(spark):
     # the exact-dup pair must be found with jaccard 1.0
     assert any(a == 1 and b == 3 and j == 1.0 for a, b, j in outs[0])
 
-
-def test_srp_index_probe_fast_matches_slow(spark, tmp_path):
-    """near_dup_pairs_from_index fast=True (gather-scoring: per-worker
-    matrix load + einsum per pair batch) is row-identical to the
-    expression path on a file-backed corpus — the q51 twin pin (r11).
-    Also covers the not-file-backed fallback (createDataFrame input
-    silently serves the expression plan)."""
-    import pyspark.sql.functions as F
-
-    from esper_tv_spark.operators.dedup import (
-        build_srp_index,
-        near_dup_pairs_from_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    idx = str(tmp_path / "srp_fast")
-    build_srp_index(emb, idx, n_planes=4, n_bands=8, dim=64)
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    slow = rows(near_dup_pairs_from_index(emb, idx, threshold=0.2))
-    fast = rows(near_dup_pairs_from_index(emb, idx, threshold=0.2, fast=True))
-    assert fast == slow and len(slow) > 0
-
-    # driver-created (no backing files): fast=True must still answer —
-    # via the expression fallback — with identical rows
-    local = spark.createDataFrame(
-        [(int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in emb.collect()],
-        "vec_id long, embedding array<double>",
-    )
-    fb = rows(near_dup_pairs_from_index(local, idx, threshold=0.2, fast=True))
-    assert fb == slow

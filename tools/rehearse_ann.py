@@ -133,9 +133,7 @@ def step_hier2m(spark, emit):
 
     def rank(idx_path, n_probe_groups):
         t0 = time.time()
-        cents, allowed = sim._probe_centroids(
-            spark, idx_path, qids, qvecs, n_probe_groups, 6, fast=True
-        )
+        cents, allowed = sim._probe_centroids(idx_path, qids, qvecs, n_probe_groups, 6)
         pairs, cells, _cv = sim._rank_probe_cells_blas(
             cents, qids, qvecs, n_probe, 6, allowed=allowed
         )
@@ -243,7 +241,7 @@ def step_autoladder(spark, emit):
         emit({"step": "autoladder_kmeans", "k": n_cells, "maxIter": max_iter,
               "train_fraction": round(frac, 4), "wall_s": round(kmeans_wall, 1)})
 
-    # probe via the BATCH kNN joins (fast=True) — the production serving
+    # probe via the BATCH kNN joins — the production serving
     # shape at this n_probe: a 50-query single-probe loop at n_probe=178
     # pays the inline-literal-LUT plan-compile wall per query (the exact
     # pathology the broadcast-LUT carrier + BLAS serving path solve; at
@@ -258,9 +256,7 @@ def step_autoladder(spark, emit):
     def batch_recall(join_fn, idx):
         t0 = time.time()
         got: dict[int, set] = {}
-        for r in join_fn(
-            spark, idx, qdf, TOPK, n_probe=n_probe, fast=True
-        ).collect():
+        for r in join_fn(spark, idx, qdf, TOPK, n_probe=n_probe).collect():
             got.setdefault(int(r["qid"]), set()).add(int(r["vec_id"]))
         wall = time.time() - t0
         hits = sum(len(got.get(q, set()) & truth[q]) for q in truth)
@@ -426,7 +422,7 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
             rows = sorted(
                 (int(r["qid"]), int(r["vec_id"]), float(r["cosine_sim"]))
                 for r in ivf_knn_join_index(
-                    spark, idx, queries, TOPK, n_probe=3, fast=True
+                    spark, idx, queries, TOPK, n_probe=3
                 ).collect()
             )
             walls.append(time.time() - t0)
@@ -579,9 +575,7 @@ def step_trainedgroups(spark, emit):
     n_probe = 32
 
     def rank(idx_path, n_probe_groups):
-        cents, allowed = sim._probe_centroids(
-            spark, idx_path, qids, qvecs, n_probe_groups, 6, fast=True
-        )
+        cents, allowed = sim._probe_centroids(idx_path, qids, qvecs, n_probe_groups, 6)
         pairs, _cells, _cv = sim._rank_probe_cells_blas(
             cents, qids, qvecs, n_probe, 6, allowed=allowed
         )
@@ -981,7 +975,7 @@ def step_sortedlayout(spark, emit):
 
 
 def step_filteredbatch(spark, emit):
-    """Filtered BATCH kNN join at serving shape (2M, fast=True,
+    """Filtered BATCH kNN join at serving shape (2M,
     n_probe=32, 8-query batch): one semi-join against the allowed-id
     set covers the whole batch — this row prices that semi-join against
     the unfiltered join, and asserts per-query parity vs filtered
@@ -1008,14 +1002,14 @@ def step_filteredbatch(spark, emit):
     for name, kw in (("unfiltered", {}), ("filtered_10pct", {"filter_ids": allow_df})):
         t0 = time.time()
         rows = sim.ivfsq_knn_join_index(
-            spark, idx, batch, TOPK, n_probe=32, fast=True, **kw
+            spark, idx, batch, TOPK, n_probe=32, **kw
         ).collect()
         walls[name] = {"wall_s": round(time.time() - t0, 1), "rows": len(rows)}
 
     # per-query parity vs filtered single probes at the same depth
     by_q = {}
     joined = sim.ivfsq_knn_join_index(
-        spark, idx, batch, TOPK, n_probe=32, fast=True, filter_ids=allow_df
+        spark, idx, batch, TOPK, n_probe=32, filter_ids=allow_df
     )
     for r in joined.orderBy("qid", F.col("adist").asc(), "vec_id").collect():
         by_q.setdefault(int(r["qid"]), []).append((r["vec_id"], r["adist"]))
@@ -1137,7 +1131,7 @@ def step_hier20m(spark, emit):
 
         # serving batch: 8 queries through the amortized-scan join,
         # flat vs hier — at 180k cells the flat batch ranker must pull
-        # the whole centroid table driver-side (fast=True GEMM), the
+        # the whole centroid table driver-side (one GEMM), the
         # hier one only the winning groups' partitions
         stride8 = n // 8
         q8 = np.arange(0, n, stride8)[:8]
@@ -1149,8 +1143,7 @@ def step_hier20m(spark, emit):
         for name, g in (("flat", n_groups), ("hier_g8", 8)):
             t0 = time.time()
             sim.ivfsq_knn_join_index(
-                spark, idx, batch, TOPK, n_probe=n_probe, fast=True,
-                n_probe_groups=g,
+                spark, idx, batch, TOPK, n_probe=n_probe, n_probe_groups=g,
             ).collect()
             walls[name] = round(time.time() - t0, 1)
         emit({"step": "hier20m_batch_join", "config": tag, "n_q": 8, **walls})
