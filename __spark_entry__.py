@@ -3110,9 +3110,11 @@ ORDER BY qid, cosine_sim DESC, vec_id
 def _tomb_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per dataset fingerprint) an IVF index carrying LOGICAL
     deletes: ids 0, 3, 12 tombstoned via streaming.ann.ann_delete.  The
-    cache sentinel requires BOTH centroids/_SUCCESS and the tombstone
-    table's _SUCCESS — a crash between build and delete must rebuild,
-    not serve an undeleted index."""
+    build-then-delete chain is atomic w.r.t. the cache: the _Q102_DONE
+    marker is written LAST, and an incomplete dir is rebuilt from
+    scratch — a crash between build and delete must not serve an
+    undeleted index."""
+    import shutil
     import tempfile
 
     from esper_tv_spark.streaming.ann import ann_delete
@@ -3123,14 +3125,13 @@ def _tomb_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     idx = os.path.join(
         tempfile.gettempdir(), f"esper_tv_tivf_idx_{sf_tag}_{tag}_c16"
     )
-    done = all(
-        os.path.exists(os.path.join(idx, d, "_SUCCESS"))
-        for d in ("centroids", "tombstones")
-    )
-    if not done:
+    if not os.path.exists(os.path.join(idx, "_Q102_DONE")):
         _evict_stale_siblings(f"esper_tv_tivf_idx_{sf_tag}_", keep=idx)
+        shutil.rmtree(idx, ignore_errors=True)
         similarity.ivf_build_index(_t(spark, sf_dir, "embeddings"), idx, n_cells=16)
         ann_delete(spark, idx, [0, 3, 12])
+        with open(os.path.join(idx, "_Q102_DONE"), "w") as f:
+            f.write("0,3,12")
     return idx
 
 
@@ -3139,12 +3140,12 @@ def q102_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the insert/compact/recenter trio was missing.  A delete at 100 TB
     cannot rewrite posting lists (the id's cell is unknown without a
     full scan), so `ann_delete` appends to a tombstones/ table and
-    every probe anti-joins the broadcast tombstone set;
+    every probe filters out the tombstoned ids;
     `compact_posting_lists(purge=True)` later drops the rows physically
     and retires the table (bit-identical probes before/after, asserted
     in tests).  Deleted ids here are 0, 3, 12 — id 0 IS the query
     vector, so the probe's own top-1 row is tombstoned at every scale
-    and the hash only matches if the anti-join actually ran.  Build
+    and the hash only matches if the tombstone filter actually ran.  Build
     state (centroids, assignment) is intentionally untouched by logical
     deletes, and the oracle replays exactly that: full-corpus
     assignment + probe selection, with only the candidate rows

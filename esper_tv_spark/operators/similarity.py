@@ -19,6 +19,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from esper_tv_spark.sources.sidecar import (
+    declared_parquet,
+    parquet_schema,
+    sidecar_rows,
+    tombstone_ids,
+)
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i * b_i in double precision (left-to-right fold — deterministic)."""
@@ -666,102 +673,6 @@ def _write_centroids(
     )
 
 
-def _sidecar_rows(
-    path: str,
-    columns: "list[str] | None" = None,
-    filter_col: "str | None" = None,
-    filter_vals=None,
-) -> "list[dict]":
-    """Driver-LOCAL pyarrow read of a small index sidecar table
-    (centroids / groups / codebooks / rotation / sq bounds) — the one
-    reader every probe and kNN join uses for its index metadata.
-
-    Why (guide §1.2/§5): these tables are kBs-to-MBs and the probes
-    rank and build LUTs from them on driver numpy anyway, so routing the
-    read through `spark.read.parquet(...).collect()` would pay a full
-    distributed-job round trip (listing, task launch, Arrow ship-back)
-    per table per probe — 2-4 Spark actions per serving query that
-    touch a few hundred rows each.  A serving probe must not launch a
-    cluster job to read its own metadata.  Values are identical:
-    parquet doubles round-trip binary-exact through either reader, and
-    callers re-sort by key.  Hive-partitioned sidecars (two-level
-    centroids under grp=<g>/) prune with a partition filter — the same
-    dirs a Spark read would keep."""
-    import pyarrow.dataset as ds
-
-    dataset = ds.dataset(path, format="parquet", partitioning="hive")
-    flt = None
-    if filter_col is not None:
-        flt = ds.field(filter_col).isin([int(v) for v in filter_vals])
-    return dataset.to_table(columns=columns, filter=flt).to_pylist()
-
-
-def _parquet_schema(base: str, leaf: "str | None" = None):
-    """The schema `spark.read.parquet(base)` would infer, read on the
-    driver from ONE parquet footer (the first file under `leaf`, default
-    `base`) — the rule Spark's own inference follows with mergeSchema
-    off, minus the Spark job it launches for it.  Index tables are
-    Spark-written, so the footer's row metadata holds the Spark schema
-    itself (Spark reads it the same way, and makes every field nullable
-    on any file-source read, declared or inferred).  Every `k=v` dir
-    between `base` and that file becomes an int partition column (index
-    partition keys — `cell`, `grp` — are small ints)."""
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    found = None
-    for root, dirs, files in os.walk(leaf or base):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        names = sorted(
-            f for f in files if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if names:
-            found = os.path.join(root, names[0])
-            break
-    if found is None:
-        raise FileNotFoundError(f"no parquet file under {leaf or base}")
-    data = StructType.fromJson(
-        json.loads(pq.read_schema(found).metadata[b"org.apache.spark.sql.parquet.row.metadata"])
-    )
-    parts = [
-        seg.split("=", 1)[0]
-        for seg in os.path.relpath(os.path.dirname(found), base).split(os.sep)
-        if "=" in seg
-    ]
-    return StructType(data.fields + [StructField(p, IntegerType(), True) for p in parts])
-
-
-def _declared_parquet(spark, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` with the schema declared from one
-    footer (`_parquet_schema`) — same columns and types, no inference
-    job."""
-    return spark.read.schema(_parquet_schema(path)).parquet(path)
-
-
-def _tombstone_ids(path: str) -> "list[int]":
-    """The index's logically-deleted ids (streaming.ann.ann_delete),
-    read on the driver — sorted and distinct; [] without a tombstone
-    table.  Only committed files count: pyarrow's discovery skips
-    `_`/`.` paths, so an append still in its `_temporary/` dir (the
-    first `ann_delete` of an index, mid-write) reads as no tombstones,
-    as it does to Spark.  Driver-sized by construction: every purge or
-    recenter physically drops them and clears the table."""
-    import os
-
-    import pyarrow.dataset as ds
-
-    tpath = os.path.join(path, "tombstones")
-    if not os.path.isdir(tpath):
-        return []
-    table = ds.dataset(tpath, format="parquet")
-    if not table.files:
-        return []
-    return sorted(set(table.to_table(columns=["id"]).column("id").to_pylist()))
-
-
 def _probe_centroids(
     path: str,
     qids: "list[int]",
@@ -770,7 +681,7 @@ def _probe_centroids(
     round_digits: int,
 ) -> "tuple[list[dict], dict[int, set[int]] | None]":
     """The centroid rows every probe ranks cells over, read on the
-    driver (`_sidecar_rows`).  Flat index: (every centroid row, None).
+    driver (`sidecar_rows`).  Flat index: (every centroid row, None).
     Two-level index (a `groups/` table is present): rank the level-1
     group centers for every query with the ranker the cell level uses
     (`_rank_probe_cells_blas`), so the two levels share one total order
@@ -784,7 +695,7 @@ def _probe_centroids(
     cpath = os.path.join(path, "centroids")
     gpath = os.path.join(path, "groups")
     if not os.path.isdir(gpath):
-        return _sidecar_rows(cpath, ["cell", "cv"]), None
+        return sidecar_rows(cpath, ["cell", "cv"]), None
     if not os.path.exists(os.path.join(gpath, "_SUCCESS")):
         raise ValueError(
             f"two-level index at {path} has a groups/ table without _SUCCESS "
@@ -793,7 +704,7 @@ def _probe_centroids(
         )
     groups = [
         {"cell": r["grp"], "cv": r["gv"]}
-        for r in _sidecar_rows(gpath, ["grp", "gv"])
+        for r in sidecar_rows(gpath, ["grp", "gv"])
     ]
     gpairs, glist, _gv = _rank_probe_cells_blas(
         groups, qids, qvecs, n_probe_groups, round_digits
@@ -801,7 +712,7 @@ def _probe_centroids(
     allowed: dict[int, set[int]] = {}
     for q, g in gpairs:
         allowed.setdefault(q, set()).add(g)
-    cents = _sidecar_rows(
+    cents = sidecar_rows(
         cpath, ["cell", "cv", "grp"], filter_col="grp", filter_vals=glist
     )
     return cents, allowed
@@ -1077,7 +988,7 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     them.
 
     The posting schema is DECLARED from one footer of a probed cell
-    plus the `cell` partition column (`_parquet_schema`), so building
+    plus the `cell` partition column (`parquet_schema`), so building
     the scan launches no schema-inference job; the ivfpq/ivfsq code
     layouts and stream-inserted fragments keep their types, since Spark
     infers from one footer too.
@@ -1093,7 +1004,7 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     sdir = os.path.join(path, "cells_sorted")
     cells = [int(c) for c in cell_list]
     if os.path.isdir(sdir):
-        return _declared_parquet(spark, sdir).where(F.col("cell").isin(cells))
+        return declared_parquet(spark, sdir).where(F.col("cell").isin(cells))
     cdir = os.path.join(path, "cells")
     dirs = [
         d for c in cells if os.path.isdir(d := os.path.join(cdir, f"cell={c}"))
@@ -1101,9 +1012,9 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     if not dirs:
         # every probed cell is absent: the full-table read keeps the
         # empty result's schema (rare — only a fully-purged probe set)
-        return _declared_parquet(spark, cdir).where(F.col("cell").isin(cells))
+        return declared_parquet(spark, cdir).where(F.col("cell").isin(cells))
     return (
-        spark.read.schema(_parquet_schema(cdir, dirs[0]))
+        spark.read.schema(parquet_schema(cdir, dirs[0]))
         .option("basePath", cdir)
         .parquet(*dirs)
         .where(F.col("cell").isin(cells))
@@ -1116,13 +1027,13 @@ def _apply_tombstones(spark, path: str, posting: DataFrame) -> DataFrame:
     from any probe.  A delete at 100 TB cannot rewrite posting lists —
     the id's cell is unknown without a full scan — so deletes are O(1)
     appends to `tombstones/`, and every probe reads the ids on the
-    driver (`_tombstone_ids`) and drops them with `NOT id IN (...)`
+    driver (`tombstone_ids`) and drops them with `NOT id IN (...)`
     (Catalyst's InSet): no join and no Spark job, and the set is
     bounded by compaction's purge.  Posting ids are never null (every
     writer inner-joins on id), so the filter keeps exactly the rows an
     anti-join would.  No tombstones -> the scan is returned untouched,
     so tombstone-free indexes (every contract index) keep their plan."""
-    ids = _tombstone_ids(path)
+    ids = tombstone_ids(path)
     if not ids:
         return posting
     return posting.where(~F.col("id").isin(ids))
@@ -1996,10 +1907,10 @@ def _lut_literal(vals: list[list[int]]):
 
 def _codebook_rows(path: str) -> "list[dict]":
     """A PQ store's or IVF-PQ index's codebook rows (subspace, rk, sc),
-    read on the driver (`_sidecar_rows`)."""
+    read on the driver (`sidecar_rows`)."""
     import os
 
-    return _sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
+    return sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
 
 
 def _adc_lut_values_blas(
@@ -2461,11 +2372,11 @@ def _ivfpq_meta(path: str) -> dict:
 
 def _ivfpq_rotation(path: str) -> "list[list[float]]":
     """Load an OPQ index's persisted rotation as a dense dim x dim list
-    (dim rows, read on the driver via _sidecar_rows — no Spark job)."""
+    (dim rows, read on the driver via sidecar_rows — no Spark job)."""
     import os
 
     rows = sorted(
-        _sidecar_rows(os.path.join(path, "rotation"), ["pos", "row"]),
+        sidecar_rows(os.path.join(path, "rotation"), ["pos", "row"]),
         key=lambda r: r["pos"],
     )
     return [[float(v) for v in r["row"]] for r in rows]
@@ -2819,11 +2730,11 @@ def ivfsq_build_index(
 
 def _sq_bounds(path: str) -> tuple[list[float], list[float]]:
     """An SQ8 index's per-dimension (mn, mx) bounds, read on the driver
-    (`_sidecar_rows`)."""
+    (`sidecar_rows`)."""
     import os
 
     rows = sorted(
-        _sidecar_rows(os.path.join(os.fspath(path), "sq"), ["pos", "mn", "mx"]),
+        sidecar_rows(os.path.join(os.fspath(path), "sq"), ["pos", "mn", "mx"]),
         key=lambda r: r["pos"],
     )
     return [float(r["mn"]) for r in rows], [float(r["mx"]) for r in rows]

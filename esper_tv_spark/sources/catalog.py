@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from esper_tv_spark.session import ensure_runtime_confs
+from esper_tv_spark.sources import sidecar
 
 TABLES = (
     "region",
@@ -102,29 +103,32 @@ def write_derived_table(df: DataFrame, base_dir: str, job: str) -> bool:
     - a job already in the ledger is skipped entirely, so backfills are
       idempotent.
 
-    The batch twin of streaming/ingest.write_with_ledger. Returns True if
-    this call wrote (False = already committed)."""
-    spark = df.sparkSession
+    The batch twin of streaming/ingest.write_with_ledger, with the same
+    driver-side ledger (sources.sidecar: no Spark job reads or appends
+    it) and the same rule that an unreadable ledger raises rather than
+    passing for an empty one. Returns True if this call wrote (False =
+    already committed)."""
+    import pyarrow as pa
+
     ledger_dir = os.path.join(base_dir, "_ledger")
-    try:
-        committed = {r[0] for r in spark.read.parquet(ledger_dir).select("job").collect()}
-    except Exception:
-        committed = set()
-    if job in committed:
+    if job in _committed_jobs(ledger_dir):
         return False
     df.write.mode("overwrite").parquet(os.path.join(base_dir, "data", f"job={job}"))
-    spark.createDataFrame([(job,)], "job string").write.mode("append").parquet(ledger_dir)
+    sidecar.append_rows(ledger_dir, pa.table({"job": pa.array([job], pa.string())}))
     return True
+
+
+def _committed_jobs(ledger_dir: str) -> "set[str]":
+    # a set: the ledger is append-only, so two concurrent writers that both
+    # saw an empty ledger can append the same job twice — dedupe on read or
+    # the shared data partition double-counts
+    return {r["job"] for r in sidecar.committed_rows(ledger_dir, ["job"])}
 
 
 def read_derived_table(spark: SparkSession, base_dir: str) -> DataFrame:
     """Union of all COMMITTED jobs of a derived table (uncommitted data —
     crash between write and ledger append — is invisible)."""
-    ledger_dir = os.path.join(base_dir, "_ledger")
-    # set(): the ledger is append-mode, so two concurrent writers that both
-    # saw an empty ledger can append the same job twice — dedupe on read or
-    # the shared data partition double-counts.
-    jobs = {r[0] for r in spark.read.parquet(ledger_dir).select("job").collect()}
+    jobs = _committed_jobs(os.path.join(base_dir, "_ledger"))
     if not jobs:
         raise FileNotFoundError(f"no committed jobs under {base_dir}")
     out = None

@@ -38,13 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esper_tv_spark.operators.similarity import (
-    _apply_tombstones,
-    _declared_parquet,
-    _tombstone_ids,
-    dot,
-    lloyd_assign,
-)
+from esper_tv_spark.operators.similarity import _apply_tombstones, dot, lloyd_assign
+from esper_tv_spark.sources import sidecar
 
 
 def _require_dirs_layout(index_path: str, op: str) -> None:
@@ -68,7 +63,7 @@ def _require_dirs_layout(index_path: str, op: str) -> None:
 def _stored_centroids(spark: SparkSession, index_path: str) -> DataFrame:
     """The frozen centroids as (cluster, cvec); the schema is declared
     from a footer, so a per-batch re-read runs no inference job."""
-    return _declared_parquet(spark, os.path.join(index_path, "centroids")).select(
+    return sidecar.declared_parquet(spark, os.path.join(index_path, "centroids")).select(
         F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
     )
 
@@ -282,22 +277,25 @@ def ann_delete(spark: SparkSession, index_path: str, ids: "list[int]") -> int:
     `compact_posting_lists(purge=True)` physically drops the rows and
     clears the table.
 
+    The append is a driver-side parquet write (`sidecar.append_rows`):
+    no Spark job, and no `_SUCCESS` file — the ids are visible to every
+    reader once the call returns, and not before.  `spark` is unused
+    and kept for the maintenance API's uniform signature.
+
     Contract: vector ids are unique and never reused — re-inserting a
     tombstoned id would stay hidden until a purge (the same id-space
     assumption every builder makes).  Duplicate ids in `ids` or across
     calls are harmless (the id set is deduplicated on read)."""
-    vals = []
-    for i in ids:
+    import pyarrow as pa
+
+    vals = list(ids)
+    for i in vals:
         if isinstance(i, bool) or not isinstance(i, int):
             raise ValueError(f"ann_delete: id {i!r} is not an int")
-        vals.append((i,))
     if not vals:
         raise ValueError("ann_delete: empty id list")
-    (
-        spark.createDataFrame(vals, "id long")
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(index_path, "tombstones"))
+    sidecar.append_rows(
+        os.path.join(index_path, "tombstones"), pa.table({"id": pa.array(vals, pa.int64())})
     )
     return len(vals)
 
@@ -447,7 +445,7 @@ def compact_posting_lists(
     _require_dirs_layout(index_path, "compact_posting_lists")
     cells_dir = os.path.join(index_path, "cells")
     tomb_dir = os.path.join(index_path, "tombstones")
-    tomb_ids = _tombstone_ids(index_path) if purge else []
+    tomb_ids = sidecar.tombstone_ids(index_path) if purge else []
     # recovery preamble — identical contract to ivf_recenter's: only
     # clean __rc/__old when live exists; otherwise they ARE the index.
     if os.path.exists(cells_dir):
@@ -484,7 +482,7 @@ def compact_posting_lists(
         return stats
 
     tmp = cells_dir + "__rc"
-    rewrite = _declared_parquet(spark, cells_dir).where(F.col("cell").isin(hot))
+    rewrite = sidecar.declared_parquet(spark, cells_dir).where(F.col("cell").isin(hot))
     if tomb_ids:
         rewrite = rewrite.where(~F.col("id").isin(tomb_ids))
     (

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from esper_tv_spark.sources import sidecar
+
 
 def file_stream(
     spark: SparkSession,
@@ -120,17 +122,16 @@ def write_with_ledger(
     batch-partitioned directory and appends a ledger row; a replayed epoch
     (failure/restart) sees its id in the ledger and skips, so the sink is
     exactly-once at the directory level.
+
+    The ledger is read and appended on the driver (sources.sidecar), so
+    the batch's data write is its only Spark job.  A ledger that exists
+    but cannot be read fails the batch: treating it as empty would
+    rewrite a committed epoch and append its row twice.
     """
+    import pyarrow as pa
 
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        committed: set[int] = set()
-        try:
-            committed = {
-                r[0] for r in spark.read.parquet(ledger_dir).select("epoch_id").collect()
-            }
-        except Exception:
-            pass  # first batch: no ledger yet
+        committed = {r["epoch_id"] for r in sidecar.committed_rows(ledger_dir, ["epoch_id"])}
         if epoch_id in committed:
             return
         # overwrite, not append: the directory is keyed by epoch_id, so a
@@ -139,9 +140,8 @@ def write_with_ledger(
         batch_df.withColumn("__epoch", F.lit(epoch_id)).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"epoch={epoch_id}")
         )
-        spark.createDataFrame([(job_name, epoch_id)], "job string, epoch_id long").write.mode(
-            "append"
-        ).parquet(ledger_dir)
+        row = {"job": pa.array([job_name], pa.string()), "epoch_id": pa.array([epoch_id], pa.int64())}
+        sidecar.append_rows(ledger_dir, pa.table(row))
 
     return (
         df.writeStream.foreachBatch(handle_batch)

@@ -1,3 +1,4 @@
+import itertools
 import os
 
 import pytest
@@ -17,9 +18,30 @@ def spark():
     s.stop()
 
 
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """`count_jobs(fn)` -> (fn(), number of Spark jobs fn launched),
+    counted by job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture
 def rows_df(spark):
-    """Driver-read index rows (a list of dicts, as `_sidecar_rows`
+    """Driver-read index rows (a list of dicts, as `sidecar_rows`
     returns them) as a DataFrame with the given DDL schema — the input
     the expression references (`_rank_probe_cells`, `_adc_lut_values`)
     take, so a test can hand both rankers the same rows."""

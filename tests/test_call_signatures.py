@@ -1,24 +1,32 @@
-"""Every call the contract entry, the engine and the tools make into
-`operators.similarity`, `operators.dedup` and `operators.retrieval`
-binds against the callee's signature.  The tools (scale rehearsals,
-recall measurements) run for hours and never in this suite, so without
-this check a removed or renamed parameter would leave them broken until
-their next run."""
+"""Every call the contract entry, the engine, the tools and the
+benchmark make into `operators.similarity`, `operators.dedup`,
+`operators.retrieval`, the streaming maintenance modules
+(`streaming.rollup`, `streaming.ingest`, `streaming.ann`),
+`sources.catalog` and `sources.sidecar` binds against the callee's
+signature.  The tools (scale rehearsals, recall measurements) run for
+hours and never in this suite, so without this check a removed or
+renamed parameter would leave them broken until their next run."""
 
 import ast
 import inspect
 import pathlib
 
 from esper_tv_spark.operators import dedup, retrieval, similarity
+from esper_tv_spark.sources import catalog, sidecar
+from esper_tv_spark.streaming import ann, ingest, rollup
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-MODULES = {m.__name__: m for m in (similarity, dedup, retrieval)}
+MODULES = {
+    m.__name__: m
+    for m in (similarity, dedup, retrieval, rollup, ingest, ann, catalog, sidecar)
+}
 _SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
 
 
 def _sources():
     yield ROOT / "__spark_entry__.py"
     yield from sorted((ROOT / "tools").glob("*.py"))
+    yield from sorted((ROOT / "perfbench").glob("*.py"))
     yield from sorted((ROOT / "esper_tv_spark").rglob("*.py"))
 
 
@@ -68,6 +76,10 @@ def _calls(scope, outer):
             local.add(node.name)
     env = {k: v for k, v in outer.items() if k not in local}
     env.update(own)
+    if isinstance(scope, ast.Module):
+        # a module's top-level defs are `outer` itself: they resolve
+        # to the module's functions, not shadow them
+        env.update(outer)
     for node in nodes:
         if isinstance(node, _SCOPES):
             yield from _calls(node, env)
@@ -126,5 +138,11 @@ def test_operator_calls_bind_to_their_signatures():
                 problems.append(f"{rel}:{call.lineno}: {why}")
     assert not problems, "\n".join(problems)
     # the resolver must actually reach the callers it exists for
-    for rel in ("__spark_entry__.py", "tools/rehearse_ann.py", "esper_tv_spark/frontend/dsl.py"):
+    for rel in (
+        "__spark_entry__.py",
+        "tools/rehearse_ann.py",
+        "esper_tv_spark/frontend/dsl.py",
+        "esper_tv_spark/streaming/rollup.py",
+        "perfbench/ingest.py",
+    ):
         assert seen.get(rel, 0) >= 5, (rel, seen.get(rel))

@@ -7,7 +7,6 @@ library probe's rows and no tombstoned id ever returned.  A DSL
 `query_ids` batch launches only its two batch collects, and an
 uncommitted tombstone write is invisible to every read."""
 
-import itertools
 import os
 
 import numpy as np
@@ -41,25 +40,12 @@ from esper_tv_spark.streaming.ann import (
 
 DIM = 64
 N_BASE, N_TAIL = 400, 200
-_groups = itertools.count()
 
 
 def _vectors(spark):
     v = np.random.default_rng(11).standard_normal((N_BASE + N_TAIL, DIM)).round(4)
     rows = [(i, [float(x) for x in v[i]]) for i in range(len(v))]
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn launched), counted by job group."""
-    sc = spark.sparkContext
-    group = f"probe-planning-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _stream_insert(spark, insert, idx, tail, work):
@@ -103,13 +89,13 @@ def live_index(spark, tmp_path_factory):
     return idx, cat, vecs, victims
 
 
-def test_dsl_ann_probe_plans_without_jobs(spark, live_index):
+def test_dsl_ann_probe_plans_without_jobs(spark, live_index, count_jobs):
     idx, cat, vecs, _victims = live_index
     assert max(posting_fragment_census(idx).values()) > 1
     q = vecs[42]
-    df, built = _jobs(spark, lambda: run_query(cat, _spec(q), index_catalog={"live": idx}))
+    df, built = count_jobs(lambda: run_query(cat, _spec(q), index_catalog={"live": idx}))
     assert built == 0
-    res, ran = _jobs(spark, lambda: to_result_json(df))
+    res, ran = count_jobs(lambda: to_result_json(df))
     assert ran == 1
     want = [tuple(r) for r in ivf_probe_index(spark, idx, q, 10, n_probe=3).collect()]
     assert _dsl_rows(res) == want and len(want) == 10
@@ -129,7 +115,7 @@ def test_tombstoned_query_never_returns_its_id(spark, live_index):
 
 
 @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq"])
-def test_dsl_query_ids_batch_plans_with_its_two_collects(spark, tmp_path, kind):
+def test_dsl_query_ids_batch_plans_with_its_two_collects(spark, tmp_path, kind, count_jobs):
     """A DSL `ann_probe` over `query_ids` builds with exactly two jobs:
     the DSL's query-id check and the join's one query-batch collect —
     cell ranking, LUTs and index metadata add none.  Its rows are the
@@ -150,7 +136,7 @@ def test_dsl_query_ids_batch_plans_with_its_two_collects(spark, tmp_path, kind):
         "table": "vectors",
         "similarity": {"op": "ann_probe", "index": "live", "query_ids": qids, "k": 10, "n_probe": 3},
     }
-    df, built = _jobs(spark, lambda: run_query({"vectors": emb}, spec, index_catalog={"live": idx}))
+    df, built = count_jobs(lambda: run_query({"vectors": emb}, spec, index_catalog={"live": idx}))
     assert built == 2
     queries = emb.where(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
@@ -159,7 +145,7 @@ def test_dsl_query_ids_batch_plans_with_its_two_collects(spark, tmp_path, kind):
     assert sorted(tuple(r) for r in df.collect()) == want and len(want) == 30
 
 
-def test_dsl_hybrid_plans_without_jobs(spark, live_index):
+def test_dsl_hybrid_plans_without_jobs(spark, live_index, count_jobs):
     idx, _cat, vecs, _victims = live_index
     words = ["face", "news", "anchor", "weather", "sports"]
     docs = spark.createDataFrame(
@@ -170,7 +156,7 @@ def test_dsl_hybrid_plans_without_jobs(spark, live_index):
         "table": "docs",
         "similarity": {"op": "hybrid", "index": "live", "terms": ["news", "anchor"], "query": vecs[42], "k": 5},
     }
-    df, built = _jobs(spark, lambda: run_query({"docs": docs}, spec, index_catalog={"live": idx}))
+    df, built = count_jobs(lambda: run_query({"docs": docs}, spec, index_catalog={"live": idx}))
     assert built == 0
     assert len(df.collect()) == 5
 
@@ -208,7 +194,7 @@ def test_uncommitted_tombstone_write_is_invisible(spark, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq", "sorted"])
-def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind):
+def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind, count_jobs):
     """The posting schema `_read_cells` declares (one footer plus the
     `cell` partition column) equals what `spark.read.parquet` infers,
     field for field including nullability, for every probed cell —
@@ -231,7 +217,7 @@ def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind):
         cells = sorted(int(r[0]) for r in spark.read.parquet(cdir).select("cell").distinct().collect())
         assert len(cells) > 1
         for c in cells:
-            declared, jobs = _jobs(spark, lambda: _read_cells(spark, idx, [c]))
+            declared, jobs = count_jobs(lambda: _read_cells(spark, idx, [c]))
             assert declared.schema == inferred, (c, declared.schema, inferred)
             assert jobs == 0
 
