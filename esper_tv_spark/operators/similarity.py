@@ -21,7 +21,9 @@ from pyspark.sql import functions as F
 
 from esper_tv_spark.sources.sidecar import (
     declared_parquet,
+    new_generation,
     parquet_schema,
+    publish,
     sidecar_rows,
     tombstone_ids,
 )
@@ -639,19 +641,28 @@ def _write_centroids(
     exact tie rule, because it IS lloyd_assign run on the centroid
     table).
 
-    Write order is groups/ FIRST: every builder's completeness sentinel
-    is a table written at-or-after centroids/, so a crash can never leave
-    a complete-looking index with missing/partial groups.  The probe
-    additionally fail-closes on a groups/ dir without _SUCCESS."""
+    Each table is written to a new generation and published
+    (`sources.sidecar.publish`).  Write order is groups/ FIRST: every
+    builder's completeness sentinel is a table written at-or-after
+    centroids/, so a crash can never leave a complete-looking index
+    with missing/partial groups.  The probe additionally fail-closes on
+    a groups/ dir without _SUCCESS."""
     import os
     import shutil
 
+    cpath = os.path.join(path, "centroids")
+    gpath = os.path.join(path, "groups")
     if n_groups is None:
         # a flat REBUILD over a previously two-level index must drop the
         # stale groups/ table — probes detect layout by its presence, and
         # stale level-1 centers over fresh flat centroids would mis-prune
-        shutil.rmtree(os.path.join(path, "groups"), ignore_errors=True)
-        cents_coarse.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+        # (a published table is a symlink, which rmtree refuses)
+        if os.path.islink(gpath):
+            os.unlink(gpath)
+        shutil.rmtree(gpath, ignore_errors=True)
+        gen = new_generation(cpath)
+        cents_coarse.write.parquet(gen)
+        publish(cpath, gen)
         return
     assign_fn = lloyd_assign_blas if fast else lloyd_assign
     gdf = _group_centers(cents_coarse, n_groups, round_digits, group_train_iters, fast)
@@ -667,10 +678,12 @@ def _write_centroids(
         .join(cents_coarse, "cell")
         .select("grp", "cell", "cv")
     )
-    gdf.write.mode("overwrite").parquet(os.path.join(path, "groups"))
-    grouped.write.mode("overwrite").partitionBy("grp").parquet(
-        os.path.join(path, "centroids")
-    )
+    gen = new_generation(gpath)
+    gdf.write.parquet(gen)
+    publish(gpath, gen)
+    gen = new_generation(cpath)
+    grouped.write.partitionBy("grp").parquet(gen)
+    publish(cpath, gen)
 
 
 def _probe_centroids(
@@ -871,9 +884,7 @@ def ivf_probe_index(
     I/O.  Flat indexes ignore `n_probe_groups`."""
     probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
     qlit = lit_vector(query_vec)
-    cells = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
-    )
+    cells = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
     sim = F.round(
         dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
     )
@@ -916,9 +927,7 @@ def ivf_range_search(
     probe does (shared scan path)."""
     probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
     qlit = lit_vector([float(x) for x in query_vec])
-    cells = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
-    )
+    cells = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
     sim = F.round(
         dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
     )
@@ -952,25 +961,26 @@ def _write_posting(rows: DataFrame, path: str, layout: str) -> None:
       dir and reads a handful of footers.  Pruning becomes row-group
       stats instead of partition dirs: the Spark-idiomatic manifest.
       Frozen/rebuilt corpora only — stream insert and compaction are
-      dirs-layout maintenance and fail closed on sorted indexes."""
+      dirs-layout maintenance and fail closed on sorted indexes.
+
+    Either table is published as a new generation (`sidecar.publish`)."""
     import os
 
     if layout == "dirs":
-        (
-            rows.repartition(F.col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(path, "cells"))
-        )
+        table = os.path.join(path, "cells")
+        gen = new_generation(table)
+        rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
     elif layout == "sorted":
+        table = os.path.join(path, "cells_sorted")
+        gen = new_generation(table)
         (
             rows.repartitionByRange(F.col("cell"), F.col("id"))
             .sortWithinPartitions("cell", "id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "cells_sorted"))
+            .write.parquet(gen)
         )
     else:
         raise ValueError(f"posting layout must be 'dirs' or 'sorted', got {layout!r}")
+    publish(table, gen)
 
 
 def _read_cells(spark, path: str, cell_list) -> DataFrame:
@@ -998,31 +1008,40 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     predicate is PUSHED to the parquet reader and row-group min/max
     stats prune I/O to the probed cells (plan-asserted PushedFilters);
     listing is one dir however many cells the index has, which is the
-    whole point on an object store."""
+    whole point on an object store.  Either table is resolved to its
+    published generation first, so a concurrent publish cannot pull the
+    scan's files away.
+
+    Tombstoned ids are dropped (`_apply_tombstones`).  Their ids are
+    read BEFORE the posting table is resolved: a purge publishes its
+    rewritten cells before it removes the tombstones it applied, so
+    either the ids or the purged generation hide every deleted row."""
     import os
 
-    sdir = os.path.join(path, "cells_sorted")
+    dead = tombstone_ids(path)
+    sdir = os.path.realpath(os.path.join(path, "cells_sorted"))
     cells = [int(c) for c in cell_list]
-    if os.path.isdir(sdir):
-        return declared_parquet(spark, sdir).where(F.col("cell").isin(cells))
-    cdir = os.path.join(path, "cells")
+    cdir = os.path.realpath(os.path.join(path, "cells"))
     dirs = [
         d for c in cells if os.path.isdir(d := os.path.join(cdir, f"cell={c}"))
     ]
-    if not dirs:
+    if os.path.isdir(sdir):
+        posting = declared_parquet(spark, sdir)
+    elif not dirs:
         # every probed cell is absent: the full-table read keeps the
         # empty result's schema (rare — only a fully-purged probe set)
-        return declared_parquet(spark, cdir).where(F.col("cell").isin(cells))
-    return (
-        spark.read.schema(parquet_schema(cdir, dirs[0]))
-        .option("basePath", cdir)
-        .parquet(*dirs)
-        .where(F.col("cell").isin(cells))
-    )
+        posting = declared_parquet(spark, cdir)
+    else:
+        posting = (
+            spark.read.schema(parquet_schema(cdir, dirs[0]))
+            .option("basePath", cdir)
+            .parquet(*dirs)
+        )
+    return _apply_tombstones(posting.where(F.col("cell").isin(cells)), dead)
 
 
-def _apply_tombstones(spark, path: str, posting: DataFrame) -> DataFrame:
-    """Filter a posting-list scan against the index's tombstone table
+def _apply_tombstones(posting: DataFrame, ids: "list[int]") -> DataFrame:
+    """Filter a posting-list scan against the index's tombstone ids
     (streaming.ann.ann_delete): logically-deleted ids must not surface
     from any probe.  A delete at 100 TB cannot rewrite posting lists —
     the id's cell is unknown without a full scan — so deletes are O(1)
@@ -1033,7 +1052,6 @@ def _apply_tombstones(spark, path: str, posting: DataFrame) -> DataFrame:
     writer inner-joins on id), so the filter keeps exactly the rows an
     anti-join would.  No tombstones -> the scan is returned untouched,
     so tombstone-free indexes (every contract index) keep their plan."""
-    ids = tombstone_ids(path)
     if not ids:
         return posting
     return posting.where(~F.col("id").isin(ids))
@@ -1384,9 +1402,7 @@ def ivf_knn_join_index(
         [(q, c, qv_by_qid[q]) for q, c in pairs],
         f"{qid_col} long, cell long, __qv array<double>",
     )
-    cells = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, cell_list)), filter_ids
-    )
+    cells = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     cand = cells.join(F.broadcast(pair_df), "cell")
     sim = F.round(
         dot(F.col("v"), F.col("__qv"))
@@ -2449,9 +2465,7 @@ def ivfpq_probe_index(
         lut_col = _lut_literal(
             _adc_lut_values_blas(cb, [list(query_vec)], round_digits)[0]
         )
-    codes = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
-    )
+    codes = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
     ssum = F.aggregate(
         F.zip_with(lut_col, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
         F.lit(0).cast("long"),
@@ -2530,9 +2544,7 @@ def ivfpq_knn_join_index(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
     cb = _codebook_rows(path)
-    codes = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, cell_list)), filter_ids
-    )
+    codes = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     pair_schema = f"{qid_col} long, cell long"
     if meta["by_residual"]:
         # one LUT per (qid, cell): the query residual q - centroid[cell]
@@ -2772,9 +2784,7 @@ def ivfsq_probe_index(
     mn, mx = _sq_bounds(path)
     q64 = [float(x) for x in query_vec[:dim]]
     delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
-    codes = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, probe)), filter_ids
-    )
+    codes = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
     # op-for-op the oracle's tree: t=(c+0.5)*delta; xhat=mn+t; err=q-xhat
     z1 = F.zip_with(
         F.col("codes"),
@@ -2851,9 +2861,7 @@ def ivfsq_knn_join_index(
         [(q, c, q64_by_qid[q]) for q, c in pairs],
         f"{qid_col} long, cell long, __qv array<double>",
     )
-    codes = _apply_id_filter(
-        _apply_tombstones(spark, path, _read_cells(spark, path, cell_list)), filter_ids
-    )
+    codes = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     cand = codes.join(F.broadcast(pair_df), "cell")
     z1 = F.zip_with(
         F.col("codes"),

@@ -17,12 +17,18 @@ Both sides agree on what is committed: pyarrow's discovery and Spark's
 listing skip `_`- and `.`-prefixed paths, so a Spark write still in its
 `_temporary/` dir and an `append_rows` file not yet renamed into place
 are invisible to every reader.
+
+It also owns the one way to replace an index table (`new_generation`,
+`publish`): the table is a symlink swapped atomically onto a hidden
+generation dir, and readers resolve it once per operation
+(`os.path.realpath`), so a plan's files stay in one generation.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame
@@ -45,7 +51,7 @@ def sidecar_rows(
     keep."""
     import pyarrow.dataset as ds
 
-    dataset = ds.dataset(path, format="parquet", partitioning="hive")
+    dataset = ds.dataset(os.path.realpath(path), format="parquet", partitioning="hive")
     flt = None
     if filter_col is not None:
         flt = ds.field(filter_col).isin([int(v) for v in filter_vals])
@@ -87,10 +93,14 @@ def append_rows(path: str, table) -> None:
     file sits beside any Spark-written parts and reads back with them."""
     import pyarrow.parquet as pq
 
-    os.makedirs(path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(path, "." + name)
-    pq.write_table(table, tmp)
+    try:
+        pq.write_table(table, tmp)
+    except FileNotFoundError:
+        # no table yet, or a purge just removed its emptied dir
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(path, name))
 
 
@@ -104,12 +114,14 @@ def parquet_schema(base: str, leaf: "str | None" = None):
     and makes every field nullable on any file-source read, declared or
     inferred).  Every `k=v` dir between `base` and that file becomes an
     int partition column (index partition keys — `cell`, `grp` — are
-    small ints)."""
+    small ints).  Both paths are resolved first (`publish`)."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import IntegerType, StructField, StructType
 
+    base = os.path.realpath(base)
+    leaf = os.path.realpath(leaf) if leaf else base
     found = None
-    for root, dirs, files in os.walk(leaf or base):
+    for root, dirs, files in os.walk(leaf):
         dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
         names = sorted(
             f for f in files if f.endswith(".parquet") and not f.startswith(("_", "."))
@@ -118,7 +130,7 @@ def parquet_schema(base: str, leaf: "str | None" = None):
             found = os.path.join(root, names[0])
             break
     if found is None:
-        raise FileNotFoundError(f"no parquet file under {leaf or base}")
+        raise FileNotFoundError(f"no parquet file under {leaf}")
     data = StructType.fromJson(
         json.loads(pq.read_schema(found).metadata[b"org.apache.spark.sql.parquet.row.metadata"])
     )
@@ -133,7 +145,9 @@ def parquet_schema(base: str, leaf: "str | None" = None):
 def declared_parquet(spark, path: str) -> DataFrame:
     """`spark.read.parquet(path)` with the schema declared from one
     footer (`parquet_schema`) — same columns and types, no inference
-    job."""
+    job.  The path is resolved first, so the plan reads one generation
+    whatever `publish` does meanwhile."""
+    path = os.path.realpath(path)
     return spark.read.schema(parquet_schema(path)).parquet(path)
 
 
@@ -142,6 +156,48 @@ def tombstone_ids(path: str) -> "list[int]":
     read on the driver — sorted and distinct; [] without a tombstone
     table.  Only committed files count (`committed_rows`), as they do
     to Spark.  Driver-sized by construction: every purge or recenter
-    physically drops them and clears the table."""
-    rows = committed_rows(os.path.join(path, "tombstones"), ["id"])
+    physically drops them and then removes the files it applied.  A
+    file removed between the listing and the read was applied to the
+    cells already published, so the read is retried once."""
+    tomb = os.path.join(path, "tombstones")
+    try:
+        rows = committed_rows(tomb, ["id"])
+    except FileNotFoundError:
+        rows = committed_rows(tomb, ["id"])
     return sorted({r["id"] for r in rows})
+
+
+def new_generation(table: str) -> str:
+    """A fresh generation dir for the index table at `table`: the hidden
+    sibling `.<name>.<uuid>`, which no reader lists until `publish`
+    points `table` at it.  The writer creates it."""
+    parent, name = os.path.split(table)
+    return os.path.join(parent, f".{name}.{uuid.uuid4().hex}")
+
+
+def publish(table: str, gen: str) -> None:
+    """Make the index table `table` a symlink to the generation `gen`: a
+    relative symlink under a temporary name, `os.replace`d onto `table`
+    — atomic, so a reader resolves the old target or the new one, never
+    nothing.  Then every other hidden generation of the table is
+    deleted except the one just replaced: readers that resolved it keep
+    their files until the table's next publish (the grace period), and
+    a generation staged but never published (a crash before this call)
+    is dropped, so crash recovery needs no code.  A plain dir at
+    `table` (an index written before generations) is moved aside once,
+    as the replaced generation."""
+    parent, name = os.path.split(table)
+    replaced = os.path.realpath(table)
+    if os.path.isdir(table) and not os.path.islink(table):
+        replaced = new_generation(table)
+        os.rename(table, replaced)
+    link = new_generation(table) + ".link"
+    os.symlink(os.path.basename(gen), link)
+    os.replace(link, table)
+    keep = {os.path.basename(gen), os.path.basename(replaced)}
+    for entry in os.scandir(parent or "."):
+        if entry.name.startswith(f".{name}.") and entry.name not in keep:
+            if entry.is_dir(follow_symlinks=False):
+                shutil.rmtree(entry.path)
+            else:
+                os.unlink(entry.path)  # a temporary link left by a crash

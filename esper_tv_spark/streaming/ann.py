@@ -4,31 +4,25 @@ Completes the streaming story for the ANN family (reference pattern:
 face_embeddings.py:74-96 — a frozen embedding store that repeated queries
 probe; new embeddings arrive continuously in the reference's ingest
 pipeline, embed_kernel.py batch jobs): new vectors are folded into the
-`ivf_build_index` store as they arrive, and an offline compaction step
-re-centers the cells when drift accumulates.
+`ivf_build_index` store as they arrive, deletes are logical, and offline
+maintenance compacts, purges and re-centers the cells.
 
-Two halves:
-
-- `ivf_stream_insert` — a Structured Streaming foreachBatch sink that
-  assigns each micro-batch against the STORED (frozen) centroids and
-  appends posting rows to ``cells/`` partitioned by cell.  Because the
+- `*_stream_insert` — Structured Streaming foreachBatch sinks that
+  assign each micro-batch against the STORED (frozen) centroids and
+  append posting rows to ``cells/`` partitioned by cell.  Because the
   centroids are frozen, stream-inserting a tail of the corpus is
   bit-identical to rebuilding the index over the union (as long as the
   rank-based init set — the k smallest-id vectors — is in the base
-  build), which is exactly what the stream==batch test asserts.  At
-  100 TB the insert path touches only the micro-batch: one broadcast of
-  n_cells centroids, one map-side argmin, one partitioned append — no
-  read of the existing posting lists.
+  build), which is exactly what the stream==batch test asserts.  The
+  insert path touches only the micro-batch, never the existing lists.
 
-- `ivf_recenter` — the offline compaction every IVF deployment runs: new
-  centroid = elementwise mean of the cell's posting vectors, then ONE
-  reassignment pass rewrites the posting lists against the new centroids
-  (a single Lloyd iteration as maintenance).  The mean is computed over
-  scaled BIGINTs (round to `round_digits`, scale, exact integer sum) so
-  the result is accumulation-order-free — deterministic under any
-  partitioning, any engine.  Shuffle shape: posexplode to (cell, pos)
-  partial sums — map-side combine reduces the exchange to
-  n_cells x dim rows regardless of corpus size.
+- `compact_posting_lists` / `ivf_recenter` — the rewrites.  Compaction
+  collapses insert fragments (and, with purge, drops tombstoned rows);
+  recenter is one Lloyd iteration over the deterministic, scaled-BIGINT
+  means of each cell.  Every rewrite stages the tables it changes in
+  new generations and publishes them (`sources.sidecar.publish`), the
+  index's only swap: readers keep the generation they resolved, and a
+  crash before a publish leaves an unpublished dir the next one drops.
 """
 
 from __future__ import annotations
@@ -173,7 +167,7 @@ def ivfpq_stream_insert(
                 round_digits,
             )
         cents = _stored_centroids(spark, index_path)
-        cb = spark.read.parquet(os.path.join(index_path, "codebooks"))
+        cb = sidecar.declared_parquet(spark, os.path.join(index_path, "codebooks"))
         assigned = lloyd_assign(
             batch_df, centroids=cents, id_col=id_col, vec_col=vec_col,
             round_digits=round_digits,
@@ -275,7 +269,7 @@ def ann_delete(spark: SparkSession, index_path: str, ids: "list[int]") -> int:
     driver and filters its posting scan with `NOT id IN (...)`
     (similarity._apply_tombstones), and
     `compact_posting_lists(purge=True)` physically drops the rows and
-    clears the table.
+    then removes the tombstone files it applied.
 
     The append is a driver-side parquet write (`sidecar.append_rows`):
     no Spark job, and no `_SUCCESS` file — the ids are visible to every
@@ -323,6 +317,22 @@ def posting_fragment_census(index_path: str) -> dict[int, int]:
     return census
 
 
+def _drop_applied_tombstones(tomb_dir: str, files: "list[str]") -> None:
+    """After a rewrite's publish: delete the tombstone files it applied
+    (`files`, listed before its tombstone ids were read) — never the
+    whole table, which may hold ids an `ann_delete` appended during the
+    rewrite; those stay and keep hiding their rows.  A crash before this
+    call leaves applied tombstones, which re-apply as a no-op filter.
+    An emptied table dir goes too (rmdir refuses if an append landed)."""
+    for f in files:
+        os.remove(f)
+    if files:
+        try:
+            os.rmdir(tomb_dir)
+        except OSError:
+            pass
+
+
 def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
     """Remove centroid rows whose cells hold ZERO live posting rows — the
     census-driven retirement pass `compact_posting_lists` runs when
@@ -337,7 +347,8 @@ def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
     - detection is the fragment census (a dead cell has no `cell=<c>/`
       dir — a purge's repartitioned write emits no dir for an emptied
       cell), so retirement is idempotent and also catches cells emptied
-      by PRIOR purges;
+      by PRIOR purges.  The census and the centroid ids are read on the
+      driver, so a pass with nothing to retire launches no Spark job;
     - only `centroids/` is rewritten (two-level layout preserved:
       partitionBy grp).  `groups/` is quantizer STRUCTURE, not corpus
       state — level-1 centers stay, and a group whose cells all died
@@ -346,29 +357,18 @@ def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
       inserts assign against the remaining centroids, so a retired
       cell's id space cannot be resurrected (same id-uniqueness
       contract as ann_delete);
-    - crash-safe: the rewrite joins the same write-aside two-rename
-      discipline; a crash before the swap leaves dead centroids ranked
-      (correct, just wasteful) and the next retirement pass fixes it.
+    - the kept rows are written to a new generation and published
+      (`sidecar.publish`); a crash before the publish leaves dead
+      centroids ranked (correct, just wasteful) and the next
+      retirement pass fixes it.
 
     Returns the number of retired cells (0 when none).  Raises on a
     fully-dead index — an empty centroid table would make every probe
     rank zero cells, which should be a loud lifecycle error, not an
     empty result."""
-    import shutil
-
     cents_dir = os.path.join(index_path, "centroids")
-    # crash recovery for a PRIOR retirement's swap window
-    if os.path.exists(cents_dir):
-        for suffix in ("__rt", "__rtold"):
-            shutil.rmtree(cents_dir + suffix, ignore_errors=True)
-    elif os.path.exists(cents_dir + "__rt"):
-        os.rename(cents_dir + "__rt", cents_dir)
-        shutil.rmtree(cents_dir + "__rtold", ignore_errors=True)
-    elif os.path.exists(cents_dir + "__rtold"):
-        os.rename(cents_dir + "__rtold", cents_dir)
     live = set(posting_fragment_census(index_path))
-    cents = spark.read.parquet(cents_dir)
-    persisted = sorted(int(r["cell"]) for r in cents.select("cell").collect())
+    persisted = sorted(int(r["cell"]) for r in sidecar.sidecar_rows(cents_dir, ["cell"]))
     dead = sorted(set(persisted) - live)
     if not dead:
         return 0
@@ -378,19 +378,13 @@ def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
             "refusing to write an empty centroid table (rebuild or drop "
             "the index instead)"
         )
-    keep = cents.where(~F.col("cell").isin([int(c) for c in dead]))
-    hier = os.path.isdir(os.path.join(index_path, "groups"))
-    tmp = cents_dir + "__rt"
-    if hier:
-        keep.select("grp", "cell", "cv").write.mode("overwrite").partitionBy(
-            "grp"
-        ).parquet(tmp)
+    keep = sidecar.declared_parquet(spark, cents_dir).where(~F.col("cell").isin(dead))
+    gen = sidecar.new_generation(cents_dir)
+    if os.path.isdir(os.path.join(index_path, "groups")):
+        keep.select("grp", "cell", "cv").write.partitionBy("grp").parquet(gen)
     else:
-        keep.select("cell", "cv").write.mode("overwrite").parquet(tmp)
-    old = cents_dir + "__rtold"
-    os.rename(cents_dir, old)
-    os.rename(tmp, cents_dir)
-    shutil.rmtree(old)
+        keep.select("cell", "cv").write.parquet(gen)
+    sidecar.publish(cents_dir, gen)
     return len(dead)
 
 
@@ -411,26 +405,24 @@ def compact_posting_lists(
     fragments are HARD-LINKED into the new generation (driver-side
     metadata only, no data movement — at 100 TB rewriting every cell to
     fix a few hot ones would be a full-corpus I/O pass).  The new
-    generation is then swapped in with the same crash-safe two-rename
-    discipline as `ivf_recenter` (write-aside __rc -> rename live to
-    __old -> rename __rc to live -> drop __old), including the same
-    recovery preamble: a crash inside a PRIOR compaction's swap window
-    is recovered (prefer __rc, fall back to __old), never deleted.
-    Compaction never changes CONTENT — probe results are bit-identical
-    before and after (asserted in tests/test_streaming_ann.py).
+    generation is then published (`sidecar.publish`): probes running
+    meanwhile keep reading the generation they resolved, and a crash
+    before the publish leaves the index as it was.  Compaction never
+    changes CONTENT — probe results are bit-identical before and after
+    (asserted in tests/test_streaming_ann.py).
 
     `purge=True` additionally applies the index's `tombstones/` table
     (ann_delete) PHYSICALLY: every cell is rewritten with the
     tombstoned ids dropped (a tombstoned id's cell is unknown, so a
     purge is by definition a full rewrite — that is why deletes are
-    logical in the first place), and the tombstone table is removed
-    AFTER the swap.  Crash between swap and removal is safe: the
-    tombstones re-apply to already-purged postings as a no-op
-    filter.  Probe results are bit-identical before/after a purge
-    (the probes' filter was already hiding the rows — asserted in tests).
+    logical in the first place), and the tombstone files it applied
+    are removed AFTER the publish (`_drop_applied_tombstones`; ids
+    deleted during the rewrite stay tombstoned).  Probe results are
+    bit-identical before/after a purge (the probes' filter was already
+    hiding the rows — asserted in tests).
 
     `retire_empty_cells=True` additionally runs `_retire_empty_cells`
-    AFTER the swap: centroids of cells left with zero live rows are
+    AFTER the publish: centroids of cells left with zero live rows are
     dropped from the ranking surface (see that docstring for scope and
     the probe-slot argument).  Off by default — retirement legitimately
     CHANGES probe results (a freed slot admits the next live cell), so
@@ -445,22 +437,9 @@ def compact_posting_lists(
     _require_dirs_layout(index_path, "compact_posting_lists")
     cells_dir = os.path.join(index_path, "cells")
     tomb_dir = os.path.join(index_path, "tombstones")
-    tomb_ids = sidecar.tombstone_ids(index_path) if purge else []
-    # recovery preamble — identical contract to ivf_recenter's: only
-    # clean __rc/__old when live exists; otherwise they ARE the index.
-    if os.path.exists(cells_dir):
-        for suffix in ("__rc", "__old"):
-            shutil.rmtree(cells_dir + suffix, ignore_errors=True)
-    elif os.path.exists(cells_dir + "__rc"):
-        os.rename(cells_dir + "__rc", cells_dir)
-        shutil.rmtree(cells_dir + "__old", ignore_errors=True)
-    elif os.path.exists(cells_dir + "__old"):
-        os.rename(cells_dir + "__old", cells_dir)
-    else:
-        raise FileNotFoundError(
-            f"compact_posting_lists: {cells_dir} missing and no __rc/__old "
-            "to recover from"
-        )
+    tomb_files = sidecar.committed_files(tomb_dir) if purge else []
+    tomb_ids = sidecar.tombstone_ids(index_path) if tomb_files else []
+    src = os.path.realpath(cells_dir)
     census = posting_fragment_census(index_path)
     if tomb_ids:
         # a purge rewrites EVERY cell (the tombstoned ids' cells are
@@ -481,26 +460,17 @@ def compact_posting_lists(
             stats["cells_retired"] = _retire_empty_cells(spark, index_path)
         return stats
 
-    tmp = cells_dir + "__rc"
-    rewrite = sidecar.declared_parquet(spark, cells_dir).where(F.col("cell").isin(hot))
+    gen = sidecar.new_generation(cells_dir)
+    rewrite = sidecar.declared_parquet(spark, src).where(F.col("cell").isin(hot))
     if tomb_ids:
         rewrite = rewrite.where(~F.col("id").isin(tomb_ids))
-    (
-        rewrite
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
+    rewrite.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
     # carry the already-compact cells across via hard links (fall back
     # to copy on filesystems without link support)
-    for cell, n in census.items():
-        if cell in set(hot):
-            continue
-        src_dir = os.path.join(cells_dir, f"cell={cell}")
-        dst_dir = os.path.join(tmp, f"cell={cell}")
+    for cell in set(census) - set(hot):
+        dst_dir = os.path.join(gen, f"cell={cell}")
         os.makedirs(dst_dir, exist_ok=True)
-        for f in os.scandir(src_dir):
+        for f in os.scandir(os.path.join(src, f"cell={cell}")):
             if not (f.is_file() and f.name.endswith(".parquet")):
                 continue
             dst = os.path.join(dst_dir, f.name)
@@ -508,16 +478,8 @@ def compact_posting_lists(
                 os.link(f.path, dst)
             except OSError:
                 shutil.copy2(f.path, dst)
-
-    old = cells_dir + "__old"
-    os.rename(cells_dir, old)
-    os.rename(tmp, cells_dir)
-    shutil.rmtree(old)
-    if tomb_ids:
-        # AFTER the swap: a crash here leaves tombstones over purged
-        # postings — the filter re-applies as a no-op, never loses a
-        # delete
-        shutil.rmtree(tomb_dir, ignore_errors=True)
+    sidecar.publish(cells_dir, gen)
+    _drop_applied_tombstones(tomb_dir, tomb_files)
     if retire_empty_cells:
         stats["cells_retired"] = _retire_empty_cells(spark, index_path)
     stats["fragments_after"] = sum(posting_fragment_census(index_path).values())
@@ -531,13 +493,20 @@ def ivf_recenter(
     """One Lloyd iteration as offline compaction: recompute each cell's
     centroid as the deterministic elementwise mean of its posting
     vectors, then reassign ALL posting rows against the new centroids and
-    rewrite both tables (write-aside then swap — never overwrite a table
-    being read).  Cell LABELS are preserved (mean of cell c keeps label
-    c), so probes and the census keep their key space.
+    rewrite both tables.  Each table is staged in a new generation and
+    the tables are published back-to-back once every write finished
+    (`sidecar.publish` — never overwrite a table being read).  A crash
+    before the publishes leaves the index as it was; one between them
+    leaves complete tables of two generations, which the next recenter
+    reconciles (it recomputes the centroids from the posting rows).
+    Cell LABELS are preserved (mean of cell c keeps label c), so probes
+    and the census keep their key space.
 
     Determinism: each element is rounded at `round_digits` and scaled to
     BIGINT before the sum, so partial aggregation order cannot change the
-    mean; the final divide + round returns to double once.
+    mean; the final divide + round returns to double once.  Shuffle
+    shape: posexplode to (cell, pos) partial sums — map-side combine
+    reduces the exchange to n_cells x dim rows regardless of corpus size.
 
     TWO-LEVEL indexes (a `groups/` table is present — see
     similarity._write_centroids): the new centroids get REGROUPED against
@@ -545,49 +514,24 @@ def ivf_recenter(
     `group_train_iters` (recorded in ivfpq/ivfsq meta.json; raw IVF
     callers state it) to keep a TRAINED grouping trained across the
     rewrite, else the regroup silently reverts to rank-init seeds — and
-    `groups/` joins the crash-safe swap: stale level-1 centers over
-    recentered cells would silently mis-prune probes."""
-    import shutil
+    `groups/` is republished with them: stale level-1 centers over
+    recentered cells would silently mis-prune probes.
 
+    The group count and the schemas of the posting and staged-centroid
+    reads come from the driver (`sidecar`): no inference job."""
     _require_dirs_layout(index_path, "ivf_recenter")
     scale = float(10 ** round_digits)
     cells_dir = os.path.join(index_path, "cells")
     cents_dir = os.path.join(index_path, "centroids")
     groups_dir = os.path.join(index_path, "groups")
-    # pre-clean leftovers from a crashed prior run — but ONLY when the
-    # live dir still exists.  If live is missing, the prior run died
-    # inside its swap window (between rename(live, old) and
-    # rename(tmp, live)); in that window __rc is the COMPLETE new
-    # generation (the swap loop only starts after every __rc write
-    # finished) and __old is the only other surviving copy — deleting
-    # either would destroy the index.  Recover instead: prefer __rc,
-    # fall back to __old.  Any cells/cents generation mismatch the
-    # recovery leaves behind is corrected by this very run, which
-    # recomputes centroids from the posting rows regardless.
-    dirs = [cells_dir, cents_dir]
-    if any(os.path.exists(groups_dir + s) for s in ("", "__rc", "__old")):
-        dirs.append(groups_dir)
-    for d in dirs:
-        if os.path.exists(d):
-            for suffix in ("__rc", "__old"):
-                shutil.rmtree(d + suffix, ignore_errors=True)
-        elif os.path.exists(d + "__rc"):
-            os.rename(d + "__rc", d)
-            shutil.rmtree(d + "__old", ignore_errors=True)
-        elif os.path.exists(d + "__old"):
-            os.rename(d + "__old", d)
-        else:
-            raise FileNotFoundError(
-                f"ivf_recenter: {d} missing and no __rc/__old to recover from"
-            )
-    hier = groups_dir in dirs
-    posting = spark.read.parquet(cells_dir)
     # recenter is a full rewrite: apply (and then retire) any logical
     # deletes — keeping tombstoned vectors would bake them into the new
     # centroid means AND resurrect them in the rewritten posting lists
     tomb_dir = os.path.join(index_path, "tombstones")
-    had_tombstones = os.path.isdir(tomb_dir)
-    posting = _apply_tombstones(spark, index_path, posting)
+    tomb_files = sidecar.committed_files(tomb_dir)
+    posting = _apply_tombstones(
+        sidecar.declared_parquet(spark, cells_dir), sidecar.tombstone_ids(index_path)
+    )
 
     elem = posting.select(
         "cell", "id", F.posexplode(F.col("v")).alias("pos", "x")
@@ -615,19 +559,18 @@ def ivf_recenter(
             ).alias("cv")
         )
     )
-    cents_tmp = cents_dir + "__rc"
-    swaps = [(cells_dir, cells_dir + "__rc"), (cents_dir, cents_tmp)]
-    if hier:
+    staged = {t: sidecar.new_generation(t) for t in (cells_dir, cents_dir)}
+    if os.path.isdir(groups_dir):
         from esper_tv_spark.operators.similarity import _group_centers
 
-        n_groups = spark.read.parquet(groups_dir).count()
-        groups_tmp = groups_dir + "__rc"
+        n_groups = len(sidecar.sidecar_rows(groups_dir, ["grp"]))
+        staged[groups_dir] = sidecar.new_generation(groups_dir)
         gdf = _group_centers(new_cents, n_groups, round_digits, group_train_iters)
-        gdf.write.mode("overwrite").parquet(groups_tmp)
+        gdf.write.parquet(staged[groups_dir])
         (
             lloyd_assign(
                 new_cents,
-                centroids=spark.read.parquet(groups_tmp).select(
+                centroids=sidecar.declared_parquet(spark, staged[groups_dir]).select(
                     F.col("grp").alias("cluster"), F.col("gv").alias("cvec")
                 ),
                 id_col="cell", vec_col="cv", round_digits=round_digits,
@@ -635,32 +578,21 @@ def ivf_recenter(
             .withColumnRenamed("cluster", "grp")
             .join(new_cents, "cell")
             .select("grp", "cell", "cv")
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(cents_tmp)
+            .write.partitionBy("grp")
+            .parquet(staged[cents_dir])
         )
-        swaps.append((groups_dir, groups_tmp))
     else:
-        new_cents.write.mode("overwrite").parquet(cents_tmp)
+        new_cents.write.parquet(staged[cents_dir])
 
-    fresh = spark.read.parquet(cents_tmp).select(
+    fresh = sidecar.declared_parquet(spark, staged[cents_dir]).select(
         F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
     )
     vec_in = posting.select(F.col("id").alias("vec_id"), F.col("v").alias("embedding"))
-    cells_tmp = cells_dir + "__rc"
     (
         _posting_rows(vec_in, fresh, "vec_id", "embedding", round_digits)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(cells_tmp)
+        .write.partitionBy("cell")
+        .parquet(staged[cells_dir])
     )
-
-    for live, tmp in swaps:
-        old = live + "__old"
-        os.rename(live, old)
-        os.rename(tmp, live)
-        shutil.rmtree(old)
-    if had_tombstones:
-        # after the swap, same contract as compact(purge=True): a crash
-        # before this line re-applies the tombstones as a no-op
-        shutil.rmtree(tomb_dir, ignore_errors=True)
+    for table, gen in staged.items():
+        sidecar.publish(table, gen)
+    _drop_applied_tombstones(tomb_dir, tomb_files)

@@ -199,58 +199,148 @@ def test_ivfpq_residual_stream_insert_equals_batch_rebuild(spark, tmp_path):
     assert got == want
 
 
-def test_recenter_recovers_from_mid_swap_crash(spark, tmp_path):
-    """A prior run that died between rename(live, old) and rename(tmp,
-    live) leaves live MISSING, __old = the previous generation, __rc =
-    the complete new generation.  The pre-clean must recover (prefer
-    __rc), never delete the only surviving copies."""
-    import shutil
+def _generations(idx, table):
+    """The hidden generation dirs of an index table, published or not."""
+    return sorted(
+        n for n in os.listdir(idx)
+        if n.startswith(f".{table}.") and os.path.isdir(os.path.join(idx, n))
+    )
 
+
+def _crash_at_publish(monkeypatch, table):
+    """Make `sidecar.publish` raise before it swaps `table` in: a crash
+    after the new generation is staged, before it is published."""
+    from esper_tv_spark.sources import sidecar
+
+    real = sidecar.publish
+
+    def publish(path, gen):
+        if os.path.basename(path) == table:
+            raise RuntimeError("simulated crash before publish")
+        real(path, gen)
+
+    monkeypatch.setattr(sidecar, "publish", publish)
+
+
+def _snap(spark, idx):
+    cents = sorted(
+        (int(r["cell"]), tuple(r["cv"]))
+        for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
+    )
+    cells = sorted(
+        (int(r["id"]), int(r["cell"]))
+        for r in spark.read.parquet(os.path.join(idx, "cells")).select("id", "cell").collect()
+    )
+    return cents, cells
+
+
+def test_recenter_recovers_from_mid_swap_crash(spark, tmp_path, monkeypatch):
+    """A recenter that dies after staging its generations and before
+    publishing them leaves the index as it was: the staged dirs are
+    invisible to probes, and the next recenter drops them and ends
+    where an uninterrupted recenter ends."""
     emb = _emb(spark)
-    idx = str(tmp_path / "ivf_crash")
+    idx, twin = str(tmp_path / "ivf_crash"), str(tmp_path / "ivf_twin")
     ivf_build_index(emb, idx, n_cells=8)
-    cells = os.path.join(idx, "cells")
-    n_rows = spark.read.parquet(cells).count()
-
-    # simulate the crash window on the cells dir: __rc is a complete
-    # generation (here: a byte-copy of live), live renamed away to __old
-    shutil.copytree(cells, cells + "__rc")
-    os.rename(cells, cells + "__old")
-    assert not os.path.exists(cells)
-
-    ivf_recenter(spark, idx)
-
-    assert spark.read.parquet(cells).count() == n_rows
-    for leftover in (cells + "__rc", cells + "__old"):
-        assert not os.path.exists(leftover)
+    ivf_build_index(emb, twin, n_cells=8)
     qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
-    assert len(ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()) == 10
+    want = [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+    before = _snap(spark, idx)
+    published = {t: os.readlink(os.path.join(idx, t)) for t in ("cells", "centroids")}
 
+    _crash_at_publish(monkeypatch, "cells")
+    with pytest.raises(RuntimeError, match="simulated"):
+        ivf_recenter(spark, idx)
+    monkeypatch.undo()
 
-def test_recenter_recovers_from_old_when_rc_absent(spark, tmp_path):
-    emb = _emb(spark)
-    idx = str(tmp_path / "ivf_crash_old")
-    ivf_build_index(emb, idx, n_cells=8)
-    cells = os.path.join(idx, "cells")
-    n_rows = spark.read.parquet(cells).count()
-    os.rename(cells, cells + "__old")
+    for table, gen in published.items():
+        assert os.readlink(os.path.join(idx, table)) == gen
+        assert len(_generations(idx, table)) == 2  # published + staged
+    assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == want
+    assert _snap(spark, idx) == before
 
     ivf_recenter(spark, idx)
+    ivf_recenter(spark, twin)
+    for table, gen in published.items():
+        # the replaced generation stays for running readers; the staged
+        # one is gone
+        assert _generations(idx, table) == sorted(
+            [gen, os.readlink(os.path.join(idx, table))]
+        )
+    assert _snap(spark, idx) == _snap(spark, twin)
 
-    assert spark.read.parquet(cells).count() == n_rows
-    assert not os.path.exists(cells + "__old")
+
+def test_plain_dir_index_compacts_retires_and_probes_identically(spark, tmp_path):
+    """An index written before generations has plain `cells/` and
+    `centroids/` dirs.  It must probe, compact, purge and retire exactly
+    like a published one; its first publish of each table moves the
+    plain dir aside as the replaced generation."""
+    from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
+
+    emb = _emb(spark)
+    qv = [float(x) for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]]
+    plain, published = str(tmp_path / "plain"), str(tmp_path / "published")
+    for idx in (plain, published):
+        ivf_build_index(emb, idx, n_cells=8)
+    for table in ("cells", "centroids"):
+        link = os.path.join(plain, table)
+        gen = os.path.realpath(link)
+        os.unlink(link)
+        os.rename(gen, link)
+        assert _generations(plain, table) == []
+    victim = _victim_and_probe(spark, plain, qv)
+    victim_ids = [
+        int(r["id"])
+        for r in spark.read.parquet(os.path.join(plain, "cells", f"cell={victim}"))
+        .select("id").collect()
+    ]
+
+    def probe(idx):
+        return [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+
+    assert probe(plain) == probe(published)
+    for idx in (plain, published):
+        compact_posting_lists(spark, idx, min_fragments=1)
+    assert probe(plain) == probe(published)
+    assert os.path.islink(os.path.join(plain, "cells"))
+    assert len(_generations(plain, "cells")) == 2
+    for idx in (plain, published):
+        ann_delete(spark, idx, victim_ids)
+        stats = compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)
+        assert stats["cells_retired"] == 1
+    assert probe(plain) == probe(published)
+    assert os.path.islink(os.path.join(plain, "centroids"))
+    assert _snap(spark, plain) == _snap(spark, published)
 
 
 def test_recenter_raises_when_nothing_to_recover(spark, tmp_path):
-    import pytest
-    import shutil
-
+    """An index without a posting table has nothing to recenter: raise
+    instead of publishing empty tables."""
     emb = _emb(spark)
     idx = str(tmp_path / "ivf_gone")
     ivf_build_index(emb, idx, n_cells=8)
-    shutil.rmtree(os.path.join(idx, "cells"))
+    os.unlink(os.path.join(idx, "cells"))
     with pytest.raises(FileNotFoundError):
         ivf_recenter(spark, idx)
+    assert os.readlink(os.path.join(idx, "centroids")) in _generations(idx, "centroids")
+
+
+def test_flat_rebuild_over_recentered_two_level_index_drops_groups(spark, tmp_path):
+    """A flat rebuild over a two-level index must remove its published
+    `groups` table (a symlink, which rmtree would silently keep): probes
+    pick the two-level path by its presence."""
+    emb = _emb(spark)
+    idx, flat = str(tmp_path / "was_hier"), str(tmp_path / "flat")
+    ivf_build_index(emb, idx, n_cells=8, n_groups=2)
+    ivf_recenter(spark, idx)
+    assert os.path.islink(os.path.join(idx, "groups"))
+    ivf_build_index(emb, idx, n_cells=8)
+    ivf_build_index(emb, flat, n_cells=8)
+    assert not os.path.lexists(os.path.join(idx, "groups"))
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == [
+        tuple(r) for r in ivf_probe_index(spark, flat, qv, 10, n_probe=3).collect()
+    ]
 
 
 def test_ivfpq_rebuild_crash_cannot_leave_mixed_generation(spark, tmp_path, monkeypatch):
@@ -425,8 +515,8 @@ def test_compaction_preserves_probe_results_and_collapses_fragments(spark, tmp_p
         .collect()
     )
     assert rows_got == rows_want
-    for leftover in ("cells__rc", "cells__old"):
-        assert not os.path.exists(os.path.join(idx, leftover))
+    # the published generation plus the one kept for running readers
+    assert len(_generations(idx, "cells")) == 2
 
     # idempotent: a second run finds nothing hot and rewrites nothing
     stats2 = compact_posting_lists(spark, idx, min_fragments=2)
@@ -434,12 +524,10 @@ def test_compaction_preserves_probe_results_and_collapses_fragments(spark, tmp_p
     assert stats2["fragments_after"] == stats2["fragments_before"]
 
 
-def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path):
-    """Same recovery contract as ivf_recenter: live missing + complete
-    __rc means a prior compaction died inside its swap window — recover
-    the new generation, never delete it."""
-    import shutil
-
+def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path, monkeypatch):
+    """A compaction that dies after staging its generation and before
+    publishing it leaves the index as it was: the staged dir is
+    invisible to probes, and the next publish of `cells` drops it."""
     from esper_tv_spark.streaming.ann import compact_posting_lists
 
     emb = _emb(spark)
@@ -447,16 +535,22 @@ def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path):
     ivf_build_index(emb, idx, n_cells=8)
     cells = os.path.join(idx, "cells")
     n_rows = spark.read.parquet(cells).count()
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    want = [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+    published = os.readlink(cells)
 
-    shutil.copytree(cells, cells + "__rc")
-    os.rename(cells, cells + "__old")
-    assert not os.path.exists(cells)
-
-    compact_posting_lists(spark, idx, min_fragments=2)
-
+    _crash_at_publish(monkeypatch, "cells")
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_posting_lists(spark, idx, min_fragments=1)
+    monkeypatch.undo()
+    staged = [g for g in _generations(idx, "cells") if g != published]
+    assert len(staged) == 1 and os.readlink(cells) == published
+    assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == want
     assert spark.read.parquet(cells).count() == n_rows
-    for leftover in (cells + "__rc", cells + "__old"):
-        assert not os.path.exists(leftover)
+
+    compact_posting_lists(spark, idx, min_fragments=1)
+    assert _generations(idx, "cells") == sorted([published, os.readlink(cells)])
+    assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == want
 
 
 @pytest.mark.slow
@@ -664,20 +758,7 @@ def test_recenter_applies_and_retires_tombstones(spark, tmp_path):
     compact_posting_lists(spark, never_had, purge=True)
     ivf_recenter(spark, never_had)
 
-    def snap(idx):
-        cents = sorted(
-            (int(r["cell"]), tuple(r["cv"]))
-            for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
-        )
-        cells = sorted(
-            (int(r["id"]), int(r["cell"]))
-            for r in spark.read.parquet(os.path.join(idx, "cells"))
-            .select("id", "cell")
-            .collect()
-        )
-        return cents, cells
-
-    assert snap(with_del) == snap(never_had)
+    assert _snap(spark, with_del) == _snap(spark, never_had)
 
 
 def test_ann_delete_validation(spark, tmp_path):
@@ -798,12 +879,11 @@ def test_retirement_refuses_fully_dead_index(spark, tmp_path):
         compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)
 
 
-def test_retirement_recovers_from_mid_swap_crash(spark, tmp_path):
-    """A crash between rename(live, __rtold) and rename(__rt, live)
-    leaves no live centroids dir; the next retirement pass must recover
-    the complete new generation from __rt."""
-    import shutil
-
+def test_retirement_recovers_from_mid_swap_crash(spark, tmp_path, monkeypatch):
+    """A retirement that dies before publishing its centroids leaves the
+    dead centroid ranked (correct, just wasteful) and its staged
+    generation unpublished; the next retirement pass retires the cell
+    and drops the staged dir."""
     from esper_tv_spark.streaming.ann import (
         ann_delete,
         compact_posting_lists,
@@ -820,19 +900,127 @@ def test_retirement_recovers_from_mid_swap_crash(spark, tmp_path):
         for r in spark.read.parquet(os.path.join(idx, "cells", f"cell={victim}"))
         .select("id").collect()
     ]
-    ann_delete(spark, idx, victim_ids)
-    compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)
-    want = sorted(
-        (int(r["cell"]), list(r["cv"]))
-        for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
-    )
-    # simulate the crash window: live renamed away, __rt holds the new gen
     cents = os.path.join(idx, "centroids")
-    shutil.copytree(cents, cents + "__rt")
-    os.rename(cents, cents + "__rtold")
-    assert _retire_empty_cells(spark, idx) == 0  # recovery, nothing new dead
-    got = sorted(
-        (int(r["cell"]), list(r["cv"]))
-        for r in spark.read.parquet(cents).collect()
+    published = os.readlink(cents)
+    ann_delete(spark, idx, victim_ids)
+    _crash_at_publish(monkeypatch, "centroids")
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)
+    monkeypatch.undo()
+    assert os.readlink(cents) == published and len(_generations(idx, "centroids")) == 2
+    assert _victim_and_probe(spark, idx, qv) == victim
+    got = [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+    assert got and not set(victim_ids) & {r[0] for r in got}
+
+    assert _retire_empty_cells(spark, idx) == 1
+    assert _generations(idx, "centroids") == sorted([published, os.readlink(cents)])
+    remaining = {int(r["cell"]) for r in spark.read.parquet(cents).collect()}
+    assert victim not in remaining and len(remaining) == 7
+
+
+def test_retirement_with_nothing_to_retire_runs_no_spark_job(spark, tmp_path, count_jobs):
+    """The census and the centroid ids are read on the driver: a pass
+    that finds no dead cell launches no Spark job."""
+    from esper_tv_spark.streaming.ann import _retire_empty_cells
+
+    idx = str(tmp_path / "live")
+    ivf_build_index(_emb(spark), idx, n_cells=8)
+    assert count_jobs(lambda: _retire_empty_cells(spark, idx)) == (0, 0)
+
+
+@pytest.mark.parametrize("rewrite", ["purge", "recenter"])
+def test_ids_deleted_during_a_rewrite_stay_hidden(spark, tmp_path, monkeypatch, rewrite):
+    """An `ann_delete` that lands while a purge or recenter rewrites the
+    index (after the rewrite read the tombstones, before it publishes)
+    was never applied to the new generation: its tombstone must outlive
+    the rewrite and keep hiding the id."""
+    from esper_tv_spark.sources import sidecar
+    from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
+
+    emb = _emb(spark)
+    idx = str(tmp_path / rewrite)
+    ivf_build_index(emb, idx, n_cells=8)
+    ann_delete(spark, idx, [50])
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    late = 3  # the query's own vector: its top answer until deleted
+    assert ivf_probe_index(spark, idx, qv, 10, n_probe=3).first()[0] == late
+    real = sidecar.publish
+
+    def publish(table, gen):
+        if late not in sidecar.tombstone_ids(idx):
+            ann_delete(spark, idx, [late])
+        real(table, gen)
+
+    monkeypatch.setattr(sidecar, "publish", publish)
+    if rewrite == "purge":
+        assert compact_posting_lists(spark, idx, purge=True)["purged_ids"] == 1
+    else:
+        ivf_recenter(spark, idx)
+    monkeypatch.undo()
+    assert sidecar.tombstone_ids(idx) == [late]
+    got = [r[0] for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+    assert len(got) == 10 and late not in got and 50 not in got
+
+
+def test_probes_never_fail_while_maintenance_publishes(spark, tmp_path):
+    """Readers running beside maintenance always get an answer.  A thread
+    probes (`ivf_probe_index`) and joins (`ivf_knn_join_index`) in a loop
+    while 6 delete-and-purge cycles, a retirement pass and 3 recenters
+    publish new generations under it.  No read may raise, and every read
+    that started before the first recenter returns the pre-loop answer:
+    the deletes name absent ids, so purges and retirement change no
+    content."""
+    import threading
+
+    from esper_tv_spark.operators.similarity import ivf_knn_join_index
+    from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
+
+    emb = _emb(spark)
+    idx = str(tmp_path / "ivf_race")
+    ivf_build_index(emb, idx, n_cells=8)
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    queries = emb.where(F.col("vec_id").isin([0, 7])).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    assert got == want and not os.path.exists(cents + "__rtold")
+
+    def answers():
+        probe = [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+        join = ivf_knn_join_index(spark, idx, queries, 10, n_probe=3)
+        return probe, sorted(tuple(r) for r in join.collect())
+
+    want = answers()
+    lock = threading.Lock()
+    state = {"compare": True, "stop": False}
+    reads, errors, mismatches = [], [], []
+
+    def reader():
+        while not state["stop"]:
+            with lock:  # a phase change waits for the read in flight
+                compare = state["compare"]
+                try:
+                    got = answers()
+                except Exception as e:  # noqa: BLE001 — every failure counts
+                    errors.append(repr(e)[:300])
+                    continue
+            reads.append(compare)
+            if compare and got != want:
+                mismatches.append(got)
+
+    thread = threading.Thread(target=reader)
+    thread.start()
+    try:
+        for i in range(6):
+            ann_delete(spark, idx, [10**9 + i])
+            compact_posting_lists(spark, idx, purge=True)
+        assert compact_posting_lists(spark, idx, retire_empty_cells=True)["cells_retired"] == 0
+        with lock:
+            state["compare"] = False
+        for _ in range(3):
+            ivf_recenter(spark, idx)
+    finally:
+        state["stop"] = True
+        thread.join(timeout=300)
+    assert not thread.is_alive()
+    assert errors == []
+    assert mismatches == []
+    assert reads.count(True) >= 3 and False in reads
