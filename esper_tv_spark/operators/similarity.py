@@ -788,10 +788,11 @@ def ivf_build_index(
 
     `fast=True` runs the Theta(n*k) coarse assignment as Arrow-batched
     BLAS (lloyd_assign_blas) — same tie rules, byte-identical on the
-    test corpora.  Since r10 the contract entries themselves build with
-    fast=True (the oracle hash re-gates them at every driver SF); the
-    expression path remains the cross-engine reference, parity-pinned
-    by pytest on the gate corpora.
+    test corpora.  The contract entries build WITHOUT it
+    (`_ivf_index_dir` in __spark_entry__.py takes the default), so the
+    oracle hash gates the expression path, the cross-engine reference;
+    the BLAS path is parity-pinned against it by pytest on the gate
+    corpora.
 
     `assign_via_groups=True` (requires n_groups + fast) routes the
     build assignment through the level-1 groups too
@@ -1983,6 +1984,30 @@ def _round_half_away(x, digits: int):
     return np.sign(x) * np.floor(np.abs(x) * s + 0.5) / s
 
 
+def _spark_round(x, digits: int):
+    """`F.round(x, digits)` over a numpy array, bit for bit.  Spark
+    rounds the double's shortest decimal string HALF_UP
+    (`BigDecimal.valueOf`), which `_round_half_away`'s scaled floor
+    misses when |x|·10^digits lands a few ulps from a .5: of 60 000
+    doubles within an ulp of a 6-dp midpoint, 683 rounded the other
+    way.  Those few are redone with
+    `decimal` on the same string; the rest agree on the vectorized
+    path.  Spark has no -0.0 result, so neither has this."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    y = np.abs(x) * 10.0 ** digits
+    out = _round_half_away(x, digits)
+    near = (y < 2.0 ** 52) & (np.abs(y - np.floor(y) - 0.5) <= 8 * np.spacing(y))
+    if near.any():
+        q = Decimal(1).scaleb(-digits)
+        out[near] = [
+            float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP)) for v in x[near]
+        ]
+    return out + 0.0
+
+
 def rotate_vectors(
     df: DataFrame,
     rotation: list[list[float]],
@@ -2639,6 +2664,20 @@ def _sq_encode_expr(vec64, mn: list[float], mx: list[float]):
     )
 
 
+def _sq_encode_np(x, mn: list[float], mx: list[float]):
+    """`_sq_encode_expr` over a numpy (n, dim) batch, operation for
+    operation, so the codes are bit-identical.  A vector so far out of
+    range that its code overflows an int clamps here, where the
+    expression's int cast fails (ANSI mode, Spark's default)."""
+    import numpy as np
+
+    lo = np.array(mn, dtype=np.float64)
+    rng = np.array(mx, dtype=np.float64) - lo
+    with np.errstate(divide="ignore", invalid="ignore"):
+        codes = np.clip(np.floor((x - lo) / rng * 256.0), 0, 255)
+    return np.where(rng == 0.0, 0, codes).astype(np.int32)
+
+
 def ivfsq_build_index(
     df: DataFrame,
     path: str,
@@ -2955,6 +2994,13 @@ def knn_predict(
     )
 
 
+_PACKED_D2_MAX = (1 << 42) - 1
+_PACKED_RANGE_ERROR = (
+    "packed argmin: squared distance exceeds the 42-bit packed range "
+    "(~4.4e6 at 6 dp) — rescale the vectors or lower round_digits"
+)
+
+
 def _packed_argmin_key(d2: Column, round_digits: int) -> Column:
     """Order-preserving long encoding of a ROUNDED squared distance, with
     21 low bits left free for a dense centroid rank: packed = round(d2 *
@@ -2966,14 +3012,8 @@ def _packed_argmin_key(d2: Column, round_digits: int) -> Column:
     d2i = F.round(d2 * F.lit(scale)).cast("long")
     return F.shiftleft(
         F.when(
-            d2i > F.lit((1 << 42) - 1),
-            F.raise_error(
-                F.lit(
-                    "packed argmin: squared distance exceeds the 42-bit "
-                    "packed range (~4.4e6 at 6 dp) — rescale the vectors "
-                    "or lower round_digits"
-                )
-            ).cast("long"),
+            d2i > F.lit(_PACKED_D2_MAX),
+            F.raise_error(F.lit(_PACKED_RANGE_ERROR)).cast("long"),
         ).otherwise(d2i),
         21,
     )
@@ -3152,6 +3192,120 @@ def lloyd_assign_blas(
 
     schema = f"{id_col} long, cluster long" + (", __rank int" if n_probe > 1 else "")
     return vecs.mapInPandas(assign, schema=schema)
+
+
+def _fold_dot(a, b):
+    """`dot` over the last axis of two numpy arrays, broadcasting the
+    rest: the same left fold of IEEE double products from 0.0, so the
+    bits match Spark's `aggregate` (numpy's `sum` is pairwise and a BLAS
+    GEMM reorders; either can move the last ulp)."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc += a[..., j] * b[..., j]
+    return acc
+
+
+def _assign_cells_np(x, cmat, round_digits: int):
+    """`lloyd_assign` of a numpy (n, d) batch against centroids `cmat`
+    (k, d) already sorted by cell and rounded with `_spark_round`: the
+    row index of each vector's cell, bit for bit.  d2 = round((|x|² −
+    2·x·c) + |c|²) from `_fold_dot`s, and argmin keeps the first minimum
+    — the smaller cell, as the packed key's rank does.  The packed
+    key's range guard raises the same error (a NaN d2 fails it too).
+    Rows go in slices that keep each (rows, k) temporary near 32 MB
+    whatever the number of cells."""
+    import numpy as np
+
+    cc = _fold_dot(cmat, cmat)[None, :]
+    best = np.empty(len(x), dtype=np.int64)
+    step = max(1, (1 << 22) // len(cmat))
+    for i in range(0, len(x), step):
+        xi = x[i : i + step]
+        d2 = _spark_round(
+            (_fold_dot(xi, xi)[:, None] - 2.0 * _fold_dot(xi[:, None, :], cmat[None, :, :]))
+            + cc,
+            round_digits,
+        )
+        if not (np.rint(d2 * 10.0 ** round_digits) <= _PACKED_D2_MAX).all():
+            raise ValueError(_PACKED_RANGE_ERROR)
+        best[i : i + step] = d2.argmin(axis=1)
+    return best
+
+
+def _posting_pass(
+    df: DataFrame,
+    centroids: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_digits: int = 6,
+    sq_bounds: "tuple[list[float], list[float]] | None" = None,
+) -> DataFrame:
+    """Posting rows for `df`'s vectors in ONE Arrow pass: each vector's
+    cell against the centroid table at `centroids` (read on the driver
+    here, so a recenter between two calls takes effect on the next) and
+    its stored columns, computed together per batch — no Spark join, no
+    aggregate, and no job until the caller writes.
+
+    - IVF (default): (id, cell, v array<double>, norm = sqrt(dot(v, v)));
+    - SQ8 (`sq_bounds` = `_sq_bounds(index)`): (id, cell, codes
+      array<int>) encoded over the first len(mn) coordinates.
+
+    The cells are `lloyd_assign`'s, the norms `norm`'s and the codes
+    `_sq_encode_expr`'s, bit for bit (`_assign_cells_np`,
+    `_sq_encode_np`; pinned in tests/test_streaming_ann.py), so the
+    stored bytes equal the expression build's.  Every vector must have
+    the centroids' dimension."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    rows = sorted(sidecar_rows(centroids, ["cell", "cv"]), key=lambda r: r["cell"])
+    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
+    cmat = _spark_round(np.array([r["cv"] for r in rows], dtype=np.float64), round_digits)
+    dim = cmat.shape[1]
+    # the expression build's column types: SQ codes hold no null
+    head = [StructField("id", df.schema[id_col].dataType), StructField("cell", LongType())]
+    if sq_bounds is None:
+        tail = [StructField("v", ArrayType(DoubleType())), StructField("norm", DoubleType())]
+    else:
+        tail = [StructField("codes", ArrayType(IntegerType(), containsNull=False))]
+    schema = StructType(head + tail)
+    codes_type = pa.list_(pa.field("element", pa.int32(), nullable=False))
+
+    def encode(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue
+            vecs = b.column(1)
+            if vecs.null_count or not pc.all(pc.equal(pc.list_value_length(vecs), dim)).as_py():
+                raise ValueError(f"_posting_pass: every vector must hold {dim} values")
+            x = vecs.flatten().to_numpy().reshape(len(b), dim)
+            cell = pa.array(cells[_assign_cells_np(x, cmat, round_digits)])
+            if sq_bounds is None:
+                cols = [b.column(0), cell, vecs, pa.array(np.sqrt(_fold_dot(x, x)))]
+            else:
+                codes = _sq_encode_np(x[:, : len(sq_bounds[0])], *sq_bounds)
+                offsets = pa.array(np.arange(len(b) + 1, dtype=np.int32) * codes.shape[1])
+                cols = [
+                    b.column(0),
+                    cell,
+                    pa.ListArray.from_arrays(offsets, codes.ravel(), type=codes_type),
+                ]
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    ).mapInArrow(encode, schema)
 
 
 def lloyd_train(

@@ -15,6 +15,10 @@ maintenance compacts, purges and re-centers the cells.
   rank-based init set — the k smallest-id vectors — is in the base
   build), which is exactly what the stream==batch test asserts.  The
   insert path touches only the micro-batch, never the existing lists.
+  The IVF and IVF-SQ bodies are one Arrow pass
+  (`similarity._posting_pass`: centroids read on the driver, cell and
+  stored columns computed per batch), so a micro-batch runs one Spark
+  job, its append; an empty one writes no file.
 
 - `compact_posting_lists` / `ivf_recenter` — the rewrites.  Compaction
   collapses insert fragments (and, with purge, drops tombstoned rows);
@@ -32,7 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esper_tv_spark.operators.similarity import _apply_tombstones, dot, lloyd_assign
+from esper_tv_spark.operators.similarity import _apply_tombstones, _posting_pass, lloyd_assign
 from esper_tv_spark.sources import sidecar
 
 
@@ -62,23 +66,6 @@ def _stored_centroids(spark: SparkSession, index_path: str) -> DataFrame:
     )
 
 
-def _posting_rows(
-    batch_df: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
-) -> DataFrame:
-    assigned = lloyd_assign(
-        batch_df, centroids=centroids, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits,
-    ).withColumnRenamed("cluster", "cell")
-    vecs = batch_df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    return assigned.select(F.col(id_col).alias("id"), "cell").join(vecs, "id")
-
-
 def ivf_stream_insert(
     stream_df: DataFrame,
     index_path: str,
@@ -94,20 +81,20 @@ def ivf_stream_insert(
     an `ivf_recenter` between batches takes effect on the next trigger.
 
     Delivery: the checkpoint makes the file source exactly-once per
-    batch; a crash BETWEEN the parquet append and the checkpoint commit
-    can replay one batch's appends (at-least-once, the same contract as
-    the ledger sink in streaming/ingest.py) — probes dedup on id if the
-    producer can re-deliver."""
+    batch, but the append is not: a batch replayed after a crash BETWEEN
+    the parquet append and the checkpoint commit appends its rows again
+    (at-least-once, the same contract as the ledger sink in
+    streaming/ingest.py).  No probe deduplicates on id, so probes return
+    such an id twice.  The fix is a commit log keyed by (query id, batch
+    id), ROADMAP item 1."""
 
     _require_dirs_layout(index_path, "ivf_stream_insert")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        cents = _stored_centroids(spark, index_path)
         (
-            _posting_rows(batch_df, cents, id_col, vec_col, round_digits)
+            _posting_pass(
+                batch_df, os.path.join(index_path, "centroids"), id_col, vec_col, round_digits
+            )
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(index_path, "cells"))
@@ -144,8 +131,6 @@ def ivfpq_stream_insert(
     _require_dirs_layout(index_path, "ivfpq_stream_insert")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         from esper_tv_spark.operators.similarity import (
             _ivfpq_meta,
             _ivfpq_rotation,
@@ -219,35 +204,21 @@ def ivfsq_stream_insert(
     PARTITIONED BY cell.  The bounds are a build-time property — a
     vector outside the frozen range CLAMPS to code 0/255, exactly what
     every production scalar quantizer does (re-fitting bounds is a
-    rebuild, not an insert).  The encode expression is the same
-    `_sq_encode_expr` the batch build uses, so inserted codes are
-    bit-identical to batch-encoding the same rows against the same
-    store (asserted in tests/test_streaming_ann.py)."""
-    import json
-
-    from esper_tv_spark.operators.similarity import _sq_bounds, _sq_encode_expr
+    rebuild, not an insert).  Cell and codes come from one Arrow pass
+    (`similarity._posting_pass`) that replays `lloyd_assign` and the
+    batch build's `_sq_encode_expr` operation for operation, so inserted
+    codes are bit-identical to batch-encoding the same rows against the
+    same store (asserted in tests/test_streaming_ann.py)."""
+    from esper_tv_spark.operators.similarity import _sq_bounds
 
     _require_dirs_layout(index_path, "ivfsq_stream_insert")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        with open(os.path.join(index_path, "meta.json")) as f:
-            dim = int(json.load(f)["dim"])
-        mn, mx = _sq_bounds(index_path)
-        cents = _stored_centroids(spark, index_path)
-        assigned = lloyd_assign(
-            batch_df, centroids=cents, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits,
-        ).withColumnRenamed("cluster", "cell")
-        v64 = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
-        codes = batch_df.select(
-            F.col(id_col).alias("id"), _sq_encode_expr(v64, mn, mx).alias("codes")
-        )
         (
-            assigned.select(F.col(id_col).alias("id"), "cell")
-            .join(codes, "id")
+            _posting_pass(
+                batch_df, os.path.join(index_path, "centroids"), id_col, vec_col,
+                round_digits, sq_bounds=_sq_bounds(index_path),
+            )
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(index_path, "cells"))
@@ -584,12 +555,8 @@ def ivf_recenter(
     else:
         new_cents.write.parquet(staged[cents_dir])
 
-    fresh = sidecar.declared_parquet(spark, staged[cents_dir]).select(
-        F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
-    )
-    vec_in = posting.select(F.col("id").alias("vec_id"), F.col("v").alias("embedding"))
     (
-        _posting_rows(vec_in, fresh, "vec_id", "embedding", round_digits)
+        _posting_pass(posting, staged[cents_dir], "id", "v", round_digits)
         .write.partitionBy("cell")
         .parquet(staged[cells_dir])
     )

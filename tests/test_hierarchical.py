@@ -410,18 +410,15 @@ def test_stream_insert_into_hier_index(spark, emb, qv, tmp_path):
     (grp-partitioned) centroids unchanged — the extra column is carried
     by the read, never the assignment — and a subsequent probe sees the
     new vectors exactly as a full rebuild would (stream==batch).  Uses
-    the foreachBatch body's own helpers (`_stored_centroids` /
-    `_posting_rows`) directly — the streaming wrapper adds only the
-    checkpointed trigger, covered in test_streaming_ann."""
-    from esper_tv_spark.streaming.ann import _posting_rows, _stored_centroids
-
+    the foreachBatch body's own pass (`_posting_pass`) directly — the
+    streaming wrapper adds only the checkpointed trigger, covered in
+    test_streaming_ann."""
     base = emb.where(F.col("vec_id") < 150)
     tail = emb.where(F.col("vec_id") >= 150)
     hier = str(tmp_path / "hier")
     sim.ivf_build_index(base, hier, n_cells=16, n_groups=4)
-    cents = _stored_centroids(spark, hier)
     (
-        _posting_rows(tail, cents, "vec_id", "embedding", 6)
+        sim._posting_pass(tail, os.path.join(hier, "centroids"), "vec_id", "embedding", 6)
         .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(hier, "cells"))

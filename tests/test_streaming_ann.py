@@ -1024,3 +1024,211 @@ def test_probes_never_fail_while_maintenance_publishes(spark, tmp_path):
     assert errors == []
     assert mismatches == []
     assert reads.count(True) >= 3 and False in reads
+
+
+# ---------------------------------------------------------------------------
+# the one-pass insert body (`similarity._posting_pass`)
+# ---------------------------------------------------------------------------
+
+
+def _unit_vectors(spark, n, seed=7):
+    """perfbench's embedding shape: float32 64-dim unit vectors."""
+    import numpy as np
+
+    v = np.random.default_rng(seed).standard_normal((n, 64)).astype(np.float32)
+    v = v / np.linalg.norm(v, axis=1, keepdims=True)
+    return spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(v)],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _expression_rows(spark, vecs, cents_dir):
+    """The reference posting rows: `lloyd_assign` against the stored
+    centroids, `v` and `norm` as the expression build stores them."""
+    from esper_tv_spark.operators.similarity import dot
+    from esper_tv_spark.sources import sidecar
+
+    cents = sidecar.declared_parquet(spark, cents_dir).select(
+        F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
+    )
+    v = F.col("embedding").cast("array<double>")
+    rows = (
+        lloyd_assign(vecs, centroids=cents)
+        .join(vecs, "vec_id")
+        .select("vec_id", "cluster", v.alias("v"), F.sqrt(dot(v, v)).alias("norm"))
+        .collect()
+    )
+    return sorted((r[0], r[1], tuple(r[2]), r[3]) for r in rows)
+
+
+def _pass_rows(vecs, cents_dir, **kw):
+    from esper_tv_spark.operators.similarity import _posting_pass
+
+    rows = _posting_pass(vecs, cents_dir, **kw).collect()
+    return sorted(tuple(tuple(x) if isinstance(x, list) else x for x in r) for r in rows)
+
+
+def test_spark_round_matches_f_round_near_midpoints(spark):
+    """`_spark_round` is F.round bit for bit on doubles a few ulps from a
+    6-dp midpoint, where `_round_half_away`'s scaled floor can differ."""
+    import numpy as np
+
+    from esper_tv_spark.operators.similarity import _round_half_away, _spark_round
+
+    k = np.random.default_rng(3).integers(0, 4_000_000, 1500)
+    mid = (k + 0.5) / 1e6
+    x = np.concatenate([np.nextafter(mid, 0), mid, np.nextafter(mid, 10), -mid])
+    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(x)], "i long, x double")
+    want = np.array([r[1] for r in sorted(df.select("i", F.round("x", 6)).collect())])
+    assert np.array_equal(_spark_round(x, 6), want)
+    assert not np.array_equal(_round_half_away(x, 6), want)
+
+
+@pytest.mark.parametrize("n_groups", [None, 4])
+def test_posting_pass_matches_expression_assignment(spark, tmp_path, n_groups):
+    """Cells, vectors and norms of the one-pass body are bit-identical to
+    `lloyd_assign` + `sqrt(dot(v, v))`, on a flat index and on a
+    two-level index's grp-partitioned centroids."""
+    vecs = _unit_vectors(spark, 600)
+    idx = str(tmp_path / "idx")
+    ivf_build_index(vecs.where("vec_id < 200"), idx, n_cells=16, n_groups=n_groups)
+    cents = os.path.join(idx, "centroids")
+    assert _pass_rows(vecs, cents) == _expression_rows(spark, vecs, cents)
+
+
+def test_posting_pass_breaks_ties_to_the_smaller_cell(spark, tmp_path):
+    """Equidistant centroids: the smaller cell wins, whatever the table
+    order, as lloyd_assign's packed rank decides."""
+    e = [[1.0 if j == i else 0.0 for j in range(4)] for i in range(4)]
+    cents = str(tmp_path / "centroids")
+    spark.createDataFrame(
+        [(9, e[0]), (2, [-x for x in e[0]]), (5, e[1]), (3, [-x for x in e[1]])],
+        "cell int, cv array<double>",
+    ).write.parquet(cents)
+    vecs = spark.createDataFrame(
+        [(0, e[2]), (1, e[3]), (2, [0.5, 0.5, 0.5, 0.5]), (3, [0.0, 0.25, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    got = _pass_rows(vecs, cents)
+    assert [r[1] for r in got] == [2, 2, 5, 5]
+    assert got == _expression_rows(spark, vecs, cents)
+
+
+def test_posting_pass_sq_codes_match_the_expression_encode(spark, tmp_path):
+    """SQ8 codes of the one-pass body equal `_sq_encode_expr`'s against
+    the same bounds — out-of-range coordinates clamp and a zero-range
+    dimension codes 0 — and the cells equal lloyd_assign's."""
+    from esper_tv_spark.operators.similarity import _sq_encode_expr
+
+    vecs = _unit_vectors(spark, 400)
+    idx = str(tmp_path / "idx")
+    ivf_build_index(vecs.where("vec_id < 100"), idx, n_cells=16)
+    cents = os.path.join(idx, "centroids")
+    mn = [-0.2 + 0.003 * j for j in range(64)]
+    mx = [0.25 - 0.002 * j for j in range(64)]
+    mx[5] = mn[5]
+    v64 = F.col("embedding").cast("array<double>")
+    want = sorted(
+        (r[0], r[1], tuple(r[2]))
+        for r in lloyd_assign(vecs, centroids=spark.read.parquet(cents).select(
+            F.col("cell").alias("cluster"), F.col("cv").alias("cvec")))
+        .join(vecs.select("vec_id", _sq_encode_expr(v64, mn, mx).alias("codes")), "vec_id")
+        .collect()
+    )
+    got = _pass_rows(vecs, cents, sq_bounds=(mn, mx))
+    assert got == want
+    assert {c for r in got for c in r[2]} >= {0, 255}
+
+
+def test_posting_pass_raises_past_the_packed_range(spark, tmp_path):
+    """A squared distance past the 42-bit packed range fails loudly, as
+    lloyd_assign's raise_error does — never a silent misassignment."""
+    from esper_tv_spark.operators.similarity import _posting_pass
+
+    vecs = _unit_vectors(spark, 50)
+    idx = str(tmp_path / "idx")
+    ivf_build_index(vecs, idx, n_cells=4)
+    far = spark.createDataFrame([(99, [3000.0] * 64)], "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="packed range"):
+        _posting_pass(far, os.path.join(idx, "centroids")).collect()
+
+
+def _insert_body(monkeypatch, spark, stream_insert, idx, src, schema, ckpt):
+    """The foreachBatch function a `*_stream_insert` registers, to call
+    on a plain DataFrame as Spark calls it on each micro-batch."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    bodies = []
+
+    def capture(self, fn):
+        bodies.append(fn)
+        return self
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", capture)
+    stream_insert(file_stream(spark, src, schema), idx, ckpt)
+    (body,) = bodies
+    return body
+
+
+def test_ivf_insert_batch_runs_one_spark_job(spark, tmp_path, monkeypatch, count_jobs):
+    """An IVF micro-batch body runs one Spark job, its write: the
+    centroids are read on the driver, the assignment needs no
+    empty-batch probe, no broadcast and no join."""
+    emb = _emb(spark)
+    idx = str(tmp_path / "ivf")
+    ivf_build_index(emb.where(F.col("vec_id") < 100), idx, n_cells=16)
+    src = tmp_path / "src"
+    src.mkdir()
+    body = _insert_body(
+        monkeypatch, spark, ivf_stream_insert, idx, str(src), emb.schema,
+        str(tmp_path / "ckpt"),
+    )
+    batch = emb.where(F.col("vec_id") >= 100)
+    assert count_jobs(lambda: body(batch, 0)) == (None, 1)
+    assert spark.read.parquet(os.path.join(idx, "cells")).count() == emb.count()
+
+
+def _posting_files(idx):
+    cells = os.path.realpath(os.path.join(idx, "cells"))
+    return sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(cells)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+@pytest.mark.parametrize("layout", ["ivf", "ivfsq", "ivfpq"])
+def test_empty_micro_batch_appends_no_posting_file(spark, tmp_path, layout):
+    """A micro-batch with no rows (a new but empty source file) writes
+    no posting file into any index layout."""
+    from esper_tv_spark.operators.similarity import ivfpq_build_index, ivfsq_build_index
+    from esper_tv_spark.streaming.ann import (
+        ivfpq_stream_insert,
+        ivfsq_stream_insert,
+        posting_fragment_census,
+    )
+
+    emb = _emb(spark)
+    base = emb.where(F.col("vec_id") < 100)
+    idx = str(tmp_path / layout)
+    build, insert = {
+        "ivf": (lambda: ivf_build_index(base, idx, n_cells=8), ivf_stream_insert),
+        "ivfsq": (lambda: ivfsq_build_index(base, idx, n_cells=8, dim=64), ivfsq_stream_insert),
+        "ivfpq": (
+            lambda: ivfpq_build_index(base, idx, n_cells=8, m=8, k=16, dim=64),
+            ivfpq_stream_insert,
+        ),
+    }[layout]
+    build()
+    files, census = _posting_files(idx), posting_fragment_census(idx)
+
+    src = str(tmp_path / "src")
+    emb.limit(0).coalesce(1).write.parquet(src)
+    q = insert(file_stream(spark, src, emb.schema), idx, str(tmp_path / "ckpt")).start()
+    q.awaitTermination(180)
+    assert any("addBatch" in p["durationMs"] for p in q.recentProgress)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 0
+    assert _posting_files(idx) == files
+    assert posting_fragment_census(idx) == census

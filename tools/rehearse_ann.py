@@ -381,12 +381,11 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
     from pyspark.sql import functions as F
 
     from esper_tv_spark.operators.similarity import (
+        _posting_pass,
         ivf_build_index,
         ivf_knn_join_index,
     )
     from esper_tv_spark.streaming.ann import (
-        _posting_rows,
-        _stored_centroids,
         compact_posting_lists,
         posting_fragment_census,
     )
@@ -435,11 +434,10 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
     # foreachBatch body, driven directly — walls are the insert cost,
     # not the trigger scheduler's)
     t0 = time.time()
-    cents = _stored_centroids(spark, idx)
     for i in range(8):
         batch = tail.where(F.col("vec_id") % 8 == i)
         (
-            _posting_rows(batch, cents, "vec_id", "embedding", 6)
+            _posting_pass(batch, os.path.join(idx, "centroids"), "vec_id", "embedding", 6)
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(idx, "cells"))
