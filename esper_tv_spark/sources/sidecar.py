@@ -21,7 +21,8 @@ are invisible to every reader.
 It also owns the one way to replace an index table (`new_generation`,
 `publish`): the table is a symlink swapped atomically onto a hidden
 generation dir, and readers resolve it once per operation
-(`os.path.realpath`), so a plan's files stay in one generation.
+(`os.path.realpath`), so a plan's files stay in one generation, and a
+replaced generation is kept for `RETAIN_S` seconds for readers on it.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame
@@ -175,17 +177,26 @@ def new_generation(table: str) -> str:
     return os.path.join(parent, f".{name}.{uuid.uuid4().hex}")
 
 
+# How long a replaced generation outlives its replacement: a reader
+# that resolved it (a probe whose plan listed its files, a DataFrame
+# not yet collected) keeps its files this long however many publishes
+# follow.  A reader slower than this can still lose them.
+RETAIN_S = 60.0
+RETIRED = "_retired"  # written into a generation when it is replaced
+
+
 def publish(table: str, gen: str) -> None:
     """Make the index table `table` a symlink to the generation `gen`: a
     relative symlink under a temporary name, `os.replace`d onto `table`
     — atomic, so a reader resolves the old target or the new one, never
-    nothing.  Then every other hidden generation of the table is
-    deleted except the one just replaced: readers that resolved it keep
-    their files until the table's next publish (the grace period), and
-    a generation staged but never published (a crash before this call)
-    is dropped, so crash recovery needs no code.  A plain dir at
-    `table` (an index written before generations) is moved aside once,
-    as the replaced generation."""
+    nothing.  The replaced generation gets a `_retired` marker (no
+    reader lists `_` files), and every other hidden generation of the
+    table is deleted unless it was replaced less than `RETAIN_S` ago
+    (the grace period for readers that resolved it).  A generation
+    staged but never published (a crash before this call) has no
+    marker and is dropped, so crash recovery needs no code.  A plain
+    dir at `table` (an index written before generations) is moved
+    aside once, as the replaced generation."""
     parent, name = os.path.split(table)
     replaced = os.path.realpath(table)
     if os.path.isdir(table) and not os.path.islink(table):
@@ -194,10 +205,18 @@ def publish(table: str, gen: str) -> None:
     link = new_generation(table) + ".link"
     os.symlink(os.path.basename(gen), link)
     os.replace(link, table)
-    keep = {os.path.basename(gen), os.path.basename(replaced)}
+    if os.path.isdir(replaced):
+        open(os.path.join(replaced, RETIRED), "w").close()
+    horizon = time.time() - RETAIN_S
     for entry in os.scandir(parent or "."):
-        if entry.name.startswith(f".{name}.") and entry.name not in keep:
-            if entry.is_dir(follow_symlinks=False):
-                shutil.rmtree(entry.path)
-            else:
-                os.unlink(entry.path)  # a temporary link left by a crash
+        if not entry.name.startswith(f".{name}.") or entry.name == os.path.basename(gen):
+            continue
+        if not entry.is_dir(follow_symlinks=False):
+            os.unlink(entry.path)  # a temporary link left by a crash
+            continue
+        try:
+            retired_at = os.stat(os.path.join(entry.path, RETIRED)).st_mtime
+        except FileNotFoundError:
+            retired_at = horizon  # never published
+        if retired_at <= horizon:
+            shutil.rmtree(entry.path)

@@ -1026,6 +1026,39 @@ def test_probes_never_fail_while_maintenance_publishes(spark, tmp_path):
     assert reads.count(True) >= 3 and False in reads
 
 
+def test_replaced_generations_outlive_later_publishes(tmp_path):
+    """A replaced generation stays for `RETAIN_S` seconds however many
+    publishes follow, so a reader that resolved it keeps its files
+    through back-to-back maintenance.  One replaced longer ago goes at
+    the next publish, and one staged but never published goes at once."""
+    import time
+
+    from esper_tv_spark.sources import sidecar
+
+    table = str(tmp_path / "cells")
+
+    def staged():
+        gen = sidecar.new_generation(table)
+        os.makedirs(gen)
+        open(os.path.join(gen, "part-0.parquet"), "w").close()
+        return os.path.basename(gen)
+
+    published = []
+    for _ in range(3):
+        published.append(staged())
+        sidecar.publish(table, str(tmp_path / published[-1]))
+    a, b, c = published
+    assert _generations(str(tmp_path), "cells") == sorted([a, b, c])
+    assert os.readlink(table) == c
+
+    old = time.time() - sidecar.RETAIN_S - 1
+    os.utime(os.path.join(tmp_path, a, sidecar.RETIRED), (old, old))
+    crashed, d = staged(), staged()
+    sidecar.publish(table, str(tmp_path / d))
+    assert _generations(str(tmp_path), "cells") == sorted([b, c, d])
+    assert os.readlink(table) == d and crashed not in os.listdir(tmp_path)
+
+
 # ---------------------------------------------------------------------------
 # the one-pass insert body (`similarity._posting_pass`)
 # ---------------------------------------------------------------------------
