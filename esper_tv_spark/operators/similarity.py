@@ -3255,8 +3255,10 @@ def _posting_pass(
     The cells are `lloyd_assign`'s, the norms `norm`'s and the codes
     `_sq_encode_expr`'s, bit for bit (`_assign_cells_np`,
     `_sq_encode_np`; pinned in tests/test_streaming_ann.py), so the
-    stored bytes equal the expression build's.  Every vector must have
-    the centroids' dimension."""
+    stored bytes equal the expression build's.  Every vector must hold
+    the centroids' dimension of non-null values: any other row raises
+    ValueError, which fails a stream insert's micro-batch (its restart
+    replays the batch, so the producer has to drop such a row)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -3287,9 +3289,14 @@ def _posting_pass(
             if len(b) == 0:
                 continue
             vecs = b.column(1)
-            if vecs.null_count or not pc.all(pc.equal(pc.list_value_length(vecs), dim)).as_py():
-                raise ValueError(f"_posting_pass: every vector must hold {dim} values")
-            x = vecs.flatten().to_numpy().reshape(len(b), dim)
+            flat = vecs.flatten()
+            if (
+                vecs.null_count
+                or flat.null_count
+                or not pc.all(pc.equal(pc.list_value_length(vecs), dim)).as_py()
+            ):
+                raise ValueError(f"_posting_pass: every vector must hold {dim} non-null values")
+            x = flat.to_numpy().reshape(len(b), dim)
             cell = pa.array(cells[_assign_cells_np(x, cmat, round_digits)])
             if sq_bounds is None:
                 cols = [b.column(0), cell, vecs, pa.array(np.sqrt(_fold_dot(x, x)))]

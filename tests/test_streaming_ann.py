@@ -1187,6 +1187,26 @@ def test_posting_pass_raises_past_the_packed_range(spark, tmp_path):
         _posting_pass(far, os.path.join(idx, "centroids")).collect()
 
 
+@pytest.mark.parametrize(
+    "vec", [None, [1.0, 0.0, 0.0], [1.0, None, 0.0, 0.0]], ids=["null", "short", "null_element"]
+)
+def test_posting_pass_raises_on_a_vector_of_the_wrong_shape(spark, tmp_path, vec):
+    """A null embedding, one shorter than the centroids or one with a
+    null element fails the pass (and so the micro-batch) rather than
+    landing with a null cell."""
+    from esper_tv_spark.operators.similarity import _posting_pass
+
+    cents = str(tmp_path / "centroids")
+    spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])], "cell int, cv array<double>"
+    ).write.parquet(cents)
+    vecs = spark.createDataFrame(
+        [(0, [0.0, 1.0, 0.0, 0.0]), (1, vec)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="every vector must hold 4 non-null values"):
+        _posting_pass(vecs, cents).collect()
+
+
 def _insert_body(monkeypatch, spark, stream_insert, idx, src, schema, ckpt):
     """The foreachBatch function a `*_stream_insert` registers, to call
     on a plain DataFrame as Spark calls it on each micro-batch."""
