@@ -180,8 +180,13 @@ def new_generation(table: str) -> str:
 # How long a replaced generation outlives its replacement: a reader
 # that resolved it (a probe whose plan listed its files, a DataFrame
 # not yet collected) keeps its files this long however many publishes
-# follow.  A reader slower than this can still lose them.
-RETAIN_S = 60.0
+# follow.  A reader slower than this can still lose them.  Measured on
+# a 4-core host, from resolve to collect: perfbench ingest probes
+# <= 0.6 s, the maintenance-race test's probes and joins <= 3.3 s,
+# and the slowest, a cold kNN join at sf0.1 beside three other jobs,
+# 5.3 s.  Each retained generation costs a copy of the table on disk:
+# perfbench ingest compacts every 5.6-8.8 s, so this keeps up to 5.
+RETAIN_S = 30.0
 RETIRED = "_retired"  # written into a generation when it is replaced
 
 
