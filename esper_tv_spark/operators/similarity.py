@@ -3215,7 +3215,10 @@ def _assign_cells_np(x, cmat, round_digits: int):
     — the smaller cell, as the packed key's rank does.  The packed
     key's range guard raises the same error (a NaN d2 fails it too).
     Rows go in slices that keep each (rows, k) temporary near 32 MB
-    whatever the number of cells."""
+    whatever the number of cells.  `lloyd_assign_blas` computes the
+    same d2 with numpy sums and a GEMM: it differs from this kernel in
+    accumulation order, and in rounding until its `_round_half_away`
+    gives way to `_spark_round` (ROADMAP item 2)."""
     import numpy as np
 
     cc = _fold_dot(cmat, cmat)[None, :]

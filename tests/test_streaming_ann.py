@@ -1174,26 +1174,22 @@ def test_posting_pass_sq_codes_match_the_expression_encode(spark, tmp_path):
     assert {c for r in got for c in r[2]} >= {0, 255}
 
 
-def test_posting_pass_raises_past_the_packed_range(spark, tmp_path):
-    """A squared distance past the 42-bit packed range fails loudly, as
-    lloyd_assign's raise_error does — never a silent misassignment."""
-    from esper_tv_spark.operators.similarity import _posting_pass
-
-    vecs = _unit_vectors(spark, 50)
-    idx = str(tmp_path / "idx")
-    ivf_build_index(vecs, idx, n_cells=4)
-    far = spark.createDataFrame([(99, [3000.0] * 64)], "vec_id long, embedding array<float>")
-    with pytest.raises(Exception, match="packed range"):
-        _posting_pass(far, os.path.join(idx, "centroids")).collect()
-
-
 @pytest.mark.parametrize(
-    "vec", [None, [1.0, 0.0, 0.0], [1.0, None, 0.0, 0.0]], ids=["null", "short", "null_element"]
+    "vec, error",
+    [
+        ([3000.0] * 4, "packed range"),
+        (None, "every vector must hold 4 non-null values"),
+        ([1.0, 0.0, 0.0], "every vector must hold 4 non-null values"),
+        ([1.0, None, 0.0, 0.0], "every vector must hold 4 non-null values"),
+    ],
+    ids=["past_packed_range", "null", "short", "null_element"],
 )
-def test_posting_pass_raises_on_a_vector_of_the_wrong_shape(spark, tmp_path, vec):
-    """A null embedding, one shorter than the centroids or one with a
-    null element fails the pass (and so the micro-batch) rather than
-    landing with a null cell."""
+def test_posting_pass_raises_on_a_bad_vector(spark, tmp_path, vec, error):
+    """A squared distance past the 42-bit packed range fails loudly, as
+    lloyd_assign's raise_error does — never a silent misassignment.  A
+    null embedding, one shorter than the centroids or one with a null
+    element fails too (and so the micro-batch), rather than landing
+    with a null cell."""
     from esper_tv_spark.operators.similarity import _posting_pass
 
     cents = str(tmp_path / "centroids")
@@ -1203,7 +1199,7 @@ def test_posting_pass_raises_on_a_vector_of_the_wrong_shape(spark, tmp_path, vec
     vecs = spark.createDataFrame(
         [(0, [0.0, 1.0, 0.0, 0.0]), (1, vec)], "vec_id long, embedding array<float>"
     )
-    with pytest.raises(Exception, match="every vector must hold 4 non-null values"):
+    with pytest.raises(Exception, match=error):
         _posting_pass(vecs, cents).collect()
 
 
