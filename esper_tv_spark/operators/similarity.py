@@ -21,10 +21,10 @@ from pyspark.sql import functions as F
 
 from esper_tv_spark.sources.sidecar import (
     declared_parquet,
-    new_generation,
     parquet_schema,
-    publish,
+    publish_staged,
     sidecar_rows,
+    stage,
     tombstone_ids,
 )
 
@@ -440,44 +440,25 @@ def ivf_topk_deterministic(
     return cosine_topk(cand, query_vec, k, id_col, vec_col, round_digits)
 
 
-def _rank_coarse_centroids(
-    df: DataFrame, n_cells: int, id_col: str, vec_col: str, round_digits: int
-) -> DataFrame:
-    """The deterministic rank-based coarse centroid table (cell, cv): the
-    n_cells smallest-id vectors, elementwise rounded — shared by
-    ivf_build_index and ivfpq_build_index (lloyd_assign's init set)."""
-    return (
-        df.orderBy(F.col(id_col).asc())
-        .limit(n_cells)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.transform(
-                F.col(vec_col).cast("array<double>"), lambda x: F.round(x, round_digits)
-            ).alias("cv"),
-        )
+def _seed_rows(df: DataFrame, n: int, id_col: str, vec_col: str):
+    """The n smallest-id vectors as (ids, float64 matrix) in id order,
+    from one driver collect: the rank-based init set every IVF-family
+    build seeds its coarse centroids (and IVF-PQ its codebooks) from —
+    `lloyd_assign`'s init rule, selected by RANK (orderBy + limit, a
+    distributed TakeOrdered), not by an id predicate.  A null or
+    misshapen seed raises the pass's ValueError (`_vector_matrix`)."""
+    rows = (
+        df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+        .orderBy(F.col(id_col).asc())
+        .limit(n)
+        .collect()
     )
+    return [r[0] for r in rows], _vector_matrix([r[1] for r in rows])
 
 
-def residual_vectors(
-    df: DataFrame,
-    assigned: DataFrame,
-    cents_coarse: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, __rv = v - centroid[cell]) for every row — the IVFADC residual
-    derivation, shared by ivfpq_build_index and the streaming insert so
-    the two paths cannot drift (stream==batch bit-identity depends on
-    it).  `assigned` is (id_col, cell); `cents_coarse` is (cell, cv)."""
-    return (
-        df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-        .join(assigned.select(id_col, "cell"), id_col)
-        .join(F.broadcast(cents_coarse), "cell")
-        .select(
-            id_col,
-            F.zip_with(F.col("__v"), F.col("cv"), lambda x, y: x - y).alias("__rv"),
-        )
-    )
+def _cell_rows(cells, cmat) -> "list[dict]":
+    """Centroid rows (cell, cv) from cell ids and a centroid matrix."""
+    return [{"cell": int(c), "cv": v} for c, v in zip(cells, cmat.tolist())]
 
 
 def recommended_cells(n_vectors: int) -> int:
@@ -524,12 +505,15 @@ def recommended_groups(n_cells: int) -> int:
     return max(1, int(math.floor(math.sqrt(max(0, n_cells)) + 0.5)))
 
 
-def _resolve_n_groups(n_cells: int, n_groups) -> "int | None":
+def _resolve_n_groups(n_cells: int, n_groups, assign_via_groups: bool = False) -> "int | None":
     """None -> flat single-level layout; 'auto' -> recommended_groups.
     n_groups must not exceed n_cells (the rank-init group centers ARE
     the n_groups smallest-cell centroids — more groups than cells would
-    silently degenerate)."""
+    silently degenerate).  The pruned build assignment
+    (`assign_via_groups`) needs groups to prune by."""
     if n_groups is None:
+        if assign_via_groups:
+            raise ValueError("assign_via_groups=True requires n_groups")
         return None
     if n_groups == "auto":
         n_groups = recommended_groups(n_cells)
@@ -544,13 +528,13 @@ def _resolve_n_groups(n_cells: int, n_groups) -> "int | None":
 
 
 def _group_centers(
-    cents_coarse: DataFrame,
+    spark,
+    cents: "list[dict]",
     n_groups: int,
     round_digits: int,
     group_train_iters: int = 0,
-    fast: bool = False,
-) -> DataFrame:
-    """The (grp, gv) level-1 group centers over a coarse-centroid table.
+) -> "list[dict]":
+    """The (grp, gv) level-1 group centers over centroid rows (cell, cv).
 
     `group_train_iters=0` (the default, every pre-r9 index's layout):
     rank-init — the n_groups smallest-cell centroids, lloyd_assign's own
@@ -565,125 +549,89 @@ def _group_centers(
     iterations as CTEs).  Group labels remain the seed cell ids in both
     modes, so tie rules and the partition-column domain are unchanged."""
     if group_train_iters:
-        return lloyd_train(
-            cents_coarse, k=n_groups, iters=group_train_iters,
-            id_col="cell", vec_col="cv", round_digits=round_digits, fast=fast,
-        ).select(F.col("cluster").alias("grp"), F.col("cvec").alias("gv"))
-    return (
-        cents_coarse.orderBy(F.col("cell").asc())
-        .limit(n_groups)
-        .select(F.col("cell").alias("grp"), F.col("cv").alias("gv"))
-    )
-
-
-def _assign_pruned(
-    df: DataFrame,
-    cents_coarse: DataFrame,
-    n_groups: "int | None",
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
-    g_probe: int,
-    fast: bool,
-    group_train_iters: int = 0,
-) -> DataFrame:
-    """Builder plumbing for `assign_via_groups`: derive the same grouping
-    `_write_centroids` will persist (deterministic — both run
-    lloyd_assign over the id-sorted centroid table with the SAME group
-    centers from `_group_centers`, so they CANNOT disagree) and route
-    the corpus assignment through `lloyd_assign_pruned_blas`.  Returns
-    (id_col, cell).  Fail-closed: the pruned path without a grouped
-    layout or without fast=True would be a silent semantics change."""
-    if n_groups is None:
-        raise ValueError("assign_via_groups=True requires n_groups")
-    if not fast:
-        raise ValueError(
-            "assign_via_groups=True requires fast=True — the pruned "
-            "assignment is the production BLAS path; oracle-gated "
-            "contract builds use the exact assignment"
+        table = spark.createDataFrame(
+            [(r["cell"], r["cv"]) for r in cents], "cell long, cv array<double>"
         )
-    gdf = _group_centers(
-        cents_coarse, n_groups, round_digits, group_train_iters, fast=True
-    ).select("grp", F.col("gv").alias("gvec"))
-    grouped = (
-        lloyd_assign_blas(
-            cents_coarse,
-            centroids=gdf.select(
-                F.col("grp").alias("cluster"), F.col("gvec").alias("cvec")
-            ),
+        trained = lloyd_train(
+            table, k=n_groups, iters=group_train_iters,
             id_col="cell", vec_col="cv", round_digits=round_digits,
         )
-        .withColumnRenamed("cluster", "grp")
-        .join(cents_coarse, "cell")
-        .select(F.col("cell").alias("cluster"), F.col("cv").alias("cvec"), "grp")
-    )
-    return lloyd_assign_pruned_blas(
-        df, grouped, gdf, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits, g_probe=g_probe,
-    ).withColumnRenamed("cluster", "cell")
+        return [{"grp": r["cluster"], "gv": r["cvec"]} for r in trained.collect()]
+    seeds = sorted(cents, key=lambda r: r["cell"])[:n_groups]
+    return [{"grp": r["cell"], "gv": r["cv"]} for r in seeds]
 
 
-def _write_centroids(
-    cents_coarse: DataFrame,
+def _centroid_tables(
+    spark,
     path: str,
+    cents: "list[dict]",
     n_groups: "int | None",
     round_digits: int,
-    fast: bool = False,
     group_train_iters: int = 0,
-) -> None:
-    """Persist an index's coarse-centroid table — flat (the single-level
-    layout every round-1..8 index used) or TWO-LEVEL when `n_groups` is
-    set: `groups/` (grp, gv) holds the level-1 centers (`_group_centers`:
-    rank-init, or `group_train_iters` Lloyd iterations over the centroid
-    table — both replay in SQL) and `centroids/` is PARTITIONED BY grp,
-    the level-2 assignment of every cell centroid to its nearest group
-    center (rounded d2 argmin, ties to the smaller grp — lloyd_assign's
-    exact tie rule, because it IS lloyd_assign run on the centroid
-    table).
+) -> "tuple[list[dict], list[dict] | None, list]":
+    """An index's coarse quantizer over centroid rows (cell, cv): returns
+    (the rows, each labelled with its grp on a two-level index; the
+    group rows or None; the `sidecar.stage` writes of its tables).
 
-    Each table is written to a new generation and published
-    (`sources.sidecar.publish`).  Write order is groups/ FIRST: every
-    builder's completeness sentinel is a table written at-or-after
-    centroids/, so a crash can never leave a complete-looking index
-    with missing/partial groups.  The probe additionally fail-closes on
-    a groups/ dir without _SUCCESS."""
+    Flat (`n_groups` None, the single-level layout every round-1..8
+    index used): `centroids/` (cell, cv), and a stale `groups/` is
+    staged for removal — probes pick the two-level path by its presence.
+
+    TWO-LEVEL: `groups/` (grp, gv) holds the level-1 centers
+    (`_group_centers`), and `centroids/` is PARTITIONED BY grp, each
+    cell under its nearest group center as the pass's kernel assigns it
+    (`_assign_cells_np`: lloyd_assign's rounded-d2 argmin, ties to the
+    smaller grp).  groups/ is staged first, so a builder's completeness
+    sentinel (centroids/ or a later table) implies complete groups; the
+    probe also fails closed on a groups/ dir without _SUCCESS."""
     import os
-    import shutil
 
-    cpath = os.path.join(path, "centroids")
-    gpath = os.path.join(path, "groups")
+    cpath, gpath = os.path.join(path, "centroids"), os.path.join(path, "groups")
     if n_groups is None:
-        # a flat REBUILD over a previously two-level index must drop the
-        # stale groups/ table — probes detect layout by its presence, and
-        # stale level-1 centers over fresh flat centroids would mis-prune
-        # (a published table is a symlink, which rmtree refuses)
-        if os.path.islink(gpath):
-            os.unlink(gpath)
-        shutil.rmtree(gpath, ignore_errors=True)
-        gen = new_generation(cpath)
-        cents_coarse.write.parquet(gen)
-        publish(cpath, gen)
-        return
-    assign_fn = lloyd_assign_blas if fast else lloyd_assign
-    gdf = _group_centers(cents_coarse, n_groups, round_digits, group_train_iters, fast)
-    grouped = (
-        assign_fn(
-            cents_coarse,
-            centroids=gdf.select(
-                F.col("grp").alias("cluster"), F.col("gv").alias("cvec")
-            ),
-            id_col="cell", vec_col="cv", round_digits=round_digits,
-        )
-        .withColumnRenamed("cluster", "grp")
-        .join(cents_coarse, "cell")
-        .select("grp", "cell", "cv")
+        table = spark.createDataFrame(
+            [(r["cell"], r["cv"]) for r in cents], "cell long, cv array<double>"
+        ).coalesce(1)
+        return cents, None, [(gpath, None), (cpath, lambda gen: table.write.parquet(gen))]
+    groups = sorted(
+        _group_centers(spark, cents, n_groups, round_digits, group_train_iters),
+        key=lambda r: r["grp"],
     )
-    gen = new_generation(gpath)
-    gdf.write.parquet(gen)
-    publish(gpath, gen)
-    gen = new_generation(cpath)
-    grouped.write.partitionBy("grp").parquet(gen)
-    publish(cpath, gen)
+    gmat = _spark_round(_vector_matrix([r["gv"] for r in groups]), round_digits)
+    near = _assign_cells_np(_vector_matrix([r["cv"] for r in cents]), gmat, round_digits)
+    cents = [dict(r, grp=groups[g]["grp"]) for r, g in zip(cents, near)]
+    gtable = spark.createDataFrame(
+        [(r["grp"], r["gv"]) for r in groups], "grp long, gv array<double>"
+    ).coalesce(1)
+    ctable = spark.createDataFrame(
+        [(r["grp"], r["cell"], r["cv"]) for r in cents],
+        "grp long, cell long, cv array<double>",
+    ).coalesce(1)
+    return cents, groups, [
+        (gpath, lambda gen: gtable.write.parquet(gen)),
+        (cpath, lambda gen: ctable.write.partitionBy("grp").parquet(gen)),
+    ]
+
+
+def _publish_build(path: str, writes: list, meta: "dict | None" = None) -> None:
+    """Stage a build's tables (`sidecar.stage`), then publish them in
+    order: the last one is the index's completeness sentinel.  A write
+    that raises — the pass's ValueError on a null or misshapen vector —
+    publishes nothing, so an index already at `path` keeps its tables.
+    IVF-PQ and IVF-SQ `meta` (meta.json) is written between the two
+    steps, after the live sentinel's _SUCCESS is dropped: a crash before
+    the last publish leaves an index that fails the 'meta.json +
+    sentinel' check and is rebuilt — never new meta over old tables."""
+    import json
+    import os
+
+    staged = stage(writes)
+    if meta is not None:
+        for stale in (os.path.join(writes[-1][0], "_SUCCESS"), os.path.join(path, "meta.json")):
+            if os.path.exists(stale):
+                os.remove(stale)
+        with open(os.path.join(path, "meta.json"), "w") as f:
+            json.dump(meta, f)
+    publish_staged(staged)
 
 
 def _probe_centroids(
@@ -764,9 +712,16 @@ def ivf_build_index(
       a tiny table the probe ranks with the same fold expressions the SQL
       oracle replays.
 
-    Everything stored is the output of deterministic relational plans and
-    parquet doubles round-trip binary-exact, so probe results are
-    bit-identical to the inline `ivf_topk_deterministic`.
+    The build is a bulk insert: the centroids are seeded on the driver
+    (`_seed_rows`) and every posting row comes from the stream inserts'
+    one Arrow pass (`_posting_pass`), which replays `lloyd_assign` and
+    `norm` bit for bit; parquet doubles round-trip binary-exact, so
+    probe results are bit-identical to the inline
+    `ivf_topk_deterministic`.  The tables are staged in new generations
+    and published with centroids/ (the completeness sentinel) last; a
+    null or misshapen vector raises the pass's ValueError before
+    anything is published, leaving an index already at `path` as it
+    was.
 
     `n_cells='auto'` sizes the coarse quantizer as `recommended_cells`
     (4*sqrt(n)) — see that docstring for the 2M-rehearsal evidence that
@@ -774,7 +729,7 @@ def ivf_build_index(
 
     `n_groups` (int / 'auto' = round(sqrt(n_cells)) / None = flat)
     switches the coarse quantizer to the TWO-LEVEL layout
-    (`_write_centroids`): at n ≳ 1e8, n_cells = 4*sqrt(n) is ~40k-180k
+    (`_centroid_tables`): at n ≳ 1e8, n_cells = 4*sqrt(n) is ~40k-180k
     centroids — a table that stops broadcasting and a per-probe ranking
     that stops being one tiny driver action.  Level 1 groups the
     centroids (sqrt(n_cells) centers); a probe ranks groups first
@@ -786,53 +741,24 @@ def ivf_build_index(
     (asserted in tests); smaller n_probe_groups trades centroid I/O for
     recall exactly as n_probe does one level down.
 
-    `fast=True` runs the Theta(n*k) coarse assignment as Arrow-batched
-    BLAS (lloyd_assign_blas) — same tie rules, byte-identical on the
-    test corpora.  The contract entries build WITHOUT it
-    (`_ivf_index_dir` in __spark_entry__.py takes the default), so the
-    oracle hash gates the expression path, the cross-engine reference;
-    the BLAS path is parity-pinned against it by pytest on the gate
-    corpora.
+    `assign_via_groups=True` (requires n_groups) routes the build
+    assignment through the level-1 groups too (`_quantizer`):
+    Θ(n·√n_cells) instead of Θ(n·n_cells) scored pairs — the knob that
+    keeps a 180k-cell build feasible.  Approximate for assign_g_probe <
+    n_groups (agreement measured at 2M in the rehearsal); exact and
+    bit-identical at assign_g_probe = n_groups (asserted in tests).
 
-    `assign_via_groups=True` (requires n_groups + fast) routes the
-    build assignment through the level-1 groups too
-    (`lloyd_assign_pruned_blas`): Θ(n·√n_cells) instead of Θ(n·n_cells)
-    scored pairs — the knob that keeps a 180k-cell build feasible.
-    Approximate for assign_g_probe < n_groups (agreement measured at
-    2M in the rehearsal); exact and bit-identical at
-    assign_g_probe = n_groups (asserted in tests)."""
-    import os
-
+    `fast` is accepted and ignored: every build takes the one pass."""
     n_cells = _resolve_n_cells(df, n_cells)
-    n_groups = _resolve_n_groups(n_cells, n_groups)
-    if assign_via_groups:
-        cents_coarse = _rank_coarse_centroids(df, n_cells, id_col, vec_col, round_digits)
-        assigned = _assign_pruned(
-            df, cents_coarse, n_groups, id_col, vec_col, round_digits,
-            assign_g_probe, fast, group_train_iters,
-        )
-    else:
-        assigned = (lloyd_assign_blas if fast else lloyd_assign)(
-            df, k=n_cells, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-        ).withColumnRenamed("cluster", "cell")
-    vecs = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    # layout/write strategy (incl. the repartition-before-partitioned-write
-    # lesson): see _write_posting
-    _write_posting(
-        assigned.select(F.col(id_col).alias("id"), "cell").join(vecs, "id"),
-        path,
-        layout,
+    n_groups = _resolve_n_groups(n_cells, n_groups, assign_via_groups)
+    ids, x = _seed_rows(df, n_cells, id_col, vec_col)
+    cents, groups, writes = _centroid_tables(
+        df.sparkSession, path, _cell_rows(ids, _spark_round(x, round_digits)),
+        n_groups, round_digits, group_train_iters,
     )
-    _write_centroids(
-        _rank_coarse_centroids(df, n_cells, id_col, vec_col, round_digits),
-        path,
-        n_groups,
-        round_digits,
-        fast=fast,
-        group_train_iters=group_train_iters,
-    )
+    pruned = {"groups": groups, "g_probe": assign_g_probe} if assign_via_groups else {}
+    rows = _posting_pass(df, cents, id_col, vec_col, round_digits, **pruned)
+    _publish_build(path, [_posting_write(rows, path, layout), *writes])
 
 
 def _probe_cells(
@@ -939,8 +865,9 @@ def ivf_range_search(
     )
 
 
-def _write_posting(rows: DataFrame, path: str, layout: str) -> None:
-    """Write an index's posting rows in one of two layouts:
+def _posting_write(rows: DataFrame, path: str, layout: str) -> tuple:
+    """An index's posting rows as a `sidecar.stage` write, in one of two
+    layouts:
 
     - ``layout="dirs"`` (default, every pre-r10 index): hive-partitioned
       ``cells/cell=<c>/`` — one dir per cell, repartitioned on the
@@ -964,24 +891,20 @@ def _write_posting(rows: DataFrame, path: str, layout: str) -> None:
       Frozen/rebuilt corpora only — stream insert and compaction are
       dirs-layout maintenance and fail closed on sorted indexes.
 
-    Either table is published as a new generation (`sidecar.publish`)."""
+    Returns (table, write(gen))."""
     import os
 
     if layout == "dirs":
-        table = os.path.join(path, "cells")
-        gen = new_generation(table)
-        rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
-    elif layout == "sorted":
-        table = os.path.join(path, "cells_sorted")
-        gen = new_generation(table)
-        (
+        return os.path.join(path, "cells"), lambda gen: (
+            rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
+        )
+    if layout == "sorted":
+        return os.path.join(path, "cells_sorted"), lambda gen: (
             rows.repartitionByRange(F.col("cell"), F.col("id"))
             .sortWithinPartitions("cell", "id")
             .write.parquet(gen)
         )
-    else:
-        raise ValueError(f"posting layout must be 'dirs' or 'sorted', got {layout!r}")
-    publish(table, gen)
+    raise ValueError(f"posting layout must be 'dirs' or 'sorted', got {layout!r}")
 
 
 def _read_cells(spark, path: str, cell_list) -> DataFrame:
@@ -1004,7 +927,7 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     layouts and stream-inserted fragments keep their types, since Spark
     infers from one footer too.
 
-    SORTED layout (`cells_sorted/`, see _write_posting): one flat dir of
+    SORTED layout (`cells_sorted/`, see _posting_write): one flat dir of
     range-partitioned files sorted by (cell, id) — the `cell IN (...)`
     predicate is PUSHED to the parquet reader and row-group min/max
     stats prune I/O to the probed cells (plan-asserted PushedFilters);
@@ -1818,15 +1741,14 @@ def pq_encode_with_codebooks_blas(
     """PRODUCTION-scale twin of `pq_encode_with_codebooks`: encode against
     a FROZEN codebook table with one float64 GEMM per (batch, subspace)
     instead of per-row interpreted array folds.  Same tie rule — rounded
-    d2 (half-away, matching F.round), argmin first occurrence over
-    codebooks sorted by rk = smallest rank — so results agree with the
-    expression path except where a pre-round last-ulp difference (BLAS vs
-    sequential summation) lands exactly on a rounding boundary (pytest
-    asserts exact agreement on the test corpora).  Why it exists: the
-    interpreted encode costs ~50-100us per (row, subspace, code) triple —
-    an n=2M, m=16, k=16 build is HOURS interpreted and minutes here; use
-    the expression path for oracle-gated contracts, this for production
-    builds (the `fast=True` switch on the index builders).
+    d2 (`_round_half_away`), argmin first occurrence over codebooks
+    sorted by rk = smallest rank — so results agree with the expression
+    path except where a pre-round last-ulp difference (BLAS vs
+    sequential summation) or the rounding rule (`_spark_round`) lands on
+    a rounding boundary (pytest asserts exact agreement on the test
+    corpora).  Why it exists: the interpreted encode costs ~50-100us per
+    (row, subspace, code) triple.  It serves `pq_assign_deterministic`'s
+    `fast=True` path; the IVF-PQ index encodes in `_posting_pass`.
 
     Output: (id, codes array<int>) — identical shape to the expression
     twin."""
@@ -1971,13 +1893,16 @@ def _adc_lut_values_blas(
 
 
 def _round_half_away(x, digits: int):
-    """Elementwise round-half-AWAY-from-zero at `digits` decimals over a
-    numpy array — the SAME tie rule as Spark's F.round (HALF_UP) and
-    DuckDB's round(), so every rounding primitive in the OPQ rotation
-    parity chain (numpy GEMM output -> Spark expressions -> SQL oracle)
-    agrees.  np.round's bankers rounding differs only at exact decimal
-    midpoints — unrepresentable in binary for x.xxxxx5e-6, but a
-    bit-identity contract should not rest on representation luck."""
+    """Elementwise round-half-away-from-zero at `digits` decimals over a
+    numpy array, as floor(|x|·10^digits + 0.5) / 10^digits on the
+    double itself.  That is DuckDB's round() bit for bit (all 6000 of
+    the near-midpoint doubles of
+    test_spark_round_matches_f_round_near_midpoints, DuckDB 1.0.0), but
+    NOT Spark's F.round, which rounds the shortest decimal string
+    (`_spark_round`; 74 of those 6000 differ).  The BLAS twins and
+    `rotate_vectors` use it; the one-pass kernel (`_posting_pass`)
+    rounds with `_spark_round`.  np.round's bankers rounding would
+    differ again at exact decimal midpoints."""
     import numpy as np
 
     s = 10.0 ** digits
@@ -2155,7 +2080,6 @@ def ivfpq_build_index(
     by_residual: bool = False,
     coarse_centroids: DataFrame | None = None,
     opq_rotation: list[list[float]] | None = None,
-    fast: bool = False,
     n_groups: "int | str | None" = None,
     assign_via_groups: bool = False,
     assign_g_probe: int = 1,
@@ -2182,8 +2106,9 @@ def ivfpq_build_index(
     - ``codebooks/``  (subspace, rk, code, sc) — the m*k PQ sub-centroids
       the probe builds its ADC LUT from.
 
-    Build cost: one Lloyd assignment + one PQ encode + one co-partitioned
-    join, paid once per corpus (the build/probe split of q87/q88, fused).
+    Build cost: one seed collect and one pass over the corpus (coarse
+    assignment and PQ encode together), paid once per corpus (the
+    build/probe split of q87/q88, fused).
 
     `by_residual=True` is the FAISS-default IVFADC refinement: the PQ
     quantizes the RESIDUAL r = v - centroid[cell] instead of the raw
@@ -2222,18 +2147,20 @@ def ivfpq_build_index(
     is persisted as a `rotation/` table, and the probe rotates the query
     before ranking cells or building LUTs.  Composes with by_residual.
 
-    `fast=True` is the PRODUCTION-SCALE build: the two Theta(n*k)
-    stages — coarse assignment and PQ encode — run as Arrow-batched BLAS
-    (lloyd_assign_blas / pq_encode_with_codebooks_blas) instead of
-    interpreted expression folds.  Identical tie rules and half-away
-    rounding; the only divergence window is a pre-round last-ulp GEMM
-    difference (pytest asserts fast==slow builds are byte-identical on
-    the test corpora).  Interpreted folds cost ~50-100us per scored
-    pair — a 2M x 256 build is HOURS interpreted, minutes with BLAS —
-    so keep fast=False only for the oracle-gated contract builds the
-    SQL replays."""
-    import json
+    The build is a bulk insert, the same steps as `ivfpq_stream_insert`:
+    the coarse centroids and the rank-based codebooks are derived on the
+    driver from the (k + n_cells) smallest-id vectors (`_seed_rows`; a
+    residual codebook's seeds take their cells from the pass's own
+    quantizer), and every posting row comes from one Arrow pass
+    (`_posting_pass`, PQ mode), which replays `lloyd_assign` and
+    `pq_encode_with_codebooks` bit for bit.  The tables are staged in
+    new generations, meta.json is rewritten, and the tables are
+    published with codebooks/ (the completeness sentinel) last
+    (`_publish_build`); a null or misshapen vector raises the pass's
+    ValueError before anything is published."""
     import os
+
+    import numpy as np
 
     if dim is None:
         raise ValueError(
@@ -2241,151 +2168,80 @@ def ivfpq_build_index(
             "as pq_build_store — probe the parquet footer instead)"
         )
     n_cells = _resolve_n_cells(df, n_cells)
-    n_groups = _resolve_n_groups(n_cells, n_groups)
-    # meta FIRST: the index-complete sentinel is the LAST table's _SUCCESS,
-    # so meta.json present + sentinel present => a complete, self-described
-    # index; a crash mid-build leaves no sentinel and forces a rebuild.
-    # (Were meta written last, a crash after the sentinel would leave an
-    # index the probe could silently mis-score with raw-vector LUTs.)
-    # But that invariant only holds for a FRESH path: an in-place rebuild
-    # over an existing complete index (e.g. flipping by_residual or m/k)
-    # that crashes mid-build would leave the OLD sentinel next to the NEW
-    # meta.json — a mixed-generation index the completeness check accepts
-    # and probes mis-score silently.  Invalidate the old generation before
-    # the new meta goes down: drop its sentinel (and stale meta), so any
-    # crash from here until the codebooks write leaves an index that
-    # fails the 'meta.json + codebooks/_SUCCESS' check and forces rebuild.
-    os.makedirs(path, exist_ok=True)
-    for stale in (
-        os.path.join(path, "codebooks", "_SUCCESS"),
-        os.path.join(path, "meta.json"),
-    ):
-        if os.path.exists(stale):
-            os.remove(stale)
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "by_residual": by_residual,
-                "m": m,
-                "k": k,
-                "dim": dim,
-                "opq": opq_rotation is not None,
-                "n_groups": n_groups,
-                "group_train_iters": group_train_iters,
-            },
-            f,
-        )
+    n_groups = _resolve_n_groups(n_cells, n_groups, assign_via_groups)
+    spark = df.sparkSession
+    writes = []
     if opq_rotation is not None:
         # the index lives in rotated space: rotate the corpus (BLAS,
         # distributed) and any caller-trained coarse centroids (an
         # isometry maps KMeans cells to the same cells of rotated data);
         # persist R so probes and stream inserts rotate the same way
-        spark = df.sparkSession
-        spark.createDataFrame(
+        rotation = spark.createDataFrame(
             [(i, [float(v) for v in row]) for i, row in enumerate(opq_rotation)],
             "pos int, row array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "rotation"))
+        ).coalesce(1)
+        writes.append((os.path.join(path, "rotation"), lambda gen: rotation.write.parquet(gen)))
         df = rotate_vectors(df, opq_rotation, id_col, vec_col, round_digits)
-        if coarse_centroids is not None:
-            import numpy as np
-
+    trained = coarse_centroids is not None
+    ids, x = _seed_rows(df, k if trained else n_cells + k, id_col, vec_col)
+    if trained:
+        cc = coarse_centroids.select(
+            F.col("cell").cast("long"), F.col("cv").cast("array<double>")
+        ).collect()
+        cv = _vector_matrix([r[1] for r in cc])
+        if opq_rotation is not None:
             rot = np.asarray(opq_rotation, dtype=np.float64)
-            cc = coarse_centroids.select(
-                "cell", F.col("cv").cast("array<double>").alias("cv")
-            ).collect()
-            coarse_centroids = spark.createDataFrame(
-                [
-                    (
-                        int(r["cell"]),
-                        [
-                            float(v)
-                            for v in _round_half_away(
-                                np.asarray(r["cv"], dtype=np.float64) @ rot,
-                                round_digits,
-                            )
-                        ],
-                    )
-                    for r in cc
-                ],
-                "cell long, cv array<double>",
-            )
-    assign_fn = lloyd_assign_blas if fast else lloyd_assign
-    if coarse_centroids is not None:
-        cents_coarse = coarse_centroids.select(
-            F.col("cell").cast("long").alias("cell"),
-            F.transform(
-                F.col("cv").cast("array<double>"), lambda x: F.round(x, round_digits)
-            ).alias("cv"),
-        )
-        if assign_via_groups:
-            assigned = _assign_pruned(
-                df, cents_coarse, n_groups, id_col, vec_col, round_digits,
-                assign_g_probe, fast, group_train_iters,
-            )
-        else:
-            assigned = assign_fn(
-                df,
-                centroids=cents_coarse.select(
-                    F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
-                ),
-                id_col=id_col,
-                vec_col=vec_col,
-                round_digits=round_digits,
-            ).withColumnRenamed("cluster", "cell")
+            cv = _round_half_away(np.array([v @ rot for v in cv]), round_digits)
+        cents = _cell_rows([r[0] for r in cc], _spark_round(cv, round_digits))
     else:
-        cents_coarse = _rank_coarse_centroids(df, n_cells, id_col, vec_col, round_digits)
-        if assign_via_groups:
-            assigned = _assign_pruned(
-                df, cents_coarse, n_groups, id_col, vec_col, round_digits,
-                assign_g_probe, fast, group_train_iters,
-            )
-        else:
-            assigned = assign_fn(
-                df, k=n_cells, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-            ).withColumnRenamed("cluster", "cell")
+        cents = _cell_rows(ids[:n_cells], _spark_round(x[:n_cells], round_digits))
+    cents, groups, cent_writes = _centroid_tables(
+        spark, path, cents, n_groups, round_digits, group_train_iters
+    )
+    pruned = {"groups": groups, "g_probe": assign_g_probe} if assign_via_groups else {}
     if by_residual:
-        enc_in = residual_vectors(df, assigned, cents_coarse, id_col, vec_col)
-        # On the RANK-BASED path the n_cells smallest ids ARE the coarse
-        # centroids (cell label == vector id), so their residuals are ~0
-        # and a codebook seeded from them would be degenerate — exclude
-        # them and seed from the k smallest NON-centroid ids.  With
-        # TRAINED coarse_centroids the cell labels are not vector ids and
-        # no vector has a near-zero residual, so no exclusion applies.
-        cb_src = enc_in
-        if coarse_centroids is None:
-            cb_src = enc_in.join(
-                F.broadcast(cents_coarse.select(F.col("cell").alias(id_col))),
-                id_col,
-                "left_anti",
-            )
-        cents = _rank_codebooks(
-            cb_src, m, dim // m, k, id_col, "__rv", round_digits
-        )
-        encode_fn = pq_encode_with_codebooks_blas if fast else pq_encode_with_codebooks
-        packed = encode_fn(
-            enc_in, cents, id_col=id_col, vec_col="__rv", round_digits=round_digits
-        )
-    elif fast:
-        cents = _rank_codebooks(df, m, dim // m, k, id_col, vec_col, round_digits)
-        packed = pq_encode_with_codebooks_blas(
-            df, cents, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-        )
-    else:
-        packed, cents = _pq_packed_codes(
-            df, m=m, k=k, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits, dim=dim,
-        )
-    _write_posting(
-        assigned.select(F.col(id_col).alias("id"), "cell").join(packed, "id"),
+        _cells, cmat, assign = _quantizer(cents, round_digits, **pruned)
+        x = x - cmat[assign(x)]
+        if not trained:
+            # On the RANK-BASED path the n_cells smallest ids ARE the
+            # coarse centroids (cell label == vector id), so their
+            # residuals are ~0 and a codebook seeded from them would be
+            # degenerate — seed from the k smallest NON-centroid ids.
+            # Trained cell labels are not vector ids and no vector has a
+            # near-zero residual, so no exclusion applies.
+            ids, x = ids[n_cells:], x[n_cells:]
+    sub = dim // m
+    sc = _spark_round(x[:k, : m * sub], round_digits)
+    codebooks = [
+        {"subspace": j, "rk": rk, "code": code, "sc": sc[rk, j * sub : (j + 1) * sub].tolist()}
+        for j in range(m)
+        for rk, code in enumerate(ids[:k])
+    ]
+    rows = _posting_pass(
+        df, cents, id_col, vec_col, round_digits,
+        codebooks=codebooks, by_residual=by_residual, **pruned,
+    )
+    cb = spark.createDataFrame(
+        [(r["subspace"], r["rk"], r["code"], r["sc"]) for r in codebooks],
+        "subspace int not null, rk int not null, code long, sc array<double>",
+    ).coalesce(1)
+    _publish_build(
         path,
-        layout,
-    )
-    _write_centroids(
-        cents_coarse, path, n_groups, round_digits, fast=fast,
-        group_train_iters=group_train_iters,
-    )
-    cents.select("subspace", "rk", "code", "sc").write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
+        [
+            _posting_write(rows, path, layout),
+            *writes,
+            *cent_writes,
+            (os.path.join(path, "codebooks"), lambda gen: cb.write.parquet(gen)),
+        ],
+        meta={
+            "by_residual": by_residual,
+            "m": m,
+            "k": k,
+            "dim": dim,
+            "opq": opq_rotation is not None,
+            "n_groups": n_groups,
+            "group_train_iters": group_train_iters,
+        },
     )
 
 
@@ -2686,7 +2542,6 @@ def ivfsq_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    fast: bool = False,
     n_groups: "int | str | None" = None,
     assign_via_groups: bool = False,
     assign_g_probe: int = 1,
@@ -2704,11 +2559,17 @@ def ivfsq_build_index(
 
     Tables under `path`: ``cells/`` (id, codes array<int>) PARTITIONED
     BY cell; ``centroids/`` (cell, cv) the rank-based coarse quantizer;
-    ``sq/`` (pos, mn, mx) the per-dimension bounds.  meta.json is
-    written FIRST and the old generation's sentinel dropped before it
-    (the same rebuild-crash invalidation contract as ivfpq_build_index);
-    completeness = meta.json + centroids/_SUCCESS (centroids are the
-    last table written).
+    ``sq/`` (pos, mn, mx) the per-dimension bounds.  Like every
+    IVF-family build it is a bulk insert: one pass over the corpus for
+    the bounds (`sq_fit`), then the posting rows from one Arrow pass
+    (`_posting_pass`, SQ mode: `lloyd_assign`'s cells and
+    `_sq_encode_expr`'s codes, bit for bit).  The tables are staged,
+    meta.json is rewritten after the old sentinel is dropped, and the
+    tables are published with centroids/ last (`_publish_build`, the
+    same rebuild-crash contract as ivfpq_build_index); completeness =
+    meta.json + centroids/_SUCCESS.  A null or misshapen vector raises
+    the pass's ValueError before anything is published, leaving an
+    index already at `path` as it was.
 
     Measured on the clustered fixtures (256-dim, n_probe=8/64, exact-L2
     top-10 ground truth): recall@10 0.950 (isotropic) / 0.986
@@ -2716,66 +2577,40 @@ def ivfsq_build_index(
     storage (256 bytes/vector).  The classic accuracy-for-bytes trade:
     SQ8 when the posting lists fit, PQ(+OPQ/residual) when they
     don't."""
-    import json
     import os
 
     if dim is None:
         raise ValueError("ivfsq_build_index: dim is required (fail-closed)")
     n_cells = _resolve_n_cells(df, n_cells)
-    n_groups = _resolve_n_groups(n_cells, n_groups)
-    os.makedirs(path, exist_ok=True)
-    for stale in (
-        os.path.join(path, "centroids", "_SUCCESS"),
-        os.path.join(path, "meta.json"),
-    ):
-        if os.path.exists(stale):
-            os.remove(stale)
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "kind": "ivfsq",
-                "dim": dim,
-                "n_groups": n_groups,
-                "group_train_iters": group_train_iters,
-            },
-            f,
-        )
-    if assign_via_groups:
-        assigned = _assign_pruned(
-            df,
-            _rank_coarse_centroids(df, n_cells, id_col, vec_col, round_digits).select(
-                "cell", "cv"
-            ),
-            n_groups, id_col, vec_col, round_digits, assign_g_probe, fast,
-            group_train_iters,
-        )
-    else:
-        assigned = (lloyd_assign_blas if fast else lloyd_assign)(
-            df, k=n_cells, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-        ).withColumnRenamed("cluster", "cell")
-    sq = sq_fit(df, dim, id_col=id_col, vec_col=vec_col)
-    sq.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "sq"))
-    bounds = sorted(sq.collect(), key=lambda r: r["pos"])
-    mn = [float(r["mn"]) for r in bounds]
-    mx = [float(r["mx"]) for r in bounds]
-    v64 = F.slice(F.col(vec_col).cast("array<double>"), 1, dim)
-    codes = df.select(
-        F.col(id_col).alias("id"), _sq_encode_expr(v64, mn, mx).alias("codes")
+    n_groups = _resolve_n_groups(n_cells, n_groups, assign_via_groups)
+    spark = df.sparkSession
+    ids, x = _seed_rows(df, n_cells, id_col, vec_col)
+    cents, groups, cent_writes = _centroid_tables(
+        spark, path, _cell_rows(ids, _spark_round(x, round_digits)),
+        n_groups, round_digits, group_train_iters,
     )
-    _write_posting(
-        assigned.select(F.col(id_col).alias("id"), "cell").join(codes, "id"),
-        path,
-        layout,
+    bounds = sorted(
+        sq_fit(df, dim, id_col=id_col, vec_col=vec_col).collect(), key=lambda r: r["pos"]
     )
-    _write_centroids(
-        _rank_coarse_centroids(df, n_cells, id_col, vec_col, round_digits).select(
-            F.col("cell"), F.col("cv")
-        ),
+    sq = spark.createDataFrame(
+        [(r["pos"], r["mn"], r["mx"]) for r in bounds], "pos int not null, mn double, mx double"
+    ).coalesce(1)
+    sq_bounds = ([float(r["mn"]) for r in bounds], [float(r["mx"]) for r in bounds])
+    pruned = {"groups": groups, "g_probe": assign_g_probe} if assign_via_groups else {}
+    rows = _posting_pass(df, cents, id_col, vec_col, round_digits, sq_bounds=sq_bounds, **pruned)
+    _publish_build(
         path,
-        n_groups,
-        round_digits,
-        fast=fast,
-        group_train_iters=group_train_iters,
+        [
+            _posting_write(rows, path, layout),
+            (os.path.join(path, "sq"), lambda gen: sq.write.parquet(gen)),
+            *cent_writes,
+        ],
+        meta={
+            "kind": "ivfsq",
+            "dim": dim,
+            "n_groups": n_groups,
+            "group_train_iters": group_train_iters,
+        },
     )
 
 
@@ -3207,61 +3042,153 @@ def _fold_dot(a, b):
     return acc
 
 
+def _vector_matrix(vecs, dim: "int | None" = None):
+    """Driver-side vectors as an (n, dim) float64 matrix; `dim` defaults
+    to the first vector's length.  A null vector, a null element or
+    another length raises the ValueError the pass raises on a worker."""
+    import numpy as np
+
+    if dim is None:
+        dim = len(vecs[0] or []) if vecs else 0
+    if any(v is None or len(v) != dim or None in v for v in vecs):
+        raise ValueError(f"_posting_pass: every vector must hold {dim} non-null values")
+    return np.array(vecs, dtype=np.float64).reshape(len(vecs), dim)
+
+
+def _d2_np(x, cmat, round_digits: int, cc=None):
+    """`lloyd_assign`'s rounded squared distances of a numpy (n, d)
+    batch to centroids `cmat` (k, d), bit for bit: d2 = round((|x|² −
+    2·x·c) + |c|²) from `_fold_dot`s (`cc` = |c|², when the caller
+    already has it).  The packed key's range guard raises the same
+    error (a NaN d2 fails it too)."""
+    import numpy as np
+
+    if cc is None:
+        cc = _fold_dot(cmat, cmat)
+    d2 = _spark_round(
+        (_fold_dot(x, x)[:, None] - 2.0 * _fold_dot(x[:, None, :], cmat[None, :, :]))
+        + cc[None, :],
+        round_digits,
+    )
+    if not (np.rint(d2 * 10.0 ** round_digits) <= _PACKED_D2_MAX).all():
+        raise ValueError(_PACKED_RANGE_ERROR)
+    return d2
+
+
 def _assign_cells_np(x, cmat, round_digits: int):
     """`lloyd_assign` of a numpy (n, d) batch against centroids `cmat`
     (k, d) already sorted by cell and rounded with `_spark_round`: the
-    row index of each vector's cell, bit for bit.  d2 = round((|x|² −
-    2·x·c) + |c|²) from `_fold_dot`s, and argmin keeps the first minimum
-    — the smaller cell, as the packed key's rank does.  The packed
-    key's range guard raises the same error (a NaN d2 fails it too).
-    Rows go in slices that keep each (rows, k) temporary near 32 MB
-    whatever the number of cells.  `lloyd_assign_blas` computes the
-    same d2 with numpy sums and a GEMM: it differs from this kernel in
-    accumulation order, and in rounding until its `_round_half_away`
-    gives way to `_spark_round` (ROADMAP item 2)."""
+    row index of each vector's cell, bit for bit.  argmin keeps the
+    first minimum of `_d2_np` — the smaller cell, as the packed key's
+    rank does.  Rows go in slices that keep each (rows, k) temporary
+    near 32 MB whatever the number of cells.  `lloyd_assign_blas`
+    computes the same d2 with numpy sums, a GEMM and `_round_half_away`,
+    so it can differ from this kernel in the last ulp before rounding
+    and in the rounding rule itself."""
     import numpy as np
 
-    cc = _fold_dot(cmat, cmat)[None, :]
+    cc = _fold_dot(cmat, cmat)
     best = np.empty(len(x), dtype=np.int64)
     step = max(1, (1 << 22) // len(cmat))
     for i in range(0, len(x), step):
-        xi = x[i : i + step]
-        d2 = _spark_round(
-            (_fold_dot(xi, xi)[:, None] - 2.0 * _fold_dot(xi[:, None, :], cmat[None, :, :]))
-            + cc,
-            round_digits,
-        )
-        if not (np.rint(d2 * 10.0 ** round_digits) <= _PACKED_D2_MAX).all():
-            raise ValueError(_PACKED_RANGE_ERROR)
-        best[i : i + step] = d2.argmin(axis=1)
+        best[i : i + step] = _d2_np(x[i : i + step], cmat, round_digits, cc).argmin(axis=1)
     return best
+
+
+def _quantizer(
+    cents: "list[dict]", round_digits: int, groups: "list[dict] | None" = None, g_probe: int = 1
+):
+    """The pass's coarse quantizer over centroid rows (cell, cv): (cell
+    ids and the rounded centroid matrix, both in cell order, and
+    assign(x) -> each row's position in them).
+
+    Flat: `_assign_cells_np` over every cell.  With `groups` (grp, gv)
+    and centroid rows labelled with their grp, the BUILD-side pruned
+    assignment of a two-level quantizer.  Exact assignment is
+    Θ(n·n_cells) scored pairs — at n = 2e9 and n_cells = 4√n ≈ 180k,
+    ~9e16 flops for one build pass, the real reason a flat quantizer
+    stops scaling before the probe path notices.  Here each vector ranks
+    the groups that hold a cell by the same rounded d2 (stable: ties to
+    the smaller grp), then takes the exact (d2 asc, cell asc) argmin over
+    the cells of its `g_probe` best groups: Θ(n·(√n_cells +
+    g_probe·√n_cells)), ~400× less work at 180k cells, which is how
+    FAISS-scale systems build IVF indexes.  With g_probe = n_groups
+    every cell is a candidate and the assignment is the flat one bit for
+    bit (asserted in tests); a smaller g_probe is an approximation whose
+    agreement rate is a measured property of the corpus (rehearsal row
+    at 2M), not a promise."""
+    import numpy as np
+
+    rows = sorted(cents, key=lambda r: r["cell"])
+    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
+    cmat = _spark_round(_vector_matrix([r["cv"] for r in rows]), round_digits)
+    if groups is None:
+        return cells, cmat, lambda x: _assign_cells_np(x, cmat, round_digits)
+    cgrp = np.array([r["grp"] for r in rows], dtype=np.int64)
+    groups = [g for g in sorted(groups, key=lambda g: g["grp"]) if (cgrp == g["grp"]).any()]
+    gmat = _spark_round(_vector_matrix([g["gv"] for g in groups]), round_digits)
+    members = [np.flatnonzero(cgrp == g["grp"]) for g in groups]
+    p = min(g_probe, len(groups))
+
+    def assign(x):
+        top = np.argsort(_d2_np(x, gmat, round_digits), axis=1, kind="stable")[:, :p]
+        best = np.full(len(x), len(cells))
+        best_d2 = np.full(len(x), np.inf)
+        for g, pos in enumerate(members):
+            hit = np.flatnonzero((top == g).any(axis=1))
+            if len(hit) == 0:
+                continue
+            d2 = _d2_np(x[hit], cmat[pos], round_digits)
+            j = d2.argmin(axis=1)
+            dj, cj = d2[np.arange(len(hit)), j], pos[j]
+            # (d2 asc, cell asc) across groups: positions are in cell order
+            better = (dj < best_d2[hit]) | ((dj == best_d2[hit]) & (cj < best[hit]))
+            best_d2[hit[better]], best[hit[better]] = dj[better], cj[better]
+        return best
+
+    return cells, cmat, assign
 
 
 def _posting_pass(
     df: DataFrame,
-    centroids: str,
+    cents: "list[dict]",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
     sq_bounds: "tuple[list[float], list[float]] | None" = None,
+    codebooks: "list[dict] | None" = None,
+    by_residual: bool = False,
+    groups: "list[dict] | None" = None,
+    g_probe: int = 1,
 ) -> DataFrame:
     """Posting rows for `df`'s vectors in ONE Arrow pass: each vector's
-    cell against the centroid table at `centroids` (read on the driver
-    here, so a recenter between two calls takes effect on the next) and
-    its stored columns, computed together per batch — no Spark join, no
-    aggregate, and no job until the caller writes.
+    cell against the centroid rows `cents` (cell, cv) and its stored
+    columns, computed together per batch — no Spark join, no aggregate,
+    and no job until the caller writes.  Every IVF-family build and
+    stream insert writes its posting rows through it: a build passes
+    the rows it stages, an insert the live table's (`sidecar_rows`,
+    re-read per micro-batch so a recenter takes effect on the next).
 
     - IVF (default): (id, cell, v array<double>, norm = sqrt(dot(v, v)));
-    - SQ8 (`sq_bounds` = `_sq_bounds(index)`): (id, cell, codes
-      array<int>) encoded over the first len(mn) coordinates.
+    - SQ8 (`sq_bounds` = (mn, mx)): (id, cell, codes array<int>)
+      encoded over the first len(mn) coordinates;
+    - PQ (`codebooks` = the (subspace, rk, sc) rows): (id, cell, codes
+      array<int>), per subspace the rk of the nearest codeword by the
+      same rounded d2, over the first m·sub coordinates — of the vector,
+      or with `by_residual` of v − cv[cell].  The codewords are stored
+      rounded and used as they are.
 
-    The cells are `lloyd_assign`'s, the norms `norm`'s and the codes
-    `_sq_encode_expr`'s, bit for bit (`_assign_cells_np`,
-    `_sq_encode_np`; pinned in tests/test_streaming_ann.py), so the
-    stored bytes equal the expression build's.  Every vector must hold
-    the centroids' dimension of non-null values: any other row raises
-    ValueError, which fails a stream insert's micro-batch (its restart
-    replays the batch, so the producer has to drop such a row)."""
+    `groups` (with `cents` labelled by grp) switches to the pruned
+    assignment (`_quantizer`); rotation stays upstream
+    (`rotate_vectors`).  The cells are `lloyd_assign`'s, the norms
+    `norm`'s and the codes `_sq_encode_expr`'s and
+    `pq_encode_with_codebooks`'s, bit for bit (`_assign_cells_np`,
+    `_sq_encode_np`; pinned in tests), so the stored bytes equal the
+    expression plans'.  Every vector must hold the centroids' dimension
+    of non-null values: any other row raises ValueError, which fails a
+    build before it publishes and a stream insert's micro-batch (its
+    restart replays the batch, so the producer has to drop such a
+    row)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -3274,16 +3201,24 @@ def _posting_pass(
         StructType,
     )
 
-    rows = sorted(sidecar_rows(centroids, ["cell", "cv"]), key=lambda r: r["cell"])
-    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
-    cmat = _spark_round(np.array([r["cv"] for r in rows], dtype=np.float64), round_digits)
+    cells, cmat, assign = _quantizer(cents, round_digits, groups, g_probe)
     dim = cmat.shape[1]
-    # the expression build's column types: SQ codes hold no null
+    books, sub = [], 0
+    if codebooks is not None:
+        sub = max(len(r["sc"]) for r in codebooks)
+        for j in range(max(r["subspace"] for r in codebooks) + 1):
+            book = sorted((r for r in codebooks if r["subspace"] == j), key=lambda r: r["rk"])
+            ranks = np.array([r["rk"] for r in book], dtype=np.int32)
+            books.append((ranks, _vector_matrix([r["sc"] for r in book])))
+    coded = sq_bounds is not None or codebooks is not None
+    # the expression builds' column types: codes hold no null, and PQ
+    # codes are never null
     head = [StructField("id", df.schema[id_col].dataType), StructField("cell", LongType())]
-    if sq_bounds is None:
-        tail = [StructField("v", ArrayType(DoubleType())), StructField("norm", DoubleType())]
+    if coded:
+        codes_t = ArrayType(IntegerType(), containsNull=False)
+        tail = [StructField("codes", codes_t, nullable=codebooks is None)]
     else:
-        tail = [StructField("codes", ArrayType(IntegerType(), containsNull=False))]
+        tail = [StructField("v", ArrayType(DoubleType())), StructField("norm", DoubleType())]
     schema = StructType(head + tail)
     codes_type = pa.list_(pa.field("element", pa.int32(), nullable=False))
 
@@ -3300,17 +3235,24 @@ def _posting_pass(
             ):
                 raise ValueError(f"_posting_pass: every vector must hold {dim} non-null values")
             x = flat.to_numpy().reshape(len(b), dim)
-            cell = pa.array(cells[_assign_cells_np(x, cmat, round_digits)])
-            if sq_bounds is None:
-                cols = [b.column(0), cell, vecs, pa.array(np.sqrt(_fold_dot(x, x)))]
+            pos = assign(x)
+            cols = [b.column(0), pa.array(cells[pos])]
+            if not coded:
+                cols += [vecs, pa.array(np.sqrt(_fold_dot(x, x)))]
             else:
-                codes = _sq_encode_np(x[:, : len(sq_bounds[0])], *sq_bounds)
+                if books:
+                    enc = x - cmat[pos] if by_residual else x
+                    codes = np.stack(
+                        [
+                            rk[_assign_cells_np(enc[:, j * sub : (j + 1) * sub], cb, round_digits)]
+                            for j, (rk, cb) in enumerate(books)
+                        ],
+                        axis=1,
+                    )
+                else:
+                    codes = _sq_encode_np(x[:, : len(sq_bounds[0])], *sq_bounds)
                 offsets = pa.array(np.arange(len(b) + 1, dtype=np.int32) * codes.shape[1])
-                cols = [
-                    b.column(0),
-                    cell,
-                    pa.ListArray.from_arrays(offsets, codes.ravel(), type=codes_type),
-                ]
+                cols.append(pa.ListArray.from_arrays(offsets, codes.ravel(), type=codes_type))
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return df.select(
@@ -3325,7 +3267,6 @@ def lloyd_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    fast: bool = False,
 ) -> DataFrame:
     """Deterministic k-means TRAINING — `iters` full Lloyd iterations
     (assign, then recompute centers as coordinate means) from the
@@ -3339,7 +3280,9 @@ def lloyd_train(
     steps a SQL oracle unrolls as CTEs:
 
     1. assignment: `lloyd_assign` with the current centers (rounded d2
-       argmin, ties to the smaller cluster id);
+       argmin, ties to the smaller cluster id), run here as the one
+       Arrow pass (`_posting_pass`, bit for bit), whose posting rows
+       carry each vector with its cell — no join back;
     2. means: per (cluster, coordinate) the mean is computed as an EXACT
        scaled-bigint sum (round(val * 10^round_digits) as long — integer
        addition is associative, so Spark's partition order and DuckDB's
@@ -3353,11 +3296,6 @@ def lloyd_train(
     GROUP centers over a centroid table — k = sqrt(n_cells) ~ 430 at
     180k cells), and literal centers keep each iteration's plan flat
     instead of stacking k Lloyd plans into one lineage.
-
-    `fast=True` routes the assignment through `lloyd_assign_blas` (the
-    production Arrow/BLAS path, same tie rules — pytest asserts the two
-    produce identical centers on the test corpora); the mean step is
-    identical relational code on both paths.
 
     Motivation (rehearsal r9, .scale lesson): rank-init group centers
     cost ~.17 recall@10 at 10% group coverage on the clustered 2M
@@ -3382,16 +3320,12 @@ def lloyd_train(
         (int(r["cluster"]), [float(x) for x in r["cvec"]]) for r in seeds.collect()
     ]
     centers.sort(key=lambda t: t[0])
-    assign_fn = lloyd_assign_blas if fast else lloyd_assign
     for _ in range(iters):
-        cdf = spark.createDataFrame(centers, "cluster long, cvec array<double>")
-        assigned = assign_fn(
-            pts, centroids=cdf, id_col=id_col, vec_col="__v",
-            round_digits=round_digits,
+        posting = _posting_pass(
+            pts, [{"cell": c, "cv": v} for c, v in centers], id_col, "__v", round_digits
         )
         means = (
-            assigned.join(pts, id_col)
-            .select("cluster", F.posexplode(F.col("__v")).alias("pos", "val"))
+            posting.select(F.col("cell").alias("cluster"), F.posexplode("v").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(
                 F.sum(F.round(F.col("val") * F.lit(scale)).cast("long")).alias("__s"),
@@ -3418,113 +3352,6 @@ def lloyd_train(
         }
         centers = [(cid, got.get(cid, vec)) for cid, vec in centers]
     return spark.createDataFrame(centers, "cluster long, cvec array<double>")
-
-
-def lloyd_assign_pruned_blas(
-    df: DataFrame,
-    centroids: DataFrame,
-    groups: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    g_probe: int = 1,
-) -> DataFrame:
-    """TWO-LEVEL Lloyd assignment — the BUILD-side half of the
-    hierarchical coarse quantizer.  Exact assignment is Θ(n·n_cells)
-    scored pairs: at n = 2e9 and n_cells = 4√n ≈ 180k that is ~9e16
-    flops for ONE build pass — the real reason a flat quantizer stops
-    scaling before the probe path ever notices.  This path ranks each
-    vector against the √n_cells level-1 GROUP centers first, then takes
-    the exact (rounded d2 asc, cluster asc) argmin over only the
-    winning `g_probe` groups' cells: Θ(n·(√n_cells + g·√n_cells)) —
-    ~400× less work at 180k cells — which is how FAISS-scale systems
-    actually build IVF indexes (the quantizer lookup is itself
-    approximate).
-
-    Semantics: with `g_probe = n_groups` the candidate set is every
-    cell and the result is BIT-IDENTICAL to `lloyd_assign_blas`
-    (asserted in tests); smaller g_probe is an approximation whose
-    agreement rate is a measured property of the corpus (rehearsal row
-    at 2M), not a promise — the assignment stays deterministic (group
-    ranking ties to the smaller grp, cell argmin ties to the smaller
-    cluster, both under half-away rounding).
-
-    `centroids` is (cluster, cvec, grp) — each cell centroid labeled
-    with its level-1 group; `groups` is (grp, gvec).  Both are
-    driver-sized (n_cells ≤ ~200k rows of metadata) and broadcast."""
-    import numpy as np
-
-    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    cent_rows = centroids.select(
-        "cluster", F.col("cvec").cast("array<double>").alias("__c"), "grp"
-    ).collect()
-    cent_rows.sort(key=lambda r: r["cluster"])
-    grp_rows = groups.select(
-        "grp", F.col("gvec").cast("array<double>").alias("__g")
-    ).collect()
-    grp_rows.sort(key=lambda r: r["grp"])
-    gids = np.array([r["grp"] for r in grp_rows], dtype=np.int64)
-    gmat = _round_half_away(
-        np.array([r["__g"] for r in grp_rows], dtype=np.float64), round_digits
-    )
-    gsq = (gmat * gmat).sum(axis=1)
-    cids = np.array([r["cluster"] for r in cent_rows], dtype=np.int64)
-    cmat = _round_half_away(
-        np.array([r["__c"] for r in cent_rows], dtype=np.float64), round_digits
-    )
-    csq = (cmat * cmat).sum(axis=1)
-    cgrp = np.array([r["grp"] for r in cent_rows], dtype=np.int64)
-    # grp id -> positions of its cells in the id-sorted centroid arrays
-    cells_of = {int(g): np.nonzero(cgrp == g)[0] for g in gids}
-    bc = df.sparkSession.sparkContext.broadcast(
-        (gids, gmat, gsq, cids, cmat, csq, cells_of)
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        b_gids, b_gmat, b_gsq, b_cids, b_cmat, b_csq, b_cells_of = bc.value
-        p = min(g_probe, len(b_gids))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            xsq = (x * x).sum(axis=1)
-            gd2 = _round_half_away(
-                xsq[:, None] - 2.0 * (x @ b_gmat.T) + b_gsq[None, :], round_digits
-            )
-            # per-row winning groups: stable argsort = (d2 asc, grp asc)
-            top_g = np.argsort(gd2, axis=1, kind="stable")[:, :p]
-            best_d2 = np.full(len(x), np.inf)
-            best_cl = np.full(len(x), np.iinfo(np.int64).max, dtype=np.int64)
-            for gi in range(len(b_gids)):
-                # rows whose winning-group set contains group gi
-                mask = (top_g == gi).any(axis=1)
-                if not mask.any():
-                    continue
-                pos = b_cells_of[int(b_gids[gi])]
-                if len(pos) == 0:
-                    continue
-                xm = x[mask]
-                d2 = _round_half_away(
-                    xsq[mask][:, None] - 2.0 * (xm @ b_cmat[pos].T)
-                    + b_csq[pos][None, :],
-                    round_digits,
-                )
-                j = d2.argmin(axis=1)  # first occurrence = smallest cell id
-                dj = d2[np.arange(len(xm)), j]
-                cj = b_cids[pos][j]
-                rows = np.nonzero(mask)[0]
-                # (d2 asc, cluster asc) across groups too
-                better = (dj < best_d2[rows]) | (
-                    (dj == best_d2[rows]) & (cj < best_cl[rows])
-                )
-                upd = rows[better]
-                best_d2[upd] = dj[better]
-                best_cl[upd] = cj[better]
-            yield pd.DataFrame({id_col: pdf[id_col], "cluster": best_cl})
-
-    return vecs.mapInPandas(assign, schema=f"{id_col} long, cluster long")
 
 
 def logreg_score(

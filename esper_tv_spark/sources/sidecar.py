@@ -225,3 +225,38 @@ def publish(table: str, gen: str) -> None:
             retired_at = horizon  # never published
         if retired_at <= horizon:
             shutil.rmtree(entry.path)
+
+
+def stage(writes) -> "dict[str, str | None]":
+    """Write each `(table, write)` into a new generation of `table`, in
+    order — `write(gen)` writes the rows — and return {table: gen} for
+    `publish_staged`.  A `None` write stages the table's removal.  If a
+    write raises, the generations staged so far are deleted and the
+    error propagates: the tables are left as they were, with nothing
+    beside them."""
+    staged: dict = {}
+    try:
+        for table, write in writes:
+            staged[table] = None
+            if write is not None:
+                staged[table] = new_generation(table)
+                write(staged[table])
+    except BaseException:
+        for gen in staged.values():
+            if gen is not None:
+                shutil.rmtree(gen, ignore_errors=True)
+        raise
+    return staged
+
+
+def publish_staged(staged: "dict[str, str | None]") -> None:
+    """`publish` every generation of `stage`, in its order, so a table
+    that marks a set of tables complete can go last.  A table staged
+    for removal is removed: its symlink, or a plain dir."""
+    for table, gen in staged.items():
+        if gen is not None:
+            publish(table, gen)
+        elif os.path.islink(table):
+            os.unlink(table)
+        else:
+            shutil.rmtree(table, ignore_errors=True)

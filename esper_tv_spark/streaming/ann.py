@@ -15,10 +15,11 @@ maintenance compacts, purges and re-centers the cells.
   rank-based init set — the k smallest-id vectors — is in the base
   build), which is exactly what the stream==batch test asserts.  The
   insert path touches only the micro-batch, never the existing lists.
-  The IVF and IVF-SQ bodies are one Arrow pass
-  (`similarity._posting_pass`: centroids read on the driver, cell and
-  stored columns computed per batch), so a micro-batch runs one Spark
-  job, its append; an empty one writes no file.
+  All three bodies are one Arrow pass (`similarity._posting_pass`:
+  centroids, codebooks and bounds read on the driver, cell and stored
+  columns computed per batch) — the same pass every build writes its
+  posting rows through — so a micro-batch runs one Spark job, its
+  append; an empty one writes no file.
 
 - `compact_posting_lists` / `ivf_recenter` — the rewrites.  Compaction
   collapses insert fragments (and, with purge, drops tombstoned rows);
@@ -36,7 +37,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esper_tv_spark.operators.similarity import _apply_tombstones, _posting_pass, lloyd_assign
+from esper_tv_spark.operators.similarity import (
+    _apply_tombstones,
+    _centroid_tables,
+    _codebook_rows,
+    _ivfpq_meta,
+    _ivfpq_rotation,
+    _posting_pass,
+    _sq_bounds,
+    rotate_vectors,
+)
 from esper_tv_spark.sources import sidecar
 
 
@@ -56,14 +66,6 @@ def _require_dirs_layout(index_path: str, op: str) -> None:
             "layout; rebuild with layout='dirs' or rebuild the sorted "
             "index from the updated corpus"
         )
-
-
-def _stored_centroids(spark: SparkSession, index_path: str) -> DataFrame:
-    """The frozen centroids as (cluster, cvec); the schema is declared
-    from a footer, so a per-batch re-read runs no inference job."""
-    return sidecar.declared_parquet(spark, os.path.join(index_path, "centroids")).select(
-        F.col("cell").alias("cluster"), F.col("cv").alias("cvec")
-    )
 
 
 def ivf_stream_insert(
@@ -89,11 +91,13 @@ def ivf_stream_insert(
     id), ROADMAP item 1."""
 
     _require_dirs_layout(index_path, "ivf_stream_insert")
+    cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
         (
             _posting_pass(
-                batch_df, os.path.join(index_path, "centroids"), id_col, vec_col, round_digits
+                batch_df, sidecar.sidecar_rows(cents_dir, ["cell", "cv"]), id_col, vec_col,
+                round_digits,
             )
             .write.mode("append")
             .partitionBy("cell")
@@ -123,60 +127,30 @@ def ivfpq_stream_insert(
     codebooks are rank-based from the k smallest-id vectors, so as long
     as the base build contains that init set, stream-inserting a tail is
     bit-identical to rebuilding over the union (the stream==batch test).
-    At 100 TB the insert path touches only the micro-batch: two tiny
-    broadcast joins (n_cells centroids, m*k codebooks), one partitioned
-    append — never a read of the existing posting lists."""
-    from esper_tv_spark.operators.similarity import pq_encode_with_codebooks
-
+    At 100 TB the insert path touches only the micro-batch: an OPQ
+    index's rotation (`rotate_vectors`, as the build), then one Arrow
+    pass (`similarity._posting_pass`, PQ mode: cell, residual and code
+    ranks against the centroids and codebooks read on the driver) and
+    one partitioned append — never a read of the existing posting
+    lists."""
     _require_dirs_layout(index_path, "ivfpq_stream_insert")
+    cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
-        from esper_tv_spark.operators.similarity import (
-            _ivfpq_meta,
-            _ivfpq_rotation,
-            rotate_vectors,
-        )
-
-        spark = batch_df.sparkSession
         meta = _ivfpq_meta(index_path)
-        by_residual = meta["by_residual"]
         if meta["opq"]:
             # an OPQ index lives in rotated space: rotate the micro-batch
             # with the SAME persisted rotation the build used, so stream
             # inserts stay bit-identical to a batch rebuild
             batch_df = rotate_vectors(
-                batch_df,
-                _ivfpq_rotation(index_path),
-                id_col,
-                vec_col,
-                round_digits,
-            )
-        cents = _stored_centroids(spark, index_path)
-        cb = sidecar.declared_parquet(spark, os.path.join(index_path, "codebooks"))
-        assigned = lloyd_assign(
-            batch_df, centroids=cents, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits,
-        ).withColumnRenamed("cluster", "cell")
-        if by_residual:
-            from esper_tv_spark.operators.similarity import residual_vectors
-
-            enc_in = residual_vectors(
-                batch_df,
-                assigned,
-                cents.select(F.col("cluster").alias("cell"), F.col("cvec").alias("cv")),
-                id_col,
-                vec_col,
-            )
-            codes = pq_encode_with_codebooks(
-                enc_in, cb, id_col=id_col, vec_col="__rv", round_digits=round_digits
-            )
-        else:
-            codes = pq_encode_with_codebooks(
-                batch_df, cb, id_col=id_col, vec_col=vec_col, round_digits=round_digits
+                batch_df, _ivfpq_rotation(index_path), id_col, vec_col, round_digits
             )
         (
-            assigned.select(F.col(id_col).alias("id"), "cell")
-            .join(codes, "id")
+            _posting_pass(
+                batch_df, sidecar.sidecar_rows(cents_dir, ["cell", "cv"]), id_col, vec_col,
+                round_digits, codebooks=_codebook_rows(index_path),
+                by_residual=meta["by_residual"],
+            )
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(index_path, "cells"))
@@ -209,14 +183,13 @@ def ivfsq_stream_insert(
     batch build's `_sq_encode_expr` operation for operation, so inserted
     codes are bit-identical to batch-encoding the same rows against the
     same store (asserted in tests/test_streaming_ann.py)."""
-    from esper_tv_spark.operators.similarity import _sq_bounds
-
     _require_dirs_layout(index_path, "ivfsq_stream_insert")
+    cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
         (
             _posting_pass(
-                batch_df, os.path.join(index_path, "centroids"), id_col, vec_col,
+                batch_df, sidecar.sidecar_rows(cents_dir, ["cell", "cv"]), id_col, vec_col,
                 round_digits, sq_bounds=_sq_bounds(index_path),
             )
             .write.mode("append")
@@ -466,10 +439,11 @@ def ivf_recenter(
     vectors, then reassign ALL posting rows against the new centroids and
     rewrite both tables.  Each table is staged in a new generation and
     the tables are published back-to-back once every write finished
-    (`sidecar.publish` — never overwrite a table being read).  A crash
-    before the publishes leaves the index as it was; one between them
-    leaves complete tables of two generations, which the next recenter
-    reconciles (it recomputes the centroids from the posting rows).
+    (`sidecar.stage` / `publish_staged` — never overwrite a table being
+    read).  A crash before the publishes leaves the index as it was; one
+    between them leaves complete tables of two generations, which the
+    next recenter reconciles (it recomputes the centroids from the
+    posting rows).
     Cell LABELS are preserved (mean of cell c keeps label c), so probes
     and the census keep their key space.
 
@@ -480,20 +454,21 @@ def ivf_recenter(
     reduces the exchange to n_cells x dim rows regardless of corpus size.
 
     TWO-LEVEL indexes (a `groups/` table is present — see
-    similarity._write_centroids): the new centroids get REGROUPED against
-    the same n_groups via `_group_centers` — pass the index's
+    similarity._centroid_tables, which stages the centroid tables here
+    as in every build): the new centroids get REGROUPED against the
+    same n_groups via `_group_centers` — pass the index's
     `group_train_iters` (recorded in ivfpq/ivfsq meta.json; raw IVF
     callers state it) to keep a TRAINED grouping trained across the
     rewrite, else the regroup silently reverts to rank-init seeds — and
     `groups/` is republished with them: stale level-1 centers over
     recentered cells would silently mis-prune probes.
 
-    The group count and the schemas of the posting and staged-centroid
-    reads come from the driver (`sidecar`): no inference job."""
+    The group count and the posting schema come from the driver
+    (`sidecar`): no inference job.  The reassignment is the builds' one
+    Arrow pass (`_posting_pass`) against the new centroid rows."""
     _require_dirs_layout(index_path, "ivf_recenter")
     scale = float(10 ** round_digits)
     cells_dir = os.path.join(index_path, "cells")
-    cents_dir = os.path.join(index_path, "centroids")
     groups_dir = os.path.join(index_path, "groups")
     # recenter is a full rewrite: apply (and then retire) any logical
     # deletes — keeping tombstoned vectors would bake them into the new
@@ -522,44 +497,26 @@ def ivf_recenter(
             F.round((F.col("ssum") / F.col("n")) / F.lit(scale), round_digits).alias("m"),
         )
     )
-    new_cents = (
-        means.groupBy("cell")
+    new_cents = [
+        {"cell": r["cell"], "cv": r["cv"]}
+        for r in means.groupBy("cell")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
             ).alias("cv")
         )
-    )
-    staged = {t: sidecar.new_generation(t) for t in (cells_dir, cents_dir)}
+        .collect()
+    ]
+    n_groups = None
     if os.path.isdir(groups_dir):
-        from esper_tv_spark.operators.similarity import _group_centers
-
         n_groups = len(sidecar.sidecar_rows(groups_dir, ["grp"]))
-        staged[groups_dir] = sidecar.new_generation(groups_dir)
-        gdf = _group_centers(new_cents, n_groups, round_digits, group_train_iters)
-        gdf.write.parquet(staged[groups_dir])
-        (
-            lloyd_assign(
-                new_cents,
-                centroids=sidecar.declared_parquet(spark, staged[groups_dir]).select(
-                    F.col("grp").alias("cluster"), F.col("gv").alias("cvec")
-                ),
-                id_col="cell", vec_col="cv", round_digits=round_digits,
-            )
-            .withColumnRenamed("cluster", "grp")
-            .join(new_cents, "cell")
-            .select("grp", "cell", "cv")
-            .write.partitionBy("grp")
-            .parquet(staged[cents_dir])
-        )
-    else:
-        new_cents.write.parquet(staged[cents_dir])
-
-    (
-        _posting_pass(posting, staged[cents_dir], "id", "v", round_digits)
-        .write.partitionBy("cell")
-        .parquet(staged[cells_dir])
+    new_cents, _groups, writes = _centroid_tables(
+        spark, index_path, new_cents, n_groups, round_digits, group_train_iters
     )
-    for table, gen in staged.items():
-        sidecar.publish(table, gen)
+    rows = _posting_pass(posting, new_cents, "id", "v", round_digits)
+    sidecar.publish_staged(
+        sidecar.stage(
+            [(cells_dir, lambda gen: rows.write.partitionBy("cell").parquet(gen)), *writes]
+        )
+    )
     _drop_applied_tombstones(tomb_dir, tomb_files)

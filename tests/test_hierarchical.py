@@ -254,25 +254,53 @@ def test_flat_rebuild_drops_stale_groups(spark, emb, qv, tmp_path):
     )
 
 
-def test_fast_hier_build_matches_expression_build(spark, emb, tmp_path):
-    """fast=True grouping (lloyd_assign_blas over the centroid table)
-    must produce value-identical groups/ and centroids/ tables — the
-    same contract as the flat builders' fast/slow split."""
-    slow, fast = str(tmp_path / "slow"), str(tmp_path / "fast")
-    sim.ivf_build_index(emb, slow, n_cells=16, n_groups=4)
-    sim.ivf_build_index(emb, fast, n_cells=16, n_groups=4, fast=True)
+def _reference_centroids(emb, n_cells):
+    """The rank-based coarse centroids as an expression plan: the
+    n_cells smallest-id vectors, F.round-ed."""
+    return emb.orderBy("vec_id").limit(n_cells).select(
+        F.col("vec_id").alias("cell"),
+        F.transform(F.col("embedding").cast("array<double>"), lambda x: F.round(x, 6)).alias("cv"),
+    )
 
-    def table(idx, sub, cols):
-        return sorted(
-            tuple(
-                tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols
-            )
-            for r in spark.read.parquet(os.path.join(idx, sub)).collect()
+
+def _table(df, cols):
+    return sorted(
+        tuple(tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols)
+        for r in df.collect()
+    )
+
+
+def test_hier_build_matches_expression_reference(spark, emb, tmp_path):
+    """A two-level build's tables equal their expression reference:
+    groups/ the rank-init group centers (the 4 smallest-cell centroids),
+    centroids/ `lloyd_assign` of every centroid to them, and the posting
+    cells `lloyd_assign` of the corpus — the pass and its kernel replay
+    both bit for bit."""
+    idx = str(tmp_path / "hier")
+    sim.ivf_build_index(emb, idx, n_cells=16, n_groups=4)
+    cents = _reference_centroids(emb, 16)
+    groups = cents.orderBy("cell").limit(4).select(
+        F.col("cell").alias("grp"), F.col("cv").alias("gv")
+    )
+    grouped = (
+        sim.lloyd_assign(
+            cents,
+            centroids=groups.select(F.col("grp").alias("cluster"), F.col("gv").alias("cvec")),
+            id_col="cell", vec_col="cv",
         )
+        .join(cents, "cell")
+        .select(F.col("cluster").alias("grp"), "cell", "cv")
+    )
 
-    assert table(slow, "groups", ["grp", "gv"]) == table(fast, "groups", ["grp", "gv"])
-    assert table(slow, "centroids", ["grp", "cell", "cv"]) == table(
-        fast, "centroids", ["grp", "cell", "cv"]
+    def stored(sub):
+        return spark.read.parquet(os.path.join(idx, sub))
+
+    assert _table(stored("groups"), ["grp", "gv"]) == _table(groups, ["grp", "gv"])
+    assert _table(stored("centroids"), ["grp", "cell", "cv"]) == _table(
+        grouped, ["grp", "cell", "cv"]
+    )
+    assert _table(stored("cells"), ["id", "cell"]) == _table(
+        sim.lloyd_assign(emb, k=16), ["vec_id", "cluster"]
     )
 
 
@@ -285,7 +313,7 @@ def test_pruned_assignment_exact_at_full_group_coverage(spark, emb, tmp_path):
     isotropic fixture agreement is ~0.52 (no cluster structure — the
     nearest cell is near-random across groups), which is the honest
     floor; the clustered-2M rehearsal row carries the production
-    number.  Missing n_groups / fast=False fail loudly."""
+    number.  Missing n_groups fails loudly."""
     def cells(idx):
         return sorted(
             (int(r["id"]), int(r["cell"]))
@@ -295,27 +323,19 @@ def test_pruned_assignment_exact_at_full_group_coverage(spark, emb, tmp_path):
         )
 
     exact, full, p1 = (str(tmp_path / n) for n in ("exact", "full", "p1"))
-    sim.ivf_build_index(emb, exact, n_cells=16, n_groups=4, fast=True)
+    sim.ivf_build_index(emb, exact, n_cells=16, n_groups=4)
     sim.ivf_build_index(
-        emb, full, n_cells=16, n_groups=4, fast=True,
-        assign_via_groups=True, assign_g_probe=4,
+        emb, full, n_cells=16, n_groups=4, assign_via_groups=True, assign_g_probe=4
     )
     sim.ivf_build_index(
-        emb, p1, n_cells=16, n_groups=4, fast=True,
-        assign_via_groups=True, assign_g_probe=1,
+        emb, p1, n_cells=16, n_groups=4, assign_via_groups=True, assign_g_probe=1
     )
     ce, cf, c1 = cells(exact), cells(full), cells(p1)
     assert ce == cf
     agree = sum(1 for a, b in zip(ce, c1) if a == b) / len(ce)
     assert 0.0 < agree <= 1.0
     with pytest.raises(ValueError, match="requires n_groups"):
-        sim.ivf_build_index(
-            emb, str(tmp_path / "x1"), n_cells=16, fast=True, assign_via_groups=True
-        )
-    with pytest.raises(ValueError, match="requires fast"):
-        sim.ivf_build_index(
-            emb, str(tmp_path / "x2"), n_cells=16, n_groups=4, assign_via_groups=True
-        )
+        sim.ivf_build_index(emb, str(tmp_path / "x1"), n_cells=16, assign_via_groups=True)
 
 
 def test_pruned_assignment_exact_for_pq_and_sq_builders(spark, emb, tmp_path):
@@ -334,13 +354,13 @@ def test_pruned_assignment_exact_for_pq_and_sq_builders(spark, emb, tmp_path):
         (
             "ivfpq",
             lambda p, **kw: sim.ivfpq_build_index(
-                emb, p, n_cells=16, m=8, k=16, dim=64, n_groups=4, fast=True, **kw
+                emb, p, n_cells=16, m=8, k=16, dim=64, n_groups=4, **kw
             ),
         ),
         (
             "ivfsq",
             lambda p, **kw: sim.ivfsq_build_index(
-                emb, p, n_cells=16, dim=64, n_groups=4, fast=True, **kw
+                emb, p, n_cells=16, dim=64, n_groups=4, **kw
             ),
         ),
     ):
@@ -418,7 +438,10 @@ def test_stream_insert_into_hier_index(spark, emb, qv, tmp_path):
     hier = str(tmp_path / "hier")
     sim.ivf_build_index(base, hier, n_cells=16, n_groups=4)
     (
-        sim._posting_pass(tail, os.path.join(hier, "centroids"), "vec_id", "embedding", 6)
+        sim._posting_pass(
+            tail, sim.sidecar_rows(os.path.join(hier, "centroids"), ["cell", "cv"]),
+            "vec_id", "embedding", 6,
+        )
         .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(hier, "cells"))
@@ -447,16 +470,49 @@ def test_lloyd_train_zero_iters_is_rank_init(spark, emb):
     assert got == want
 
 
-def test_lloyd_train_moves_centers_and_fast_matches_exact(spark, emb):
+def _lloyd_train_reference(emb, k, iters):
+    """`lloyd_train`'s iterations as expression plans: `lloyd_assign`, a
+    join back to the vectors, and the exact scaled-bigint means."""
+    spark = emb.sparkSession
+    pts = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    centers = dict(_table(_reference_centroids(emb, k), ["cell", "cv"]))
+    for _ in range(iters):
+        cdf = spark.createDataFrame(
+            [(c, list(v)) for c, v in sorted(centers.items())], "cluster long, cvec array<double>"
+        )
+        means = (
+            sim.lloyd_assign(pts, centroids=cdf, vec_col="v")
+            .join(pts, "vec_id")
+            .select("cluster", F.posexplode("v").alias("pos", "val"))
+            .groupBy("cluster", "pos")
+            .agg(
+                F.sum(F.round(F.col("val") * F.lit(1e6)).cast("long")).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .select(
+                "cluster",
+                "pos",
+                F.round(
+                    F.col("s").cast("double") / (F.col("n").cast("double") * F.lit(1e6)), 6
+                ).alias("m"),
+            )
+            .groupBy("cluster")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("c"))
+        )
+        for r in means.collect():
+            centers[r["cluster"]] = tuple(s["m"] for s in r["c"])
+    return centers
+
+
+def test_lloyd_train_moves_centers_and_matches_expression_reference(spark, emb):
     """Training must actually move the centers off the seeds, and the
-    BLAS-assignment path (fast=True) must produce IDENTICAL centers —
-    same tie rules, same exact scaled-bigint means."""
-    seed = {r["cluster"]: list(r["cvec"]) for r in sim.lloyd_train(emb, k=4, iters=0).collect()}
-    slow = {r["cluster"]: list(r["cvec"]) for r in sim.lloyd_train(emb, k=4, iters=2).collect()}
-    fast = {r["cluster"]: list(r["cvec"]) for r in sim.lloyd_train(emb, k=4, iters=2, fast=True).collect()}
-    assert slow == fast
-    assert any(seed[k] != slow[k] for k in seed)
-    assert sorted(slow) == sorted(seed)  # labels stay the seed ids
+    one-pass assignment must produce IDENTICAL centers to the expression
+    reference — same tie rules, same exact scaled-bigint means."""
+    seed = {r["cluster"]: tuple(r["cvec"]) for r in sim.lloyd_train(emb, k=4, iters=0).collect()}
+    got = {r["cluster"]: tuple(r["cvec"]) for r in sim.lloyd_train(emb, k=4, iters=2).collect()}
+    assert got == _lloyd_train_reference(emb, 4, 2)
+    assert any(seed[k] != got[k] for k in seed)
+    assert sorted(got) == sorted(seed)  # labels stay the seed ids
 
 
 def test_lloyd_train_empty_cluster_keeps_center(spark):
@@ -505,7 +561,7 @@ def test_trained_groups_persisted_match_lloyd_train(spark, emb, tmp_path):
 
     idx = str(tmp_path / "tr")
     sim.ivfsq_build_index(emb, idx, n_cells=16, dim=64, n_groups=4, group_train_iters=2)
-    cents = sim._rank_coarse_centroids(emb, 16, "vec_id", "embedding", 6)
+    cents = _reference_centroids(emb, 16)
     want = {
         r["cluster"]: list(r["cvec"])
         for r in sim.lloyd_train(cents, k=4, iters=2, id_col="cell", vec_col="cv").collect()
@@ -566,9 +622,9 @@ def test_pruned_build_assignment_uses_trained_groups(spark, emb, tmp_path):
     trained grouping too — build-side pruning and the persisted layout
     derive their centers from the same _group_centers call."""
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    sim.ivf_build_index(emb, a, n_cells=16, n_groups=4, group_train_iters=2, fast=True)
+    sim.ivf_build_index(emb, a, n_cells=16, n_groups=4, group_train_iters=2)
     sim.ivf_build_index(
-        emb, b, n_cells=16, n_groups=4, group_train_iters=2, fast=True,
+        emb, b, n_cells=16, n_groups=4, group_train_iters=2,
         assign_via_groups=True, assign_g_probe=4,
     )
     pa = spark.read.parquet(os.path.join(a, "cells")).select("id", "cell")

@@ -638,12 +638,13 @@ def test_ivfsq_reconstruction_error_bounded(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_fast_build_matches_expression_build(spark, tmp_path):
-    """fast=True (BLAS assignment + BLAS frozen-codebook encode) produces
-    a BYTE-identical index to the expression-path build on the test
-    corpus, across raw / residual / OPQ ivfpq and ivfsq — the production
-    build path's correctness gate (interpreted folds are hours at 2M
-    where BLAS is minutes; see ivfpq_build_index docstring)."""
+def test_pq_and_sq_builds_match_expression_reference(spark, tmp_path):
+    """Raw, residual and OPQ ivfpq builds and the ivfsq build store the
+    rows of their expression reference — `lloyd_assign` cells, the
+    rank-based codebooks and `pq_encode_with_codebooks` /
+    `pq_assign_deterministic` codes (residuals by `zip_with`), and
+    `_sq_encode_expr` codes over `sq_fit` bounds — row for row: the
+    one-pass build moves no stored byte."""
     import os
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
@@ -651,30 +652,64 @@ def test_fast_build_matches_expression_build(spark, tmp_path):
     )
     rot = sim.opq_train(emb, m=8, k=16, dim=64, iters=2, sample_rows=256)
 
-    def cells(idx):
+    def table(df, cols):
         return sorted(
-            (int(r["id"]), int(r["cell"]), tuple(r["codes"]))
-            for r in spark.read.parquet(os.path.join(idx, "cells"))
-            .select("id", "cell", "codes")
-            .collect()
+            tuple(tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols)
+            for r in df.collect()
         )
+
+    def stored(idx, sub):
+        return spark.read.parquet(os.path.join(idx, sub))
+
+    def reference(df, by_residual):
+        cents = df.orderBy("vec_id").limit(16).select(
+            F.col("vec_id").alias("cell"),
+            F.transform(F.col("embedding").cast("array<double>"), lambda x: F.round(x, 6)).alias("cv"),
+        )
+        assigned = sim.lloyd_assign(df, k=16).withColumnRenamed("cluster", "cell")
+        if by_residual:
+            rv = (
+                df.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+                .join(assigned, "vec_id")
+                .join(F.broadcast(cents), "cell")
+                .select("vec_id", F.zip_with("v", "cv", lambda x, y: x - y).alias("rv"))
+            )
+            seeds = rv.join(F.broadcast(cents.select(F.col("cell").alias("vec_id"))), "vec_id", "left_anti")
+            cb = sim._rank_codebooks(seeds, 8, 8, 16, "vec_id", "rv", 6)
+            codes = sim.pq_encode_with_codebooks(rv, cb, vec_col="rv")
+        else:
+            codes, cb = sim._pq_packed_codes(df, 8, 16, "vec_id", "embedding", 6, 64)
+        cells = assigned.join(codes.withColumnRenamed("id", "vec_id"), "vec_id")
+        return cents, cells.withColumnRenamed("vec_id", "id"), cb
 
     for tag, kw in (
         ("raw", {}),
         ("res", {"by_residual": True}),
         ("opq", {"opq_rotation": rot}),
     ):
-        slow = str(tmp_path / f"slow_{tag}")
-        fast = str(tmp_path / f"fast_{tag}")
-        sim.ivfpq_build_index(emb, slow, n_cells=16, m=8, k=16, dim=64, **kw)
-        sim.ivfpq_build_index(emb, fast, n_cells=16, m=8, k=16, dim=64, fast=True, **kw)
-        assert cells(slow) == cells(fast), tag
+        idx = str(tmp_path / f"pq_{tag}")
+        sim.ivfpq_build_index(emb, idx, n_cells=16, m=8, k=16, dim=64, **kw)
+        src = sim.rotate_vectors(emb, rot) if tag == "opq" else emb
+        cents, cells, cb = reference(src, tag == "res")
+        assert table(stored(idx, "cells"), ["id", "cell", "codes"]) == table(
+            cells, ["id", "cell", "codes"]
+        ), tag
+        assert table(stored(idx, "centroids"), ["cell", "cv"]) == table(cents, ["cell", "cv"]), tag
+        cols = ["subspace", "rk", "code", "sc"]
+        assert table(stored(idx, "codebooks"), cols) == table(cb, cols), tag
 
-    slow = str(tmp_path / "slow_sq")
-    fast = str(tmp_path / "fast_sq")
-    sim.ivfsq_build_index(emb, slow, n_cells=16, dim=64)
-    sim.ivfsq_build_index(emb, fast, n_cells=16, dim=64, fast=True)
-    assert cells(slow) == cells(fast)
+    idx = str(tmp_path / "sq")
+    sim.ivfsq_build_index(emb, idx, n_cells=16, dim=64)
+    bounds = sorted(sim.sq_fit(emb, 64).collect(), key=lambda r: r["pos"])
+    mn, mx = [r["mn"] for r in bounds], [r["mx"] for r in bounds]
+    v64 = F.slice(F.col("embedding").cast("array<double>"), 1, 64)
+    want = sim.lloyd_assign(emb, k=16).join(
+        emb.select("vec_id", sim._sq_encode_expr(v64, mn, mx).alias("codes")), "vec_id"
+    )
+    assert table(stored(idx, "cells"), ["id", "cell", "codes"]) == table(
+        want, ["vec_id", "cluster", "codes"]
+    )
+    assert table(stored(idx, "sq"), ["pos", "mn", "mx"]) == [tuple(r) for r in bounds]
 
 
 @pytest.mark.slow

@@ -346,7 +346,11 @@ def test_flat_rebuild_over_recentered_two_level_index_drops_groups(spark, tmp_pa
 def test_ivfpq_rebuild_crash_cannot_leave_mixed_generation(spark, tmp_path, monkeypatch):
     """An in-place rebuild over a COMPLETE index that crashes mid-build
     must leave an index that FAILS the 'meta.json + codebooks/_SUCCESS'
-    completeness check — never old codebooks + new meta."""
+    completeness check — never old codebooks + new meta.  The new meta
+    is written once every table is staged, so the crash point is the
+    last publish, the sentinel's."""
+    import json
+
     import pytest
     from esper_tv_spark.operators import similarity as sim
 
@@ -356,20 +360,57 @@ def test_ivfpq_rebuild_crash_cannot_leave_mixed_generation(spark, tmp_path, monk
     sentinel = os.path.join(idx, "codebooks", "_SUCCESS")
     assert os.path.exists(sentinel) and os.path.exists(os.path.join(idx, "meta.json"))
 
-    def boom(*a, **kw):
-        raise RuntimeError("simulated mid-build crash")
-
-    monkeypatch.setattr(sim, "lloyd_assign", boom)
+    _crash_at_publish(monkeypatch, "codebooks")
     with pytest.raises(RuntimeError, match="simulated"):
         # a config flip (by_residual) — the dangerous rebuild case
         sim.ivfpq_build_index(emb, idx, n_cells=16, m=8, k=16, dim=64, by_residual=True)
 
     # the old generation was invalidated BEFORE the crash point: the
     # completeness check a probe-or-rebuild caller uses must now fail
+    with open(os.path.join(idx, "meta.json")) as f:
+        assert json.load(f)["by_residual"] is True
     complete = os.path.exists(sentinel) and os.path.exists(
         os.path.join(idx, "meta.json")
     )
     assert not complete
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfsq"])
+def test_build_with_a_bad_vector_publishes_nothing(spark, tmp_path, kind):
+    """A build over a corpus holding a null embedding raises the pass's
+    ValueError before it publishes anything: an index already at the
+    path keeps its tables, meta.json and sentinel, probes the same, and
+    no staged generation is left beside it."""
+    from esper_tv_spark.operators.similarity import ivfsq_build_index, ivfsq_probe_index
+
+    emb = _emb(spark)
+    build, probe = {
+        "ivf": (
+            lambda df, p: ivf_build_index(df, p, n_cells=8),
+            lambda p, qv: ivf_probe_index(spark, p, qv, 10, n_probe=3),
+        ),
+        "ivfsq": (
+            lambda df, p: ivfsq_build_index(df, p, n_cells=8, dim=64),
+            lambda p, qv: ivfsq_probe_index(spark, p, qv, 10, n_probe=3),
+        ),
+    }[kind]
+    idx = str(tmp_path / kind)
+    build(emb.where("vec_id < 200"), idx)
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    want = [tuple(r) for r in probe(idx, qv).collect()]
+    listing = sorted(os.listdir(idx))
+    links = {t: os.readlink(os.path.join(idx, t)) for t in listing if os.path.islink(os.path.join(idx, t))}
+
+    bad = emb.select(
+        "vec_id",
+        F.when(F.col("vec_id") == 250, F.lit(None)).otherwise(F.col("embedding")).alias("embedding"),
+    )
+    with pytest.raises(Exception, match="ValueError: _posting_pass: every vector must hold 64"):
+        build(bad, idx)
+
+    assert sorted(os.listdir(idx)) == listing
+    assert {t: os.readlink(os.path.join(idx, t)) for t in links} == links
+    assert [tuple(r) for r in probe(idx, qv).collect()] == want
 
 
 @pytest.mark.slow
@@ -1097,14 +1138,17 @@ def _expression_rows(spark, vecs, cents_dir):
 
 def _pass_rows(vecs, cents_dir, **kw):
     from esper_tv_spark.operators.similarity import _posting_pass
+    from esper_tv_spark.sources.sidecar import sidecar_rows
 
-    rows = _posting_pass(vecs, cents_dir, **kw).collect()
+    rows = _posting_pass(vecs, sidecar_rows(cents_dir, ["cell", "cv"]), **kw).collect()
     return sorted(tuple(tuple(x) if isinstance(x, list) else x for x in r) for r in rows)
 
 
 def test_spark_round_matches_f_round_near_midpoints(spark):
     """`_spark_round` is F.round bit for bit on doubles a few ulps from a
-    6-dp midpoint, where `_round_half_away`'s scaled floor can differ."""
+    6-dp midpoint, where `_round_half_away`'s scaled floor can differ —
+    and that scaled floor is what DuckDB's round() computes."""
+    import duckdb
     import numpy as np
 
     from esper_tv_spark.operators.similarity import _round_half_away, _spark_round
@@ -1116,6 +1160,14 @@ def test_spark_round_matches_f_round_near_midpoints(spark):
     want = np.array([r[1] for r in sorted(df.select("i", F.round("x", 6)).collect())])
     assert np.array_equal(_spark_round(x, 6), want)
     assert not np.array_equal(_round_half_away(x, 6), want)
+    # DuckDB's round() — the oracles' — is `_round_half_away`'s rule,
+    # not Spark's
+    duck = np.array(
+        duckdb.execute("SELECT list_transform(?::DOUBLE[], v -> round(v, 6))", [x.tolist()])
+        .fetchone()[0]
+    )
+    assert np.array_equal(duck, _round_half_away(x, 6))
+    assert not np.array_equal(duck, want)
 
 
 @pytest.mark.parametrize("n_groups", [None, 4])
@@ -1192,10 +1244,7 @@ def test_posting_pass_raises_on_a_bad_vector(spark, tmp_path, vec, error):
     with a null cell."""
     from esper_tv_spark.operators.similarity import _posting_pass
 
-    cents = str(tmp_path / "centroids")
-    spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])], "cell int, cv array<double>"
-    ).write.parquet(cents)
+    cents = [{"cell": 0, "cv": [1.0, 0.0, 0.0, 0.0]}, {"cell": 1, "cv": [0.0, 1.0, 0.0, 0.0]}]
     vecs = spark.createDataFrame(
         [(0, [0.0, 1.0, 0.0, 0.0]), (1, vec)], "vec_id long, embedding array<float>"
     )
@@ -1231,6 +1280,34 @@ def test_ivf_insert_batch_runs_one_spark_job(spark, tmp_path, monkeypatch, count
     src.mkdir()
     body = _insert_body(
         monkeypatch, spark, ivf_stream_insert, idx, str(src), emb.schema,
+        str(tmp_path / "ckpt"),
+    )
+    batch = emb.where(F.col("vec_id") >= 100)
+    assert count_jobs(lambda: body(batch, 0)) == (None, 1)
+    assert spark.read.parquet(os.path.join(idx, "cells")).count() == emb.count()
+
+
+@pytest.mark.parametrize("variant", ["raw", "residual", "opq"])
+def test_ivfpq_insert_batch_runs_one_spark_job(spark, tmp_path, monkeypatch, count_jobs, variant):
+    """An IVF-PQ micro-batch body runs one Spark job, its write, on a
+    raw, a residual and an OPQ index: centroids, codebooks, meta and
+    rotation are read on the driver, and the rotation, cell, residual
+    and codes come from one pass (the expression chain ran 10)."""
+    from esper_tv_spark.operators.similarity import ivfpq_build_index, opq_train
+    from esper_tv_spark.streaming.ann import ivfpq_stream_insert
+
+    emb = _emb(spark)
+    kw = {
+        "raw": {},
+        "residual": {"by_residual": True},
+        "opq": {"opq_rotation": opq_train(emb, m=8, k=16, dim=64, iters=1, sample_rows=128)},
+    }[variant]
+    idx = str(tmp_path / variant)
+    ivfpq_build_index(emb.where(F.col("vec_id") < 100), idx, n_cells=16, m=8, k=16, dim=64, **kw)
+    src = tmp_path / "src"
+    src.mkdir()
+    body = _insert_body(
+        monkeypatch, spark, ivfpq_stream_insert, idx, str(src), emb.schema,
         str(tmp_path / "ckpt"),
     )
     batch = emb.where(F.col("vec_id") >= 100)

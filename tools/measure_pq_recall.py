@@ -106,7 +106,7 @@ def main() -> int:
         t0 = time.time()
         sim.ivfpq_build_index(
             df, idx, n_cells=n_cells, m=M, k=K, dim=dim,
-            coarse_centroids=cdf, fast=True, **kw,
+            coarse_centroids=cdf, **kw,
         )
         build_s = time.time() - t0
         hits = 0
@@ -135,7 +135,7 @@ def main() -> int:
         t0 = time.time()
         # rank-based coarse here would differ from cdf's KMeans cells;
         # SQ8's build takes no coarse_centroids param — rebuild pattern
-        sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim, fast=True)
+        sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim)
         build_s = time.time() - t0
         hits = 0
         t0 = time.time()

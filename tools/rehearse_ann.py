@@ -115,12 +115,12 @@ def step_hier2m(spark, emit):
     flat_build = hier_build = -1.0  # -1 = reused a prior run's build
     if not done(flat_idx):
         t0 = time.time()
-        sim.ivfsq_build_index(df, flat_idx, n_cells=n_cells, dim=dim, fast=True)
+        sim.ivfsq_build_index(df, flat_idx, n_cells=n_cells, dim=dim)
         flat_build = time.time() - t0
     if not done(hier_idx):
         t0 = time.time()
         sim.ivfsq_build_index(
-            df, hier_idx, n_cells=n_cells, dim=dim, fast=True, n_groups=n_groups
+            df, hier_idx, n_cells=n_cells, dim=dim, n_groups=n_groups
         )
         hier_build = time.time() - t0
 
@@ -272,7 +272,7 @@ def step_autoladder(spark, emit):
         t0 = time.time()
         sim.ivfpq_build_index(
             df, idx, n_cells=n_cells, m=m_sub, k=k_codes, dim=dim,
-            coarse_centroids=cdf, fast=True, **kw,
+            coarse_centroids=cdf, **kw,
         )
         build_s = time.time() - t0
         recall, wall = batch_recall(sim.ivfpq_knn_join_index, idx)
@@ -285,7 +285,7 @@ def step_autoladder(spark, emit):
 
     idx = os.path.join(C2M, "auto_ivfsq")
     t0 = time.time()
-    sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim, fast=True)
+    sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim)
     build_s = time.time() - t0
     recall, wall = batch_recall(sim.ivfsq_knn_join_index, idx)
     emit({"step": "autoladder_row", "variant": "sq8",
@@ -323,7 +323,7 @@ def step_prunedassign(spark, emit):
         exact_idx = os.path.join(C2M, "pa_exact")
         t0 = time.time()
         sim.ivfsq_build_index(
-            df, exact_idx, n_cells=n_cells, dim=dim, fast=True, n_groups=n_groups
+            df, exact_idx, n_cells=n_cells, dim=dim, n_groups=n_groups
         )
         exact_s = time.time() - t0
     exact_cells = cells_of(exact_idx)
@@ -350,7 +350,7 @@ def step_prunedassign(spark, emit):
         idx = os.path.join(C2M, f"pa_g{g_probe}")
         t0 = time.time()
         sim.ivfsq_build_index(
-            df, idx, n_cells=n_cells, dim=dim, fast=True, n_groups=n_groups,
+            df, idx, n_cells=n_cells, dim=dim, n_groups=n_groups,
             assign_via_groups=True, assign_g_probe=g_probe,
         )
         wall = time.time() - t0
@@ -385,6 +385,7 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
         ivf_build_index,
         ivf_knn_join_index,
     )
+    from esper_tv_spark.sources.sidecar import sidecar_rows
     from esper_tv_spark.streaming.ann import (
         compact_posting_lists,
         posting_fragment_census,
@@ -402,7 +403,7 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
     shutil.rmtree(idx, ignore_errors=True)
 
     t0 = time.time()
-    ivf_build_index(base, idx, n_cells=32, fast=True)
+    ivf_build_index(base, idx, n_cells=32)
     build_s = time.time() - t0
 
     qrows = emb.orderBy(F.col("vec_id").asc()).limit(8).collect()
@@ -437,7 +438,10 @@ def step_maint(spark, emit, sf_dir=None, tag="sf1"):
     for i in range(8):
         batch = tail.where(F.col("vec_id") % 8 == i)
         (
-            _posting_pass(batch, os.path.join(idx, "centroids"), "vec_id", "embedding", 6)
+            _posting_pass(
+                batch, sidecar_rows(os.path.join(idx, "centroids"), ["cell", "cv"]),
+                "vec_id", "embedding", 6,
+            )
             .write.mode("append")
             .partitionBy("cell")
             .parquet(os.path.join(idx, "cells"))
@@ -563,7 +567,7 @@ def step_trainedgroups(spark, emit):
     ):
         if not done(idx):
             t0 = time.time()
-            sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim, fast=True, **kw)
+            sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim, **kw)
             builds[os.path.basename(idx)] = round(time.time() - t0, 1)
 
     stride = n // 8
@@ -655,7 +659,7 @@ def step_filteredann(spark, emit):
     idx = os.path.join(C2M, "ivfsq_flat")
     if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
         t0 = time.time()
-        sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim, fast=True)
+        sim.ivfsq_build_index(df, idx, n_cells=n_cells, dim=dim)
         emit({"step": "filteredann_build", "build_s": round(time.time() - t0, 1)})
 
     sel_mod, sel_rem = 10, 7
@@ -924,7 +928,7 @@ def step_sortedlayout(spark, emit):
         if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
             t0 = time.time()
             sim.ivfsq_build_index(
-                df, idx, n_cells=n_cells, dim=dim, fast=True, layout=layout
+                df, idx, n_cells=n_cells, dim=dim, layout=layout
             )
             walls[f"build_{name}_s"] = round(time.time() - t0, 1)
 
@@ -1085,7 +1089,7 @@ def step_hier20m(spark, emit):
         if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
             t0 = time.time()
             sim.ivfsq_build_index(
-                df, idx, n_cells=n_cells, dim=dim, fast=True,
+                df, idx, n_cells=n_cells, dim=dim,
                 n_groups=n_groups, assign_via_groups=True, assign_g_probe=2,
             )
             emit(
