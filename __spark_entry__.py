@@ -2640,9 +2640,9 @@ def _hier_ivf_index_dir(
 ) -> str:
     """Build (once per dataset fingerprint) the TWO-LEVEL deterministic
     IVF index: same frozen-store pattern as `_ivf_index_dir`, with the
-    coarse quantizer grouped (similarity._write_centroids).  The
-    completeness sentinel stays centroids/_SUCCESS — groups/ is written
-    FIRST, so the sentinel implies a complete two-level layout.
+    coarse quantizer grouped (similarity._centroid_tables).  The
+    completeness sentinel stays centroids/_SUCCESS — groups/ is
+    published FIRST, so the sentinel implies a complete two-level layout.
     `train_iters>0` trains the level-1 group centers (lloyd_train) —
     the q103 layout; 0 keeps the rank-init grouping (q100/q101)."""
     import tempfile
@@ -3671,17 +3671,27 @@ ORDER BY rrf_score DESC, doc_id ASC LIMIT 20
 
 
 def q81_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization code census with deterministic codebooks
-    (similarity.pq_assign_deterministic): per (subspace, code), how many
-    vectors quantize to that centroid — the encode step of the PQ ANN
-    path, hash-checked end to end (the KMeans-trained PQ with Arrow
-    encode stays the data-adaptive variant, recall-tested in pytest)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    # dim pinned like the oracle's slices (Q81_SQL hardcodes 8-wide
-    # subspaces of a 64-dim vector) — no .first() sniff job per call
-    codes = similarity.pq_assign_deterministic(emb, m=8, k=16, dim=64, fast=True)
+    """Product-quantization code census with deterministic codebooks:
+    per (subspace, code), how many vectors quantize to that centroid,
+    read straight from the persisted one-cell IVF-PQ index (the plain PQ
+    store q88 probes) — q87's census-from-the-index pattern applied to
+    the PQ codes.  Each stored rank maps back to its centroid id through
+    `codebooks/` (m*k rows, broadcast), so the census is one aggregation
+    over the codes.  The oracle replays the encode
+    (`similarity.pq_assign_deterministic`'s rule) from the base table, so
+    a single wrong stored code fails the gate (the KMeans-trained PQ
+    with Arrow encode stays the data-adaptive variant, recall-tested in
+    pytest)."""
+    from esper_tv_spark.sources.sidecar import declared_parquet
+
+    idx = _ivfpq_index_dir(spark, sf_dir, n_cells=1)
+    ranks = declared_parquet(spark, os.path.join(idx, "cells")).select(
+        F.col("id").alias("vec_id"), F.posexplode("codes").alias("subspace", "rk")
+    )
+    book = declared_parquet(spark, os.path.join(idx, "codebooks"))
     return (
-        codes.groupBy("subspace", "code")
+        ranks.join(F.broadcast(book.select("subspace", "rk", "code")), ["subspace", "rk"])
+        .groupBy("subspace", "code")
         .agg(F.count(F.lit(1)).alias("n_vecs"), F.sum("vec_id").alias("id_sum"))
         .orderBy("subspace", "code")
     )
@@ -3716,47 +3726,24 @@ FROM a WHERE rn = 1 GROUP BY subspace, code ORDER BY subspace, code
 """
 
 
-def _pq_store_dir(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16) -> str:
-    """Build (once per dataset fingerprint) and return the persisted
-    deterministic PQ store for `sf_dir`'s embeddings — same stat-based
-    fingerprint + stale-sibling eviction stance as `_ivf_index_dir`."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_pq_store_{sf_tag}_{tag}_m{m}k{k}"
-    )
-    if not os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS")):
-        _evict_stale_siblings(f"esper_tv_pq_store_{sf_tag}_", keep=idx)
-        # dim pinned like Q88_SQL's hardcoded 8-wide subspace slices (the
-        # q81 stance): both engines quantize the FIRST 64 dims whatever
-        # the corpus width, so the oracle replays cross-scale unchanged
-        similarity.pq_build_store(
-            _t(spark, sf_dir, "embeddings"), idx, m=m, k=k, dim=64
-        )
-    return idx
-
-
 def q88_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance top-k over a PERSISTED store
-    (similarity.pq_build_store / pq_probe_store): the deterministic
-    encode (q81's hash-proven codes) is computed once per dataset
-    fingerprint and written as (id, packed code ranks) + the m*k
-    codebooks; each probe builds the ADC lookup table from the stored
-    codebooks (one tiny driver job over m*k rows), embeds it as a
-    literal, and scores every code row with pure BIGINT expressions —
-    scan -> project -> TakeOrdered, zero joins (plan asserted in
-    tests/test_plans.py).  The oracle replays encode + LUT + scaled-int
-    ADC sum end-to-end from the base table, so a single wrong stored
-    code or LUT cell fails the gate.  Completes the build-once family:
-    SRP (q51), IVF (q80/q87), PQ (q81/q88) — reference pattern
-    face_embeddings.py:74-96 (frozen store, repeated queries)."""
+    """PQ asymmetric-distance top-k over a PERSISTED store: the plain PQ
+    store is a one-cell IVF-PQ index (IVFADC with one coarse cell,
+    similarity.ivfpq_build_index / ivfpq_probe_index), built once per
+    dataset fingerprint — (id, packed code ranks) posting rows + the m*k
+    codebooks.  Each probe builds the ADC lookup table from the stored
+    codebooks on the driver, embeds it as a literal, and scores every
+    code row with pure BIGINT expressions — scan -> project ->
+    TakeOrdered, zero joins (plan asserted in tests/test_plans.py).  The
+    oracle replays encode + LUT + scaled-int ADC sum end-to-end from the
+    base table, so a single wrong stored code or LUT cell fails the
+    gate.  Completes the build-once family: SRP (q51), IVF (q80/q87), PQ
+    (q81/q88) — reference pattern face_embeddings.py:74-96 (frozen
+    store, repeated queries)."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
-    store = _pq_store_dir(spark, sf_dir, m=8, k=16)
-    return similarity.pq_probe_store(spark, store, qv, 10)
+    idx = _ivfpq_index_dir(spark, sf_dir, n_cells=1)
+    return similarity.ivfpq_probe_index(spark, idx, qv, 10, n_probe=1)
 
 
 Q88_SQL = """
@@ -3811,7 +3798,9 @@ def _ivfpq_index_dir(
 ) -> str:
     """Build (once per dataset fingerprint) and return the persisted
     IVF-PQ index for `sf_dir`'s embeddings — same stat-based fingerprint
-    + stale-sibling eviction stance as `_ivf_index_dir`/`_pq_store_dir`."""
+    + stale-sibling eviction stance as `_hier_ivf_index_dir`: every config
+    of the current data generation survives (q88's one-cell store and
+    q92/q97's 16-cell index), only stale generations go."""
     import tempfile
 
     src = os.path.join(sf_dir, "embeddings.parquet")
@@ -3824,7 +3813,12 @@ def _ivfpq_index_dir(
         os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))
         and os.path.exists(os.path.join(idx, "meta.json"))
     ):
-        _evict_stale_siblings(f"esper_tv_ivfpq_idx_{sf_tag}_", keep=idx)
+        _evict_stale_siblings(
+            f"esper_tv_ivfpq_idx_{sf_tag}_",
+            keep=os.path.join(
+                tempfile.gettempdir(), f"esper_tv_ivfpq_idx_{sf_tag}_{tag}"
+            ),
+        )
         # dim pinned like Q88_SQL's 8-wide subspace slices (the q81/q88
         # stance): both engines quantize the FIRST 64 dims whatever the
         # corpus width, so the oracle replays cross-scale unchanged

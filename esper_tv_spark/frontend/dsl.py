@@ -410,10 +410,11 @@ def run_query(
                 raise DSLError("'n_probe_groups' must be a positive int")
             # kind WHITELIST — fail closed on anything that is not a
             # probeable ivf/ivfpq/ivfsq store.  Defaulting unknown metas
-            # to ivfpq would silently mis-probe e.g. a pq_build_store
-            # (q88 layout) catalog entry; the catalog is server-owned so
-            # this is operator error, not injection — but it should be a
-            # loud error, same stance as every other rejection here.
+            # to ivfpq would silently mis-probe e.g. a legacy PQ store
+            # (codes/ + codebooks/, no meta.json); the catalog is
+            # server-owned so this is operator error, not injection — but
+            # it should be a loud error, same stance as every other
+            # rejection here.
             meta_path = _os.path.join(path, "meta.json")
             if _os.path.exists(meta_path):
                 with open(meta_path) as f:

@@ -1350,18 +1350,18 @@ def pq_assign_deterministic(
     vec_col: str = "embedding",
     round_digits: int = 6,
     dim: int | None = None,
-    fast: bool = False,
 ) -> DataFrame:
     """Product-quantization ENCODE with deterministic codebooks — the
     engine-portable twin of pq_fit/pq_encode (whose KMeans codebooks are
     iterative and whose Arrow encode uses BLAS summation): subspace j's
-    codebook is the j-th slice of the k smallest-id vectors (selected by
-    rank — orderBy + limit — not an `id < k` predicate, which under-fills
-    the codebook whenever ids are sparse or offset; rounded), and
-    each vector's code_j is the argmin rounded squared distance (ties to
-    the smaller centroid id). Fully relational — explode subspaces, join
-    the k-row codebook per subspace, one argmin window — so a SQL oracle
-    replays the code assignment bit-for-bit.
+    codebook is the j-th slice of the k smallest-id vectors
+    (`_rank_codebooks`), and each vector's code_j is the argmin rounded
+    squared distance (ties to the smaller centroid id). Fully relational
+    — explode subspaces, join the k-row codebook per subspace, one
+    argmin window — so a SQL oracle replays the code assignment
+    bit-for-bit.  It is the expression reference for the PQ codes an
+    IVF-PQ build stores (`_posting_pass`; a one-cell index is the plain
+    PQ store q81 and q88 read).
 
     Output: (id, subspace, code), m rows per vector. Scale shape: the
     codebook side is m*k rows (broadcast); the window partitions are
@@ -1392,96 +1392,16 @@ def pq_assign_deterministic(
             )
         ).alias("__s"),
     ).select(id_col, F.col("__s.subspace").alias("subspace"), F.col("__s.sv").alias("sv"))
-    cents = (
-        vecs.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .select(
-            F.col(id_col).alias("code"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("subspace"),
-                            F.transform(
-                                F.slice(F.col("__v"), j * sub + 1, sub),
-                                lambda x: F.round(x, round_digits),
-                            ).alias("sc"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("__c"),
-        )
-        .select("code", F.col("__c.subspace").alias("subspace"), F.col("__c.sc").alias("sc"))
-    )
-    # dense per-subspace code rank for the packed argmin (see lloyd_assign:
-    # a struct-min buffer forces SortAggregate over the whole cross
-    # product; the packed long hash-aggregates inside the codegen stage)
-    rk = F.row_number().over(
-        Window.partitionBy("subspace").orderBy(F.col("code").asc())
-    ) - F.lit(1)
-    if fast:
-        # BLAS serving rung: the argmin over (row, subspace, code) runs
-        # as pq_encode_with_codebooks_blas' per-batch GEMM (same rounded
-        # d2, same smaller-code tie via the dense rank — pytest pins the
-        # twins), then the dense ranks map back to raw centroid ids via
-        # an m x k literal (the codebook is ONE 128-row collect).
-        cb_rows = cents.withColumn("rk", rk).select(
-            "subspace", "rk", "code", "sc"
-        ).collect()
-        if cb_rows:
-            cb = df.sparkSession.createDataFrame(
-                [(int(r["subspace"]), int(r["rk"]), r["sc"]) for r in cb_rows],
-                "subspace int, rk int, sc array<double>",
-            )
-            codes_df = pq_encode_with_codebooks_blas(
-                vecs.select(F.col(id_col), F.col("__v")),
-                cb,
-                id_col=id_col,
-                vec_col="__v",
-                round_digits=round_digits,
-            )
-            # per-subspace rank->code lists built from the rows actually
-            # present (a ragged codebook — fewer distinct seed vectors in
-            # one subspace — degrades like the expression path instead of
-            # KeyError'ing on an assumed-uniform count)
-            code_by = {}
-            for r in cb_rows:
-                code_by[(int(r["subspace"]), int(r["rk"]))] = r["code"]
-            code_lit = F.array(
-                *[
-                    F.array(
-                        *[
-                            F.lit(code_by[(j, rr)]).cast("long")
-                            for rr in sorted(
-                                rk2 for (j2, rk2) in code_by if j2 == j
-                            )
-                        ]
-                    )
-                    for j in range(m)
-                ]
-            )
-            # the BLAS encode's mapInPandas schema fixes id to long; cast
-            # back to the INPUT id column's type (the expression twin
-            # preserves it)
-            id_type = df.schema[id_col].dataType
-            return codes_df.select(
-                F.col("id").cast(id_type).alias(id_col),
-                F.posexplode("codes").alias("subspace", "__rk"),
-            ).select(
-                id_col,
-                "subspace",
-                F.element_at(
-                    F.element_at(code_lit, F.col("subspace") + 1),
-                    F.col("__rk") + 1,
-                ).alias("code"),
-            )
-        # empty corpus: fall through to the expression plan (returns empty)
     # per-side norms hoisted out of the (row, code) cross product — one
-    # dot per scored row instead of three, identical rounded d2
+    # dot per scored row instead of three, identical rounded d2; the
+    # dense per-subspace rank breaks ties in the packed argmin (see
+    # lloyd_assign: a struct-min buffer forces SortAggregate over the
+    # whole cross product; the packed long hash-aggregates inside the
+    # codegen stage)
     subs = subs.withColumn("__ss", dot(F.col("sv"), F.col("sv")))
-    cents = cents.withColumn("__cc", dot(F.col("sc"), F.col("sc")))
-    cents = cents.withColumn("__rk", rk)
+    cents = _rank_codebooks(df, m, sub, k, id_col, vec_col, round_digits).select(
+        "subspace", "code", "sc", F.col("rk").alias("__rk")
+    ).withColumn("__cc", dot(F.col("sc"), F.col("sc")))
     d2 = F.round(
         F.col("__ss") - F.lit(2.0) * dot(F.col("sv"), F.col("sc")) + F.col("__cc"),
         round_digits,
@@ -1496,133 +1416,6 @@ def pq_assign_deterministic(
     )
 
 
-def pq_build_store(
-    df: DataFrame,
-    path: str,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    dim: int | None = None,
-) -> None:
-    """Persist the deterministic PQ store: encode once, probe many — the
-    PQ twin of `ivf_build_index` (and the frozen-store pattern of the
-    reference's repeated embedding queries, face_embeddings.py:74-96).
-    q81 proves the ENCODE; this makes the encode a build-once artifact so
-    every subsequent ANN query pays only an ADC scan over the codes.
-
-    Writes two parquet tables under `path`:
-
-    - ``codes/``      (id, codes array<int>) — one row per vector, the m
-      per-subspace codebook RANKS in subspace order (dense 0..k-1 rank,
-      not the raw centroid id: ranks index straight into the probe's
-      literal lookup table).  n rows x m small ints — the 100 TB story:
-      the scannable representation is ~dim*4/m x smaller than the
-      vectors, and an ADC probe never touches the vector table.
-    - ``codebooks/``  (subspace, rk, code, sc array<double>) — the m*k
-      rank-based rounded sub-centroids (pq_assign_deterministic's
-      codebook: subspace slices of the k smallest-id vectors).
-
-    Everything stored is the output of deterministic relational plans and
-    parquet doubles round-trip binary-exact, so probe results are
-    bit-identical to an inline encode+ADC replay (parity-tested)."""
-    import os
-
-    if dim is None:
-        raise ValueError(
-            "pq_build_store: dim is required (same fail-closed contract as "
-            "pq_assign_deterministic — no schema metadata carries array "
-            "length; probe the parquet footer instead)"
-        )
-    packed, cents = _pq_packed_codes(
-        df, m=m, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits, dim=dim,
-    )
-    packed.write.mode("overwrite").parquet(os.path.join(path, "codes"))
-    cents.select("subspace", "rk", "code", "sc").write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
-    )
-
-
-def _pq_packed_codes(
-    df: DataFrame,
-    m: int,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    round_digits: int,
-    dim: int,
-) -> tuple[DataFrame, DataFrame]:
-    """PQ encode shared by pq_build_store and ivfpq_build_index: returns
-    (packed, cents) where `packed` is (id, codes array<int>) — the m
-    per-subspace codebook RANKS in subspace order — and `cents` is the
-    m*k rank-based rounded codebook (subspace, rk, code, sc)."""
-    sub = dim // m
-    codes = pq_assign_deterministic(
-        df, m=m, k=k, id_col=id_col, vec_col=vec_col,
-        round_digits=round_digits, dim=dim,
-    )
-    cents = _rank_codebooks(df, m, sub, k, id_col, vec_col, round_digits)
-    # code (= centroid vec_id) -> dense rank, broadcast m*k rows; pack the
-    # m ranks per vector in subspace order (array_sort on the struct is
-    # deterministic: subspace is the leading field)
-    rank_map = cents.select("subspace", "code", "rk")
-    packed = (
-        codes.join(F.broadcast(rank_map), ["subspace", "code"])
-        .groupBy(F.col(id_col).alias("id"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "rk"))),
-                lambda s: s["rk"].cast("int"),
-            ).alias("codes")
-        )
-    )
-    return packed, cents
-
-
-def pq_probe_store(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k_top: int,
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Probe a `pq_build_store` store with asymmetric distance computation
-    (ADC): build the m x k lookup table of rounded query-to-subcentroid
-    squared distances from the persisted codebooks (read on the driver,
-    one einsum over m*k rows — `_adc_lut_values_blas`, the PQ analogue
-    of the IVF probe's centroid ranking), embed it as a LITERAL nested
-    array, and score every stored code row
-    with a pure expression — zero joins, zero wide shuffles: scan ->
-    project -> TakeOrdered (asserted in tests/test_plans.py).
-
-    Determinism across engines: each LUT cell is round(d2, round_digits)
-    scaled to an exact integer (x1e6 for round_digits=6), so the m-term
-    sum is BIGINT arithmetic — order-free and bit-identical in any engine
-    — and only the final /scale division returns to double.  Output:
-    (id_col, adist), ascending approximate distance, ties to smaller id."""
-    import os
-
-    scale = 10 ** round_digits
-    lut_col = _lut_literal(
-        _adc_lut_values_blas(_codebook_rows(path), [list(query_vec)], round_digits)[0]
-    )
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    ssum = F.aggregate(
-        F.zip_with(lut_col, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    adist = F.round(ssum / F.lit(float(scale)), round_digits)
-    return (
-        codes.select(F.col("id").alias(id_col), adist.alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col).asc())
-        .limit(k_top)
-    )
-
-
 def _rank_codebooks(
     df: DataFrame,
     m: int,
@@ -1633,9 +1426,11 @@ def _rank_codebooks(
     round_digits: int,
 ) -> DataFrame:
     """The m*k rank-based rounded sub-centroid codebook (subspace, rk,
-    code, sc): subspace slices of `df`'s k smallest-id vectors — shared
-    by the PQ store, the IVF-PQ raw build, and the residual build (which
-    feeds it residual vectors with the coarse-centroid ids excluded)."""
+    code, sc): subspace slices of `df`'s k smallest-id vectors, the
+    codebook an IVF-PQ build seeds on the driver, as an expression.
+    `pq_assign_deterministic` encodes against it, and the tests' residual
+    reference feeds it residual vectors with the coarse-centroid ids
+    excluded."""
     vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__cbv"))
     return (
         vecs.orderBy(F.col(id_col).asc())
@@ -1680,9 +1475,10 @@ def pq_encode_with_codebooks(
     round_digits: int = 6,
 ) -> DataFrame:
     """Encode vectors against a FROZEN persisted codebook table
-    (subspace, rk, code, sc) — the streaming-insert twin of
-    _pq_packed_codes: geometry (m, sub) comes from the codebooks (one
-    driver action over m*k rows), the argmin is the same packed
+    (subspace, rk, code, sc) — the expression reference for
+    `_posting_pass`'s PQ mode, which every IVF-PQ build and stream
+    insert encodes through: geometry (m, sub) comes from the codebooks
+    (one driver action over m*k rows), the argmin is the same packed
     map-side min_by as pq_assign_deterministic (rounded d2, ties to the
     smaller centroid id via the dense rank), so encoding a tail of the
     corpus against the stored codebooks is bit-identical to rebuilding
@@ -1729,63 +1525,6 @@ def pq_encode_with_codebooks(
             lambda s: s["rk"].cast("int"),
         ).alias("codes")
     )
-
-
-def pq_encode_with_codebooks_blas(
-    df: DataFrame,
-    cb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """PRODUCTION-scale twin of `pq_encode_with_codebooks`: encode against
-    a FROZEN codebook table with one float64 GEMM per (batch, subspace)
-    instead of per-row interpreted array folds.  Same tie rule — rounded
-    d2 (`_round_half_away`), argmin first occurrence over codebooks
-    sorted by rk = smallest rank — so results agree with the expression
-    path except where a pre-round last-ulp difference (BLAS vs
-    sequential summation) or the rounding rule (`_spark_round`) lands on
-    a rounding boundary (pytest asserts exact agreement on the test
-    corpora).  Why it exists: the interpreted encode costs ~50-100us per
-    (row, subspace, code) triple.  It serves `pq_assign_deterministic`'s
-    `fast=True` path; the IVF-PQ index encodes in `_posting_pass`.
-
-    Output: (id, codes array<int>) — identical shape to the expression
-    twin."""
-    import numpy as np
-
-    rows = cb.select("subspace", "rk", "sc").collect()
-    m = max(int(r["subspace"]) for r in rows) + 1
-    kk = max(int(r["rk"]) for r in rows) + 1
-    sub = len(rows[0]["sc"])
-    mats = np.zeros((m, kk, sub), dtype=np.float64)
-    for r in rows:
-        mats[int(r["subspace"]), int(r["rk"])] = [float(x) for x in r["sc"]]
-    bc = df.sparkSession.sparkContext.broadcast(mats)
-
-    def encode(batches):
-        import pandas as pd
-
-        cbm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                s = x[:, j * sub : (j + 1) * sub]
-                cj = cbm[j]
-                d2 = _round_half_away(
-                    (s * s).sum(axis=1)[:, None]
-                    - 2.0 * (s @ cj.T)
-                    + (cj * cj).sum(axis=1)[None, :],
-                    round_digits,
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame({"id": pdf[id_col], "codes": [c.tolist() for c in codes]})
-
-    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    return vecs.mapInPandas(encode, schema="id long, codes array<int>")
 
 
 def _adc_lut_values(
@@ -1845,8 +1584,8 @@ def _lut_literal(vals: list[list[int]]):
 
 
 def _codebook_rows(path: str) -> "list[dict]":
-    """A PQ store's or IVF-PQ index's codebook rows (subspace, rk, sc),
-    read on the driver (`sidecar_rows`)."""
+    """An IVF-PQ index's codebook rows (subspace, rk, sc), read on the
+    driver (`sidecar_rows`)."""
     import os
 
     return sidecar_rows(os.path.join(path, "codebooks"), ["subspace", "rk", "sc"])
@@ -2100,7 +1839,9 @@ def ivfpq_build_index(
 
     - ``cells/``      (id, codes array<int>) PARTITIONED BY cell — the
       deterministic Lloyd cell (ivf_build_index's assignment) carrying
-      pq_build_store's packed codebook ranks;
+      the m per-subspace codebook RANKS in subspace order (dense 0..k-1,
+      not the raw centroid id: ranks index straight into the probe's
+      literal lookup table);
     - ``centroids/``  (cell, cv) — the n_cells rank-based rounded coarse
       centroids the probe ranks;
     - ``codebooks/``  (subspace, rk, code, sc) — the m*k PQ sub-centroids
@@ -2109,6 +1850,11 @@ def ivfpq_build_index(
     Build cost: one seed collect and one pass over the corpus (coarse
     assignment and PQ encode together), paid once per corpus (the
     build/probe split of q87/q88, fused).
+
+    `n_cells=1` is the plain PQ store (IVFADC with one coarse cell):
+    every vector lands in the one cell and the stored codes are
+    `pq_assign_deterministic`'s, so q81's code census and q88's ADC
+    probe (`n_probe=1`) read a one-cell index.
 
     `by_residual=True` is the FAISS-default IVFADC refinement: the PQ
     quantizes the RESIDUAL r = v - centroid[cell] instead of the raw
@@ -2165,7 +1911,7 @@ def ivfpq_build_index(
     if dim is None:
         raise ValueError(
             "ivfpq_build_index: dim is required (same fail-closed contract "
-            "as pq_build_store — probe the parquet footer instead)"
+            "as pq_assign_deterministic — probe the parquet footer instead)"
         )
     n_cells = _resolve_n_cells(df, n_cells)
     n_groups = _resolve_n_groups(n_cells, n_groups, assign_via_groups)

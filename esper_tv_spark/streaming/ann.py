@@ -54,7 +54,7 @@ def _require_dirs_layout(index_path: str, op: str) -> None:
     """Streaming maintenance (insert fragments / per-cell compaction /
     recenter's per-cell moves / fragment census) operates on the
     hive-partitioned `cells/` layout.  The SORTED object-store layout
-    (`cells_sorted/`, similarity._write_posting) is the frozen serving
+    (`cells_sorted/`, similarity._posting_write) is the frozen serving
     layout — its corpora are REBUILT, not streamed into — so every
     maintenance op fails closed with a pointer instead of silently
     appending rows the sorted reader would still serve but the dir-based

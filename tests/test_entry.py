@@ -59,3 +59,22 @@ def test_oracles_are_valid_duckdb():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     for name, sql in m.oracle_sql().items():
         con.execute(f"SELECT * FROM ({sql}) LIMIT 1")  # parses + binds
+
+
+def test_ivfpq_index_dir_keeps_sibling_configs(spark, tmp_path, monkeypatch):
+    """q88's one-cell IVF-PQ store and q92/q97's 16-cell index share one
+    data generation: building either keeps the other, and a cached
+    config is served as it is (no rebuild, so its sentinel's mtime
+    stays put)."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    one = m._ivfpq_index_dir(spark, SF, n_cells=1)
+    sentinel = os.path.join(one, "codebooks", "_SUCCESS")
+    built = os.stat(sentinel).st_mtime_ns
+    sixteen = m._ivfpq_index_dir(spark, SF, n_cells=16)
+    assert sixteen != one
+    assert m._ivfpq_index_dir(spark, SF, n_cells=1) == one
+    assert os.stat(sentinel).st_mtime_ns == built
+    for idx in (one, sixteen):
+        assert os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS")), idx

@@ -714,37 +714,53 @@ def test_dsl_fuzz_text_queries(spark, catalog):
 
 def test_dsl_ann_probe_kind_whitelist(spark, catalog, tmp_path):
     """Stores that are not probeable ivf/ivfpq/ivfsq indexes are
-    REJECTED, not mis-probed: a pq_build_store layout (q88 — codes/ +
+    REJECTED, not mis-probed: a legacy PQ store (the layout q88 wrote
+    before its store became a one-cell IVF-PQ index — codes/ +
     codebooks/, no meta.json), a meta.json with an unknown kind, and an
     empty directory all raise DSLError (r8 defaulted unknown metas to
-    ivfpq, which would score a pq store's centroids as posting lists)."""
+    ivfpq, which would score a pq store's centroids as posting lists).
+    The store q88 reads now, a one-cell IVF-PQ index, probes through the
+    DSL exactly as the library's n_probe=1 probe."""
     import json
     import os
 
     import pytest
 
-    from esper_tv_spark.operators.similarity import pq_build_store
+    from esper_tv_spark.operators.similarity import ivfpq_build_index, ivfpq_probe_index
 
-    emb = catalog["embeddings"]
     pq_path = str(tmp_path / "pqstore")
-    pq_build_store(emb, pq_path, m=8, k=16, dim=64)
+    codes = spark.createDataFrame([(0, [3, 1]), (1, [0, 2])], "id long, codes array<int>")
+    codes.write.parquet(os.path.join(pq_path, "codes"))
+    book = spark.createDataFrame(
+        [(0, 0, 0, [0.5]), (1, 0, 0, [0.25])],
+        "subspace int, rk int, code long, sc array<double>",
+    )
+    book.write.parquet(os.path.join(pq_path, "codebooks"))
     weird = str(tmp_path / "weird")
     os.makedirs(weird)
     with open(os.path.join(weird, "meta.json"), "w") as f:
         json.dump({"kind": "hnsw", "dim": 64}, f)
     empty = str(tmp_path / "empty")
     os.makedirs(empty)
-    cat = {"pq": pq_path, "weird": weird, "empty": empty}
-    for name in cat:
+    one_cell = str(tmp_path / "one_cell")
+    emb = catalog["embeddings"]
+    ivfpq_build_index(emb, one_cell, n_cells=1, m=8, k=16, dim=64)
+    cat = {"pq": pq_path, "weird": weird, "empty": empty, "one_cell": one_cell}
+
+    def probe(name):
+        spec = {
+            "table": "embeddings",
+            "similarity": {"op": "ann_probe", "index": name, "query_id": 0, "k": 3},
+        }
+        return run_query(catalog, spec, index_catalog=cat)
+
+    for name in ("pq", "weird", "empty"):
         with pytest.raises(DSLError, match="not a probeable"):
-            run_query(
-                catalog,
-                {
-                    "table": "embeddings",
-                    "similarity": {"op": "ann_probe", "index": name, "query_id": 0, "k": 3},
-                },
-                index_catalog=cat,
-            )
+            probe(name)
+    q = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").head()[0]]
+    want = [tuple(r) for r in ivfpq_probe_index(spark, one_cell, q, 3, n_probe=1).collect()]
+    assert [tuple(r) for r in probe("one_cell").collect()] == want
+    assert len(want) == 3
 
 
 def test_dsl_ann_probe_batch_missing_and_dup_ids(spark, catalog, tmp_path):

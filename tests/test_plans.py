@@ -154,9 +154,10 @@ def test_ivf_probe_index_matches_inline(spark, tmp_path):
 
 
 def test_q88_pq_probe_is_joinless_scan(spark):
-    """The persisted PQ store's ADC probe: the LUT is a literal nested
-    array, so the scoring plan is scan -> project -> TakeOrdered — NO
-    join of any kind and zero wide shuffles beyond the TakeOrdered."""
+    """The persisted PQ store's ADC probe (a one-cell IVF-PQ index): the
+    LUT is a literal nested array, so the scoring plan is scan ->
+    project -> TakeOrdered — NO join of any kind and zero wide shuffles
+    beyond the TakeOrdered."""
     df = m.queries()["q88_pq_adc_topk"](spark, SF)
     plan = physical_plan(df)
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
@@ -164,26 +165,27 @@ def test_q88_pq_probe_is_joinless_scan(spark):
 
 
 def test_pq_probe_store_matches_inline_adc(spark, tmp_path):
-    """Persisted-store ADC probe returns bit-identical results to an
-    inline encode + scaled-int ADC replay built from
-    pq_assign_deterministic (parquet round-trip exact; BIGINT sum is
-    order-free so the join-based replay can't drift)."""
+    """The persisted PQ store — a one-cell IVF-PQ index probed at
+    n_probe=1 — returns bit-identical results to an inline encode +
+    scaled-int ADC replay built from pq_assign_deterministic (parquet
+    round-trip exact; BIGINT sum is order-free so the join-based replay
+    can't drift)."""
     from pyspark.sql import functions as F
 
     from esper_tv_spark.operators.similarity import (
         dot,
+        ivfpq_build_index,
+        ivfpq_probe_index,
         lit_vector,
         pq_assign_deterministic,
-        pq_build_store,
-        pq_probe_store,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     dim, msub, kcb = 64, 8, 16
     q = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
     store = str(tmp_path / "pq")
-    pq_build_store(emb, store, m=msub, k=kcb, dim=dim)
-    got = [tuple(r) for r in pq_probe_store(spark, store, q, 10).collect()]
+    ivfpq_build_index(emb, store, n_cells=1, m=msub, k=kcb, dim=dim)
+    got = [tuple(r) for r in ivfpq_probe_index(spark, store, q, 10, n_probe=1).collect()]
 
     codes = pq_assign_deterministic(emb, m=msub, k=kcb, dim=dim)
     sub = dim // msub
@@ -324,9 +326,10 @@ def test_q92_ivfpq_probe_is_pruned_joinless_scan(spark):
 
 
 def test_ivfpq_probe_matches_composed_ivf_plus_pq(spark, tmp_path):
-    """IVF-PQ probe == (PQ store ADC scores) restricted to ids whose
-    deterministic Lloyd cell is among the probed cells — the fused index
-    must agree bit-for-bit with its two components composed by hand."""
+    """IVF-PQ probe == (PQ store ADC scores — a one-cell index probed
+    at n_probe=1) restricted to ids whose deterministic Lloyd cell is
+    among the probed cells — the fused index must agree bit-for-bit with
+    its two components composed by hand."""
     from pyspark.sql import functions as F
 
     from esper_tv_spark.operators.similarity import (
@@ -335,8 +338,6 @@ def test_ivfpq_probe_matches_composed_ivf_plus_pq(spark, tmp_path):
         ivfpq_probe_index,
         lit_vector,
         lloyd_assign,
-        pq_build_store,
-        pq_probe_store,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -346,7 +347,7 @@ def test_ivfpq_probe_matches_composed_ivf_plus_pq(spark, tmp_path):
     got = [tuple(r) for r in ivfpq_probe_index(spark, idx, q, 10, n_probe=3).collect()]
 
     # composed replay: probe cells from the inline assignment, ADC from a
-    # plain PQ store over the same corpus
+    # plain PQ store (one coarse cell) over the same corpus
     cents16 = (
         emb.orderBy("vec_id").limit(16)
         .select(F.col("vec_id").alias("cell"),
@@ -364,8 +365,8 @@ def test_ivfpq_probe_matches_composed_ivf_plus_pq(spark, tmp_path):
         for r in lloyd_assign(emb, k=16).where(F.col("cluster").isin(probe)).collect()
     }
     store = str(tmp_path / "pq")
-    pq_build_store(emb, store, m=8, k=16, dim=64)
-    all_scores = pq_probe_store(spark, store, q, 10_000_000).collect()
+    ivfpq_build_index(emb, store, n_cells=1, m=8, k=16, dim=64)
+    all_scores = ivfpq_probe_index(spark, store, q, 10_000_000, n_probe=1).collect()
     want = [
         (r["vec_id"], r["adist"]) for r in all_scores if int(r["vec_id"]) in keep
     ][:10]
@@ -568,15 +569,20 @@ _TIED = [  # equal rounded cosines: the smaller cell id must rank first
 
 @pytest.fixture(scope="module")
 def pq_indexes(spark, tmp_path_factory):
-    """A flat and a two-level ivfpq index over the sf0.001 embeddings."""
+    """A flat, a two-level and a one-cell (the plain PQ store) ivfpq
+    index over the sf0.001 embeddings."""
     from esper_tv_spark.operators.similarity import ivfpq_build_index
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
     root = tmp_path_factory.mktemp("rankers")
     out = {}
-    for layout, kw in (("flat", {}), ("two_level", {"n_groups": 4})):
+    for layout, kw in (
+        ("flat", {"n_cells": 16}),
+        ("two_level", {"n_cells": 16, "n_groups": 4}),
+        ("one_cell", {"n_cells": 1}),
+    ):
         out[layout] = str(root / layout)
-        ivfpq_build_index(emb, out[layout], n_cells=16, m=8, k=16, dim=64, **kw)
+        ivfpq_build_index(emb, out[layout], m=8, k=16, dim=64, **kw)
     return emb, out
 
 
@@ -652,23 +658,26 @@ def test_single_probe_fast_matches_slow(spark, rows_df, pq_indexes):
     """The single probes' driver rankers (`_rank_probe_cells_blas`,
     `_adc_lut_values_blas`) equal their expression references for one
     query on the same rows — flat, two-level and tied centroids — and
-    the builder-side `pq_assign_deterministic(fast=True)` equals its
-    expression twin."""
+    the one-cell index's stored codes, each rank mapped back to its
+    code through `codebooks/`, equal `pq_assign_deterministic`'s rows
+    with the same id type (q81's census reads them)."""
     from esper_tv_spark.operators.similarity import pq_assign_deterministic
 
     _assert_rankers_agree(rows_df, pq_indexes, [7])
 
-    emb = pq_indexes[0]
+    emb, idx = pq_indexes
+    cells = spark.read.parquet(os.path.join(idx["one_cell"], "cells"))
+    book = spark.read.parquet(os.path.join(idx["one_cell"], "codebooks"))
+    stored = (
+        cells.select(F.col("id").alias("vec_id"), F.posexplode("codes").alias("subspace", "rk"))
+        .join(book.select("subspace", "rk", "code"), ["subspace", "rk"])
+    )
+    ref = pq_assign_deterministic(emb, m=8, k=16, dim=64)
 
     def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+        return sorted(tuple(r) for r in df.select("vec_id", "subspace", "code").collect())
 
-    fast_codes = rows(pq_assign_deterministic(emb, m=8, k=16, dim=64, fast=True))
-    slow_codes = rows(pq_assign_deterministic(emb, m=8, k=16, dim=64))
-    assert fast_codes == slow_codes
-    # the fast path's mapInPandas schema fixes id to long internally;
-    # the OUTPUT id type must match the input's (here: long == long,
-    # and the schema dtypes must agree exactly)
-    f_df = pq_assign_deterministic(emb, m=8, k=16, dim=64, fast=True)
-    s_df = pq_assign_deterministic(emb, m=8, k=16, dim=64)
-    assert f_df.schema["vec_id"].dataType == s_df.schema["vec_id"].dataType
+    want = rows(ref)
+    assert rows(stored) == want
+    assert len(want) == 8 * emb.count()
+    assert stored.schema["vec_id"].dataType == ref.schema["vec_id"].dataType

@@ -4,7 +4,7 @@ The dirs layout prunes probes with one directory per cell; at the 2e9
 auto sizing that is ~180k dirs — a LIST-cost wall on any object store and
 a measured file-creation wall at build (r9 hier20m: ~17 min of the build
 was the 180k-dir posting write).  The sorted layout
-(similarity._write_posting) range-partitions and sorts posting rows by
+(similarity._posting_write) range-partitions and sorts posting rows by
 (cell, id) into one flat dir; the probe's `cell IN (...)` predicate is
 pushed to parquet and row-group min/max stats prune the I/O — pruning by
 STATS instead of by DIRECTORIES, the Spark-idiomatic manifest.

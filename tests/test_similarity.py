@@ -641,8 +641,8 @@ def test_ivfsq_reconstruction_error_bounded(spark, tmp_path):
 def test_pq_and_sq_builds_match_expression_reference(spark, tmp_path):
     """Raw, residual and OPQ ivfpq builds and the ivfsq build store the
     rows of their expression reference — `lloyd_assign` cells, the
-    rank-based codebooks and `pq_encode_with_codebooks` /
-    `pq_assign_deterministic` codes (residuals by `zip_with`), and
+    rank-based codebooks (`_rank_codebooks`) and
+    `pq_encode_with_codebooks` codes (residuals by `zip_with`), and
     `_sq_encode_expr` codes over `sq_fit` bounds — row for row: the
     one-pass build moves no stored byte."""
     import os
@@ -678,7 +678,8 @@ def test_pq_and_sq_builds_match_expression_reference(spark, tmp_path):
             cb = sim._rank_codebooks(seeds, 8, 8, 16, "vec_id", "rv", 6)
             codes = sim.pq_encode_with_codebooks(rv, cb, vec_col="rv")
         else:
-            codes, cb = sim._pq_packed_codes(df, 8, 16, "vec_id", "embedding", 6, 64)
+            cb = sim._rank_codebooks(df, 8, 8, 16, "vec_id", "embedding", 6)
+            codes = sim.pq_encode_with_codebooks(df, cb)
         cells = assigned.join(codes.withColumnRenamed("id", "vec_id"), "vec_id")
         return cents, cells.withColumnRenamed("vec_id", "id"), cb
 
