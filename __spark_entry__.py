@@ -2372,14 +2372,10 @@ def q85_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     k = recommended_clusters(_parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet")))
-    # r10: serve the contract through the production BLAS rungs
-    # (fast_assign GEMM assignment + fast_pairs GEMM pair scoring) — the
-    # same twin-flip as the ANN family; pytest pins twin equality and the
-    # DuckDB gate re-verifies the hash at every sf (measured identical at
-    # sf0.001/0.01/0.1; sf0.1 best-of-2 8.3s -> 2.0s under equal load)
-    out = semantic_dedup(
-        emb, k=k, threshold=0.4, fast_assign=True, fast_pairs=True
-    )
+    # the operator's two Arrow passes (GEMM assignment, GEMM triangle
+    # tiles per cluster) round like the oracle's DuckDB round(); pytest
+    # pins them to the expression reference (lloyd_assign + dot scan)
+    out = semantic_dedup(emb, k=k, threshold=0.4)
     return out.select(
         "vec_id", "cluster", F.col("is_dup").cast("int").alias("is_dup")
     ).orderBy("vec_id")
@@ -3800,7 +3796,9 @@ def _ivfpq_index_dir(
     IVF-PQ index for `sf_dir`'s embeddings — same stat-based fingerprint
     + stale-sibling eviction stance as `_hier_ivf_index_dir`: every config
     of the current data generation survives (q88's one-cell store and
-    q92/q97's 16-cell index), only stale generations go."""
+    q92/q97's 16-cell index), only stale generations go.  Dirs of the
+    PQ store q88 served before it moved here (`esper_tv_pq_store_*`)
+    have no owner left, so every call sweeps them."""
     import tempfile
 
     src = os.path.join(sf_dir, "embeddings.parquet")
@@ -3809,6 +3807,7 @@ def _ivfpq_index_dir(
     idx = os.path.join(
         tempfile.gettempdir(), f"esper_tv_ivfpq_idx_{sf_tag}_{tag}_c{n_cells}m{m}k{k}"
     )
+    _evict_stale_siblings("esper_tv_pq_store_", keep=idx)
     if not (
         os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))
         and os.path.exists(os.path.join(idx, "meta.json"))

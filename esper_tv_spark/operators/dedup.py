@@ -872,10 +872,8 @@ def recommended_clusters(
     on the BLAS path.  Production SemDeDup (Abbas et al. 2023 run k =
     50000 over 200M LAION vectors, far below sqrt) PINS k so the
     assignment (~2*dim*n*k flops) fits a budget and accepts the n^2/k
-    pair join as the explicit remainder — the within-cluster blocks are
-    straggler-bounded by semantic_dedup's triangle grid and scored on
-    the Arrow/BLAS path (fast_assign defaults True whenever centroids
-    are caller-frozen, i.e. every production scoring call).  With a
+    pair join as the explicit remainder — semantic_dedup scores both
+    halves as GEMMs in its two Arrow passes.  With a
     budget: k = min(sqrt-balance, max_flops / (4*dim*n)) — the
     assignment spends at most half the budget — never below 2.  The
     oracle-gated contract path passes no budget, so the SQL-replayable
@@ -899,9 +897,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     round_digits: int = 6,
-    fast_assign: bool | None = None,
     block_rows: int = 1024,
-    fast_pairs: bool | None = None,
     cluster_probes: int = 1,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public paper):
@@ -917,275 +913,189 @@ def semantic_dedup(
     (face_embeddings.py:129-131 neighborhood queries); SemDeDup is the
     corpus-scale generalization the training-data pipeline needs.
 
-    Scale shape (100 TB): the cluster id is the blocking key — the pair
-    join is an EQUI-join on `cluster` (one shuffle), never O(n^2); cost
-    is sum(n_c^2) ~ n^2/k, balanced against the n*k centroid assignment
-    by `recommended_clusters` (k ~ sqrt(n), total Theta(n^1.5 * dim)).
-    Centroid assignment is a broadcast of k centroid rows + a map-side
-    min(struct) argmin (no n*k shuffle).  No driver-side work: the whole
-    operator is one declarative plan.
+    Two Arrow passes after one driver collect:
 
-    Output: (id_col, cluster, is_dup) — every input vector, its cluster,
-    and whether SemDeDup drops it.
+    1. centroids on the driver: the k smallest-id vectors (cluster label
+       = the centroid's own id, so `id_col` must be integral) or the
+       caller's (cluster, cvec) rows, rounded with `_round_half_away`;
+    2. one `mapInArrow` pass (`_semantic_assign`) emits (id, cluster,
+       vector, norm): `_nearest_clusters`' rounded-d2 argmin, ties to
+       the smaller cluster id, and norm = sqrt of the `dot` fold;
+    3. one `groupBy("cluster").applyInArrow` kernel sorts each cluster
+       by id and scores it in `block_rows` x `block_rows` triangle tiles
+       of GEMM cosines rounded with `_round_half_away` (q85's DuckDB
+       oracle rounds the same way).
 
-    `cluster_probes=p` (BLAS paths only) is the RECALL knob: each vector
-    joins its p nearest clusters for pair discovery while the output
-    still reports the primary cluster, one row per vector.  Measured at
-    sf1 (20.5k vecs, 256-dim, 500 planted ~0.95-cosine pairs, frozen
-    rank centroids): single-probe blocking catches 74.0% of the plants
+    Scale shape (100 TB): the cluster id is the blocking key — one
+    shuffle of n rows, never O(n^2); cost is sum(n_c^2) ~ n^2/k, balanced
+    against the n*k centroid assignment by `recommended_clusters`
+    (k ~ sqrt(n), total Theta(n^1.5 * dim)).  `block_rows` bounds the
+    memory of one tile inside a task; a hot cluster is scored by ONE
+    task (one 20 000-row cluster, numpy on one core of a 4-core VM:
+    ~4.6 s at 64 dims, ~10 s at 256 dims).
+
+    Output: (id_col, cluster long, is_dup) — every input vector, its
+    cluster, and whether SemDeDup drops it; the id keeps its own type.
+
+    `cluster_probes=p` is the RECALL knob: each vector joins its p
+    nearest clusters (a stable argsort of the same rounded d2) for pair
+    discovery, and one `groupBy(id)` keeps the primary (__rank 0)
+    cluster and ORs the verdicts, one row per vector.  Measured at sf1
+    (20.5k vecs, 256-dim, 500 planted ~0.95-cosine pairs, frozen rank
+    centroids): single-probe blocking catches 74.0% of the plants
     (boundary-straddling pairs are invisible to same-cluster blocking);
     p=2 catches 97.4%, p=3 99.8% — zero false positives throughout, and
     the pair-scoring cost grows only by the membership overlap (the
     wall stayed within ~2x).  SemDeDup's paper blocking is p=1; this is
     the standard multi-probe refinement IVF search uses, applied to the
-    dedup blocking.
+    dedup blocking."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
-    Fast paths (both default ON when `centroids` are caller-frozen, i.e.
-    every production scoring run; the deterministic-init contract path a
-    SQL oracle replays keeps the expression folds): `fast_assign` scores
-    the n*k centroid assignment as Arrow-batched BLAS
-    (lloyd_assign_blas); `fast_pairs` scores each triangle-grid cell's
-    within-cluster cosines as one GEMM in applyInPandas
-    (_semantic_dedup_pairs_blas) — the interpreted HOF fold costs ~0.5ms
-    per 256-dim pair, which makes the n^2/k pair stream DAYS at n=2M
-    where BLAS is minutes (sf100 rehearsal numbers in NEXT_STEPS)."""
-    from esper_tv_spark.operators.similarity import dot, lloyd_assign, lloyd_assign_blas
+    from esper_tv_spark.operators.similarity import _round_half_away
     from esper_tv_spark.plans.partitions import advise_for_df
 
-    # the within-cluster pair join materializes ~occupancy/2 partner
-    # vectors per row (2 x dim doubles each) — size its shuffle from the
-    # corpus bytes, not the session default (the q37 sf100 lesson)
-    advise_for_df(df, blowup=64.0)
+    # the one shuffle carries each vector once per probed cluster
+    advise_for_df(df, blowup=float(cluster_probes))
+    member = _semantic_assign(df, centroids, k, id_col, vec_col, round_digits, cluster_probes)
+    multi = "__rank" in member.columns
+    fields = [StructField(id_col, df.schema[id_col].dataType), StructField("cluster", LongType())]
+    if multi:
+        fields.append(StructField("__rank", IntegerType()))
+    schema = StructType(fields + [StructField("is_dup", BooleanType())])
 
-    # fast_assign: Arrow-batched BLAS assignment (~100x cheaper per scored
-    # pair — interpreted HOF dots vs GEMM).  Default RESOLVES BY PATH:
-    # caller-frozen centroids mean a production scoring run (no SQL oracle
-    # replays a frozen-model pipeline) -> BLAS; centroids=None is the
-    # deterministic-init contract path -> the expression fold the oracle
-    # replays bit-exact.  Explicit True/False always wins.
-    if fast_assign is None:
-        fast_assign = centroids is not None
-    # cluster_probes > 1 = MULTI-PROBE blocking: each vector belongs to
-    # its p nearest clusters for pair DISCOVERY (a ~0.95-cosine pair can
-    # straddle a cluster boundary — single-assignment blocking measured
-    # only 74% planted-pair recall at sf1; p=2 recovers the boundary
-    # pairs), while the OUTPUT still reports the primary (__rank 0)
-    # cluster and exactly one row per vector.  Cost: pair volume grows
-    # ~p^2/2-fold worst case (each membership meets the others), so p
-    # stays small (2-3).  BLAS paths only — the expression path is the
-    # oracle-replayed single-probe contract.
-    if cluster_probes > 1 and not fast_assign:
-        raise ValueError(
-            "semantic_dedup: cluster_probes > 1 requires fast_assign "
-            "(multi-probe is the production recall knob; the oracle-gated "
-            "expression path is single-probe by contract)"
+    def score(table):
+        table = table.sort_by(id_col)
+        n = table.num_rows
+        ids = table.column(id_col).combine_chunks()
+        # dense id rank: "smaller id" without comparing the ids' own type
+        rank = np.concatenate(
+            [[0], np.cumsum(pc.not_equal(ids.slice(1), ids.slice(0, n - 1)).to_numpy(False))]
         )
-    if cluster_probes > 1:
-        multi = lloyd_assign_blas(
-            df, centroids=centroids, k=k, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits, n_probe=cluster_probes,
+        x = table.column("__v").combine_chunks().flatten().to_numpy().reshape(n, -1)
+        nrm = table.column("__n").to_numpy()
+        dup = np.zeros(n, dtype=bool)
+        for j0 in range(0, n, block_rows):
+            j = slice(j0, j0 + block_rows)
+            for i0 in range(0, j0 + 1, block_rows):
+                i = slice(i0, i0 + block_rows)
+                sims = _round_half_away((x[j] @ x[i].T) / (nrm[j, None] * nrm[None, i]), round_digits)
+                dup[j] |= ((sims >= threshold) & (rank[None, i] < rank[j, None])).any(axis=1)
+        cols = [ids, table.column("cluster")]
+        if multi:
+            cols.append(table.column("__rank"))
+        return pa.Table.from_arrays(cols + [pa.array(dup)], names=schema.names)
+
+    out = member.groupBy("cluster").applyInArrow(score, schema)
+    if multi:
+        out = out.groupBy(id_col).agg(
+            F.min_by("cluster", "__rank").alias("cluster"), F.max("is_dup").alias("is_dup")
         )
-        from esper_tv_spark.plans.cache import register_persisted as _rp
-
-        # both the membership table (pair discovery) and its rank-0 slice
-        # (primary cluster for the output) consume this — persist once
-        multi = _rp("semantic_dedup.multi", multi)
-        assign = multi.drop("__rank")
-        primary = multi.where(F.col("__rank") == 0).select(id_col, "cluster")
-    else:
-        assigner = lloyd_assign_blas if fast_assign else lloyd_assign
-        assign = assigner(
-            df, centroids=centroids, k=k, id_col=id_col, vec_col=vec_col,
-            round_digits=round_digits,
-        )
-        primary = None
-    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    vn = vecs.withColumn("__n", F.sqrt(dot(F.col("__v"), F.col("__v"))))
-    # PERSIST the (id, cluster, vector, norm) table: both sides of the
-    # self-join consume it, and without materialization Spark re-runs the
-    # whole n x k Lloyd scoring once per side (ReusedExchange does not
-    # fire across the two differently-projected subtrees — measured 2x
-    # assignment wall at sf1). n rows of vector+norm, spill-safe.
-    from pyspark.sql import Window
-
-    # Block index within each cluster (ordered by id, blocks of
-    # `block_rows`): the within-cluster all-pairs join is decomposed into
-    # a TRIANGLE GRID — pair (a, b) with blocks (i <= j) lands in exactly
-    # grid cell (i, j), so a HOT cluster's n_c^2/2 pair scorings spread
-    # over ~B^2/2 independent join cells instead of ONE task. Lloyd
-    # one-step clusters are heavy-tailed (sf1: max cluster 10x the mean),
-    # and the cluster id is the shuffle key, so without the grid the
-    # biggest cluster is a straggler task that idles the rest of the
-    # cluster — AQE cannot split it because its partition is small in
-    # BYTES (the cost is quadratic compute, invisible to size stats).
-    # Clusters smaller than `block_rows` have B=1: one copy per side,
-    # exactly the ungridded join.
-    wseq = Window.partitionBy("cluster").orderBy(F.col(id_col).asc())
-    from esper_tv_spark.plans.cache import register_persisted
-
-    # site-keyed persist: bounds the cached-table leak to ONE live table
-    # across repeat invocations (bench loops run this at several scales);
-    # plans.cache.release_all() is the explicit suite-runner cleanup
-    sided = register_persisted(
-        "semantic_dedup.sided",
-        assign.join(vn, id_col)
-        .withColumn("__blk", ((F.row_number().over(wseq) - 1) / block_rows).cast("int"))
-        .withColumn("__maxblk", F.max("__blk").over(Window.partitionBy("cluster"))),
-    )
-    # The assignment subtree feeds the pair join TWICE (probe + candidate
-    # side) and nothing else: the annotated output falls out of a left
-    # join + aggregate, so the Lloyd plan is not evaluated a third time
-    # and no post-hoc distinct/join-back is needed. persist() because
-    # ReusedExchange does not fire across the two differently-projected
-    # subtrees (measured 2x assignment wall at sf1 without it).
-    #
-    # fast_pairs: score each grid cell as ONE numpy GEMM inside
-    # applyInPandas instead of per-pair interpreted HOF dots.  The
-    # expression fold costs ~0.5ms per 256-dim pair (measured: the whole
-    # exact q85 at 10x is 138s for 5.8M scored rows) — at n=2M / k=sqrt(n)
-    # the n^2/k pair stream is ~3e9 dots, DAYS interpreted vs ~minutes as
-    # BLAS.  Same default rule as fast_assign (frozen centroids =
-    # production scoring); the oracle-gated contract path keeps the fold.
-    # BLAS summation order can flip a verdict whose rounded cosine sits
-    # within ~1e-10 of the threshold — the documented fast-path trade.
-    if fast_pairs is None:
-        fast_pairs = centroids is not None
-    if cluster_probes > 1 and not fast_pairs:
-        raise ValueError(
-            "semantic_dedup: cluster_probes > 1 requires fast_pairs "
-            "(the expression pair path is the single-probe contract)"
-        )
-    if fast_pairs:
-        out = _semantic_dedup_pairs_blas(
-            sided, id_col=id_col, threshold=threshold, round_digits=round_digits
-        )
-        if cluster_probes > 1:
-            # verdict = caught in ANY probed membership; output one row
-            # per vector carrying its PRIMARY (__rank 0) cluster
-            verdict = out.groupBy(id_col).agg(F.max("is_dup").alias("is_dup"))
-            return primary.join(verdict, id_col)
-        return out
-
-    # a = the smaller-id (candidate) side, replicated to every grid
-    # column >= its own block; b = the probe side, replicated to every
-    # grid row <= its own block. blocks are id-ordered, so id_b > id_a
-    # implies blk_b >= blk_a and every valid pair is covered exactly once.
-    a = sided.select(
-        F.col("cluster").alias("__ca"),
-        F.col(id_col).alias("__ida"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-        F.col("__blk").alias("__bx"),
-        F.explode(F.sequence(F.col("__blk"), F.col("__maxblk"))).alias("__by"),
-    )
-    b = sided.select(
-        F.col("cluster").alias("__cb"),
-        F.col(id_col).alias("__idb"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        F.col("__blk").alias("__by"),
-        F.explode(F.sequence(F.lit(0), F.col("__blk"))).alias("__bx"),
-    )
-    sim = F.round(dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")), round_digits)
-    # Equi-key on (cluster, grid cell) keeps this a hash/merge join; the
-    # id inequality rides along as an extra condition.  Left-outer keeps
-    # vectors with no earlier cluster-mate (keepers by definition) — the
-    # b side emits blk+1 replicas, and the per-id aggregation collapses
-    # them (unmatched replicas contribute the coalesce(False) arm).
-    joined = b.join(
-        a,
-        (F.col("__cb") == F.col("__ca"))
-        & (b["__bx"] == a["__bx"])
-        & (b["__by"] == a["__by"])
-        & (F.col("__idb") > F.col("__ida")),
-        "left",
-    )
-    return joined.groupBy(
-        F.col("__idb").alias(id_col), F.col("__cb").alias("cluster")
-    ).agg(
-        F.coalesce(F.max(sim >= F.lit(threshold)), F.lit(False)).alias("is_dup")
-    )
+    return out
 
 
-def _semantic_dedup_pairs_blas(
-    sided: DataFrame, id_col: str, threshold: float, round_digits: int
-) -> DataFrame:
-    """semantic_dedup's production pair-scoring path: the same triangle
-    grid, but each cell's cross-block cosines are ONE float64 GEMM inside
-    applyInPandas instead of a per-pair expression fold.
-
-    Rows are tagged a-side (replicated to grid columns >= own block) and
-    b-side (rows <= own block), unioned, grouped by (cluster, bx, by);
-    the cell kernel computes sims = (B/|B|) @ (A/|A|).T rounded at
-    `round_digits` and emits ONE row per b-side member — (id, cluster,
-    had a smaller-id mate >= threshold in this cell) — so the shuffle
-    after scoring carries n * (blocks_per_row) tiny rows, never the pair
-    stream.  A final per-id max() merges cell verdicts (every row sees
-    its own diagonal cell, so keepers emit too).  Work: sum(n_c^2) * dim
-    flops in BLAS (~0.1ns/flop) vs ~0.5ms per interpreted pair — the
-    difference between days and minutes at n=2M."""
-    import pandas as pd
-
+def _nearest_clusters(x, cmat, round_digits: int, n_probe: int = 1):
+    """Positions in `cmat` (k, d), rounded and sorted by cluster id, of
+    the `n_probe` nearest centroids of each row of the numpy batch `x`
+    (n, d), as an (n, n_probe) array: rounded d2 = |x|² − 2·x·c + |c|²
+    (numpy sums and a GEMM, `_round_half_away`), column 0 the argmin
+    with ties to the smaller cluster id, the rest a stable argsort.  The
+    expression reference is `lloyd_assign`; its sequential folds can
+    differ in the last ulp before rounding (pinned equal on the test
+    corpora)."""
     import numpy as np
 
-    a = sided.select(
-        F.col("cluster"),
-        F.col("__blk").alias("__bx"),
-        F.explode(F.sequence(F.col("__blk"), F.col("__maxblk"))).alias("__by"),
-        F.lit(0).alias("__side"),
-        F.col(id_col).alias("__id"),
-        F.col("__v"),
-        F.col("__n"),
-    )
-    b = sided.select(
-        F.col("cluster"),
-        F.explode(F.sequence(F.lit(0), F.col("__blk"))).alias("__bx"),
-        F.col("__blk").alias("__by"),
-        F.lit(1).alias("__side"),
-        F.col(id_col).alias("__id"),
-        F.col("__v"),
-        F.col("__n"),
-    )
-    tagged = a.unionByName(b)
+    from esper_tv_spark.operators.similarity import _round_half_away
 
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"__id": [], "cluster": [], "__dup": []})
-        av = pdf[pdf["__side"] == 0]
-        bv = pdf[pdf["__side"] == 1]
-        if len(bv) == 0:
-            return pd.DataFrame({"__id": [], "cluster": [], "__dup": []})
-        out_dup = np.zeros(len(bv), dtype=bool)
-        if len(av):
-            amat = np.array(av["__v"].tolist(), dtype=np.float64)
-            bmat = np.array(bv["__v"].tolist(), dtype=np.float64)
-            an = av["__n"].to_numpy(dtype=np.float64)
-            bn = bv["__n"].to_numpy(dtype=np.float64)
-            from esper_tv_spark.operators.similarity import _round_half_away
+    d2 = _round_half_away(
+        (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cmat.T) + (cmat * cmat).sum(axis=1)[None, :],
+        round_digits,
+    )
+    if n_probe == 1:
+        return d2.argmin(axis=1)[:, None]
+    return np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
 
-            sims = _round_half_away(
-                (bmat @ amat.T) / (bn[:, None] * an[None, :]), round_digits
+
+def _semantic_assign(
+    df: DataFrame,
+    centroids: DataFrame | None,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_digits: int,
+    n_probe: int = 1,
+) -> DataFrame:
+    """`semantic_dedup`'s first two passes: collect the centroids (the k
+    smallest-id vectors, or `centroids`' (cluster, cvec) rows) and map
+    `df` in one Arrow pass to (id_col, cluster, __v array<double>, __n =
+    sqrt of the `dot` fold); with `n_probe > 1`, one row per probed
+    cluster plus its __rank (0 = the nearest).  Every vector must hold
+    the centroids' dimension of non-null values, or the pass raises
+    ValueError."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        IntegralType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from esper_tv_spark.operators.similarity import _fold_dot, _round_half_away
+
+    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
+    if centroids is None:
+        if not isinstance(df.schema[id_col].dataType, IntegralType):
+            raise ValueError(
+                "semantic_dedup: without centroids each cluster is labelled with its "
+                f"centroid's id, so {id_col!r} must be integral; pass frozen centroids"
             )
-            smaller = av["__id"].to_numpy()[None, :] < bv["__id"].to_numpy()[:, None]
-            out_dup = ((sims >= threshold) & smaller).any(axis=1)
-        return pd.DataFrame(
-            {
-                "__id": bv["__id"].to_numpy(),
-                "cluster": bv["cluster"].to_numpy(),
-                "__dup": out_dup,
-            }
+        cents = vecs.orderBy(F.col(id_col).asc()).limit(k).select(
+            F.col(id_col).alias("cluster"), F.col("__v").alias("cv")
         )
+    else:
+        cents = centroids.select("cluster", F.col("cvec").cast("array<double>").alias("cv"))
+    rows = sorted(cents.collect(), key=lambda r: r["cluster"])
+    cids = np.array([r["cluster"] for r in rows], dtype=np.int64)
+    cmat = _round_half_away(np.array([r["cv"] for r in rows], dtype=np.float64), round_digits)
+    dim = cmat.shape[-1]
+    p = min(n_probe, len(rows))
+    fields = [
+        StructField(id_col, df.schema[id_col].dataType),
+        StructField("cluster", LongType()),
+        StructField("__v", ArrayType(DoubleType())),
+        StructField("__n", DoubleType()),
+    ]
+    if p > 1:
+        fields.append(StructField("__rank", IntegerType()))
+    schema = StructType(fields)
 
-    # the id column keeps ITS OWN type through the kernel (the expression
-    # path never casts it either): a hardcoded `long` would crash or
-    # miscast string/int ids the moment fast_pairs routes them here
-    id_type = sided.schema[id_col].dataType.simpleString()
-    cells = tagged.groupBy("cluster", "__bx", "__by").applyInPandas(
-        score_cell, schema=f"__id {id_type}, cluster long, __dup boolean"
-    )
-    return cells.groupBy(F.col("__id").alias(id_col), "cluster").agg(
-        F.max("__dup").alias("is_dup")
-    )
+    def assign(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue
+            v = b.column(1)
+            flat = v.flatten()
+            if v.null_count or flat.null_count or not pc.all(
+                pc.equal(pc.list_value_length(v), dim)
+            ).as_py():
+                raise ValueError(f"semantic_dedup: every vector must hold {dim} non-null values")
+            x = flat.to_numpy().reshape(len(b), dim)
+            top = _nearest_clusters(x, cmat, round_digits, p)
+            cols = [b.column(0), pa.array(cids[top].ravel()), v, pa.array(np.sqrt(_fold_dot(x, x)))]
+            if p > 1:
+                rep = pa.array(np.repeat(np.arange(len(b)), p))
+                cols = [cols[0].take(rep), cols[1], v.take(rep), cols[3].take(rep)]
+                cols.append(pa.array(np.tile(np.arange(p, dtype=np.int32), len(b))))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return vecs.mapInArrow(assign, schema)
 
 
 def lsh_plan(

@@ -2685,96 +2685,6 @@ def lloyd_assign(
     )
 
 
-def lloyd_assign_blas(
-    df: DataFrame,
-    centroids: DataFrame | None = None,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    n_probe: int = 1,
-) -> DataFrame:
-    """PRODUCTION-scale Lloyd assignment: the same (distance asc, cluster
-    asc) argmin as `lloyd_assign`, computed as one Arrow-batched float64
-    matmul per batch (mapInPandas + numpy BLAS) instead of per-row
-    interpreted array folds. Spark's higher-order array functions do not
-    participate in whole-stage codegen — a 256-dim dot costs ~50-100us
-    per row interpreted, vs ~0.1us inside a BLAS GEMM — so at corpus
-    scale (n*k scored pairs) this path is two orders of magnitude
-    cheaper. The price: BLAS accumulation order differs from the
-    sequential fold the SQL oracle replays, so a rounded d2 within ~1e-10
-    of a rounding boundary could differ — use `lloyd_assign` for
-    oracle-gated contracts, this for production pipelines (pytest asserts
-    the two agree exactly on the test corpora).
-
-    Centroids (k rows) are collected to the driver and broadcast; the
-    argmin ties break to the smaller cluster id by sorting centroids by
-    id and relying on numpy argmin's first-occurrence rule.
-
-    `n_probe > 1` emits each vector's p NEAREST clusters as p rows
-    (id, cluster, __rank) with __rank 0 the argmin — multi-probe
-    blocking for semantic_dedup (a near-dup pair straddling a cluster
-    boundary is caught iff the two memberships overlap somewhere; see
-    semantic_dedup(cluster_probes=...)).  Ordering is (rounded d2 asc,
-    cluster id asc) via a stable argsort, so __rank 0 is bit-identical
-    to the n_probe=1 assignment."""
-    import numpy as np
-
-    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v"))
-    if centroids is None:
-        cent_rows = (
-            vecs.orderBy(F.col(id_col).asc())
-            .limit(k)
-            .select(F.col(id_col).alias("cluster"), F.col("__v").alias("__c"))
-            .collect()
-        )
-    else:
-        cent_rows = centroids.select(
-            "cluster", F.col("cvec").cast("array<double>").alias("__c")
-        ).collect()
-    cent_rows.sort(key=lambda r: r["cluster"])
-    cids = np.array([r["cluster"] for r in cent_rows], dtype=np.int64)
-    cmat = _round_half_away(
-        np.array([r["__c"] for r in cent_rows], dtype=np.float64), round_digits
-    )
-    ccsq = (cmat * cmat).sum(axis=1)
-    bc = df.sparkSession.sparkContext.broadcast((cids, cmat, ccsq))
-
-    def assign(batches):
-        import pandas as pd
-
-        b_cids, b_cmat, b_ccsq = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                # mapInPandas can deliver empty batches on skewed/empty
-                # partitions; np.array([]) is 1-D and would crash the GEMM
-                continue
-            x = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            d2 = _round_half_away(
-                (x * x).sum(axis=1)[:, None] - 2.0 * (x @ b_cmat.T) + b_ccsq[None, :],
-                round_digits,
-            )
-            if n_probe == 1:
-                best = d2.argmin(axis=1)  # first occurrence = smallest cluster id
-                yield pd.DataFrame({id_col: pdf[id_col], "cluster": b_cids[best]})
-            else:
-                p = min(n_probe, d2.shape[1])
-                # stable sort: equal rounded d2 keeps ascending column
-                # index = ascending cluster id (cmat is sorted by id)
-                top = np.argsort(d2, axis=1, kind="stable")[:, :p]
-                ids = np.repeat(pdf[id_col].to_numpy(), p)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "cluster": b_cids[top].ravel(),
-                        "__rank": np.tile(np.arange(p, dtype=np.int32), len(pdf)),
-                    }
-                )
-
-    schema = f"{id_col} long, cluster long" + (", __rank int" if n_probe > 1 else "")
-    return vecs.mapInPandas(assign, schema=schema)
-
-
 def _fold_dot(a, b):
     """`dot` over the last axis of two numpy arrays, broadcasting the
     rest: the same left fold of IEEE double products from 0.0, so the
@@ -2827,10 +2737,10 @@ def _assign_cells_np(x, cmat, round_digits: int):
     row index of each vector's cell, bit for bit.  argmin keeps the
     first minimum of `_d2_np` — the smaller cell, as the packed key's
     rank does.  Rows go in slices that keep each (rows, k) temporary
-    near 32 MB whatever the number of cells.  `lloyd_assign_blas`
-    computes the same d2 with numpy sums, a GEMM and `_round_half_away`,
-    so it can differ from this kernel in the last ulp before rounding
-    and in the rounding rule itself."""
+    near 32 MB whatever the number of cells.  SemDeDup's assignment
+    (`dedup._nearest_clusters`) computes the same d2 with numpy sums, a
+    GEMM and `_round_half_away`, so it can differ from this kernel in
+    the last ulp before rounding and in the rounding rule itself."""
     import numpy as np
 
     cc = _fold_dot(cmat, cmat)

@@ -1,8 +1,8 @@
 """Site-keyed persist registry: bounded caching for operators that persist
 an intermediate consumed by several branches of one returned plan.
 
-An operator like semantic_dedup persists its (id, cluster, vector, norm)
-table because BOTH sides of the within-cluster self-join consume it — but
+An operator like edit_similarity_join persists its (id, string, length)
+table because SIX branches of its returned plan consume it — but
 the consuming action happens at the CALLER (the returned DataFrame is
 lazy), so the operator cannot unpersist before returning.  Left alone,
 every invocation leaks one cached table of executor storage; bench loops

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from esper_tv_spark.operators.dedup import lsh_buckets
+from esper_tv_spark.operators.dedup import _nearest_clusters, lsh_buckets
 from esper_tv_spark.operators.similarity import _round_half_away
 
 
@@ -153,8 +153,9 @@ def streaming_semantic_dedup(
 
     - ASSIGNMENT is a pure per-row projection against the frozen centroid
       matrix — an Arrow-batched BLAS argmin (mapInPandas, stream-safe:
-      stateless), identical math to `lloyd_assign_blas` (rounded d2,
-      first-occurrence = smallest cluster id tie-break). Centroids are a
+      stateless) through the batch operator's own kernel
+      (`operators.dedup._nearest_clusters`: rounded d2, ties to the
+      smallest cluster id). Centroids are a
       driver-side list because a stream cannot collect a DataFrame
       mid-plan; freeze them with a batch job (the q48 pyspark.ml fit or
       lloyd init) exactly as every production scoring pipeline does.
@@ -208,34 +209,26 @@ def streaming_semantic_dedup(
     cmat = _round_half_away(
         np.array([r[1] for r in cent_rows], dtype=np.float64), round_digits
     )
-    ccsq = (cmat * cmat).sum(axis=1)
 
     p = max(1, int(cluster_probes))
+    pp = min(p, len(cids))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             x = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            d2 = _round_half_away(
-                (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cmat.T) + ccsq[None, :],
-                round_digits,
-            )
+            # the batch operator's kernel: __rank 0 is the p=1 assignment
+            top = _nearest_clusters(x, cmat, round_digits, pp)
             if p == 1:
-                best = d2.argmin(axis=1)
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].astype("int64"),
-                        "cluster": cids[best],
+                        "cluster": cids[top[:, 0]],
                         "__v": [r.tolist() for r in x],
                     }
                 )
             else:
-                pp = min(p, d2.shape[1])
-                # stable argsort: equal rounded d2 keeps ascending cluster
-                # id — __rank 0 is bit-identical to the p=1 assignment
-                # (the same rule as lloyd_assign_blas(n_probe=...))
-                top = np.argsort(d2, axis=1, kind="stable")[:, :pp]
                 vlists = [r.tolist() for r in x]
                 yield pd.DataFrame(
                     {

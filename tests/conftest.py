@@ -51,3 +51,31 @@ def rows_df(spark):
         return spark.createDataFrame([tuple(r[n] for n in names) for r in rows], schema)
 
     return make
+
+
+@pytest.fixture
+def semantic_dedup_reference():
+    """`ref(df, threshold, k=8, centroids=None)` -> SemDeDup's expression
+    reference as sorted (vec_id, cluster, is_dup) tuples: `lloyd_assign`'s
+    clusters, then an exact within-cluster scan of every pair's `dot`
+    cosine rounded with F.round — no Arrow pass, no GEMM."""
+    from pyspark.sql import functions as F
+
+    from esper_tv_spark.operators.similarity import dot, lloyd_assign
+
+    def ref(df, threshold, k=8, centroids=None):
+        asg = lloyd_assign(df, centroids=centroids, k=k)
+        v = F.col("embedding").cast("array<double>")
+        vn = df.select("vec_id", v.alias("v"), F.sqrt(dot(v, v)).alias("n")).join(asg, "vec_id")
+        a = vn.select(*(F.col(c).alias(c + "_a") for c in vn.columns))
+        pairs = vn.join(
+            a, (F.col("cluster") == F.col("cluster_a")) & (F.col("vec_id_a") < F.col("vec_id"))
+        )
+        sim = F.round(dot(F.col("v"), F.col("v_a")) / (F.col("n") * F.col("n_a")), 6)
+        dups = pairs.where(sim >= threshold).select("vec_id").distinct().withColumn("d", F.lit(True))
+        out = asg.join(dups, "vec_id", "left").select(
+            "vec_id", "cluster", F.coalesce("d", F.lit(False))
+        )
+        return sorted(tuple(r) for r in out.collect())
+
+    return ref

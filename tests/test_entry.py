@@ -78,3 +78,17 @@ def test_ivfpq_index_dir_keeps_sibling_configs(spark, tmp_path, monkeypatch):
     assert os.stat(sentinel).st_mtime_ns == built
     for idx in (one, sixteen):
         assert os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS")), idx
+
+
+def test_ivfpq_index_dir_sweeps_old_pq_store_dirs(spark, tmp_path, monkeypatch):
+    """A cache dir under the retired PQ-store prefix is gone after one
+    call, whichever data generation it was built for."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    old = tmp_path / "esper_tv_pq_store_sf0.001_0123456789abcdef_m8k16"
+    (old / "codes").mkdir(parents=True)
+    (old / "codes" / "part-0.parquet").write_bytes(b"x")
+    idx = m._ivfpq_index_dir(spark, SF, n_cells=1)
+    assert not old.exists()
+    assert os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))

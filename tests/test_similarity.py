@@ -380,13 +380,21 @@ def test_near_dup_formula_planes_recall_vs_exact(spark):
         assert recall >= 0.95, f"recall {recall:.3f} over {len(exact)} true pairs"
 
 
-def test_lloyd_assign_blas_matches_exact(spark):
-    """The BLAS assignment (production path) must agree with the
+def _assigned(df, k):
+    """semantic_dedup's assignment pass as {vec_id: cluster}."""
+    from esper_tv_spark.operators.dedup import _semantic_assign
+
+    rows = _semantic_assign(df, None, k, "vec_id", "embedding", 6).collect()
+    return {r["vec_id"]: r["cluster"] for r in rows}
+
+
+def test_semantic_assign_matches_lloyd_assign(spark):
+    """semantic_dedup's Arrow assignment pass must agree with the
     expression path the oracle replays — including sparse/offset ids and
     argmin ties broken to the smaller cluster id."""
     import numpy as np
 
-    from esper_tv_spark.operators.similarity import lloyd_assign, lloyd_assign_blas
+    from esper_tv_spark.operators.similarity import lloyd_assign
 
     rng = np.random.default_rng(19)
     ids = [5_000_000 + 3 * i for i in range(60)]
@@ -394,21 +402,19 @@ def test_lloyd_assign_blas_matches_exact(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     for k in (3, 7, 13):
         exact = {r["vec_id"]: r["cluster"] for r in lloyd_assign(df, k=k).collect()}
-        fast = {r["vec_id"]: r["cluster"] for r in lloyd_assign_blas(df, k=k).collect()}
-        assert exact == fast
+        assert exact == _assigned(df, k)
 
 
-def test_lloyd_assign_blas_matches_on_fixture(spark):
+def test_semantic_assign_matches_lloyd_assign_on_fixture(spark):
     """Same agreement on the real embeddings fixture (64-dim, 200 rows)."""
-    from esper_tv_spark.operators.similarity import lloyd_assign, lloyd_assign_blas
+    from esper_tv_spark.operators.similarity import lloyd_assign
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = {r["vec_id"]: r["cluster"] for r in lloyd_assign(emb, k=8).collect()}
-    fast = {r["vec_id"]: r["cluster"] for r in lloyd_assign_blas(emb, k=8).collect()}
-    assert exact == fast
+    assert exact == _assigned(emb, 8)
 
 
-def test_semantic_dedup_fast_assign_matches(spark):
+def test_semantic_dedup_matches_expression_reference(spark, semantic_dedup_reference):
     import numpy as np
 
     from esper_tv_spark.operators.dedup import semantic_dedup
@@ -417,9 +423,8 @@ def test_semantic_dedup_fast_assign_matches(spark):
     rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(50)]
     rows.append((999, [v * 1.01 + 1e-4 for v in rows[4][1]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    slow = sorted(tuple(r) for r in semantic_dedup(df, k=7, threshold=0.95).collect())
-    fast = sorted(tuple(r) for r in semantic_dedup(df, k=7, threshold=0.95, fast_assign=True).collect())
-    assert slow == fast
+    got = sorted(tuple(r) for r in semantic_dedup(df, k=7, threshold=0.95).collect())
+    assert got == semantic_dedup_reference(df, 0.95, k=7) and any(r[2] for r in got)
 
 
 def test_pq_dim_fail_closed(spark):
@@ -437,16 +442,13 @@ def test_pq_dim_fail_closed(spark):
         pq_assign_deterministic(df, m=4, k=2)
 
 
-def test_lloyd_assign_blas_empty_partitions(spark):
-    """Arrow batches can be empty on skewed partitions — the BLAS assigner
-    must skip them, not crash on a 1-D np.array([])."""
-    from esper_tv_spark.operators.similarity import lloyd_assign_blas
-
+def test_semantic_assign_empty_partitions(spark):
+    """Arrow batches can be empty on skewed partitions — the assignment
+    pass must skip them, not crash on a 1-D np.array([])."""
     df = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, embedding array<double>"
     ).repartition(16)  # far more partitions than rows -> empty batches
-    got = lloyd_assign_blas(df, k=2).collect()
-    assert len(got) == 4
+    assert len(_assigned(df, 2)) == 4
 
 
 def test_ivfpq_residual_reduces_distortion(spark, tmp_path):

@@ -128,7 +128,7 @@ def test_streaming_semantic_dedup_equals_batch(spark, tmp_path):
 
     want = sorted(
         tuple(r)
-        for r in semantic_dedup(df, threshold=0.95, centroids=cdf, fast_assign=True).collect()
+        for r in semantic_dedup(df, threshold=0.95, centroids=cdf).collect()
     )
 
     src = str(tmp_path / "vec_src")
@@ -173,7 +173,7 @@ def test_streaming_semantic_dedup_multichunk_group(spark, tmp_path):
 
     want = sorted(
         tuple(r)
-        for r in semantic_dedup(df, threshold=0.95, centroids=cdf, fast_assign=True).collect()
+        for r in semantic_dedup(df, threshold=0.95, centroids=cdf).collect()
     )
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)

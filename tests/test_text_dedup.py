@@ -356,8 +356,10 @@ def test_semantic_dedup_sparse_ids(spark):
 
 
 def test_semantic_dedup_pair_join_is_cluster_equijoin(spark):
-    """Scale shape: the within-cluster pair scan must plan as an EQUI-join
-    on the cluster key (one shuffle), never a cartesian."""
+    """Scale shape: the within-cluster pair scan is blocked on the
+    cluster key — the whole operator is one hash Exchange on `cluster`
+    feeding the Arrow group kernel, with no cartesian, no nested loop
+    and no cached table."""
     import numpy as np
 
     from esper_tv_spark.operators.dedup import semantic_dedup
@@ -366,17 +368,17 @@ def test_semantic_dedup_pair_join_is_cluster_equijoin(spark):
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     plan = semantic_dedup(df, k=4, threshold=0.9)._jdf.queryExecution().executedPlan().toString()
-    # the ONLY nested-loop allowed is the k-row centroid broadcast inside
-    # lloyd_assign; the n x n pair scan must hash/merge-join on cluster
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2  # one per lloyd_assign consumer
-    assert "hashjoin" in plan.lower() or "sortmergejoin" in plan.lower()
+    top, _, below = plan.partition("FlatMapGroupsInArrow [cluster")
+    assert plan.count("Exchange") == 1 and "Exchange" not in top
+    assert below.split("Exchange ", 1)[1].startswith("hashpartitioning(cluster")
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "InMemoryRelation"):
+        assert node not in plan
 
 
 def test_semantic_dedup_triangle_grid_equivalence(spark):
-    """The triangle-grid pair decomposition (hot-cluster parallelization)
-    must produce byte-identical results to the ungridded join: force
-    multi-block clusters with a tiny block_rows and compare."""
+    """Scoring a cluster in block_rows-square triangle tiles must give
+    byte-identical results to scoring it as one tile: force multi-tile
+    clusters with a tiny block_rows and compare."""
     import numpy as np
 
     from esper_tv_spark.operators.dedup import semantic_dedup
@@ -418,11 +420,11 @@ def test_recommended_clusters_cost_ceiling():
         recommended_clusters(n, max_flops=budget)
 
 
-def test_semantic_dedup_fast_assign_default_by_path(spark):
-    """fast_assign resolves by path: frozen centroids (production scoring)
-    default to the BLAS assigner, centroids=None (the oracle-gated
-    contract) stays on the expression fold — and both agree on the test
-    corpus regardless."""
+def test_semantic_dedup_frozen_centroids_match_expression_reference(
+    spark, semantic_dedup_reference
+):
+    """Caller-frozen centroids (every production scoring run) give the
+    expression reference's clusters and verdicts."""
     import numpy as np
 
     from esper_tv_spark.operators.dedup import semantic_dedup
@@ -434,22 +436,14 @@ def test_semantic_dedup_fast_assign_default_by_path(spark):
     cents = spark.createDataFrame(
         [(i, rows[i][1]) for i in range(5)], "cluster long, cvec array<float>"
     )
-    frozen_default = sorted(
-        tuple(r) for r in semantic_dedup(df, threshold=0.95, centroids=cents).collect()
-    )
-    frozen_exact = sorted(
-        tuple(r)
-        for r in semantic_dedup(
-            df, threshold=0.95, centroids=cents, fast_assign=False, fast_pairs=False
-        ).collect()
-    )
-    assert frozen_default == frozen_exact
+    got = sorted(tuple(r) for r in semantic_dedup(df, threshold=0.95, centroids=cents).collect())
+    assert got == semantic_dedup_reference(df, 0.95, centroids=cents)
+    assert any(r[2] for r in got)
 
 
-def test_semantic_dedup_fast_pairs_matches_exact(spark):
-    """The GEMM cell-scoring path (fast_pairs) returns the same verdicts
-    as the expression-fold pair join, including across grid-cell splits
-    (block_rows smaller than the cluster forces multi-cell clusters)."""
+def test_semantic_dedup_tiles_match_expression_reference(spark, semantic_dedup_reference):
+    """The GEMM tile scoring returns the expression reference's verdicts,
+    also when block_rows smaller than a cluster splits it into tiles."""
     import numpy as np
 
     from esper_tv_spark.operators.dedup import semantic_dedup
@@ -459,20 +453,88 @@ def test_semantic_dedup_fast_pairs_matches_exact(spark):
     for j, src in enumerate((2, 17, 44)):
         rows.append((300 + j, [v * 1.01 + 1e-4 for v in rows[src][1]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = semantic_dedup_reference(df, 0.95, k=5)
+    assert any(r[2] for r in want)
     for br in (1024, 8):
-        exact = sorted(
-            tuple(r)
-            for r in semantic_dedup(
-                df, k=5, threshold=0.95, block_rows=br, fast_pairs=False
-            ).collect()
+        got = semantic_dedup(df, k=5, threshold=0.95, block_rows=br).collect()
+        assert sorted(tuple(r) for r in got) == want, br
+
+
+def _semantic_dedup_numpy(rows, cents, threshold):
+    """Brute-force SemDeDup over (id, vector) rows and (cluster, vector)
+    centroids: a per-pair rounded d2 argmin (ties to the smaller
+    cluster), then every same-cluster pair's rounded cosine."""
+    import numpy as np
+
+    from esper_tv_spark.operators.similarity import _round_half_away
+
+    cents = sorted(cents)
+    cvecs = [_round_half_away(np.array(c), 6) for _, c in cents]
+    vecs = {i: np.array(v) for i, v in rows}
+    cluster = {}
+    for i, v in vecs.items():
+        d2 = [float(_round_half_away(v @ v - 2.0 * (v @ c) + c @ c, 6)) for c in cvecs]
+        cluster[i] = cents[d2.index(min(d2))][0]
+    out = []
+    for i, v in vecs.items():
+        dup = any(
+            j < i
+            and cluster[j] == cluster[i]
+            and _round_half_away((v @ w) / (np.sqrt(v @ v) * np.sqrt(w @ w)), 6) >= threshold
+            for j, w in vecs.items()
         )
-        fast = sorted(
-            tuple(r)
-            for r in semantic_dedup(
-                df, k=5, threshold=0.95, block_rows=br, fast_pairs=True
-            ).collect()
-        )
-        assert exact == fast and any(r[2] for r in exact), br
+        out.append((i, cluster[i], dup))
+    return sorted(out)
+
+
+def test_semantic_dedup_string_ids(spark):
+    """String ids keep their type through both passes, "smaller id" is
+    the string order, and without frozen centroids (whose labels are
+    ids) the operator refuses them."""
+    import numpy as np
+    import pytest
+
+    from esper_tv_spark.operators.dedup import semantic_dedup
+
+    rng = np.random.default_rng(61)
+    rows = [(f"v{i:03d}", [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    rows += [(f"w{i}", [v * 1.01 + 1e-4 for v in rows[i][1]]) for i in (3, 9, 27)]
+    # "a..." sorts first: the near-copy of v020 keeps, v020 drops
+    rows.append(("a020", [v * 0.99 - 1e-4 for v in rows[20][1]]))
+    cents = [(c, rows[c][1]) for c in range(4)]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
+    cdf = spark.createDataFrame(cents, "cluster long, cvec array<double>")
+    out = semantic_dedup(df, threshold=0.95, centroids=cdf, block_rows=8)
+    assert out.schema["vec_id"].dataType.simpleString() == "string"
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == _semantic_dedup_numpy(rows, cents, 0.95)
+    assert {r[0] for r in got if r[2]} == {"v020", "w3", "w9", "w27"}
+    with pytest.raises(ValueError, match="integral"):
+        semantic_dedup(df, threshold=0.95)
+
+
+def test_semantic_dedup_one_hot_cluster(spark):
+    """k=2 with one cluster ~10x the other: the hot cluster is scored by
+    one task in many tiles and matches the brute force."""
+    import numpy as np
+
+    from esper_tv_spark.operators.dedup import semantic_dedup
+
+    rng = np.random.default_rng(67)
+    hot, cold = np.eye(8)[0] * 4.0, np.eye(8)[1] * 4.0
+    rows = [(i, (hot + rng.normal(size=8)).tolist()) for i in range(200)]
+    rows += [(200 + i, (cold + rng.normal(size=8)).tolist()) for i in range(20)]
+    rows += [(500 + i, [v * 1.01 + 1e-4 for v in rows[7 * i][1]]) for i in range(12)]
+    cents = [(0, hot.tolist()), (1, cold.tolist())]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cdf = spark.createDataFrame(cents, "cluster long, cvec array<double>")
+    want = _semantic_dedup_numpy(rows, cents, 0.95)
+    sizes = [sum(r[1] == c for r in want) for c in (0, 1)]
+    assert sizes[0] >= 8 * sizes[1]
+    for br in (16, 1024):
+        got = semantic_dedup(df, threshold=0.95, centroids=cdf, block_rows=br).collect()
+        assert sorted(tuple(r) for r in got) == want, br
+    assert sum(r[2] for r in want) >= 12
 
 
 def test_minhash_cw_matches_python_reference(spark):
@@ -544,14 +606,9 @@ def test_semantic_dedup_multiprobe_recovers_boundary_pairs(spark):
     # primary cluster is the p=1 assignment for every vector
     assert c1 == c2
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup.semantic_dedup(df, threshold=0.95, cluster_probes=2, fast_assign=False)
-    with _pytest.raises(ValueError):
-        dedup.semantic_dedup(
-            df, threshold=0.95, centroids=cents, cluster_probes=2, fast_pairs=False
-        )
+    # the rank init (the 12 smallest ids) is the same centroid table
+    init = dedup.semantic_dedup(df, k=12, threshold=0.95, cluster_probes=2).collect()
+    assert {r["vec_id"] for r in init if r["is_dup"]} == d2
 
 
 def test_lsh_plan_sizing():

@@ -15,8 +15,8 @@ Steps (each appends one JSON line to .scale/rehearsal_<tag>.jsonl):
   2. q37 @ sf100 — Spark wall with only the default advise_for_df sizing.
   3. q56 @ sf100 — Spark wall (fused single-projection plan at 1000x).
   4. q85 @ sf100 — PRODUCTION path: frozen rank-init centroids
-     (k = recommended_clusters(n)), BLAS assignment + BLAS grid cells.
-  5. q85 fast path walls @ sf1 and sf10 — the <=4x-per-decade check.
+     (k = recommended_clusters(n)), semantic_dedup's two Arrow passes.
+  5. q85 production walls @ sf1 and sf10 — the <=4x-per-decade check.
   6. Full hash gate @ .scale/sf1 via tools/check.py (separate process,
      24g driver heap — 12g OOMs at q60's result collect).
   7. sf100 spot hash-gate (tools/sf100_gate.py) — 1000x DuckDB hash
@@ -101,7 +101,7 @@ def main() -> int:
             emit({"step": f"{name}_sf100", "rows": n, "wall_s": round(time.time() - t0, 1)})
             spark.catalog.clearCache()
 
-        # ---- 4. q85 @ sf100: production path (frozen centroids, BLAS) --
+        # ---- 4. q85 @ sf100: production path (frozen centroids) --------
         from pyspark.sql import functions as F
 
         from esper_tv_spark.operators.dedup import recommended_clusters, semantic_dedup
@@ -130,7 +130,7 @@ def main() -> int:
         )
         spark.catalog.clearCache()
 
-        # ---- 5. q85 fast walls @ sf1 / sf10 (the per-decade ratio) -----
+        # ---- 5. q85 production walls @ sf1 / sf10 (the per-decade ratio)
         walls = {}
         for tag, d in (("sf1", SF1), ("sf10", SF10)):
             embx = m._t(spark, d, "embeddings")

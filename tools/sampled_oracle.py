@@ -23,7 +23,7 @@ q94 — stored-state spot-check + full probe replay over stored state:
       stored centroids/codebooks parquet and the rotated query.
 
 q85 — sampled assignment + sampled verdict replay (production path:
-  frozen rank centroids, BLAS assign + BLAS pairs):
+  frozen rank centroids, GEMM assignment + GEMM pair tiles):
   (a) for a deterministic id sample, DuckDB recomputes the argmin-d2
       cluster against the SAME frozen centroid set (the k smallest-id
       vectors, rounded at 6) and compares to Spark's assignment.
