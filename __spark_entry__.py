@@ -2769,6 +2769,7 @@ def _retired_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import tempfile
 
+    from esper_tv_spark.sources.sidecar import sidecar_rows
     from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
 
     src = os.path.join(sf_dir, "embeddings.parquet")
@@ -2786,14 +2787,12 @@ def _retired_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
             float(x)
             for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]
         ]
-        cents = spark.read.parquet(os.path.join(idx, "centroids"))
-        pairs, _cells, _cv = similarity._rank_probe_cells(cents, [0], [qv], 1, 6)
-        victim = int(pairs[0][1])
+        # the victim cell and its ids, read on the driver the way a
+        # probe ranks and reads (no schema-inference job)
+        [victim], _cv = similarity._probe_cells(idx, qv, 1, 3, 6)
         victim_ids = [
             int(r["id"])
-            for r in spark.read.parquet(
-                os.path.join(idx, "cells", f"cell={victim}")
-            ).select("id").collect()
+            for r in sidecar_rows(os.path.join(idx, "cells", f"cell={victim}"), ["id"])
         ]
         ann_delete(spark, idx, victim_ids)
         compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)

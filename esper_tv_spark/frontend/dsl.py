@@ -274,24 +274,18 @@ def run_query(
             # vector side probes a catalog-named persisted IVF index
             # with a LITERAL query vector.  Terms and the vector are
             # DATA; the index is name-keyed — same stance as ann_probe.
-            import os as _os
-
             name = sim.get("index")
             if not isinstance(name, str) or name not in (index_catalog or {}):
                 raise DSLError(f"unknown index {name!r}")
             hpath = index_catalog[name]
-            # hybrid's exact rerank needs raw-vector posting lists: the
-            # plain-IVF layout (cells/ + centroids/, no meta.json)
-            if _os.path.exists(_os.path.join(hpath, "meta.json")) or not (
-                (
-                    _os.path.isdir(_os.path.join(hpath, "cells"))
-                    or _os.path.isdir(_os.path.join(hpath, "cells_sorted"))
-                )
-                and _os.path.isdir(_os.path.join(hpath, "centroids"))
-            ):
+            # hybrid's exact rerank needs raw-vector posting lists: an
+            # ivf store (cells/ + centroids/, no meta.json)
+            try:
+                sim_ops._open_index(hpath, "ivf")
+            except ValueError as e:
                 raise DSLError(
                     f"hybrid needs a plain ivf store; index {name!r} is not one"
-                )
+                ) from e
             terms = sim.get("terms")
             if (
                 not isinstance(terms, list)
@@ -374,9 +368,6 @@ def run_query(
             # server-provided index_catalog, never by path.  Single query
             # ('query' vector or 'query_id') -> *_probe_index; a
             # 'query_ids' batch -> the amortized-scan *_knn_join_index.
-            import json as _json
-            import os as _os
-
             name = sim.get("index")
             if not isinstance(name, str) or name not in (index_catalog or {}):
                 raise DSLError(f"unknown index {name!r}")
@@ -414,34 +405,13 @@ def run_query(
             # (codes/ + codebooks/, no meta.json); the catalog is
             # server-owned so this is operator error, not injection — but
             # it should be a loud error, same stance as every other
-            # rejection here.
-            meta_path = _os.path.join(path, "meta.json")
-            if _os.path.exists(meta_path):
-                with open(meta_path) as f:
-                    meta = _json.load(f)
-                mk = meta.get("kind")
-                if mk == "ivfsq":
-                    kind = "ivfsq"
-                elif mk is None and all(
-                    key in meta for key in ("by_residual", "m", "k", "dim")
-                ):
-                    kind = "ivfpq"  # ivfpq_build_index's meta shape
-                else:
-                    raise DSLError(
-                        f"index {name!r} meta.json kind {mk!r} is not a "
-                        "probeable ivf/ivfpq/ivfsq store"
-                    )
-            elif (
-                _os.path.isdir(_os.path.join(path, "cells"))
-                or _os.path.isdir(_os.path.join(path, "cells_sorted"))
-            ) and _os.path.isdir(_os.path.join(path, "centroids")):
-                kind = "ivf"  # raw-vector posting lists carry no meta
-            else:
+            # rejection here.  The rules are similarity._open_index's.
+            try:
+                kind = sim_ops._open_index(path).kind
+            except ValueError as e:
                 raise DSLError(
-                    f"index {name!r} has no meta.json and no cells/ (or "
-                    "cells_sorted/) + centroids/ layout — not a probeable "
-                    "index store"
-                )
+                    f"index {name!r} is not a probeable ivf/ivfpq/ivfsq store"
+                ) from e
             # pre-filter: a whitelisted predicate over the probed
             # table's own columns -> allowed-id set semi-joined onto
             # the posting scan (similarity._apply_id_filter).  The

@@ -16,6 +16,8 @@ face_embeddings.py) exposes knn / dist / mean / kmeans / logreg over
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -634,15 +636,73 @@ def _publish_build(path: str, writes: list, meta: "dict | None" = None) -> None:
     publish_staged(staged)
 
 
+@dataclass(frozen=True)
+class _Index:
+    """An index directory as `_open_index` classified it."""
+
+    path: str
+    kind: str  # "ivf" / "ivfpq" / "ivfsq"
+    dim: "int | None" = None
+    m: "int | None" = None
+    k: "int | None" = None
+    by_residual: bool = False
+    opq: bool = False
+    two_level: bool = False  # a `groups/` table is present
+
+
+def _open_index(path: str, *kinds: str) -> _Index:
+    """The one reader of index metadata, which every probe, join, range
+    search, stream insert, rewrite and DSL spec calls first: meta.json
+    is read at most once, nothing is cached, no Spark job runs.  The
+    kind is `ivfsq` for meta.json kind "ivfsq" (`ivfsq_build_index`),
+    `ivfpq` for meta.json with no kind but by_residual, m, k and dim
+    (`ivfpq_build_index`), and `ivf` for no meta.json with `cells/` and
+    `centroids/` (`ivf_build_index`).  Anything else raises ValueError,
+    as does a kind outside `kinds` when the caller names any."""
+    import json
+    import os
+
+    path = os.fspath(path)
+    try:
+        with open(os.path.join(path, "meta.json")) as f:
+            meta = json.load(f)
+    except FileNotFoundError:
+        meta = None
+    except ValueError:
+        meta = "<unreadable>"
+    is_dict = isinstance(meta, dict)
+    if meta is None and all(os.path.isdir(os.path.join(path, t)) for t in ("cells", "centroids")):
+        fields = {"kind": "ivf"}
+    elif is_dict and meta.get("kind") == "ivfsq":
+        fields = {"kind": "ivfsq", "dim": meta.get("dim")}
+    elif is_dict and meta.get("kind") is None and all(
+        key in meta for key in ("by_residual", "m", "k", "dim")
+    ):
+        fields = {
+            "kind": "ivfpq", "dim": meta["dim"], "m": meta["m"], "k": meta["k"],
+            "by_residual": bool(meta["by_residual"]), "opq": bool(meta.get("opq", False)),
+        }
+    else:
+        why = "no cells/ + centroids/" if meta is None else f"meta.json {meta!r:.80}"
+        raise ValueError(f"index at {path} is not a probeable ivf/ivfpq/ivfsq store ({why})")
+    if kinds and fields["kind"] not in kinds:
+        raise ValueError(
+            f"index at {path} is an {fields['kind']} store; this operation "
+            f"serves {' / '.join(kinds)} indexes"
+        )
+    return _Index(path=path, two_level=os.path.isdir(os.path.join(path, "groups")), **fields)
+
+
 def _probe_centroids(
-    path: str,
+    index: "_Index | str",
     qids: "list[int]",
     qvecs: "list[list[float]]",
     n_probe_groups: int,
     round_digits: int,
 ) -> "tuple[list[dict], dict[int, set[int]] | None]":
     """The centroid rows every probe ranks cells over, read on the
-    driver (`sidecar_rows`).  Flat index: (every centroid row, None).
+    driver (`sidecar_rows`); `index` is an opened index or its path.
+    Flat index: (every centroid row, None).
     Two-level index (a `groups/` table is present): rank the level-1
     group centers for every query with the ranker the cell level uses
     (`_rank_probe_cells_blas`), so the two levels share one total order
@@ -653,9 +713,12 @@ def _probe_centroids(
     (batch results stay bit-identical to single probes)."""
     import os
 
+    if not isinstance(index, _Index):
+        index = _open_index(index)
+    path = index.path
     cpath = os.path.join(path, "centroids")
     gpath = os.path.join(path, "groups")
-    if not os.path.isdir(gpath):
+    if not index.two_level:
         return sidecar_rows(cpath, ["cell", "cv"]), None
     if not os.path.exists(os.path.join(gpath, "_SUCCESS")):
         raise ValueError(
@@ -691,7 +754,6 @@ def ivf_build_index(
     assign_via_groups: bool = False,
     assign_g_probe: int = 1,
     group_train_iters: int = 0,
-    layout: str = "dirs",
 ) -> None:
     """Persist the deterministic IVF index: build once, probe many — the
     IVF twin of the SRP split (dedup.build_srp_index /
@@ -709,8 +771,8 @@ def ivf_build_index(
       (classic IVF posting lists carry the vectors);
     - ``centroids/``  (cell, cv array<double>) — the n_cells rank-based
       rounded centroids (the k smallest-id vectors, lloyd_assign's init),
-      a tiny table the probe ranks with the same fold expressions the SQL
-      oracle replays.
+      a tiny table the probe reads on the driver and ranks with one BLAS
+      GEMV (`_probe_cells`).
 
     The build is a bulk insert: the centroids are seeded on the driver
     (`_seed_rows`) and every posting row comes from the stream inserts'
@@ -758,11 +820,11 @@ def ivf_build_index(
     )
     pruned = {"groups": groups, "g_probe": assign_g_probe} if assign_via_groups else {}
     rows = _posting_pass(df, cents, id_col, vec_col, round_digits, **pruned)
-    _publish_build(path, [_posting_write(rows, path, layout), *writes])
+    _publish_build(path, [_posting_write(rows, path), *writes])
 
 
 def _probe_cells(
-    path: str,
+    index: "_Index | str",
     query_vec: list[float],
     n_probe: int,
     n_probe_groups: int,
@@ -770,14 +832,22 @@ def _probe_cells(
 ) -> "tuple[list[int], dict[int, list[float]]]":
     """One query's n_probe cells, best first, and the cell -> centroid
     map (the residual probe's input): the centroid rows read on the
-    driver (`_probe_centroids`) ranked by `_rank_probe_cells_blas` —
-    no Spark job."""
+    driver (`_probe_centroids`; `index` is an opened index or its path)
+    ranked by `_rank_probe_cells_blas` — no Spark job."""
     q = [list(query_vec)]
-    cents, _allowed = _probe_centroids(path, [0], q, n_probe_groups, round_digits)
+    cents, _allowed = _probe_centroids(index, [0], q, n_probe_groups, round_digits)
     pairs, _cells, cv_by_cell = _rank_probe_cells_blas(
         cents, [0], q, n_probe, round_digits
     )
     return [c for _q, c in pairs], cv_by_cell
+
+
+def _ivf_cosine(q: Column, q_norm: Column, round_digits: int) -> Column:
+    """The rounded cosine of a raw-vector posting row (v, norm) against
+    a query, which the single probe and the range search pass as a
+    literal and the kNN join as its broadcast `__qv` column: one
+    expression tree for every IVF scorer."""
+    return F.round(dot(F.col("v"), q) / (F.col("norm") * q_norm), round_digits)
 
 
 def ivf_probe_index(
@@ -809,12 +879,10 @@ def ivf_probe_index(
     centers first and read only the `n_probe_groups` winning groups'
     centroid partitions — the centroid read becomes partition-pruned
     I/O.  Flat indexes ignore `n_probe_groups`."""
-    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
-    qlit = lit_vector(query_vec)
+    index = _open_index(path, "ivf")
+    probe, _cv = _probe_cells(index, query_vec, n_probe, n_probe_groups, round_digits)
     cells = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
-    sim = F.round(
-        dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
-    )
+    sim = _ivf_cosine(lit_vector(query_vec), lit_norm(query_vec), round_digits)
     return (
         cells.select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
@@ -852,12 +920,10 @@ def ivf_range_search(
     same knob, same tradeoff, measured in the recall rehearsals.
     Composes with tombstones and `filter_ids` exactly as the top-k
     probe does (shared scan path)."""
-    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
-    qlit = lit_vector([float(x) for x in query_vec])
+    index = _open_index(path, "ivf")
+    probe, _cv = _probe_cells(index, query_vec, n_probe, n_probe_groups, round_digits)
     cells = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
-    sim = F.round(
-        dot(F.col("v"), qlit) / (F.col("norm") * lit_norm(query_vec)), round_digits
-    )
+    sim = _ivf_cosine(lit_vector(query_vec), lit_norm(query_vec), round_digits)
     return (
         cells.select(F.col("id").alias(id_col), sim.alias("cosine_sim"))
         .where(F.col("cosine_sim") >= F.lit(float(threshold)))
@@ -865,46 +931,19 @@ def ivf_range_search(
     )
 
 
-def _posting_write(rows: DataFrame, path: str, layout: str) -> tuple:
-    """An index's posting rows as a `sidecar.stage` write, in one of two
-    layouts:
-
-    - ``layout="dirs"`` (default, every pre-r10 index): hive-partitioned
-      ``cells/cell=<c>/`` — one dir per cell, repartitioned on the
-      partition column first so each cell lands in ONE file (without it,
-      n_tasks*n_cells files: 183k at the 2M auto sizing — the write, not
-      the math, dominated).  Probes list only the probed dirs
-      (_read_cells).  This is the layout streaming maintenance
-      (insert/compact/recenter) operates on.
-    - ``layout="sorted"`` (the OBJECT-STORE serving layout, r10): posting
-      rows globally RANGE-partitioned and sorted by (cell, id) into
-      ``cells_sorted/`` — a bounded number of files whose parquet
-      row-group min/max stats on `cell` make the probe's
-      `cell IN (...)` predicate prune I/O to the probed cells WITHOUT
-      per-cell directories.  Why: at 2e9 vectors the auto sizing is
-      ~180k cells = ~180k dirs; the dir layout's build paid ~17 min of
-      posting-write wall mostly in file/dir creation (r9 hier20m datum)
-      and every object-store listing API call is a priced round trip —
-      LIST cost scales with dir count, while the sorted layout lists ONE
-      dir and reads a handful of footers.  Pruning becomes row-group
-      stats instead of partition dirs: the Spark-idiomatic manifest.
-      Frozen/rebuilt corpora only — stream insert and compaction are
-      dirs-layout maintenance and fail closed on sorted indexes.
-
-    Returns (table, write(gen))."""
+def _posting_write(rows: DataFrame, path: str) -> tuple:
+    """An index's posting rows as a `sidecar.stage` write: hive-
+    partitioned ``cells/cell=<c>/``, one dir per cell, repartitioned on
+    the partition column first so each cell lands in ONE file (without
+    it, n_tasks*n_cells files: 183k at the 2M auto sizing — the write,
+    not the math, dominated).  Probes list only the probed dirs
+    (`_read_cells`), and stream inserts, compaction and recenter append
+    to or rewrite the same dirs.  Returns (table, write(gen))."""
     import os
 
-    if layout == "dirs":
-        return os.path.join(path, "cells"), lambda gen: (
-            rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
-        )
-    if layout == "sorted":
-        return os.path.join(path, "cells_sorted"), lambda gen: (
-            rows.repartitionByRange(F.col("cell"), F.col("id"))
-            .sortWithinPartitions("cell", "id")
-            .write.parquet(gen)
-        )
-    raise ValueError(f"posting layout must be 'dirs' or 'sorted', got {layout!r}")
+    return os.path.join(path, "cells"), lambda gen: (
+        rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
+    )
 
 
 def _read_cells(spark, path: str, cell_list) -> DataFrame:
@@ -919,22 +958,14 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     predicate (same PartitionFilters clause in the plan, now over an
     already-restricted listing).  Missing dirs (a cell emptied by a
     purge, or never populated) are skipped — same semantics as pruning
-    them.
+    them.  `cells/` is resolved to its published generation first, so
+    a concurrent publish cannot pull the scan's files away.
 
     The posting schema is DECLARED from one footer of a probed cell
     plus the `cell` partition column (`parquet_schema`), so building
     the scan launches no schema-inference job; the ivfpq/ivfsq code
     layouts and stream-inserted fragments keep their types, since Spark
     infers from one footer too.
-
-    SORTED layout (`cells_sorted/`, see _posting_write): one flat dir of
-    range-partitioned files sorted by (cell, id) — the `cell IN (...)`
-    predicate is PUSHED to the parquet reader and row-group min/max
-    stats prune I/O to the probed cells (plan-asserted PushedFilters);
-    listing is one dir however many cells the index has, which is the
-    whole point on an object store.  Either table is resolved to its
-    published generation first, so a concurrent publish cannot pull the
-    scan's files away.
 
     Tombstoned ids are dropped (`_apply_tombstones`).  Their ids are
     read BEFORE the posting table is resolved: a purge publishes its
@@ -943,15 +974,12 @@ def _read_cells(spark, path: str, cell_list) -> DataFrame:
     import os
 
     dead = tombstone_ids(path)
-    sdir = os.path.realpath(os.path.join(path, "cells_sorted"))
     cells = [int(c) for c in cell_list]
     cdir = os.path.realpath(os.path.join(path, "cells"))
     dirs = [
         d for c in cells if os.path.isdir(d := os.path.join(cdir, f"cell={c}"))
     ]
-    if os.path.isdir(sdir):
-        posting = declared_parquet(spark, sdir)
-    elif not dirs:
+    if not dirs:
         # every probed cell is absent: the full-table read keeps the
         # empty result's schema (rare — only a fully-purged probe set)
         posting = declared_parquet(spark, cdir)
@@ -1316,8 +1344,9 @@ def ivf_knn_join_index(
     (asserted in tests)."""
     from pyspark.sql import Window
 
+    index = _open_index(path, "ivf")
     qids, qvecs = _collect_query_batch(queries, qid_col, qvec_col)
-    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
+    cents, allowed = _probe_centroids(index, qids, qvecs, n_probe_groups, round_digits)
     pairs, cell_list, _cv = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
@@ -1328,11 +1357,8 @@ def ivf_knn_join_index(
     )
     cells = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     cand = cells.join(F.broadcast(pair_df), "cell")
-    sim = F.round(
-        dot(F.col("v"), F.col("__qv"))
-        / (F.col("norm") * F.sqrt(dot(F.col("__qv"), F.col("__qv")))),
-        round_digits,
-    )
+    qv = F.col("__qv")
+    sim = _ivf_cosine(qv, F.sqrt(dot(qv, qv)), round_digits)
     wk = Window.partitionBy(qid_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
     return (
         cand.select(F.col(qid_col), F.col("id").alias(id_col), sim.alias("cosine_sim"))
@@ -1823,7 +1849,6 @@ def ivfpq_build_index(
     assign_via_groups: bool = False,
     assign_g_probe: int = 1,
     group_train_iters: int = 0,
-    layout: str = "dirs",
 ) -> None:
     """Persist the combined IVF-PQ index (Jegou, Douze, Schmid 2011,
     "Product Quantization for Nearest Neighbor Search" — the IVFADC
@@ -1974,7 +1999,7 @@ def ivfpq_build_index(
     _publish_build(
         path,
         [
-            _posting_write(rows, path, layout),
+            _posting_write(rows, path),
             *writes,
             *cent_writes,
             (os.path.join(path, "codebooks"), lambda gen: cb.write.parquet(gen)),
@@ -1991,28 +2016,6 @@ def ivfpq_build_index(
     )
 
 
-def _ivfpq_meta(path: str) -> dict:
-    """Read an IVF-PQ index's meta.json — FAIL CLOSED: a missing sidecar
-    means the index predates the meta contract or was copied without it,
-    and silently assuming raw-vector encoding would mis-score a residual
-    index with no error (probes) or permanently corrupt posting lists
-    (stream inserts)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(
-            f"ivfpq index at {path} has no meta.json — refusing to guess "
-            "the encoding (raw vs residual); rebuild with ivfpq_build_index"
-        )
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta["by_residual"] = bool(meta.get("by_residual", False))
-    meta["opq"] = bool(meta.get("opq", False))
-    return meta
-
-
 def _ivfpq_rotation(path: str) -> "list[list[float]]":
     """Load an OPQ index's persisted rotation as a dense dim x dim list
     (dim rows, read on the driver via sidecar_rows — no Spark job)."""
@@ -2023,6 +2026,41 @@ def _ivfpq_rotation(path: str) -> "list[list[float]]":
         key=lambda r: r["pos"],
     )
     return [[float(v) for v in r["row"]] for r in rows]
+
+
+def _rotate_queries(
+    index: _Index, qvecs: "list[list[float]]", round_digits: int
+) -> "list[list[float]]":
+    """Query vectors in an index's space: an OPQ index lives in rotated
+    space, so each query is rotated by the persisted rotation on the
+    driver (one dim x dim GEMV per query, rounded as the build rounds);
+    any other index gets them back unchanged."""
+    if not index.opq:
+        return qvecs
+    import numpy as np
+
+    rot = np.asarray(_ivfpq_rotation(index.path), dtype=np.float64)
+    return [
+        [
+            float(v)
+            for v in _round_half_away(np.asarray(q, dtype=np.float64) @ rot, round_digits)
+        ]
+        for q in qvecs
+    ]
+
+
+def _adc_distance(lut: Column, round_digits: int) -> Column:
+    """The ADC distance of a PQ code row: the BIGINT sum of its m LUT
+    entries, scaled back to a rounded double.  `lut` is the probe's
+    literal m x k table, or the join's per-row pick from its literal
+    map or broadcast LUT column: one expression tree for every PQ
+    scorer."""
+    ssum = F.aggregate(
+        F.zip_with(lut, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return F.round(ssum / F.lit(float(10 ** round_digits)), round_digits)
 
 
 def ivfpq_probe_index(
@@ -2051,28 +2089,15 @@ def ivfpq_probe_index(
     the query residual q - centroid[cell] and selects the row's LUT via
     a map literal keyed on `cell` — still zero joins, n_probe * m * k
     literal longs."""
-    scale = 10 ** round_digits
-    meta = _ivfpq_meta(path)
-    if meta["opq"]:
-        # the index lives in rotated space: rotate the query the same way
-        # (driver-side — one dim x dim GEMV), then everything downstream
-        # (cell ranking, LUTs, residuals) is unchanged
-        import numpy as np
-
-        rot = np.asarray(_ivfpq_rotation(path), dtype=np.float64)
-        query_vec = [
-            float(v)
-            for v in _round_half_away(
-                np.asarray(query_vec, dtype=np.float64) @ rot, round_digits
-            )
-        ]
+    index = _open_index(path, "ivfpq")
+    [query_vec] = _rotate_queries(index, [list(query_vec)], round_digits)
     # two-level indexes rank level-1 groups first (in rotated space —
     # the whole index lives there) and prune the centroid read
     probe, cv_by_cell = _probe_cells(
-        path, query_vec, n_probe, n_probe_groups, round_digits
+        index, query_vec, n_probe, n_probe_groups, round_digits
     )
     cb = _codebook_rows(path)
-    if meta["by_residual"]:
+    if index.by_residual:
         luts = [
             _lut_literal(v)
             for v in _adc_lut_values_blas(
@@ -2093,12 +2118,7 @@ def ivfpq_probe_index(
             _adc_lut_values_blas(cb, [list(query_vec)], round_digits)[0]
         )
     codes = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
-    ssum = F.aggregate(
-        F.zip_with(lut_col, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    adist = F.round(ssum / F.lit(float(scale)), round_digits)
+    adist = _adc_distance(lut_col, round_digits)
     return (
         codes.select(F.col("id").alias(id_col), adist.alias("adist"))
         .orderBy(F.col("adist").asc(), F.col(id_col).asc())
@@ -2154,26 +2174,17 @@ def ivfpq_knn_join_index(
     output (asserted in tests/test_plans.py)."""
     from pyspark.sql import Window
 
-    meta = _ivfpq_meta(path)
-    scale = 10 ** round_digits
+    index = _open_index(path, "ivfpq")
     qids, qvecs = _collect_query_batch(queries, qid_col, qvec_col)
-    if meta["opq"]:
-        import numpy as np
-
-        rot = np.asarray(_ivfpq_rotation(path), dtype=np.float64)
-        qvecs = [
-            [float(v) for v in _round_half_away(np.asarray(q) @ rot, round_digits)]
-            for q in qvecs
-        ]
-
-    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
+    qvecs = _rotate_queries(index, qvecs, round_digits)
+    cents, allowed = _probe_centroids(index, qids, qvecs, n_probe_groups, round_digits)
     pairs, cell_list, cv_by_cell = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
     cb = _codebook_rows(path)
     codes = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     pair_schema = f"{qid_col} long, cell long"
-    if meta["by_residual"]:
+    if index.by_residual:
         # one LUT per (qid, cell): the query residual q - centroid[cell]
         # is what the stored codes quantized against.
         qv_by_qid = dict(zip(qids, qvecs))
@@ -2215,12 +2226,7 @@ def ivfpq_knn_join_index(
             F.array(*[F.lit(q).cast("long") for q in qids]), F.array(*luts)
         )
         lut_col = F.element_at(qid_lut, F.col(qid_col))
-    ssum = F.aggregate(
-        F.zip_with(lut_col, F.col("codes"), lambda row, c: F.element_at(row, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    adist = F.round(ssum / F.lit(float(scale)), round_digits)
+    adist = _adc_distance(lut_col, round_digits)
     wk = Window.partitionBy(qid_col).orderBy(F.col("adist").asc(), F.col(id_col).asc())
     return (
         cand.select(F.col(qid_col), F.col("id").alias(id_col), adist.alias("adist"))
@@ -2292,7 +2298,6 @@ def ivfsq_build_index(
     assign_via_groups: bool = False,
     assign_g_probe: int = 1,
     group_train_iters: int = 0,
-    layout: str = "dirs",
 ) -> None:
     """Persist the IVF-SQ8 index: posting lists of 8-bit SCALAR-quantized
     codes partitioned by the deterministic Lloyd cell — the FAISS
@@ -2347,7 +2352,7 @@ def ivfsq_build_index(
     _publish_build(
         path,
         [
-            _posting_write(rows, path, layout),
+            _posting_write(rows, path),
             (os.path.join(path, "sq"), lambda gen: sq.write.parquet(gen)),
             *cent_writes,
         ],
@@ -2372,6 +2377,35 @@ def _sq_bounds(path: str) -> tuple[list[float], list[float]]:
     return [float(r["mn"]) for r in rows], [float(r["mx"]) for r in rows]
 
 
+def _sq_distance(
+    q: Column, mn: "list[float]", mx: "list[float]", round_digits: int
+) -> Column:
+    """The asymmetric SQ8 distance of a code row against a query's first
+    `dim` coordinates, which the single probe passes as a literal and
+    the kNN join as its broadcast `__qv` column: decode and score fused,
+    op for op the oracle's tree (t = (c + 0.5) * delta; xhat = mn + t;
+    err = q - xhat), each term rounded and scaled to BIGINT so the sum
+    is accumulation-order-free.  One expression tree for every SQ
+    scorer."""
+    scale = float(10 ** round_digits)
+    delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
+    z1 = F.zip_with(
+        F.col("codes"),
+        lit_vector(delta),
+        lambda c, d: (c.cast("double") + F.lit(0.5)) * d,
+    )
+    xhat = F.zip_with(z1, lit_vector(mn), lambda t, m: m + t)
+    terms = F.zip_with(
+        q,
+        xhat,
+        lambda qq, xh: F.round(
+            F.round((qq - xh) * (qq - xh), round_digits) * F.lit(scale), 0
+        ).cast("long"),
+    )
+    ssum = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return F.round(ssum / F.lit(scale), round_digits)
+
+
 def ivfsq_probe_index(
     spark,
     path: str,
@@ -2394,33 +2428,12 @@ def ivfsq_probe_index(
     accumulation-order-free.  scan -> project -> TakeOrdered, zero
     joins, I/O = n_probe/n_cells of the CODES.  Output (id_col, adist)
     ascending, ties to the smaller id."""
-    import json
-    import os  # noqa: F811 — module style keeps os imports function-local
-
-    with open(os.path.join(path, "meta.json")) as f:
-        dim = int(json.load(f)["dim"])
-    scale = 10 ** round_digits
-    probe, _cv = _probe_cells(path, query_vec, n_probe, n_probe_groups, round_digits)
+    index = _open_index(path, "ivfsq")
+    probe, _cv = _probe_cells(index, query_vec, n_probe, n_probe_groups, round_digits)
     mn, mx = _sq_bounds(path)
-    q64 = [float(x) for x in query_vec[:dim]]
-    delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
+    q64 = [float(x) for x in query_vec[: int(index.dim)]]
     codes = _apply_id_filter(_read_cells(spark, path, probe), filter_ids)
-    # op-for-op the oracle's tree: t=(c+0.5)*delta; xhat=mn+t; err=q-xhat
-    z1 = F.zip_with(
-        F.col("codes"),
-        lit_vector(delta),
-        lambda c, d: (c.cast("double") + F.lit(0.5)) * d,
-    )
-    xhat = F.zip_with(z1, lit_vector(mn), lambda t, m: m + t)
-    terms = F.zip_with(
-        lit_vector(q64),
-        xhat,
-        lambda qq, xh: F.round(
-            F.round((qq - xh) * (qq - xh), round_digits) * F.lit(float(scale)), 0
-        ).cast("long"),
-    )
-    ssum = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    adist = F.round(ssum / F.lit(float(scale)), round_digits)
+    adist = _sq_distance(lit_vector(q64), mn, mx, round_digits)
     return (
         codes.select(F.col("id").alias(id_col), adist.alias("adist"))
         .orderBy(F.col("adist").asc(), F.col(id_col).asc())
@@ -2459,45 +2472,25 @@ def ivfsq_knn_join_index(
     hash join on `cell`; one per-qid top-k window — the only wide
     exchange.  Output (qid, id_col, adist), ascending approximate
     distance per qid, ties to the smaller id."""
-    import json
-    import os
-
     from pyspark.sql import Window
 
-    with open(os.path.join(path, "meta.json")) as f:
-        dim = int(json.load(f)["dim"])
-    scale = 10 ** round_digits
+    index = _open_index(path, "ivfsq")
     qids, qvecs = _collect_query_batch(queries, qid_col, qvec_col)
-    cents, allowed = _probe_centroids(path, qids, qvecs, n_probe_groups, round_digits)
+    cents, allowed = _probe_centroids(index, qids, qvecs, n_probe_groups, round_digits)
     # cell ranking uses the FULL query vector (the single probe's
     # stance); scoring uses the first `dim` coordinates the codes cover
     pairs, cell_list, _cv = _rank_probe_cells_blas(
         cents, qids, qvecs, n_probe, round_digits, allowed=allowed
     )
     mn, mx = _sq_bounds(path)
-    delta = [(b - a) / 256.0 for a, b in zip(mn, mx)]
-    q64_by_qid = {q: [float(x) for x in v[:dim]] for q, v in zip(qids, qvecs)}
+    q64_by_qid = {q: [float(x) for x in v[: int(index.dim)]] for q, v in zip(qids, qvecs)}
     pair_df = spark.createDataFrame(
         [(q, c, q64_by_qid[q]) for q, c in pairs],
         f"{qid_col} long, cell long, __qv array<double>",
     )
     codes = _apply_id_filter(_read_cells(spark, path, cell_list), filter_ids)
     cand = codes.join(F.broadcast(pair_df), "cell")
-    z1 = F.zip_with(
-        F.col("codes"),
-        lit_vector(delta),
-        lambda c, d: (c.cast("double") + F.lit(0.5)) * d,
-    )
-    xhat = F.zip_with(z1, lit_vector(mn), lambda t, m: m + t)
-    terms = F.zip_with(
-        F.col("__qv"),
-        xhat,
-        lambda qq, xh: F.round(
-            F.round((qq - xh) * (qq - xh), round_digits) * F.lit(float(scale)), 0
-        ).cast("long"),
-    )
-    ssum = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    adist = F.round(ssum / F.lit(float(scale)), round_digits)
+    adist = _sq_distance(F.col("__qv"), mn, mx, round_digits)
     wk = Window.partitionBy(qid_col).orderBy(F.col("adist").asc(), F.col(id_col).asc())
     return (
         cand.select(F.col(qid_col), F.col("id").alias(id_col), adist.alias("adist"))

@@ -18,8 +18,9 @@ listing skip `_`- and `.`-prefixed paths, so a Spark write still in its
 `_temporary/` dir and an `append_rows` file not yet renamed into place
 are invisible to every reader.
 
-It also owns the one way to replace an index table (`new_generation`,
-`publish`): the table is a symlink swapped atomically onto a hidden
+It also owns the one way to replace an index table, which every build
+and rewrite takes (`stage`, then `publish_staged`, over `new_generation`
+and `publish`): the table is a symlink swapped atomically onto a hidden
 generation dir, and readers resolve it once per operation
 (`os.path.realpath`), so a plan's files stay in one generation, and a
 replaced generation is kept for `RETAIN_S` seconds for readers on it.

@@ -25,9 +25,13 @@ maintenance compacts, purges and re-centers the cells.
   collapses insert fragments (and, with purge, drops tombstoned rows);
   recenter is one Lloyd iteration over the deterministic, scaled-BIGINT
   means of each cell.  Every rewrite stages the tables it changes in
-  new generations and publishes them (`sources.sidecar.publish`), the
-  index's only swap: readers keep the generation they resolved, and a
+  new generations and publishes them (`sources.sidecar.stage` /
+  `publish_staged`), the index's only swap: readers keep the generation
+  they resolved, a write that raises deletes what it staged, and a
   crash before a publish leaves an unpublished dir the next one drops.
+
+Every op opens the index first (`similarity._open_index`) and refuses a
+kind it does not serve before any work.
 """
 
 from __future__ import annotations
@@ -41,31 +45,13 @@ from esper_tv_spark.operators.similarity import (
     _apply_tombstones,
     _centroid_tables,
     _codebook_rows,
-    _ivfpq_meta,
     _ivfpq_rotation,
+    _open_index,
     _posting_pass,
     _sq_bounds,
     rotate_vectors,
 )
 from esper_tv_spark.sources import sidecar
-
-
-def _require_dirs_layout(index_path: str, op: str) -> None:
-    """Streaming maintenance (insert fragments / per-cell compaction /
-    recenter's per-cell moves / fragment census) operates on the
-    hive-partitioned `cells/` layout.  The SORTED object-store layout
-    (`cells_sorted/`, similarity._posting_write) is the frozen serving
-    layout — its corpora are REBUILT, not streamed into — so every
-    maintenance op fails closed with a pointer instead of silently
-    appending rows the sorted reader would still serve but the dir-based
-    maintenance bookkeeping would never see."""
-    if os.path.isdir(os.path.join(index_path, "cells_sorted")):
-        raise ValueError(
-            f"{op}: index at {index_path} uses the sorted (object-store) "
-            "posting layout — streaming maintenance runs on the dirs "
-            "layout; rebuild with layout='dirs' or rebuild the sorted "
-            "index from the updated corpus"
-        )
 
 
 def ivf_stream_insert(
@@ -88,9 +74,9 @@ def ivf_stream_insert(
     (at-least-once, the same contract as the ledger sink in
     streaming/ingest.py).  No probe deduplicates on id, so probes return
     such an id twice.  The fix is a commit log keyed by (query id, batch
-    id), ROADMAP item 1."""
-
-    _require_dirs_layout(index_path, "ivf_stream_insert")
+    id), ROADMAP item 1.  An index of another kind raises ValueError
+    here, before the stream starts."""
+    _open_index(index_path, "ivf")
     cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
@@ -132,13 +118,14 @@ def ivfpq_stream_insert(
     pass (`similarity._posting_pass`, PQ mode: cell, residual and code
     ranks against the centroids and codebooks read on the driver) and
     one partitioned append — never a read of the existing posting
-    lists."""
-    _require_dirs_layout(index_path, "ivfpq_stream_insert")
+    lists.  The index is opened once, here: an index of another kind
+    raises ValueError before the stream starts, and its encoding (raw or
+    residual, OPQ or not) is a build-time fact every batch uses."""
+    index = _open_index(index_path, "ivfpq")
     cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
-        meta = _ivfpq_meta(index_path)
-        if meta["opq"]:
+        if index.opq:
             # an OPQ index lives in rotated space: rotate the micro-batch
             # with the SAME persisted rotation the build used, so stream
             # inserts stay bit-identical to a batch rebuild
@@ -149,7 +136,7 @@ def ivfpq_stream_insert(
             _posting_pass(
                 batch_df, sidecar.sidecar_rows(cents_dir, ["cell", "cv"]), id_col, vec_col,
                 round_digits, codebooks=_codebook_rows(index_path),
-                by_residual=meta["by_residual"],
+                by_residual=index.by_residual,
             )
             .write.mode("append")
             .partitionBy("cell")
@@ -182,8 +169,9 @@ def ivfsq_stream_insert(
     (`similarity._posting_pass`) that replays `lloyd_assign` and the
     batch build's `_sq_encode_expr` operation for operation, so inserted
     codes are bit-identical to batch-encoding the same rows against the
-    same store (asserted in tests/test_streaming_ann.py)."""
-    _require_dirs_layout(index_path, "ivfsq_stream_insert")
+    same store (asserted in tests/test_streaming_ann.py).  An index of
+    another kind raises ValueError before the stream starts."""
+    _open_index(index_path, "ivfsq")
     cents_dir = os.path.join(index_path, "centroids")
 
     def insert(batch_df: DataFrame, _batch_id: int) -> None:
@@ -223,9 +211,11 @@ def ann_delete(spark: SparkSession, index_path: str, ids: "list[int]") -> int:
     Contract: vector ids are unique and never reused — re-inserting a
     tombstoned id would stay hidden until a purge (the same id-space
     assumption every builder makes).  Duplicate ids in `ids` or across
-    calls are harmless (the id set is deduplicated on read)."""
+    calls are harmless (the id set is deduplicated on read).  A path
+    that holds no ivf / ivfpq / ivfsq index raises ValueError."""
     import pyarrow as pa
 
+    _open_index(index_path)
     vals = list(ids)
     for i in vals:
         if isinstance(i, bool) or not isinstance(i, int):
@@ -246,10 +236,9 @@ def posting_fragment_census(index_path: str) -> dict[int, int]:
     probe's pruned scan into thousands of tiny file opens (the classic
     100 TB small-files problem).  Pure driver-side directory metadata —
     zero data read, no Spark job."""
-    _require_dirs_layout(index_path, "posting_fragment_census")
-    cells_dir = os.path.join(index_path, "cells")
+    _open_index(index_path)
     census: dict[int, int] = {}
-    for entry in os.scandir(cells_dir):
+    for entry in os.scandir(os.path.join(index_path, "cells")):
         if not entry.is_dir() or not entry.name.startswith("cell="):
             continue
         n = sum(
@@ -301,15 +290,17 @@ def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
       inserts assign against the remaining centroids, so a retired
       cell's id space cannot be resurrected (same id-uniqueness
       contract as ann_delete);
-    - the kept rows are written to a new generation and published
-      (`sidecar.publish`); a crash before the publish leaves dead
-      centroids ranked (correct, just wasteful) and the next
+    - the kept rows are staged in a new generation and published
+      (`sidecar.stage` / `publish_staged`); a write that raises leaves
+      nothing beside the table, and a crash before the publish leaves
+      dead centroids ranked (correct, just wasteful) and the next
       retirement pass fixes it.
 
     Returns the number of retired cells (0 when none).  Raises on a
     fully-dead index — an empty centroid table would make every probe
     rank zero cells, which should be a loud lifecycle error, not an
     empty result."""
+    index = _open_index(index_path)
     cents_dir = os.path.join(index_path, "centroids")
     live = set(posting_fragment_census(index_path))
     persisted = sorted(int(r["cell"]) for r in sidecar.sidecar_rows(cents_dir, ["cell"]))
@@ -323,12 +314,14 @@ def _retire_empty_cells(spark: SparkSession, index_path: str) -> int:
             "the index instead)"
         )
     keep = sidecar.declared_parquet(spark, cents_dir).where(~F.col("cell").isin(dead))
-    gen = sidecar.new_generation(cents_dir)
-    if os.path.isdir(os.path.join(index_path, "groups")):
-        keep.select("grp", "cell", "cv").write.partitionBy("grp").parquet(gen)
-    else:
-        keep.select("cell", "cv").write.parquet(gen)
-    sidecar.publish(cents_dir, gen)
+
+    def write(gen: str) -> None:
+        if index.two_level:
+            keep.select("grp", "cell", "cv").write.partitionBy("grp").parquet(gen)
+        else:
+            keep.select("cell", "cv").write.parquet(gen)
+
+    sidecar.publish_staged(sidecar.stage([(cents_dir, write)]))
     return len(dead)
 
 
@@ -348,10 +341,12 @@ def compact_posting_lists(
     lands in exactly one task = one output file); already-compact cells'
     fragments are HARD-LINKED into the new generation (driver-side
     metadata only, no data movement — at 100 TB rewriting every cell to
-    fix a few hot ones would be a full-corpus I/O pass).  The new
-    generation is then published (`sidecar.publish`): probes running
-    meanwhile keep reading the generation they resolved, and a crash
-    before the publish leaves the index as it was.  Compaction never
+    fix a few hot ones would be a full-corpus I/O pass).  The rewrite
+    and the links are one staged write of a new generation, which is
+    then published (`sidecar.stage` / `publish_staged`): probes running
+    meanwhile keep reading the generation they resolved, a write that
+    raises deletes its partial generation, and a crash before the
+    publish leaves the index as it was.  Compaction never
     changes CONTENT — probe results are bit-identical before and after
     (asserted in tests/test_streaming_ann.py).
 
@@ -378,7 +373,7 @@ def compact_posting_lists(
     when retiring)."""
     import shutil
 
-    _require_dirs_layout(index_path, "compact_posting_lists")
+    _open_index(index_path)
     cells_dir = os.path.join(index_path, "cells")
     tomb_dir = os.path.join(index_path, "tombstones")
     tomb_files = sidecar.committed_files(tomb_dir) if purge else []
@@ -404,25 +399,27 @@ def compact_posting_lists(
             stats["cells_retired"] = _retire_empty_cells(spark, index_path)
         return stats
 
-    gen = sidecar.new_generation(cells_dir)
     rewrite = sidecar.declared_parquet(spark, src).where(F.col("cell").isin(hot))
     if tomb_ids:
         rewrite = rewrite.where(~F.col("id").isin(tomb_ids))
-    rewrite.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
-    # carry the already-compact cells across via hard links (fall back
-    # to copy on filesystems without link support)
-    for cell in set(census) - set(hot):
-        dst_dir = os.path.join(gen, f"cell={cell}")
-        os.makedirs(dst_dir, exist_ok=True)
-        for f in os.scandir(os.path.join(src, f"cell={cell}")):
-            if not (f.is_file() and f.name.endswith(".parquet")):
-                continue
-            dst = os.path.join(dst_dir, f.name)
-            try:
-                os.link(f.path, dst)
-            except OSError:
-                shutil.copy2(f.path, dst)
-    sidecar.publish(cells_dir, gen)
+
+    def write(gen: str) -> None:
+        rewrite.repartition(F.col("cell")).write.partitionBy("cell").parquet(gen)
+        # carry the already-compact cells across via hard links (fall
+        # back to copy on filesystems without link support)
+        for cell in set(census) - set(hot):
+            dst_dir = os.path.join(gen, f"cell={cell}")
+            os.makedirs(dst_dir, exist_ok=True)
+            for f in os.scandir(os.path.join(src, f"cell={cell}")):
+                if not (f.is_file() and f.name.endswith(".parquet")):
+                    continue
+                dst = os.path.join(dst_dir, f.name)
+                try:
+                    os.link(f.path, dst)
+                except OSError:
+                    shutil.copy2(f.path, dst)
+
+    sidecar.publish_staged(sidecar.stage([(cells_dir, write)]))
     _drop_applied_tombstones(tomb_dir, tomb_files)
     if retire_empty_cells:
         stats["cells_retired"] = _retire_empty_cells(spark, index_path)
@@ -457,19 +454,20 @@ def ivf_recenter(
     similarity._centroid_tables, which stages the centroid tables here
     as in every build): the new centroids get REGROUPED against the
     same n_groups via `_group_centers` — pass the index's
-    `group_train_iters` (recorded in ivfpq/ivfsq meta.json; raw IVF
-    callers state it) to keep a TRAINED grouping trained across the
-    rewrite, else the regroup silently reverts to rank-init seeds — and
+    `group_train_iters` (an IVF index records no meta, so the caller
+    states it) to keep a TRAINED grouping trained across the rewrite,
+    else the regroup silently reverts to rank-init seeds — and
     `groups/` is republished with them: stale level-1 centers over
     recentered cells would silently mis-prune probes.
 
-    The group count and the posting schema come from the driver
+    Recenter serves raw-vector IVF indexes only (the means need `v`):
+    an IVF-PQ or IVF-SQ index raises ValueError before any work.  The
+    group count and the posting schema come from the driver
     (`sidecar`): no inference job.  The reassignment is the builds' one
     Arrow pass (`_posting_pass`) against the new centroid rows."""
-    _require_dirs_layout(index_path, "ivf_recenter")
+    index = _open_index(index_path, "ivf")
     scale = float(10 ** round_digits)
     cells_dir = os.path.join(index_path, "cells")
-    groups_dir = os.path.join(index_path, "groups")
     # recenter is a full rewrite: apply (and then retire) any logical
     # deletes — keeping tombstoned vectors would bake them into the new
     # centroid means AND resurrect them in the rewritten posting lists
@@ -508,8 +506,8 @@ def ivf_recenter(
         .collect()
     ]
     n_groups = None
-    if os.path.isdir(groups_dir):
-        n_groups = len(sidecar.sidecar_rows(groups_dir, ["grp"]))
+    if index.two_level:
+        n_groups = len(sidecar.sidecar_rows(os.path.join(index_path, "groups"), ["grp"]))
     new_cents, _groups, writes = _centroid_tables(
         spark, index_path, new_cents, n_groups, round_digits, group_train_iters
     )

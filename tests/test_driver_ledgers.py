@@ -67,6 +67,8 @@ def _unreadable(ledger):
 
 def test_ann_delete_runs_no_spark_job(spark, tmp_path, count_jobs):
     idx = str(tmp_path / "idx")
+    for table in ("cells", "centroids"):  # what makes `idx` an ivf index
+        os.makedirs(os.path.join(idx, table))
     n, jobs = count_jobs(lambda: ann_delete(spark, idx, [3, 1, 3]))
     assert (n, jobs) == (3, 0)
     assert count_jobs(lambda: ann_delete(spark, idx, [7]))[1] == 0

@@ -193,12 +193,12 @@ def test_uncommitted_tombstone_write_is_invisible(spark, tmp_path):
     assert os.path.isdir(attempt)
 
 
-@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq", "sorted"])
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq", "ivfsq"])
 def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind, count_jobs):
     """The posting schema `_read_cells` declares (one footer plus the
     `cell` partition column) equals what `spark.read.parquet` infers,
     field for field including nullability, for every probed cell —
-    before and after a stream insert (dirs layouts), so fragments and
+    before and after a stream insert, so fragments and
     the ivfpq/ivfsq code layouts keep their types."""
     emb = _vectors(spark)
     base, tail = emb.where(F.col("vec_id") < N_BASE), emb.where(F.col("vec_id") >= N_BASE)
@@ -207,10 +207,9 @@ def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind, 
         "ivf": (lambda df: ivf_build_index(df, idx, n_cells=8), ivf_stream_insert),
         "ivfpq": (lambda df: ivfpq_build_index(df, idx, n_cells=8, m=8, k=16, dim=DIM), ivfpq_stream_insert),
         "ivfsq": (lambda df: ivfsq_build_index(df, idx, n_cells=8, dim=DIM), ivfsq_stream_insert),
-        "sorted": (lambda df: ivf_build_index(df, idx, n_cells=8, layout="sorted"), None),
     }[kind]
     build(base)
-    cdir = os.path.join(idx, "cells_sorted" if kind == "sorted" else "cells")
+    cdir = os.path.join(idx, "cells")
 
     def check():
         inferred = spark.read.parquet(cdir).schema
@@ -222,9 +221,8 @@ def test_read_cells_declares_the_inferred_posting_schema(spark, tmp_path, kind, 
             assert jobs == 0
 
     check()
-    if insert is not None:
-        _stream_insert(spark, insert, idx, tail, str(tmp_path))
-        check()
+    _stream_insert(spark, insert, idx, tail, str(tmp_path))
+    check()
 
 
 def test_lit_norm_has_the_bits_of_the_spark_fold(spark):

@@ -314,13 +314,14 @@ def test_plain_dir_index_compacts_retires_and_probes_identically(spark, tmp_path
 
 
 def test_recenter_raises_when_nothing_to_recover(spark, tmp_path):
-    """An index without a posting table has nothing to recenter: raise
-    instead of publishing empty tables."""
+    """An index without a posting table has nothing to recenter: the
+    opener refuses it before any work, instead of publishing empty
+    tables."""
     emb = _emb(spark)
     idx = str(tmp_path / "ivf_gone")
     ivf_build_index(emb, idx, n_cells=8)
     os.unlink(os.path.join(idx, "cells"))
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(ValueError, match="not a probeable"):
         ivf_recenter(spark, idx)
     assert os.readlink(os.path.join(idx, "centroids")) in _generations(idx, "centroids")
 
@@ -591,6 +592,39 @@ def test_compaction_recovers_from_mid_swap_crash(spark, tmp_path, monkeypatch):
 
     compact_posting_lists(spark, idx, min_fragments=1)
     assert _generations(idx, "cells") == sorted([published, os.readlink(cells)])
+    assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == want
+
+
+def test_compaction_whose_write_raises_leaves_no_generation(spark, tmp_path, monkeypatch):
+    """A compaction whose rewrite raises part-way — here while it
+    hard-links the already-compact cells into the new generation, after
+    the hot cells were written — deletes its partial generation: no
+    hidden `.cells.<uuid>` dir is left beside `cells`, and probes return
+    what they returned before."""
+    from esper_tv_spark.streaming.ann import compact_posting_lists
+
+    emb = _emb(spark)
+    idx = str(tmp_path / "ivf_compact_raise")
+    ivf_build_index(emb.where(F.col("vec_id") < 100), idx, n_cells=8)
+    # five inserted vectors fragment at most five of the eight cells,
+    # so the compaction rewrites some cells and links the rest across
+    src = str(tmp_path / "tail_src")
+    emb.where(F.col("vec_id").between(100, 104)).coalesce(1).write.parquet(src)
+    stream = file_stream(spark, src, emb.schema)
+    ivf_stream_insert(stream, idx, str(tmp_path / "ckpt")).start().awaitTermination(180)
+    qv = [float(x) for x in emb.where("vec_id = 3").first()["embedding"]]
+    want = [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()]
+    generations = _generations(idx, "cells")
+
+    def link(*_args):
+        raise RuntimeError("simulated failure in the rewrite")
+
+    monkeypatch.setattr(os, "link", link)
+    with pytest.raises(RuntimeError, match="simulated"):
+        compact_posting_lists(spark, idx, min_fragments=2)
+    monkeypatch.undo()
+
+    assert _generations(idx, "cells") == generations
     assert [tuple(r) for r in ivf_probe_index(spark, idx, qv, 10, n_probe=3).collect()] == want
 
 

@@ -45,10 +45,13 @@ Writes to <out>/sf1/*.parquet (default .scale/ under the repo root —
 gitignored; /root/testdata is read-only). Usage:
 
     python tools/make_scale.py [copies] [out_dir] [--embed-dim N] [--only-embeddings]
+    python tools/make_scale.py [out_dir] --clustered [--n N] [--embed-dim N]
+        [--clusters N] [--plant N] [--anisotropy X]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -361,54 +364,52 @@ def build_clustered(
     )
 
 
-if __name__ == "__main__":
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+def main(argv: "list[str] | None" = None) -> int:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap = argparse.ArgumentParser(
+        description="Build a scale-rehearsal dataset: COPIES copies of sf0.1, "
+        "or with --clustered a mixture-of-Gaussians embeddings fixture."
+    )
+    ap.add_argument(
+        "copies", nargs="?",
+        help="copies of sf0.1 (default 10); with --clustered, the output dir",
+    )
+    ap.add_argument("out", nargs="?", help="output dir (default .scale/sf1)")
+    ap.add_argument("--clustered", action="store_true", help="build the clustered fixture")
+    ap.add_argument("--anisotropy", type=float, default=0.0, help="clustered: anisotropy")
+    ap.add_argument("--n", type=int, default=20_500, help="clustered: vectors")
+    ap.add_argument("--embed-dim", type=int, default=256, help="embedding width")
+    ap.add_argument("--clusters", type=int, default=64, help="clustered: clusters")
+    ap.add_argument("--plant", type=int, default=500, help="clustered: planted near-dups")
+    ap.add_argument(
+        "--only-embeddings", action="store_true", help="rebuild embeddings.parquet only"
+    )
+    args = ap.parse_args(argv)
 
-    def _flag(name: str, default: int | None) -> int | None:
-        for a in sys.argv[1:]:
-            if a.startswith(f"--{name}"):
-                return int(a.split("=", 1)[1]) if "=" in a else (default or 256)
-        return default
-
-    if "--clustered" in sys.argv:
-        out = (
-            args[0]
-            if args
-            else os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                ".scale",
-                "clustered_sf1",
-            )
-        )
-        aniso = 0.0
-        for a in sys.argv[1:]:
-            if a.startswith("--anisotropy"):
-                aniso = float(a.split("=", 1)[1]) if "=" in a else 1.0
+    if args.clustered:
+        if args.out is not None:
+            ap.error("--clustered takes one positional argument, the output dir")
+        out = args.copies or os.path.join(repo, ".scale", "clustered_sf1")
         build_clustered(
-            n=_flag("n", 20_500),
+            n=args.n,
             out_dir=out,
-            dim=_flag("embed-dim", 256),
-            n_clusters=_flag("clusters", 64),
-            plant=_flag("plant", 500),
-            anisotropy=aniso,
+            dim=args.embed_dim,
+            n_clusters=args.clusters,
+            plant=args.plant,
+            anisotropy=args.anisotropy,
         )
         print("wrote", out)
-        sys.exit(0)
+        return 0
 
-    copies = int(args[0]) if args else 10
-    out = (
-        args[1]
-        if len(args) > 1
-        else os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1")
-    )
-    embed_dim = 256  # widened-by-default so plants always land (r9 regression)
-    for a in sys.argv[1:]:
-        if a.startswith("--embed-dim"):
-            embed_dim = int(a.split("=", 1)[1]) if "=" in a else 256
-    build(
-        copies,
-        out,
-        embed_dim=embed_dim,
-        only_embeddings="--only-embeddings" in sys.argv,
-    )
+    try:
+        copies = int(args.copies) if args.copies is not None else 10
+    except ValueError:
+        ap.error(f"copies must be an int, got {args.copies!r}")
+    out = args.out or os.path.join(repo, ".scale", "sf1")
+    build(copies, out, embed_dim=args.embed_dim, only_embeddings=args.only_embeddings)
     print("wrote", out)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -904,78 +904,6 @@ def step_filteredset(spark, emit):
     )
 
 
-def step_sortedlayout(spark, emit):
-    """SORTED (object-store) posting layout vs dirs at the 2M auto sizing
-    (5728 cells): build wall (the dirs layout's file-creation cost vs one
-    range-shuffled flat write), probe wall at n_probe 32/320 (dir-listing
-    vs pushed-filter row-group pruning), file/dir counts (the object-store
-    LIST story), and per-query bit-parity — the layout must be invisible
-    in answers.  Same fixture + params as filteredann's ivfsq_flat."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from esper_tv_spark.operators import similarity as sim
-
-    emb_path = os.path.join(C2M, "embeddings.parquet")
-    ids, mat = load_matrix(emb_path)
-    df = spark.read.parquet(emb_path).select("vec_id", "embedding")
-    n, dim = mat.shape
-    n_cells = sim.recommended_cells(n)
-
-    walls = {}
-    d_idx = os.path.join(C2M, "ivfsq_dirs_r10")
-    s_idx = os.path.join(C2M, "ivfsq_sorted_r10")
-    for name, idx, layout in (("dirs", d_idx, "dirs"), ("sorted", s_idx, "sorted")):
-        if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
-            t0 = time.time()
-            sim.ivfsq_build_index(
-                df, idx, n_cells=n_cells, dim=dim, layout=layout
-            )
-            walls[f"build_{name}_s"] = round(time.time() - t0, 1)
-
-    def census(root):
-        n_dirs = n_files = 0
-        for dirpath, dirnames, filenames in os.walk(root):
-            n_dirs += len(dirnames)
-            n_files += sum(1 for f in filenames if f.endswith(".parquet"))
-        return n_dirs, n_files
-
-    dd, df_ = census(os.path.join(d_idx, "cells"))
-    sd, sf_ = census(os.path.join(s_idx, "cells_sorted"))
-    stride = n // 10
-    q_idx = np.arange(0, n, stride)[:10]
-    out = {}
-    for n_probe in (32, 320):
-        w = {"dirs": 0.0, "sorted": 0.0}
-        parity = True
-        for qi in q_idx:
-            qv = [float(x) for x in mat[qi]]
-            t0 = time.time()
-            a = [tuple(r) for r in sim.ivfsq_probe_index(
-                spark, d_idx, qv, TOPK, n_probe=n_probe).collect()]
-            w["dirs"] += time.time() - t0
-            t0 = time.time()
-            b = [tuple(r) for r in sim.ivfsq_probe_index(
-                spark, s_idx, qv, TOPK, n_probe=n_probe).collect()]
-            w["sorted"] += time.time() - t0
-            parity = parity and (a == b)
-        out[f"np{n_probe}"] = {
-            "parity": parity,
-            "dirs_s_per_q": round(w["dirs"] / len(q_idx), 2),
-            "sorted_s_per_q": round(w["sorted"] / len(q_idx), 2),
-        }
-    emit(
-        {
-            "step": "sortedlayout_2m",
-            "n": n,
-            "n_cells": n_cells,
-            **walls,
-            "dirs_layout": {"dirs": dd, "files": df_},
-            "sorted_layout": {"dirs": sd, "files": sf_},
-            **out,
-        }
-    )
-
-
 def step_filteredbatch(spark, emit):
     """Filtered BATCH kNN join at serving shape (2M,
     n_probe=32, 8-query batch): one semi-join against the allowed-id
@@ -1190,9 +1118,6 @@ def main() -> int:
         spark.catalog.clearCache()
     if "filteredadv" in steps:
         step_filteredadv(spark, emit)
-        spark.catalog.clearCache()
-    if "sortedlayout" in steps:
-        step_sortedlayout(spark, emit)
         spark.catalog.clearCache()
     if "filteredset" in steps:
         step_filteredset(spark, emit)
